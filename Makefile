@@ -1,9 +1,15 @@
 # Developer entry points (see README.md; driver contract in __spark_entry__.py)
 
-.PHONY: test bench bench-small scaling pyfiles smoke
+.PHONY: test test-bench bench bench-small scaling pyfiles smoke
 
-test:
-	python -m pytest tests/ -q
+test:             ## tier-1 suite, exactly as ROADMAP.md runs it
+	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" \
+	SPARK_LOCAL_DIRS=/tmp/spark-local \
+	timeout -k 10 2670 python -m pytest tests/ -q \
+		--continue-on-collection-errors -p no:cacheprovider
+
+test-bench:       ## the benchmark's own span/event-log parser tests
+	python -m pytest perfbench/test_spans.py -q
 
 bench:            ## headline paths at sf0.1 on local[32] (one JSON line)
 	SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 python bench.py

@@ -99,14 +99,18 @@ def minhash_lsh_pairs(
     bands = minhash_band_keys(
         documents, n_hashes, n_bands, terms=terms
     ).select("doc_id", "band_key")
-    cand = (
-        _salted_band_join(
+    try:
+        pairs = _salted_band_join(
             bands.select(F.col("doc_id").alias("doc_a"), "band_key"),
             bands.select(F.col("doc_id").alias("doc_b"), "band_key"),
             ["band_key"],
             max_pairs=max_candidate_pairs,
         )
-        .filter(F.col("doc_a") < F.col("doc_b"))
+    except ValueError:
+        terms.unpersist()  # the candidate gate refused
+        raise
+    cand = (
+        pairs.filter(F.col("doc_a") < F.col("doc_b"))
         .select("doc_a", "doc_b")
         .distinct()
     )
@@ -274,6 +278,9 @@ def _salted_band_join(
             F.sum(F.col("_na") * F.col("_nb")).alias("t")
         ).collect()[0]["t"] or 0
         if total > max_pairs:
+            # refusing: nothing downstream will read the cached frames
+            for frame in (cnt, left, right):
+                frame.unpersist()
             raise ValueError(
                 f"banded join would generate ~{total:,} candidate "
                 f"pairs (cap {max_pairs:,}): the corpus is dup-dense "

@@ -5420,7 +5420,7 @@ ORDER BY abs(v - mu.mu) DESC, user_id ASC LIMIT 1
 
 ESQL_WHERE_OR = """
 SELECT source, count(*)::BIGINT AS n,
-       list_sort(list(DISTINCT lang)) AS langs
+       array_to_string(list_sort(list(DISTINCT lang)), ',') AS langs
 FROM documents
 WHERE (lang = 'en' AND regexp_matches(source, 'src[13]'))
    OR (lang = 'de' AND n_chars >= 1000)
@@ -5478,7 +5478,8 @@ ORDER BY nu DESC, doc_id ASC LIMIT 50
 
 ESQL_STATS_EXT = """
 SELECT event_type,
-       (list_sort(list(value), 'DESC'))[1:3] AS top_v,
+       array_to_string(list_sort((list_sort(list(value), 'DESC'))[1:3]), ',')
+         AS top_v,
        round(stddev_pop(value), 4) AS sd,
        round(sum(value * event_id) / sum(event_id), 4) AS wa
 FROM events GROUP BY 1 ORDER BY event_type ASC

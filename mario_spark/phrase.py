@@ -34,8 +34,13 @@ from mario_spark import codec
 from mario_spark.analyze import tokenize_positions_udf
 from mario_spark.docs import assign_doc_ids
 from mario_spark.postings import decode_block_positions
-from mario_spark.postings import idf as _idf
-from mario_spark.query import B, K1, SCORE_DECIMALS
+from mario_spark.query import B, K1
+from mario_spark.wand import (
+    _result_frame,
+    df_to_idf,
+    lookup_df,
+    scatter_gather,
+)
 
 
 def positional_tf(documents: DataFrame) -> DataFrame:
@@ -133,326 +138,36 @@ def _collect_deleted(deleted_docs) -> np.ndarray | None:
     return np.unique(arr) if arr.size else None
 
 
-def _phrase_kernel(
-    pdf: pd.DataFrame,
-    queries: list[tuple[int, list[str]]],
-    idf_map: dict[str, float],
-    avgdl: float,
-    k: int,
-    k1: float,
-    b: float,
-    slop: int = 0,
-    deleted: np.ndarray | None = None,
-) -> pd.DataFrame:
-    """Score every phrase query against one dbucket. `deleted` =
-    global tombstone set (sorted unique) — masked out of the candidate
-    intersection BEFORE local top-k, so a tombstoned doc is replaced by
-    the next-best, never just dropped from the page."""
-    tds: dict[str, _PosTermData] = {
+def _pos_term_map(pdf: pd.DataFrame) -> dict[str, _PosTermData]:
+    """One dbucket's positional postings, decoded per term."""
+    return {
         t: _PosTermData(g.sort_values("block_id"))
         for t, g in pdf.groupby("term", sort=False)
     }
-    out_q, out_d, out_s = [], [], []
-    for qid, qterms in queries:
-        if any(t not in tds for t in qterms):
-            continue  # phrase needs every term; none of it is in here
-        term_tds = [tds[t] for t in qterms]
-        # doc-id intersection, rarest member first
-        order = np.argsort([td.ids.size for td in term_tds])
-        cand = term_tds[order[0]].ids
-        for oi in order[1:]:
-            cand = cand[np.isin(cand, term_tds[oi].ids, assume_unique=True)]
-            if cand.size == 0:
-                break
-        if cand.size == 0:
-            continue
-        if deleted is not None and cand.size:
-            cand = cand[~np.isin(cand, deleted, assume_unique=True)]
-            if cand.size == 0:
-                continue
-        sum_idf = sum(idf_map[t] for t in qterms)
-        rows_per_term = [
-            np.searchsorted(td.ids, cand) for td in term_tds
-        ]
-        doc_out, ptf_out, len_out = [], [], []
-        n_terms = len(term_tds)
-        for ci in range(cand.size):
-            term_pos = [
-                td.positions_of(int(rows_per_term[j][ci]))
-                for j, td in enumerate(term_tds)
-            ]
-            ptf = _chain_match_count(term_pos, n_terms, slop)
-            if ptf:
-                doc_out.append(int(cand[ci]))
-                ptf_out.append(ptf)
-                len_out.append(
-                    float(term_tds[0].lens[int(rows_per_term[0][ci])])
-                )
-        if not doc_out:
-            continue
-        ids = np.asarray(doc_out, dtype=np.int64)
-        ptf = np.asarray(ptf_out, dtype=np.float64)
-        dl = np.asarray(len_out, dtype=np.float64)
-        scores = (
-            sum_idf * ptf * (k1 + 1.0)
-            / (ptf + k1 * (1.0 - b + b * dl / avgdl))
-        )
-        top = np.lexsort((ids, -scores))[:k]
-        out_q.append(np.full(top.size, qid, dtype=np.int64))
-        out_d.append(ids[top])
-        out_s.append(scores[top])
-    if not out_q:
-        return pd.DataFrame(
-            {"query_id": [], "doc_id": [], "score": []}
-        ).astype({"query_id": "int64", "doc_id": "int64", "score": "float64"})
-    return pd.DataFrame(
-        {
-            "query_id": np.concatenate(out_q),
-            "doc_id": np.concatenate(out_d),
-            "score": np.concatenate(out_s),
-        }
-    )
 
 
-def _phrase_prefix_kernel(
-    pdf: pd.DataFrame,
-    queries: list[tuple[int, list[str], list[str], float]],
-    avgdl: float,
-    k: int,
-    k1: float,
-    b: float,
-    deleted: np.ndarray | None = None,
-) -> pd.DataFrame:
-    """Score match_phrase_prefix queries against one dbucket. Each
-    query is (qid, fixed_terms, expansion_terms, sum_idf): a doc
-    matches at start p iff the fixed terms occur consecutively from p
-    and the NEXT position holds any expansion term (the last-slot
-    position set is the sorted union across expansion terms —
-    Lucene MultiPhraseQuery's union postings view)."""
-    tds: dict[str, _PosTermData] = {
-        t: _PosTermData(g.sort_values("block_id"))
-        for t, g in pdf.groupby("term", sort=False)
-    }
-    out_q, out_d, out_s = [], [], []
-    for qid, fixed, exps, sum_idf in queries:
-        if any(t not in tds for t in fixed):
-            continue
-        exp_tds = [tds[t] for t in exps if t in tds]
-        if not exp_tds:
-            continue
-        fixed_tds = [tds[t] for t in fixed]
-        cand = fixed_tds[0].ids
-        for td in fixed_tds[1:]:
-            cand = cand[np.isin(cand, td.ids, assume_unique=True)]
-            if cand.size == 0:
-                break
-        if cand.size == 0:
-            continue
-        exp_union = np.unique(np.concatenate([td.ids for td in exp_tds]))
-        cand = cand[np.isin(cand, exp_union, assume_unique=True)]
-        if deleted is not None and cand.size:
-            cand = cand[~np.isin(cand, deleted, assume_unique=True)]
-        if cand.size == 0:
-            continue
-        rows_fixed = [np.searchsorted(td.ids, cand) for td in fixed_tds]
-        n_fixed = len(fixed_tds)
-        doc_out, ptf_out, len_out = [], [], []
-        for ci in range(cand.size):
-            d = int(cand[ci])
-            term_pos = [
-                td.positions_of(int(rows_fixed[j][ci]))
-                for j, td in enumerate(fixed_tds)
-            ]
-            last = []
-            for td in exp_tds:
-                i = int(np.searchsorted(td.ids, d))
-                if i < td.ids.size and td.ids[i] == d:
-                    last.append(td.positions_of(i))
-            lp = np.sort(np.concatenate(last)) if last else None
-            if lp is None or lp.size == 0:
-                continue
-            ptf = _chain_match_count(term_pos + [lp], n_fixed + 1, 0)
-            if ptf:
-                doc_out.append(d)
-                ptf_out.append(ptf)
-                len_out.append(float(fixed_tds[0].lens[int(rows_fixed[0][ci])]))
-        if not doc_out:
-            continue
-        ids = np.asarray(doc_out, dtype=np.int64)
-        ptf = np.asarray(ptf_out, dtype=np.float64)
-        dl = np.asarray(len_out, dtype=np.float64)
-        scores = (
-            sum_idf * ptf * (k1 + 1.0)
-            / (ptf + k1 * (1.0 - b + b * dl / avgdl))
-        )
-        top = np.lexsort((ids, -scores))[:k]
-        out_q.append(np.full(top.size, qid, dtype=np.int64))
-        out_d.append(ids[top])
-        out_s.append(scores[top])
-    if not out_q:
-        return pd.DataFrame(
-            {"query_id": [], "doc_id": [], "score": []}
-        ).astype({"query_id": "int64", "doc_id": "int64", "score": "float64"})
-    return pd.DataFrame(
-        {
-            "query_id": np.concatenate(out_q),
-            "doc_id": np.concatenate(out_d),
-            "score": np.concatenate(out_s),
-        }
-    )
-
-
-def search_phrase_prefix(
-    postings: DataFrame,
-    dictionary: DataFrame,
-    queries: list[tuple[int, list[str], str]],
-    n_docs: int,
-    avgdl: float,
-    k: int = 10,
-    k1: float = K1,
-    b: float = B,
-    max_expansions: int = 50,
-) -> DataFrame:
-    """ES match_phrase_prefix: `queries` is [(query_id, fixed_terms,
-    last_prefix)]. The last position expands to the `max_expansions`
-    alphabetically-first dictionary terms with the prefix (ES caps at
-    50, selected in term-dictionary order — deterministic on both
-    engines); a doc matches where the fixed terms run consecutively
-    and the next token is any expansion. Scored as one pseudo-term
-    (Lucene MultiPhraseWeight): idf = Σ idf(fixed) + Σ idf(expansions),
-    tf = admitting-start count. Expansion is ONE pruned dictionary
-    pass; the kernel runs per dbucket like search_phrase."""
-    prefixes = sorted({p for _, _, p in queries if p})
-    fixed_all = sorted({t for _, ts, _ in queries for t in ts})
-    pcond = None
-    for p in prefixes:
-        c = F.col("term").startswith(p)
-        pcond = c if pcond is None else (pcond | c)
-    exp_rows = (
-        dictionary.filter(pcond).select("term", "df").collect()
-        if pcond is not None
-        else []
-    )
-    fixed_rows = dictionary.filter(F.col("term").isin(fixed_all)).collect()
-    nd = float(n_docs)
-    idf_map = {r["term"]: _idf(nd, float(r["df"])) for r in fixed_rows}
-    idf_map.update({r["term"]: _idf(nd, float(r["df"])) for r in exp_rows})
-    exp_terms_sorted = sorted({r["term"] for r in exp_rows})
-    kq: list[tuple[int, list[str], list[str], float]] = []
-    for qid, fixed, prefix in queries:
-        if any(t not in idf_map for t in fixed):
-            continue  # OOV fixed member -> matches nothing
-        exps = [t for t in exp_terms_sorted if t.startswith(prefix)]
-        exps = exps[:max_expansions]
-        if not exps:
-            continue  # no expansion -> matches nothing (ES semantics)
-        sum_idf = sum(idf_map[t] for t in fixed) + sum(idf_map[t] for t in exps)
-        kq.append((qid, list(fixed), exps, sum_idf))
-    needed = sorted(
-        {t for _, fx, ex, _ in kq for t in fx}
-        | {t for _, fx, ex, _ in kq for t in ex}
-    )
-    cand = postings.filter(F.col("term").isin(needed))
-    ad = float(avgdl)
+def _positional_kernel(queries: list[tuple], score_one):
+    """scatter_gather kernel from a per-query scorer: decode the
+    bucket's positional postings once, then score_one(tds, *query) ->
+    (query_ids, doc_ids, scores) local top-k, or None, for every query
+    of the batch."""
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _phrase_prefix_kernel(pdf, kq, ad, k, k1, b)
+        tds = _pos_term_map(pdf)
+        hits = (score_one(tds, *q) for q in queries)
+        return _result_frame([h for h in hits if h])
 
-    local = cand.groupBy("dbucket").applyInPandas(
-        kernel, "query_id long, doc_id long, score double"
-    )
-    s = local.withColumn("score", F.round("score", SCORE_DECIMALS))
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        s.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "score")
-    )
-
-
-def search_phrase(
-    postings: DataFrame,
-    dictionary: DataFrame,
-    phrase_queries: list[tuple[int, list[str]]],
-    n_docs: int,
-    avgdl: float,
-    k: int = 10,
-    k1: float = K1,
-    b: float = B,
-    slop: int = 0,
-    deleted_docs: DataFrame | None = None,
-) -> DataFrame:
-    """positional postings x phrases -> (query_id, rank, doc_id, score).
-
-    deleted_docs = tombstoned doc ids (Index delete-by-query), applied
-    with Lucene live-docs semantics (excluded from results, stats
-    stale until compaction).
-
-    `phrase_queries` is [(query_id, [ordered terms])]; terms must be in
-    analyzer-output form (use analyze.py_tokenize on raw text). Plan is
-    search_wand's: term-pruned scan -> per-dbucket kernel -> per-query
-    rank window over the tiny candidate union.
-
-    slop > 0 = ordered proximity (ES span_near in_order=true; NOTE this
-    deliberately deviates from match_phrase's sloppy-freq semantics,
-    which also admits REORDERED terms once slop >= 2 — order is
-    enforced here): terms must appear in query order within a window of
-    len(terms) + slop positions; ptf counts the admitting starts.
-    """
-    terms = sorted({t for _, ts in phrase_queries for t in ts})
-    df_rows = dictionary.filter(F.col("term").isin(terms)).collect()
-    idf_map = {r["term"]: _idf(float(n_docs), float(r["df"])) for r in df_rows}
-    # a phrase containing an OOV term matches nothing — drop it now
-    queries = [
-        (qid, ts)
-        for qid, ts in phrase_queries
-        if all(t in idf_map for t in ts)
-    ]
-    cand = postings.filter(F.col("term").isin(terms))
-    ad = float(avgdl)
-    deleted = _collect_deleted(deleted_docs)
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _phrase_kernel(
-            pdf, queries, idf_map, ad, k, k1, b, slop, deleted
-        )
-
-    local = cand.groupBy("dbucket").applyInPandas(
-        kernel, "query_id long, doc_id long, score double"
-    )
-    s = local.withColumn("score", F.round("score", SCORE_DECIMALS))
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        s.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "score")
-    )
-
-
-# --------------------------------------------------------- span queries
-def _chain_match_spans(
-    term_pos: list[np.ndarray], n_terms: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """Consecutive-position (slop=0) chain matches -> (starts, ends)
-    position arrays. Same greedy-minimal argument as _chain_match_count
-    specialized to exact phrases: p_j must equal p0 + j."""
-    p0 = term_pos[0].astype(np.int64)
-    alive = np.ones(p0.size, dtype=bool)
-    for j in range(1, n_terms):
-        pj = term_pos[j]
-        idx = np.searchsorted(pj, p0 + j)
-        ok = (idx < pj.size) & (pj[np.minimum(idx, pj.size - 1)] == p0 + j)
-        alive &= ok
-    starts = p0[alive]
-    return starts, starts + (n_terms - 1)
+    return kernel
 
 
 def _chain_doc_ptfs(
-    tds: dict, qterms: list[str], deleted: np.ndarray | None
+    tds: dict, qterms: list[str], deleted: np.ndarray | None, slop: int = 0
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, list]:
     """One chain against one dbucket: -> (doc_ids, ptf, len, row_idx
     per term) for candidate docs (doc-id intersection of every member
-    term, tombstones masked). ptf is NOT yet filtered to > 0 — span
+    term, rarest first, tombstones masked) — the classic
+    prox-evaluation order. ptf counts the starts admitted within `slop`
+    (_chain_match_count) and is NOT yet filtered to > 0 — span
     composition needs the span positions, so callers that only need
     counts filter themselves."""
     empty = (
@@ -483,10 +198,15 @@ def _chain_doc_ptfs(
             td.positions_of(int(rows_per_term[j][ci]))
             for j, td in enumerate(term_tds)
         ]
-        starts, _ = _chain_match_spans(term_pos, n_terms)
-        ptf[ci] = starts.size
+        ptf[ci] = _chain_match_count(term_pos, n_terms, slop)
         lens[ci] = float(term_tds[0].lens[int(rows_per_term[0][ci])])
     return cand, ptf, lens, rows_per_term
+
+
+def _local_topk(qid, ids, scores, k):
+    """Bucket-local top-k of one query (score desc, doc_id asc)."""
+    top = np.lexsort((ids, -scores))[:k]
+    return np.full(top.size, qid, dtype=np.int64), ids[top], scores[top]
 
 
 def _score_and_topk(qid, ids, ptf, dl, sum_idf, avgdl, k, k1, b):
@@ -499,12 +219,190 @@ def _score_and_topk(qid, ids, ptf, dl, sum_idf, avgdl, k, k1, b):
         sum_idf * ptf * (k1 + 1.0)
         / (ptf + k1 * (1.0 - b + b * dl / avgdl))
     )
-    top = np.lexsort((ids, -scores))[:k]
-    return (
-        np.full(top.size, qid, dtype=np.int64),
-        ids[top],
-        scores[top],
+    return _local_topk(qid, ids, scores, k)
+
+
+def search_phrase_prefix(
+    postings: DataFrame,
+    dictionary: DataFrame,
+    queries: list[tuple[int, list[str], str]],
+    n_docs: int,
+    avgdl: float,
+    k: int = 10,
+    k1: float = K1,
+    b: float = B,
+    max_expansions: int = 50,
+) -> DataFrame:
+    """ES match_phrase_prefix: `queries` is [(query_id, fixed_terms,
+    last_prefix)]. The last position expands to the `max_expansions`
+    alphabetically-first dictionary terms with the prefix (ES caps at
+    50, selected in term-dictionary order — deterministic on both
+    engines); a doc matches where the fixed terms run consecutively
+    and the next token is any expansion. Scored as one pseudo-term
+    (Lucene MultiPhraseWeight): idf = Σ idf(fixed) + Σ idf(expansions),
+    tf = admitting-start count. Expansion is ONE pruned dictionary
+    pass; the kernel runs per dbucket like search_phrase: a doc matches
+    at start p iff the fixed terms occur consecutively from p and the
+    NEXT position holds any expansion term (the last-slot position set
+    is the sorted union across expansion terms — Lucene
+    MultiPhraseQuery's union postings view)."""
+    prefixes = sorted({p for _, _, p in queries if p})
+    fixed_all = sorted({t for _, ts, _ in queries for t in ts})
+    pcond = None
+    for p in prefixes:
+        c = F.col("term").startswith(p)
+        pcond = c if pcond is None else (pcond | c)
+    exp_rows = (
+        dictionary.filter(pcond).select("term", "df").collect()
+        if pcond is not None
+        else []
     )
+    exp_dfm = {r["term"]: int(r["df"]) for r in exp_rows}
+    idf_map = df_to_idf(
+        {**lookup_df(dictionary, fixed_all), **exp_dfm}, n_docs
+    )
+    exp_terms_sorted = sorted(exp_dfm)
+    kq: list[tuple[int, list[str], list[str], float]] = []
+    for qid, fixed, prefix in queries:
+        if any(t not in idf_map for t in fixed):
+            continue  # OOV fixed member -> matches nothing
+        exps = [t for t in exp_terms_sorted if t.startswith(prefix)]
+        exps = exps[:max_expansions]
+        if not exps:
+            continue  # no expansion -> matches nothing (ES semantics)
+        sum_idf = sum(idf_map[t] for t in fixed) + sum(idf_map[t] for t in exps)
+        kq.append((qid, list(fixed), exps, sum_idf))
+    needed = sorted(
+        {t for _, fx, ex, _ in kq for t in fx}
+        | {t for _, fx, ex, _ in kq for t in ex}
+    )
+    ad = float(avgdl)
+
+    def score_one(tds, qid, fixed, exps, sum_idf):
+        if any(t not in tds for t in fixed):
+            return None
+        exp_tds = [tds[t] for t in exps if t in tds]
+        if not exp_tds:
+            return None
+        fixed_tds = [tds[t] for t in fixed]
+        cand = fixed_tds[0].ids
+        for td in fixed_tds[1:]:
+            cand = cand[np.isin(cand, td.ids, assume_unique=True)]
+        exp_union = np.unique(np.concatenate([td.ids for td in exp_tds]))
+        cand = cand[np.isin(cand, exp_union, assume_unique=True)]
+        rows_fixed = [np.searchsorted(td.ids, cand) for td in fixed_tds]
+        ptf = np.zeros(cand.size, dtype=np.float64)
+        dl = np.zeros(cand.size, dtype=np.float64)
+        for ci in range(cand.size):
+            d = int(cand[ci])
+            term_pos = [
+                td.positions_of(int(rows_fixed[j][ci]))
+                for j, td in enumerate(fixed_tds)
+            ]
+            last = []
+            for td in exp_tds:
+                i = int(np.searchsorted(td.ids, d))
+                if i < td.ids.size and td.ids[i] == d:
+                    last.append(td.positions_of(i))
+            lp = np.sort(np.concatenate(last))
+            ptf[ci] = _chain_match_count(term_pos + [lp], len(fixed) + 1, 0)
+            dl[ci] = float(fixed_tds[0].lens[int(rows_fixed[0][ci])])
+        return _score_and_topk(qid, cand, ptf, dl, sum_idf, ad, k, k1, b)
+
+    return scatter_gather(
+        postings, needed, _positional_kernel(kq, score_one), k
+    )
+
+
+def search_phrase(
+    postings: DataFrame,
+    dictionary: DataFrame,
+    phrase_queries: list[tuple[int, list[str]]],
+    n_docs: int,
+    avgdl: float,
+    k: int = 10,
+    k1: float = K1,
+    b: float = B,
+    slop: int = 0,
+    deleted_docs: DataFrame | None = None,
+) -> DataFrame:
+    """positional postings x phrases -> (query_id, rank, doc_id, score).
+
+    deleted_docs = tombstoned doc ids (Index delete-by-query), applied
+    with Lucene live-docs semantics (excluded from results, stats
+    stale until compaction).
+
+    `phrase_queries` is [(query_id, [ordered terms])]; terms must be in
+    analyzer-output form (use analyze.py_tokenize on raw text). Plan is
+    search_wand's: term-pruned scan -> per-dbucket kernel -> per-query
+    rank window over the tiny candidate union (wand.scatter_gather).
+
+    slop > 0 = ordered proximity (ES span_near in_order=true; NOTE this
+    deliberately deviates from match_phrase's sloppy-freq semantics,
+    which also admits REORDERED terms once slop >= 2 — order is
+    enforced here): terms must appear in query order within a window of
+    len(terms) + slop positions; ptf counts the admitting starts.
+    """
+    terms = sorted({t for _, ts in phrase_queries for t in ts})
+    return _rank_phrases(
+        postings, phrase_queries, lookup_df(dictionary, terms), n_docs,
+        avgdl, k, k1, b, slop, _collect_deleted(deleted_docs),
+    )
+
+
+def _rank_phrases(
+    postings: DataFrame,
+    phrase_queries: list[tuple[int, list[str]]],
+    dfm: dict[str, int],
+    n_docs: float,
+    avgdl: float,
+    k: int = 10,
+    k1: float = K1,
+    b: float = B,
+    slop: int = 0,
+    deleted: np.ndarray | None = None,
+) -> DataFrame:
+    """search_phrase's body, given the member terms' {term: df}: the
+    cold path looks dfm up in the dictionary, QuerySession answers it
+    from its warm one. Per bucket, each phrase scores as Lucene's
+    PhraseWeight over its chain matches; a tombstoned doc is masked
+    out BEFORE local top-k, so it is replaced by the next-best, never
+    just dropped from the page."""
+    idf_map = df_to_idf(dfm, n_docs)
+    # a phrase containing an OOV term matches nothing — drop it now
+    queries = [
+        (qid, ts, sum(idf_map[t] for t in ts))
+        for qid, ts in phrase_queries
+        if ts and all(t in idf_map for t in ts)
+    ]
+    ad = float(avgdl)
+
+    def score_one(tds, qid, qterms, sum_idf):
+        ids, ptf, lens, _ = _chain_doc_ptfs(tds, qterms, deleted, slop)
+        return _score_and_topk(qid, ids, ptf, lens, sum_idf, ad, k, k1, b)
+
+    terms = sorted({t for _, ts in phrase_queries for t in ts})
+    return scatter_gather(
+        postings, terms, _positional_kernel(queries, score_one), k
+    )
+
+
+# --------------------------------------------------------- span queries
+def _chain_match_spans(
+    term_pos: list[np.ndarray], n_terms: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """Consecutive-position (slop=0) chain matches -> (starts, ends)
+    position arrays. Same greedy-minimal argument as _chain_match_count
+    specialized to exact phrases: p_j must equal p0 + j."""
+    p0 = term_pos[0].astype(np.int64)
+    alive = np.ones(p0.size, dtype=bool)
+    for j in range(1, n_terms):
+        pj = term_pos[j]
+        idx = np.searchsorted(pj, p0 + j)
+        ok = (idx < pj.size) & (pj[np.minimum(idx, pj.size - 1)] == p0 + j)
+        alive &= ok
+    starts = p0[alive]
+    return starts, starts + (n_terms - 1)
 
 
 def search_span_or(
@@ -530,8 +428,7 @@ def search_span_or(
     all_terms = sorted(
         {t for _, chains in span_queries for ch in chains for t in ch}
     )
-    df_rows = dictionary.filter(F.col("term").isin(all_terms)).collect()
-    idf_map = {r["term"]: _idf(float(n_docs), float(r["df"])) for r in df_rows}
+    idf_map = df_to_idf(lookup_df(dictionary, all_terms), n_docs)
     queries = []
     for qid, chains in span_queries:
         sidf = sum(
@@ -542,57 +439,28 @@ def search_span_or(
         live = [ch for ch in chains if all(t in idf_map for t in ch)]
         if live and sidf > 0:
             queries.append((qid, live, sidf))
-    cand = postings.filter(F.col("term").isin(all_terms))
     ad = float(avgdl)
     deleted = _collect_deleted(deleted_docs)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        tds = {
-            t: _PosTermData(g.sort_values("block_id"))
-            for t, g in pdf.groupby("term", sort=False)
-        }
-        out_q, out_d, out_s = [], [], []
-        for qid, chains, sidf in queries:
-            freq: dict[int, float] = {}
-            dlen: dict[int, float] = {}
-            for ch in chains:
-                ids, ptf, lens, _ = _chain_doc_ptfs(tds, ch, deleted)
-                for i in range(ids.size):
-                    if ptf[i] > 0:
-                        d = int(ids[i])
-                        freq[d] = freq.get(d, 0.0) + float(ptf[i])
-                        dlen[d] = float(lens[i])
-            if not freq:
-                continue
-            ids = np.array(sorted(freq), dtype=np.int64)
-            ptf = np.array([freq[int(d)] for d in ids], dtype=np.float64)
-            dl = np.array([dlen[int(d)] for d in ids], dtype=np.float64)
-            r = _score_and_topk(qid, ids, ptf, dl, sidf, ad, k, k1, b)
-            if r:
-                out_q.append(r[0]); out_d.append(r[1]); out_s.append(r[2])
-        if not out_q:
-            return pd.DataFrame(
-                {"query_id": [], "doc_id": [], "score": []}
-            ).astype(
-                {"query_id": "int64", "doc_id": "int64", "score": "float64"}
-            )
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(out_q),
-                "doc_id": np.concatenate(out_d),
-                "score": np.concatenate(out_s),
-            }
-        )
+    def score_one(tds, qid, chains, sidf):
+        freq: dict[int, float] = {}
+        dlen: dict[int, float] = {}
+        for ch in chains:
+            ids, ptf, lens, _ = _chain_doc_ptfs(tds, ch, deleted)
+            for i in range(ids.size):
+                if ptf[i] > 0:
+                    d = int(ids[i])
+                    freq[d] = freq.get(d, 0.0) + float(ptf[i])
+                    dlen[d] = float(lens[i])
+        if not freq:
+            return None
+        ids = np.array(sorted(freq), dtype=np.int64)
+        ptf = np.array([freq[int(d)] for d in ids], dtype=np.float64)
+        dl = np.array([dlen[int(d)] for d in ids], dtype=np.float64)
+        return _score_and_topk(qid, ids, ptf, dl, sidf, ad, k, k1, b)
 
-    local = cand.groupBy("dbucket").applyInPandas(
-        kernel, "query_id long, doc_id long, score double"
-    )
-    s = local.withColumn("score", F.round("score", SCORE_DECIMALS))
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        s.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "score")
+    return scatter_gather(
+        postings, all_terms, _positional_kernel(queries, score_one), k
     )
 
 
@@ -619,10 +487,7 @@ def search_span_near_unordered(
     term-pruned scan -> per-dbucket kernel -> tiny per-query rank
     window."""
     all_terms = sorted({t for _, ts in pair_queries for t in ts})
-    df_rows = dictionary.filter(F.col("term").isin(all_terms)).collect()
-    idf_map = {
-        r["term"]: _idf(float(n_docs), float(r["df"])) for r in df_rows
-    }
+    idf_map = df_to_idf(lookup_df(dictionary, all_terms), n_docs)
     queries = []
     for qid, ts in pair_queries:
         if len(ts) != 2:
@@ -634,66 +499,33 @@ def search_span_near_unordered(
             queries.append(
                 (int(qid), ts[0], ts[1], sum(idf_map[t] for t in ts))
             )
-    cand = postings.filter(F.col("term").isin(all_terms))
     ad, w = float(avgdl), int(slop) + 1
     deleted = _collect_deleted(deleted_docs)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        tds = {
-            t: _PosTermData(g.sort_values("block_id"))
-            for t, g in pdf.groupby("term", sort=False)
-        }
-        out_q, out_d, out_s = [], [], []
-        for qid, t0, t1, sidf in queries:
-            if t0 not in tds or t1 not in tds:
-                continue
-            ta, tb = tds[t0], tds[t1]
-            ids = ta.ids[np.isin(ta.ids, tb.ids, assume_unique=True)]
-            if deleted is not None:
-                ids = ids[~np.isin(ids, deleted, assume_unique=True)]
-            if ids.size == 0:
-                continue
-            ra = np.searchsorted(ta.ids, ids)
-            rb = np.searchsorted(tb.ids, ids)
-            ptf = np.zeros(ids.size, dtype=np.float64)
-            dl = np.zeros(ids.size, dtype=np.float64)
-            for ci in range(ids.size):
-                pa = ta.positions_of(int(ra[ci]))
-                pb = tb.positions_of(int(rb[ci]))
-                # distinct terms never share a position, so the window
-                # [pa - w, pa + w] can't self-match
-                lo = np.searchsorted(pb, pa - w, side="left")
-                hi = np.searchsorted(pb, pa + w, side="right")
-                ptf[ci] = float(np.count_nonzero(hi > lo))
-                dl[ci] = float(ta.lens[int(ra[ci])])
-            r = _score_and_topk(qid, ids, ptf, dl, sidf, ad, k, k1, b)
-            if r:
-                out_q.append(r[0]); out_d.append(r[1]); out_s.append(r[2])
-        if not out_q:
-            return pd.DataFrame(
-                {"query_id": [], "doc_id": [], "score": []}
-            ).astype(
-                {"query_id": "int64", "doc_id": "int64", "score": "float64"}
-            )
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(out_q),
-                "doc_id": np.concatenate(out_d),
-                "score": np.concatenate(out_s),
-            }
-        )
+    def score_one(tds, qid, t0, t1, sidf):
+        if t0 not in tds or t1 not in tds:
+            return None
+        ta, tb = tds[t0], tds[t1]
+        ids = ta.ids[np.isin(ta.ids, tb.ids, assume_unique=True)]
+        if deleted is not None:
+            ids = ids[~np.isin(ids, deleted, assume_unique=True)]
+        ra = np.searchsorted(ta.ids, ids)
+        rb = np.searchsorted(tb.ids, ids)
+        ptf = np.zeros(ids.size, dtype=np.float64)
+        dl = np.zeros(ids.size, dtype=np.float64)
+        for ci in range(ids.size):
+            pa = ta.positions_of(int(ra[ci]))
+            pb = tb.positions_of(int(rb[ci]))
+            # distinct terms never share a position, so the window
+            # [pa - w, pa + w] can't self-match
+            lo = np.searchsorted(pb, pa - w, side="left")
+            hi = np.searchsorted(pb, pa + w, side="right")
+            ptf[ci] = float(np.count_nonzero(hi > lo))
+            dl[ci] = float(ta.lens[int(ra[ci])])
+        return _score_and_topk(qid, ids, ptf, dl, sidf, ad, k, k1, b)
 
-    local = cand.groupBy("dbucket").applyInPandas(
-        kernel, "query_id long, doc_id long, score double"
-    )
-    s = local.withColumn("score", F.round("score", SCORE_DECIMALS))
-    w_ = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id")
-    )
-    return (
-        s.withColumn("rank", F.row_number().over(w_).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "score")
+    return scatter_gather(
+        postings, all_terms, _positional_kernel(queries, score_one), k
     )
 
 
@@ -721,80 +553,45 @@ def search_span_not(
     inc_terms = sorted({t for _, ts, _ in span_queries for t in ts})
     exc_terms = sorted({x for _, _, x in span_queries})
     scan_terms = sorted(set(inc_terms) | set(exc_terms))
-    df_rows = dictionary.filter(F.col("term").isin(inc_terms)).collect()
-    idf_map = {r["term"]: _idf(float(n_docs), float(r["df"])) for r in df_rows}
+    idf_map = df_to_idf(lookup_df(dictionary, inc_terms), n_docs)
     queries = [
         (qid, ts, x, sum(idf_map[t] for t in ts))
         for qid, ts, x in span_queries
         if all(t in idf_map for t in ts)
     ]
-    cand = postings.filter(F.col("term").isin(scan_terms))
     ad = float(avgdl)
     deleted = _collect_deleted(deleted_docs)
     pre_i, post_i = int(pre), int(post)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        tds = {
-            t: _PosTermData(g.sort_values("block_id"))
-            for t, g in pdf.groupby("term", sort=False)
-        }
-        out_q, out_d, out_s = [], [], []
-        for qid, qterms, xterm, sidf in queries:
-            if any(t not in tds for t in qterms):
-                continue
-            term_tds = [tds[t] for t in qterms]
-            ids_all, _, lens, rows_per_term = _chain_doc_ptfs(
-                tds, qterms, deleted
-            )
-            if ids_all.size == 0:
-                continue
-            xtd = tds.get(xterm)
-            n_terms = len(term_tds)
-            ptf = np.zeros(ids_all.size, dtype=np.float64)
-            for ci in range(ids_all.size):
-                term_pos = [
-                    td.positions_of(int(rows_per_term[j][ci]))
-                    for j, td in enumerate(term_tds)
-                ]
-                starts, ends = _chain_match_spans(term_pos, n_terms)
-                if starts.size == 0:
-                    continue
-                if xtd is not None:
-                    xi = np.searchsorted(xtd.ids, ids_all[ci])
-                    if xi < xtd.ids.size and xtd.ids[xi] == ids_all[ci]:
-                        xpos = xtd.positions_of(int(xi))
-                        lo = np.searchsorted(xpos, starts - pre_i, "left")
-                        hi = np.searchsorted(xpos, ends + post_i, "right")
-                        starts = starts[hi == lo]  # no overlap survives
-                ptf[ci] = starts.size
-            r = _score_and_topk(
-                qid, ids_all, ptf, lens, sidf, ad, k, k1, b
-            )
-            if r:
-                out_q.append(r[0]); out_d.append(r[1]); out_s.append(r[2])
-        if not out_q:
-            return pd.DataFrame(
-                {"query_id": [], "doc_id": [], "score": []}
-            ).astype(
-                {"query_id": "int64", "doc_id": "int64", "score": "float64"}
-            )
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(out_q),
-                "doc_id": np.concatenate(out_d),
-                "score": np.concatenate(out_s),
-            }
+    def score_one(tds, qid, qterms, xterm, sidf):
+        ids_all, _, lens, rows_per_term = _chain_doc_ptfs(
+            tds, qterms, deleted
         )
+        if ids_all.size == 0:
+            return None
+        term_tds = [tds[t] for t in qterms]
+        xtd = tds.get(xterm)
+        ptf = np.zeros(ids_all.size, dtype=np.float64)
+        for ci in range(ids_all.size):
+            term_pos = [
+                td.positions_of(int(rows_per_term[j][ci]))
+                for j, td in enumerate(term_tds)
+            ]
+            starts, ends = _chain_match_spans(term_pos, len(term_tds))
+            if starts.size == 0:
+                continue
+            if xtd is not None:
+                xi = np.searchsorted(xtd.ids, ids_all[ci])
+                if xi < xtd.ids.size and xtd.ids[xi] == ids_all[ci]:
+                    xpos = xtd.positions_of(int(xi))
+                    lo = np.searchsorted(xpos, starts - pre_i, "left")
+                    hi = np.searchsorted(xpos, ends + post_i, "right")
+                    starts = starts[hi == lo]  # no overlap survives
+            ptf[ci] = starts.size
+        return _score_and_topk(qid, ids_all, ptf, lens, sidf, ad, k, k1, b)
 
-    local = cand.groupBy("dbucket").applyInPandas(
-        kernel, "query_id long, doc_id long, score double"
-    )
-    s = local.withColumn("score", F.round("score", SCORE_DECIMALS))
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        s.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "score")
+    return scatter_gather(
+        postings, scan_terms, _positional_kernel(queries, score_one), k
     )
 
 
@@ -823,66 +620,33 @@ def search_span_first(
     per-query rank window.
     """
     all_terms = sorted({t for _, ts, _ in span_queries for t in ts})
-    df_rows = dictionary.filter(F.col("term").isin(all_terms)).collect()
-    idf_map = {r["term"]: _idf(float(n_docs), float(r["df"])) for r in df_rows}
+    idf_map = df_to_idf(lookup_df(dictionary, all_terms), n_docs)
     queries = [
         (qid, ts, int(end), sum(idf_map[t] for t in ts))
         for qid, ts, end in span_queries
         if all(t in idf_map for t in ts)
     ]
-    cand = postings.filter(F.col("term").isin(all_terms))
     ad = float(avgdl)
     deleted = _collect_deleted(deleted_docs)
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        tds = {
-            t: _PosTermData(g.sort_values("block_id"))
-            for t, g in pdf.groupby("term", sort=False)
-        }
-        out_q, out_d, out_s = [], [], []
-        for qid, qterms, end, sidf in queries:
-            ids, _, lens, rows_per_term = _chain_doc_ptfs(
-                tds, qterms, deleted
-            )
-            if ids.size == 0:
-                continue
-            term_tds = [tds[t] for t in qterms]
-            n_terms = len(qterms)
-            ptf = np.zeros(ids.size, dtype=np.float64)
-            for ci in range(ids.size):
-                term_pos = [
-                    td.positions_of(int(rows_per_term[j][ci]))
-                    for j, td in enumerate(term_tds)
-                ]
-                _, ends = _chain_match_spans(term_pos, n_terms)
-                # ends are inclusive last positions; exclusive = +1
-                ptf[ci] = float(np.count_nonzero(ends + 1 <= end))
-            r = _score_and_topk(qid, ids, ptf, lens, sidf, ad, k, k1, b)
-            if r:
-                out_q.append(r[0]); out_d.append(r[1]); out_s.append(r[2])
-        if not out_q:
-            return pd.DataFrame(
-                {"query_id": [], "doc_id": [], "score": []}
-            ).astype(
-                {"query_id": "int64", "doc_id": "int64", "score": "float64"}
-            )
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(out_q),
-                "doc_id": np.concatenate(out_d),
-                "score": np.concatenate(out_s),
-            }
-        )
+    def score_one(tds, qid, qterms, end, sidf):
+        ids, _, lens, rows_per_term = _chain_doc_ptfs(tds, qterms, deleted)
+        if ids.size == 0:
+            return None
+        term_tds = [tds[t] for t in qterms]
+        ptf = np.zeros(ids.size, dtype=np.float64)
+        for ci in range(ids.size):
+            term_pos = [
+                td.positions_of(int(rows_per_term[j][ci]))
+                for j, td in enumerate(term_tds)
+            ]
+            _, ends = _chain_match_spans(term_pos, len(qterms))
+            # ends are inclusive last positions; exclusive = +1
+            ptf[ci] = float(np.count_nonzero(ends + 1 <= end))
+        return _score_and_topk(qid, ids, ptf, lens, sidf, ad, k, k1, b)
 
-    local = cand.groupBy("dbucket").applyInPandas(
-        kernel, "query_id long, doc_id long, score double"
-    )
-    s = local.withColumn("score", F.round("score", SCORE_DECIMALS))
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        s.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "score")
+    return scatter_gather(
+        postings, all_terms, _positional_kernel(queries, score_one), k
     )
 
 
@@ -948,6 +712,7 @@ def search_intervals_match(
         .select("query_id", "rank", "doc_id", "matches")
     )
 
+
 def search_span_contain(
     postings: DataFrame,
     dictionary: DataFrame,
@@ -980,8 +745,7 @@ def search_span_contain(
     lit_terms = sorted({x for *_, x in span_queries})
     scan_terms = sorted(set(big_terms) | set(lit_terms))
     need = big_terms if mode == "containing" else lit_terms
-    df_rows = dictionary.filter(F.col("term").isin(need)).collect()
-    idf_map = {r["term"]: _idf(float(n_docs), float(r["df"])) for r in df_rows}
+    idf_map = df_to_idf(lookup_df(dictionary, need), n_docs)
     queries = []
     for qid, t1, t2, g, x in span_queries:
         sidf = (
@@ -990,90 +754,57 @@ def search_span_contain(
             else idf_map.get(x, 0.0)
         )
         queries.append((qid, t1, t2, int(g), x, sidf))
-    cand = postings.filter(F.col("term").isin(scan_terms))
     ad = float(avgdl)
     deleted = _collect_deleted(deleted_docs)
     containing = mode == "containing"
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        tds = {
-            t: _PosTermData(g.sort_values("block_id"))
-            for t, g in pdf.groupby("term", sort=False)
-        }
-        out_q, out_d, out_s = [], [], []
-        for qid, t1, t2, g, xterm, sidf in queries:
-            if any(t not in tds for t in (t1, t2, xterm)):
+    def score_one(tds, qid, t1, t2, g, xterm, sidf):
+        if any(t not in tds for t in (t1, t2, xterm)):
+            return None
+        td1, td2, xtd = tds[t1], tds[t2], tds[xterm]
+        cand_ids = td1.ids
+        for other in (td2.ids, xtd.ids):
+            cand_ids = cand_ids[np.isin(cand_ids, other, assume_unique=True)]
+        if deleted is not None and cand_ids.size:
+            cand_ids = cand_ids[
+                ~np.isin(cand_ids, deleted, assume_unique=True)
+            ]
+        r1 = np.searchsorted(td1.ids, cand_ids)
+        r2 = np.searchsorted(td2.ids, cand_ids)
+        rx = np.searchsorted(xtd.ids, cand_ids)
+        ptf = np.zeros(cand_ids.size, dtype=np.float64)
+        lens = np.zeros(cand_ids.size, dtype=np.float64)
+        for ci in range(cand_ids.size):
+            p1 = td1.positions_of(int(r1[ci]))
+            p2 = td2.positions_of(int(r2[ci]))
+            xpos = xtd.positions_of(int(rx[ci]))
+            lens[ci] = float(td1.lens[int(r1[ci])])
+            # greedy-minimal ordered pair spans: for each start, the
+            # first t2 strictly after it within the gap budget
+            idx = np.searchsorted(p2, p1 + 1, "left")
+            ok = idx < p2.size
+            idxc = np.minimum(idx, p2.size - 1)
+            ok &= p2[idxc] <= p1 + g + 1
+            starts, ends = p1[ok], p2[idxc[ok]]
+            if starts.size == 0:
                 continue
-            td1, td2, xtd = tds[t1], tds[t2], tds[xterm]
-            cand_ids = td1.ids
-            for other in (td2.ids, xtd.ids):
-                cand_ids = cand_ids[
-                    np.isin(cand_ids, other, assume_unique=True)
-                ]
-            if deleted is not None and cand_ids.size:
-                cand_ids = cand_ids[
-                    ~np.isin(cand_ids, deleted, assume_unique=True)
-                ]
-            if cand_ids.size == 0:
-                continue
-            r1 = np.searchsorted(td1.ids, cand_ids)
-            r2 = np.searchsorted(td2.ids, cand_ids)
-            rx = np.searchsorted(xtd.ids, cand_ids)
-            ptf = np.zeros(cand_ids.size, dtype=np.float64)
-            lens = np.zeros(cand_ids.size, dtype=np.float64)
-            for ci in range(cand_ids.size):
-                p1 = td1.positions_of(int(r1[ci]))
-                p2 = td2.positions_of(int(r2[ci]))
-                xpos = xtd.positions_of(int(rx[ci]))
-                lens[ci] = float(td1.lens[int(r1[ci])])
-                # greedy-minimal ordered pair spans: for each start,
-                # the first t2 strictly after it within the gap budget
-                idx = np.searchsorted(p2, p1 + 1, "left")
-                ok = idx < p2.size
-                idxc = np.minimum(idx, p2.size - 1)
-                ok &= p2[idxc] <= p1 + g + 1
-                starts, ends = p1[ok], p2[idxc[ok]]
-                if starts.size == 0:
-                    continue
-                if containing:
-                    lo = np.searchsorted(xpos, starts, "left")
-                    hi = np.searchsorted(xpos, ends, "right")
-                    ptf[ci] = float(np.count_nonzero(hi > lo))
-                else:
-                    # ends are non-decreasing with starts (greedy
-                    # minimal), so z is covered iff the LAST span
-                    # starting at or before z ends at or after z
-                    i1 = np.searchsorted(starts, xpos, "right") - 1
-                    cov = i1 >= 0
-                    i1c = np.maximum(i1, 0)
-                    cov &= ends[i1c] >= xpos
-                    ptf[ci] = float(np.count_nonzero(cov))
-            r = _score_and_topk(qid, cand_ids, ptf, lens, sidf, ad, k, k1, b)
-            if r:
-                out_q.append(r[0]); out_d.append(r[1]); out_s.append(r[2])
-        if not out_q:
-            return pd.DataFrame(
-                {"query_id": [], "doc_id": [], "score": []}
-            ).astype(
-                {"query_id": "int64", "doc_id": "int64", "score": "float64"}
-            )
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(out_q),
-                "doc_id": np.concatenate(out_d),
-                "score": np.concatenate(out_s),
-            }
-        )
+            if containing:
+                lo = np.searchsorted(xpos, starts, "left")
+                hi = np.searchsorted(xpos, ends, "right")
+                ptf[ci] = float(np.count_nonzero(hi > lo))
+            else:
+                # ends are non-decreasing with starts (greedy minimal),
+                # so z is covered iff the LAST span starting at or
+                # before z ends at or after z
+                i1 = np.searchsorted(starts, xpos, "right") - 1
+                cov = i1 >= 0
+                i1c = np.maximum(i1, 0)
+                cov &= ends[i1c] >= xpos
+                ptf[ci] = float(np.count_nonzero(cov))
+        return _score_and_topk(qid, cand_ids, ptf, lens, sidf, ad, k, k1, b)
 
-    local = cand.groupBy("dbucket").applyInPandas(
-        kernel, "query_id long, doc_id long, score double"
-    )
-    s = local.withColumn("score", F.round("score", SCORE_DECIMALS))
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        s.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "score")
+    return scatter_gather(
+        postings, scan_terms, _positional_kernel(queries, score_one), k
     )
 
 

@@ -39,10 +39,19 @@ from __future__ import annotations
 
 import re
 
+import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from mario_spark.analyze import py_tokenize, tokenize_udf
+from mario_spark.phrase import (
+    _chain_doc_ptfs,
+    _collect_deleted,
+    _local_topk,
+    _positional_kernel,
+)
+from mario_spark.postings import idf as _idf
 from mario_spark.query import B, K1, SCORE_DECIMALS, topk
+from mario_spark.wand import lookup_df, scatter_gather
 
 _ATOM_RE = re.compile(r'([+-]?)(?:"([^"]*)"|(\S+))')
 
@@ -719,122 +728,138 @@ SELECT query_id, rank, doc_id, score FROM rk WHERE rank <= {k}
 
 
 # ------------------------------------------------- indexed serving path
-def _qs_kernel(
-    pdf,
-    queries: list[tuple[int, list[tuple[str, tuple, float, float]], int, int]],
+def _clause_hits(tds: dict, terms: tuple):
+    """-> (ids, ctf, lens) of one dbucket's docs where the clause chain
+    occurs (a single term's tf is its position count)."""
+    if len(terms) == 1 and terms[0] in tds:
+        td = tds[terms[0]]
+        return td.ids, np.diff(td.pos_starts).astype(np.float64), td.lens
+    ids, ctf, lens, _ = _chain_doc_ptfs(tds, terms, None)
+    keep = ctf > 0
+    return ids[keep], ctf[keep], lens[keep]
+
+
+def _score_query_string(
+    tds: dict,
+    qid: int,
+    clauses: list[tuple[str, tuple, float, float]],
+    req_must: int,
+    n_should: int,
     k: int,
     k1: float,
     b: float,
     deleted=None,
 ):
-    """Evaluate parsed query_string queries against ONE dbucket of a
+    """Evaluate one parsed query_string query against ONE dbucket of a
     positional index. Exact per bucket: all of a doc's postings live in
     its dbucket, so must-counts, exclusions, and phrase positions are
-    bucket-local facts. `queries` rows are
-    (query_id, [(kind, terms, sidf, avgdl)], req_must, n_should) — avgdl
-    is per-CLAUSE so field-scoped clauses normalize by their own field's
-    average length (unscoped queries pass the corpus avgdl on every
-    clause)."""
-    import numpy as np
-    import pandas as pd
-
-    from mario_spark.phrase import _chain_match_count, _PosTermData
-
-    tds = {
-        t: _PosTermData(g.sort_values("block_id"))
-        for t, g in pdf.groupby("term", sort=False)
-    }
-
-    def clause_hits(terms: tuple):
-        """-> (ids, ctf, lens) of docs where the chain occurs."""
-        if any(t not in tds for t in terms):
-            e = np.empty(0, dtype=np.int64)
-            return e, np.empty(0), np.empty(0)
-        if len(terms) == 1:
-            td = tds[terms[0]]
-            tf = np.diff(td.pos_starts).astype(np.float64)
-            return td.ids, tf, td.lens
-        term_tds = [tds[t] for t in terms]
-        order = np.argsort([td.ids.size for td in term_tds])
-        cand = term_tds[order[0]].ids
-        for oi in order[1:]:
-            cand = cand[np.isin(cand, term_tds[oi].ids, assume_unique=True)]
-            if cand.size == 0:
-                break
-        if cand.size == 0:
-            e = np.empty(0, dtype=np.int64)
-            return e, np.empty(0), np.empty(0)
-        rows = [np.searchsorted(td.ids, cand) for td in term_tds]
-        ids_o, ctf_o, len_o = [], [], []
-        for ci in range(cand.size):
-            pos = [
-                td.positions_of(int(rows[j][ci]))
-                for j, td in enumerate(term_tds)
-            ]
-            ptf = _chain_match_count(pos, len(term_tds), 0)
-            if ptf:
-                ids_o.append(int(cand[ci]))
-                ctf_o.append(float(ptf))
-                len_o.append(float(term_tds[0].lens[int(rows[0][ci])]))
-        return (
-            np.asarray(ids_o, dtype=np.int64),
-            np.asarray(ctf_o),
-            np.asarray(len_o),
-        )
-
-    out_q, out_d, out_s = [], [], []
-    for qid, clauses, req_must, n_should in queries:
-        hits = [
-            (kind, sidf, ad, *clause_hits(terms))
-            for kind, terms, sidf, ad in clauses
-        ]
-        parts = [h[3] for h in hits if h[3].size]
-        if not parts:
-            continue
-        all_ids = np.unique(np.concatenate(parts))
-        score = np.zeros(all_ids.size)
-        must_cnt = np.zeros(all_ids.size, dtype=np.int64)
-        should_hit = np.zeros(all_ids.size, dtype=bool)
-        not_hit = np.zeros(all_ids.size, dtype=bool)
-        for kind, sidf, ad, ids, ctf, lens in hits:
-            if ids.size == 0:
-                continue
-            pos = np.searchsorted(all_ids, ids)
-            if kind == "not":
-                not_hit[pos] = True
-                continue
-            score[pos] += (
-                sidf * ctf * (k1 + 1.0)
-                / (ctf + k1 * (1.0 - b + b * lens / ad))
-            )
-            if kind == "must":
-                must_cnt[pos] += 1
-            else:
-                should_hit[pos] = True
-        keep = (
-            ~not_hit
-            & (must_cnt == req_must)
-            & ((n_should == 0) | (req_must > 0) | should_hit)
-        )
-        if deleted is not None:
-            keep &= ~np.isin(all_ids, deleted, assume_unique=True)
-        ids, sc = all_ids[keep], score[keep]
+    bucket-local facts. `clauses` rows are (kind, terms, sidf, avgdl) —
+    avgdl is per-CLAUSE so field-scoped clauses normalize by their own
+    field's average length (unscoped queries pass the corpus avgdl on
+    every clause)."""
+    hits = [
+        (kind, sidf, ad, *_clause_hits(tds, terms))
+        for kind, terms, sidf, ad in clauses
+    ]
+    parts = [h[3] for h in hits if h[3].size]
+    if not parts:
+        return None
+    all_ids = np.unique(np.concatenate(parts))
+    score = np.zeros(all_ids.size)
+    must_cnt = np.zeros(all_ids.size, dtype=np.int64)
+    should_hit = np.zeros(all_ids.size, dtype=bool)
+    not_hit = np.zeros(all_ids.size, dtype=bool)
+    for kind, sidf, ad, ids, ctf, lens in hits:
         if ids.size == 0:
             continue
-        top = np.lexsort((ids, -sc))[:k]
-        out_q.append(np.full(top.size, qid, dtype=np.int64))
-        out_d.append(ids[top])
-        out_s.append(sc[top])
-    if not out_q:
-        return pd.DataFrame(
-            {"query_id": [], "doc_id": [], "score": []}
-        ).astype({"query_id": "int64", "doc_id": "int64", "score": "float64"})
-    return pd.DataFrame(
-        {
-            "query_id": np.concatenate(out_q),
-            "doc_id": np.concatenate(out_d),
-            "score": np.concatenate(out_s),
-        }
+        pos = np.searchsorted(all_ids, ids)
+        if kind == "not":
+            not_hit[pos] = True
+            continue
+        score[pos] += (
+            sidf * ctf * (k1 + 1.0)
+            / (ctf + k1 * (1.0 - b + b * lens / ad))
+        )
+        if kind == "must":
+            must_cnt[pos] += 1
+        else:
+            should_hit[pos] = True
+    keep = (
+        ~not_hit
+        & (must_cnt == req_must)
+        & ((n_should == 0) | (req_must > 0) | should_hit)
+    )
+    if deleted is not None:
+        keep &= ~np.isin(all_ids, deleted, assume_unique=True)
+    ids, sc = all_ids[keep], score[keep]
+    if ids.size == 0:
+        return None
+    return _local_topk(qid, ids, sc, k)
+
+
+def _indexed_clauses(
+    queries: list[tuple[int, str]], default_field: str | None = None
+) -> tuple[list, list[str]]:
+    """Parse for the indexed paths: -> ([(query_id, [(kind, field,
+    posting keys)])], sorted posting keys). Unscoped (default_field
+    None) clauses have field None and bare-term keys; field-scoped
+    clauses key their terms as `<field>:<term>` (fields.py)."""
+
+    def clauses(s: str) -> list[tuple[str, str | None, tuple]]:
+        if default_field is None:
+            return [
+                (kind, None, tuple(ts)) for kind, ts in parse_query_string(s)
+            ]
+        return [
+            (kind, fld, tuple(f"{fld}:{t}" for t in ts))
+            for kind, fld, ts in parse_query_string_fields(s, default_field)
+        ]
+
+    parsed = [(qid, clauses(s)) for qid, s in queries]
+    keys = sorted({t for _, cls in parsed for _, _, ts in cls for t in ts})
+    return parsed, keys
+
+
+def _rank_query_strings(
+    postings: DataFrame,
+    parsed: list,
+    keys: list[str],
+    dfm: dict[str, int],
+    stats: dict,
+    k: int = 10,
+    k1: float = K1,
+    b: float = B,
+    deleted=None,
+) -> DataFrame:
+    """The indexed query_string body, given the posting keys' {key:
+    df}: the cold paths look dfm up in the dictionary, QuerySession
+    answers it from its warm one. `stats` maps each clause field (None
+    when unscoped) to its (n_docs, avgdl): a clause's idf sum uses its
+    field's docCount, its length norm the field's avgdl. Unmapped
+    fields keep Lucene behavior for free: no df (sidf 0), no postings
+    (a must can never match)."""
+    queries_c = []
+    for qid, clauses in parsed:
+        cl = []
+        for kind, fld, pterms in clauses:
+            n_f, ad = stats.get(fld, (0, 0.0))
+            sidf = sum(
+                _idf(float(n_f), float(dfm[t])) for t in pterms if t in dfm
+            )
+            # avgdl placeholder 1.0 for unmapped fields is never read:
+            # such a clause has no postings, so it produces no hits
+            cl.append((kind, pterms, sidf, float(ad) or 1.0))
+        req_must = sum(1 for kind, _, _ in clauses if kind == "must")
+        n_should = sum(1 for kind, _, _ in clauses if kind == "should")
+        queries_c.append((int(qid), cl, req_must, n_should))
+
+    def score_one(tds, qid, clauses, req_must, n_should):
+        return _score_query_string(
+            tds, qid, clauses, req_must, n_should, k, k1, b, deleted
+        )
+
+    return scatter_gather(
+        postings, keys, _positional_kernel(queries_c, score_one), k
     )
 
 
@@ -855,53 +880,11 @@ def search_query_string_indexed(
     matching applies bucket-locally — the production analogue of
     qs.search_query_string (tests assert rank identity between the
     two). Plan = search_wand's: term-pruned scan -> per-dbucket batch
-    kernel -> tiny per-query rank window."""
-    from mario_spark.phrase import _collect_deleted
-    from mario_spark.postings import idf as _idf
-
-    parsed = [(qid, parse_query_string(s)) for qid, s in queries]
-    all_terms = sorted(
-        {t for _, cls in parsed for _, terms in cls for t in terms}
-    )
-    df_rows = dictionary.filter(F.col("term").isin(all_terms)).collect()
-    idf_map = {
-        r["term"]: _idf(float(n_docs), float(r["df"])) for r in df_rows
-    }
-    ad = float(avgdl)
-    queries_c = []
-    for qid, clauses in parsed:
-        req_must = sum(1 for kind, _ in clauses if kind == "must")
-        n_should = sum(1 for kind, _ in clauses if kind == "should")
-        cl = [
-            (kind, tuple(terms), sum(idf_map.get(t, 0.0) for t in terms), ad)
-            for kind, terms in clauses
-        ]
-        queries_c.append((int(qid), cl, req_must, n_should))
-    deleted = _collect_deleted(deleted_docs)
-    cand = postings.filter(F.col("term").isin(all_terms))
-
-    def kernel(pdf):
-        return _qs_kernel(pdf, queries_c, k, k1, b, deleted)
-
-    local = cand.groupBy("dbucket").applyInPandas(
-        kernel, "query_id long, doc_id long, score double"
-    )
-    return _rank_local(local, k)
-
-
-def _rank_local(local: DataFrame, k: int) -> DataFrame:
-    """Round + per-query rank window over a kernel's local top-k rows
-    (tiny: <= k rows per query per dbucket cross the exchange)."""
-    from pyspark.sql import Window
-
-    s = local.withColumn("score", F.round("score", SCORE_DECIMALS))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id")
-    )
-    return (
-        s.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "score")
+    kernel -> tiny per-query rank window (wand.scatter_gather)."""
+    parsed, keys = _indexed_clauses(queries)
+    return _rank_query_strings(
+        postings, parsed, keys, lookup_df(dictionary, keys),
+        {None: (n_docs, avgdl)}, k, k1, b, _collect_deleted(deleted_docs),
     )
 
 
@@ -923,59 +906,22 @@ def search_query_string_fields_indexed(
     with ITS field's stats: idf from the prefixed dictionary df and the
     FIELD's docCount, length norm from the field's avgdl (the lens
     stored on a prefixed posting are that field's lengths by
-    construction, fields.field_tf). Unmapped fields keep Lucene
-    behavior for free: no dictionary rows (sidf 0), no postings (a must
-    can never match). Rank-identical to qs.search_query_string_fields
-    over the raw pages (asserted in tests)."""
-    from mario_spark.phrase import _collect_deleted
-    from mario_spark.postings import idf as _idf
-
-    parsed = [
-        (qid, parse_query_string_fields(s, default_field))
-        for qid, s in queries
-    ]
-    all_terms = sorted(
-        {
-            f"{fld}:{t}"
-            for _, cls in parsed
-            for _, fld, terms in cls
-            for t in terms
-        }
-    )
-    spark = postings.sparkSession
-    if not all_terms:
-        return spark.createDataFrame(
+    construction, fields.field_tf). Rank-identical to
+    qs.search_query_string_fields over the raw pages (asserted in
+    tests)."""
+    parsed, keys = _indexed_clauses(queries, default_field)
+    if not keys:
+        return postings.sparkSession.createDataFrame(
             [], "query_id long, rank long, doc_id long, score double"
         )
-    df_rows = dictionary.filter(F.col("term").isin(all_terms)).collect()
-    idf_map = {}
-    for r in df_rows:
-        fld = r["term"].split(":", 1)[0]
-        n_f = float(field_stats.get(fld, {}).get("n_docs", 0))
-        idf_map[r["term"]] = _idf(n_f, float(r["df"]))
-    queries_c = []
-    for qid, clauses in parsed:
-        req_must = sum(1 for kind, _, _ in clauses if kind == "must")
-        n_should = sum(1 for kind, _, _ in clauses if kind == "should")
-        cl = []
-        for kind, fld, terms in clauses:
-            pterms = tuple(f"{fld}:{t}" for t in terms)
-            sidf = sum(idf_map.get(t, 0.0) for t in pterms)
-            # avgdl placeholder 1.0 for unmapped fields is never read:
-            # such a clause has no postings, so it produces no hits
-            ad = float(field_stats.get(fld, {}).get("avgdl", 0.0)) or 1.0
-            cl.append((kind, pterms, sidf, ad))
-        queries_c.append((int(qid), cl, req_must, n_should))
-    deleted = _collect_deleted(deleted_docs)
-    cand = postings.filter(F.col("term").isin(all_terms))
-
-    def kernel(pdf):
-        return _qs_kernel(pdf, queries_c, k, k1, b, deleted)
-
-    local = cand.groupBy("dbucket").applyInPandas(
-        kernel, "query_id long, doc_id long, score double"
+    stats = {
+        f: (s.get("n_docs", 0), s.get("avgdl", 0.0))
+        for f, s in field_stats.items()
+    }
+    return _rank_query_strings(
+        postings, parsed, keys, lookup_df(dictionary, keys), stats,
+        k, k1, b, _collect_deleted(deleted_docs),
     )
-    return _rank_local(local, k)
 
 
 def parse_simple_query_string(

@@ -3481,11 +3481,12 @@ def esql_eval_fns(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def esql_where_or(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ES|QL WHERE with OR at SQL precedence (AND binds tighter) plus
-    RLIKE, and a VALUES() multivalue aggregate (sorted for engine-
-    stable hashing) — all one scan + one hash agg (esql.run_esql)."""
+    RLIKE, and a VALUES() multivalue aggregate — all one scan + one
+    hash agg (esql.run_esql). The multivalue is emitted as its sorted
+    comma-joined string, so every consumer compares scalars."""
     from mario_spark.esql import run_esql
 
-    return run_esql(
+    out = run_esql(
         spark, sf_dir,
         "FROM documents "
         '| WHERE lang == "en" AND source RLIKE "src[13]" '
@@ -3493,6 +3494,7 @@ def esql_where_or(spark: SparkSession, sf_dir: str) -> DataFrame:
         "| STATS n = COUNT(*), langs = VALUES(lang) BY source "
         "| SORT source ASC",
     )
+    return out.withColumn("langs", F.array_join(F.sort_array("langs"), ","))
 
 
 def esql_null_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3586,16 +3588,20 @@ def esql_mv_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 def esql_stats_ext(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ES|QL extended aggregates: TOP(col, n, "desc") multivalue,
     STD_DEV (population, like extended_stats), WEIGHTED_AVG(v, w) —
-    all in ONE hash agg."""
+    all in ONE hash agg. The TOP multivalue is emitted as its
+    ascending comma-joined string, so every consumer compares
+    scalars."""
     from mario_spark.esql import run_esql
 
-    return run_esql(
+    out = run_esql(
         spark, sf_dir,
         "FROM events "
         '| STATS top_v = TOP(value, 3, "desc"), sd = STD_DEV(value), '
         "wa = WEIGHTED_AVG(value, event_id) BY event_type "
         "| SORT event_type ASC",
     )
+    top = F.sort_array("top_v").cast("array<string>")
+    return out.withColumn("top_v", F.array_join(top, ","))
 
 
 def esql_row_math(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -43,13 +43,13 @@ from collections import OrderedDict
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mario_spark import codec
 from mario_spark.postings import block_upper_bound
 from mario_spark.postings import idf as _idf
-from mario_spark.query import B, K1, SCORE_DECIMALS
+from mario_spark.query import B, K1, SCORE_DECIMALS, topk
 
 _EPS = 1e-9
 
@@ -80,6 +80,40 @@ def _regex_literal_prefix(pattern: str) -> str:
             break
         out.append(c)
     return "".join(out)
+
+
+LOCAL_SCHEMA = "query_id long, doc_id long, score double"
+
+
+def _result_frame(
+    parts: list[tuple[np.ndarray, np.ndarray, np.ndarray]],
+) -> pd.DataFrame:
+    """A per-bucket kernel's output: its (query_ids, doc_ids, scores)
+    array triples concatenated into one LOCAL_SCHEMA frame."""
+    if not parts:
+        return pd.DataFrame(
+            {"query_id": [], "doc_id": [], "score": []}
+        ).astype({"query_id": "int64", "doc_id": "int64", "score": "float64"})
+    qs, ds, ss = zip(*parts)
+    return pd.DataFrame(
+        {
+            "query_id": np.concatenate(qs),
+            "doc_id": np.concatenate(ds),
+            "score": np.concatenate(ss),
+        }
+    )
+
+
+def lookup_df(dictionary: DataFrame, terms: list[str]) -> dict[str, int]:
+    """Cold {term: df} for the dictionary terms among `terms`: one
+    pushdown-filtered collect (OOV terms are simply absent)."""
+    rows = dictionary.filter(F.col("term").isin(terms)).collect()
+    return {r["term"]: int(r["df"]) for r in rows}
+
+
+def df_to_idf(dfm: dict[str, int], n_docs: float) -> dict[str, float]:
+    """{term: df} -> {term: BM25 idf} against a collection of n_docs."""
+    return {t: _idf(float(n_docs), float(df)) for t, df in dfm.items()}
 
 
 class _TermData:
@@ -299,11 +333,7 @@ def _bucket_kernel(
         fts = [t for t in filter_terms if t in tds]
         if not fts:
             # no filter term in this bucket -> no doc here can match
-            return pd.DataFrame(
-                {"query_id": [], "doc_id": [], "score": []}
-            ).astype(
-                {"query_id": "int64", "doc_id": "int64", "score": "float64"}
-            )
+            return _result_frame([])
         parts = [tds[t].full()[0] for t in fts]
         allow = (
             parts[0] if len(parts) == 1 else np.unique(np.concatenate(parts))
@@ -319,7 +349,7 @@ def _bucket_kernel(
         # relies on
         return e if deleted is None else np.union1d(e, deleted)
 
-    out_q, out_d, out_s = [], [], []
+    out = []
     for qid, qterms in queries:
         qgroups_raw = groups.get(qid) if groups is not None else None
         if qgroups_raw is None:
@@ -361,9 +391,13 @@ def _bucket_kernel(
             # here can drop a doc that ties at the k-th rounded score,
             # making results depend on the dbucket grid
             order = np.lexsort((ids, -np.floor(totals * 1e4 + 0.5)))[:k]
-            out_q.append(np.full(order.size, qid, dtype=np.int64))
-            out_d.append(ids[order].astype(np.int64))
-            out_s.append(totals[order])
+            out.append(
+                (
+                    np.full(order.size, qid, dtype=np.int64),
+                    ids[order].astype(np.int64),
+                    totals[order],
+                )
+            )
             continue
         # 1. bootstrap θ from the rarest term present in this bucket
         # (max idf == min df, so pick by idf) — the only forced decode.
@@ -459,20 +493,30 @@ def _bucket_kernel(
             continue
         # same rounded-criterion local selection as the conjunctive path
         order = np.lexsort((uniq, -np.floor(totals * 1e4 + 0.5)))[:k]
-        out_q.append(np.full(order.size, qid, dtype=np.int64))
-        out_d.append(uniq[order].astype(np.int64))
-        out_s.append(totals[order])
-    if not out_q:
-        return pd.DataFrame(
-            {"query_id": [], "doc_id": [], "score": []}
-        ).astype({"query_id": "int64", "doc_id": "int64", "score": "float64"})
-    return pd.DataFrame(
-        {
-            "query_id": np.concatenate(out_q),
-            "doc_id": np.concatenate(out_d),
-            "score": np.concatenate(out_s),
-        }
-    )
+        out.append(
+            (
+                np.full(order.size, qid, dtype=np.int64),
+                uniq[order].astype(np.int64),
+                totals[order],
+            )
+        )
+    return _result_frame(out)
+
+
+def scatter_gather(
+    postings: DataFrame, scan_terms: list[str], kernel, k: int
+) -> DataFrame:
+    """The distributed shape every index-backed query shares: scan the
+    postings pruned to `scan_terms` (predicate pushed into the scan),
+    run `kernel` once per dbucket over the whole query batch (pandas
+    frame of that bucket's blocks -> LOCAL_SCHEMA local top-k rows),
+    then rank the tiny union of bucket candidates per query
+    (query.topk). All of a doc's postings live in one dbucket, so any
+    kernel whose per-doc evaluation needs only that doc's postings is
+    exact bucket-locally."""
+    cand = postings.filter(F.col("term").isin(scan_terms))
+    local = cand.groupBy("dbucket").applyInPandas(kernel, LOCAL_SCHEMA)
+    return topk(local, k)
 
 
 def _run_kernel(
@@ -497,14 +541,6 @@ def _run_kernel(
     bitmap partitioned by dbucket; the sorted-array form keeps the
     sandbox kernel numpy-pure)."""
     terms = sorted({t for _, ts in queries for t in ts if t in idf_map})
-    # must_not terms ride along in the pruned scan (their ids are the
-    # exclusion sets) but never contribute score
-    scan_terms = sorted(
-        set(terms)
-        .union(t for ts in (must_not or {}).values() for t in ts)
-        .union(filter_terms or [])
-    )
-    cand = postings.filter(F.col("term").isin(scan_terms))
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         return _bucket_kernel(
@@ -512,15 +548,23 @@ def _run_kernel(
             msm, deleted, filter_terms, groups, avgdl_map,
         )
 
-    local = cand.groupBy("dbucket").applyInPandas(
-        kernel, "query_id long, doc_id long, score double"
+    return scatter_gather(
+        postings, _scan_terms(terms, must_not, filter_terms), kernel, k
     )
-    s = local.withColumn("score", F.round("score", SCORE_DECIMALS))
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        s.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "score")
+
+
+def _scan_terms(
+    terms: list[str],
+    must_not: dict[int, list[str]] | None,
+    filter_terms: list[str] | None,
+) -> list[str]:
+    """Scored terms plus the filter-context terms the kernel reads:
+    must_not and filter terms ride along in the pruned scan (their ids
+    are the exclusion / admission sets) but never contribute score."""
+    return sorted(
+        set(terms)
+        .union(t for ts in (must_not or {}).values() for t in ts)
+        .union(filter_terms or [])
     )
 
 
@@ -567,6 +611,8 @@ def search_wand(
     group by dbucket -> batch scoring kernel -> per-query rank window
     over the small candidate union.
     """
+    from mario_spark.phrase import _collect_deleted
+
     qrows = query_terms.collect()
     qmap: dict[int, list[str]] = {}
     for r in qrows:
@@ -581,19 +627,11 @@ def search_wand(
 
     # tiny driver-side dictionary lookup for just the queried terms;
     # terms absent from the dictionary (OOV) simply have no postings
-    df_rows = dictionary.filter(F.col("term").isin(terms)).collect()
-    nd, ad = float(n_docs), float(avgdl)
-    idf_map = {r["term"]: _idf(nd, float(r["df"])) for r in df_rows}
-    deleted = None
-    if deleted_docs is not None:
-        arr = np.array(
-            [r["doc_id"] for r in deleted_docs.select("doc_id").collect()],
-            dtype=np.int64,
-        )
-        deleted = np.unique(arr) if arr.size else None
+    idf_map = df_to_idf(lookup_df(dictionary, terms), n_docs)
     return _run_kernel(
-        postings, queries, idf_map, ad, k, k1, b, conjunctive,
-        must_not, min_should_match, deleted, filter_terms,
+        postings, queries, idf_map, float(avgdl), k, k1, b, conjunctive,
+        must_not, min_should_match, _collect_deleted(deleted_docs),
+        filter_terms,
     )
 
 
@@ -651,7 +689,7 @@ class QuerySession:
       shuffle stage (the cold path pays one per query).
     - the term dictionary collected into a driver-side dict (one job at
       open, ~vocab-sized — exactly the in-memory term dictionary an ES
-      data node holds per shard) ONLY while the vocabulary is at most
+      data node holds per shard) while the vocabulary is at most
       `vocab_cache_max` terms. Above it the session switches to the
       SHARDED dictionary mode: the (term, df) table is range-partitioned
       on term and cached executor-side (Lucene holds its terms index
@@ -663,16 +701,17 @@ class QuerySession:
       sharded mode is O(df_lru_max + largest expansion window), never
       O(vocab) — at 10^8-10^9 web-vocab terms the full dict would be
       tens of GB. Results are bit-identical across modes (asserted in
-      tests). cache_dictionary=False keeps the legacy mode: no driver
-      state at all, every lookup/expansion fully distributed.
+      tests).
     - queries enter as raw text and are analyzed driver-side with the
       pinned tokenizer (a query is a handful of terms — no Spark job).
 
-    Measured effect (50k docs, local[32]): single-query latency drops
-    ~2x vs the cold path (another ~2x with the coordinator fast path);
-    the remaining cost is Spark's job-scheduling floor, which batch
-    mode amortizes to ~0.03 s/query. Results are bit-identical to
-    search_wand (asserted in tests).
+    Distributed routes run the cold operators' own bodies over the
+    cached postings (scatter_gather; phrase and query_string call the
+    df-taking bodies their cold entry points wrap), so only the
+    dictionary lookup job and the per-query dbucket shuffle are saved
+    and results are bit-identical to the cold paths (asserted in
+    tests). Small term queries can also take the coordinator fast path
+    (see search).
 
     Serves field-scoped indexes too: pass field_stats={field: (n_docs,
     avgdl)} at construction and search(field=...) — terms are prefixed
@@ -686,7 +725,6 @@ class QuerySession:
         n_docs: int,
         avgdl: float,
         n_buckets: int | None = None,
-        cache_dictionary: bool = True,
         field_stats: dict[str, tuple[int, float]] | None = None,
         vocab_cache_max: int | None = VOCAB_CACHE_MAX,
         df_lru_max: int = DF_LRU_MAX,
@@ -708,16 +746,15 @@ class QuerySession:
         self._rdict: DataFrame | None = None  # reversed-term twin, lazy
         self._df_lru: "OrderedDict[str, int]" = OrderedDict()
         self._df_lru_max = df_lru_max
-        if cache_dictionary:
-            n_terms = dictionary.count()
-            if vocab_cache_max is None or n_terms <= vocab_cache_max:
-                self._df_map = {
-                    r["term"]: int(r["df"]) for r in dictionary.collect()
-                }
-            else:
-                self._dict_fwd = dictionary.repartitionByRange(
-                    n, "term"
-                ).persist()
+        n_terms = dictionary.count()
+        if vocab_cache_max is None or n_terms <= vocab_cache_max:
+            self._df_map = {
+                r["term"]: int(r["df"]) for r in dictionary.collect()
+            }
+        else:
+            self._dict_fwd = dictionary.repartitionByRange(
+                n, "term"
+            ).persist()
         # sorted term array for bisect prefix windows (built lazily) —
         # the in-heap shape of Lucene's terms-index FST: multi-term
         # expansion walks only the matching prefix RANGE, not the
@@ -731,12 +768,6 @@ class QuerySession:
         if self._dict_fwd is not None:
             self._dict_fwd.count()  # materialize the dictionary shards
         return self
-
-    def _idf_for(self, terms: list[str], n_docs: float) -> dict[str, float]:
-        return {
-            t: _idf(n_docs, float(df))
-            for t, df in self._df_for(terms).items()
-        }
 
     def search(
         self,
@@ -953,31 +984,9 @@ class QuerySession:
             (int(qid), py_tokenize(text)) for qid, text in queries
         ]
         terms = sorted({t for _, ts in phrase_queries for t in ts})
-        idf_map = self._idf_for(terms, self.n_docs)
-        qs_ok = [
-            (qid, ts)
-            for qid, ts in phrase_queries
-            if ts and all(t in idf_map for t in ts)
-        ]
-        cand = self.postings.filter(F.col("term").isin(terms))
-        ad, kk, k1_, b_, sl = self.avgdl, k, k1, b, slop
-
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            return ph._phrase_kernel(
-                pdf, qs_ok, idf_map, ad, kk, k1_, b_, sl, None
-            )
-
-        local = cand.groupBy("dbucket").applyInPandas(
-            kernel, "query_id long, doc_id long, score double"
-        )
-        s = local.withColumn("score", F.round("score", SCORE_DECIMALS))
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("score"), F.asc("doc_id")
-        )
-        return (
-            s.withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "doc_id", "score")
+        return ph._rank_phrases(
+            self.postings, phrase_queries, self._df_for(terms),
+            self.n_docs, self.avgdl, k, k1, b, slop,
         )
 
     def _df_for(self, terms: list[str]) -> dict[str, int]:
@@ -985,38 +994,24 @@ class QuerySession:
         mode reads the driver dict; sharded mode serves from the
         bounded LRU and batch-fetches misses with ONE pushdown-filtered
         lookup against the cached shards (absent terms negative-cached
-        as 0 so repeated OOV queries cost no job); legacy mode
-        (cache_dictionary=False) always looks up distributed."""
+        as 0 so repeated OOV queries cost no job)."""
         if self._df_map is not None:
             return {t: self._df_map[t] for t in terms if t in self._df_map}
-        if self._dict_fwd is not None:
-            out: dict[str, int] = {}
-            missing: set[str] = set()
-            for t in terms:
-                v = self._df_lru.get(t)
-                if v is None:
-                    missing.add(t)
-                else:
-                    self._df_lru.move_to_end(t)
-                    if v > 0:
-                        out[t] = v
-            if missing:
-                rows = self._dict_fwd.filter(
-                    F.col("term").isin(sorted(missing))
-                ).collect()
-                found = {r["term"]: int(r["df"]) for r in rows}
-                for t in missing:
-                    v = found.get(t, 0)
-                    self._df_lru[t] = v
-                    if v > 0:
-                        out[t] = v
-                while len(self._df_lru) > self._df_lru_max:
-                    self._df_lru.popitem(last=False)
-            return out
-        rows = self.dictionary.filter(
-            F.col("term").isin(sorted(terms))
-        ).collect()
-        return {r["term"]: int(r["df"]) for r in rows}
+        out: dict[str, int] = {}
+        missing: set[str] = set()
+        for t in terms:
+            v = self._df_lru.get(t)
+            if v is None:
+                missing.add(t)
+            else:
+                self._df_lru.move_to_end(t)
+                if v > 0:
+                    out[t] = v
+        if missing:
+            found = lookup_df(self._dict_fwd, sorted(missing))
+            self._lru_put({t: found.get(t, 0) for t in missing})
+            out.update(found)
+        return out
 
     def search_query_string(
         self,
@@ -1042,71 +1037,21 @@ class QuerySession:
                 "session postings carry no positions stream; "
                 "query_string phrase clauses need positions=True"
             )
-        queries_c: list = []
-        all_terms: set[str] = set()
         if self.field_stats:
             if default_field not in self.field_stats:
                 raise ValueError(
                     "field-scoped session: pass default_field as one of "
                     f"{sorted(self.field_stats)}"
                 )
-            parsed = [
-                (qid, qsmod.parse_query_string_fields(s, default_field))
-                for qid, s in queries
-            ]
-            for _, clauses in parsed:
-                for _, fld, terms in clauses:
-                    all_terms.update(f"{fld}:{t}" for t in terms)
-            dfm = self._df_for(sorted(all_terms))
-            for qid, clauses in parsed:
-                req = sum(1 for kind, _, _ in clauses if kind == "must")
-                n_sh = sum(1 for kind, _, _ in clauses if kind == "should")
-                cl = []
-                for kind, fld, terms in clauses:
-                    pterms = tuple(f"{fld}:{t}" for t in terms)
-                    fst = self.field_stats.get(fld)
-                    n_f = float(fst[0]) if fst else 0.0
-                    sidf = sum(
-                        _idf(n_f, float(dfm[t])) for t in pterms if t in dfm
-                    )
-                    ad = float(fst[1]) if fst and fst[1] else 1.0
-                    cl.append((kind, pterms, sidf, ad))
-                queries_c.append((int(qid), cl, req, n_sh))
+            stats = self.field_stats
         else:
-            parsed = [
-                (qid, qsmod.parse_query_string(s)) for qid, s in queries
-            ]
-            for _, clauses in parsed:
-                for _, terms in clauses:
-                    all_terms.update(terms)
-            dfm = self._df_for(sorted(all_terms))
-            for qid, clauses in parsed:
-                req = sum(1 for kind, _ in clauses if kind == "must")
-                n_sh = sum(1 for kind, _ in clauses if kind == "should")
-                cl = [
-                    (
-                        kind,
-                        tuple(terms),
-                        sum(
-                            _idf(self.n_docs, float(dfm[t]))
-                            for t in terms
-                            if t in dfm
-                        ),
-                        self.avgdl,
-                    )
-                    for kind, terms in clauses
-                ]
-                queries_c.append((int(qid), cl, req, n_sh))
-        cand = self.postings.filter(F.col("term").isin(sorted(all_terms)))
-        kk, k1_, b_ = k, k1, b
-
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            return qsmod._qs_kernel(pdf, queries_c, kk, k1_, b_, None)
-
-        local = cand.groupBy("dbucket").applyInPandas(
-            kernel, "query_id long, doc_id long, score double"
+            default_field = None
+            stats = {None: (self.n_docs, self.avgdl)}
+        parsed, keys = qsmod._indexed_clauses(queries, default_field)
+        return qsmod._rank_query_strings(
+            self.postings, parsed, keys, self._df_for(keys), stats,
+            k, k1, b,
         )
-        return qsmod._rank_local(local, k)
 
     def _search_driver(
         self,
@@ -1128,11 +1073,7 @@ class QuerySession:
         schema = "query_id long, rank long, doc_id long, score double"
         if not terms:
             return spark.createDataFrame([], schema)
-        scan_terms = sorted(
-            set(terms)
-            .union(t for ts in (must_not or {}).values() for t in ts)
-            .union(filter_terms or [])
-        )
+        scan_terms = _scan_terms(terms, must_not, filter_terms)
         rows = self.postings.filter(F.col("term").isin(scan_terms)).toPandas()
         parts = [
             _bucket_kernel(
@@ -1178,14 +1119,8 @@ class QuerySession:
         end collects only its prefix (or reversed-suffix) range — the
         driver never holds the vocabulary — while the rare both-ends-
         open pattern (*a*, an unanchored regexp) routes to the one-pass
-        distributed expansion join, as does everything in legacy
-        cache_dictionary=False mode."""
+        distributed expansion join."""
         import re as _re
-
-        if self._df_map is None and self._dict_fwd is None:
-            return self._expand_distributed(
-                queries, kind, max_edits, prefix_length
-            )
 
         from mario_spark import fuzzy as fuzzymod
 
@@ -1258,8 +1193,7 @@ class QuerySession:
         prefix_length: int,
     ) -> dict[int, list[str]]:
         """One-pass distributed expansion join against the dictionary
-        DataFrame — the scale path for unanchored patterns and the
-        whole path in legacy cache_dictionary=False mode."""
+        DataFrame — the sharded mode's path for unanchored patterns."""
         from mario_spark import fuzzy as fuzzymod
 
         spark = self.postings.sparkSession
@@ -1369,9 +1303,7 @@ class QuerySession:
         qlist = sorted((qid, sorted(ts)) for qid, ts in qmap.items())
         terms = sorted({t for _, ts in qlist for t in ts})
         dfm = self._df_for(terms)
-        idf_map = {
-            t: _idf(self.n_docs, float(df)) for t, df in dfm.items()
-        }
+        idf_map = df_to_idf(dfm, self.n_docs)
         if (
             driver_limit
             and sum(dfm.values()) <= driver_limit

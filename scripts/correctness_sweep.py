@@ -46,8 +46,6 @@ def _canon(v):
         if math.isnan(v):
             return "NaN"
         return round(v, 6)
-    if isinstance(v, (list, tuple)):
-        return tuple(_canon(x) for x in v)
     if isinstance(v, dict):
         return tuple(sorted((k, _canon(x)) for k, x in v.items()))
     if hasattr(v, "isoformat"):

@@ -88,8 +88,7 @@ def test_prefix_and_wildcard_expansion(spark):
 def test_query_session_multiterm_identical_to_cold(spark):
     """Warm QuerySession multi-term serving (driver-side vocabulary
     expansion, both routing paths) must be bit-identical to the cold
-    fuzzy/prefix/wildcard functions, for both a cached and an uncached
-    dictionary."""
+    fuzzy/prefix/wildcard functions."""
     from mario_spark.fuzzy import (
         levenshtein_le,
         search_fuzzy,
@@ -124,21 +123,18 @@ def test_query_session_multiterm_identical_to_cold(spark):
     wq = {
         "fuzzy": q, "prefix": q, "wildcard": [(0, "w0?00*"), (1, "w*2")],
     }
-    for cached in (True, False):
-        sess = QuerySession(
-            post, dic, st_["n_docs"], st_["avgdl"], cache_dictionary=cached
-        )
-        for kind, cold in colds.items():
-            want = _canon(cold)
-            assert len(want) > 0, kind
-            for lim in (0, 10**9):
-                got = _canon(
-                    sess.search_multiterm(wq[kind], kind=kind, k=10, driver_limit=lim)
-                )
-                pd.testing.assert_frame_equal(
-                    got, want, check_exact=False, atol=1e-9
-                )
-        sess.close()
+    sess = QuerySession(post, dic, st_["n_docs"], st_["avgdl"])
+    for kind, cold in colds.items():
+        want = _canon(cold)
+        assert len(want) > 0, kind
+        for lim in (0, 10**9):
+            got = _canon(
+                sess.search_multiterm(wq[kind], kind=kind, k=10, driver_limit=lim)
+            )
+            pd.testing.assert_frame_equal(
+                got, want, check_exact=False, atol=1e-9
+            )
+    sess.close()
     d.unpersist()
 
 

@@ -847,11 +847,19 @@ def test_component_candidate_gate_refuses_before_generating(spark, docs_pdf):
     """dedup_components' candidate gate: with the cap forced tiny the
     call must raise BEFORE any pair row is generated (the exact total
     comes from the already-computed per-key count aggs), naming the
-    scale paths; with the default cap the sandbox corpus passes."""
+    scale paths, and without leaving a cached frame behind; with the
+    default cap the sandbox corpus passes."""
     import pytest
 
+    # start from an empty cache: frames that earlier calls left cached
+    # (the success path still leaks) would be shared with, and so
+    # unpersisted by, the refused call
+    spark.catalog.clearCache()
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
     with pytest.raises(ValueError, match="incremental_near_dup"):
         dedup.dedup_components(docs_pdf, max_candidate_pairs=10)
+    assert jsc.getPersistentRDDs().size() == before
     # default cap: unaffected (result identical to ungated)
     a = (
         dedup.dedup_components(docs_pdf)

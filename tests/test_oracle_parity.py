@@ -81,3 +81,24 @@ def test_parity(spark, ddb, name):
             assert g.astype(str).tolist() == w.astype(str).tolist(), (
                 f"{name}.{c} value mismatch"
             )
+
+
+def test_no_top_level_array_outputs(spark):
+    """Every suite query returns scalar columns: an ArrayType output
+    arrives as a list or ndarray on one engine and a different
+    container on the other, so a comparator must canonicalize it.
+    Multivalues are emitted as sorted comma-joined strings instead."""
+    from pyspark.sql.types import ArrayType
+
+    arrays = {
+        name: cols
+        for name in sorted(SUITE)
+        if (
+            cols := [
+                f.name
+                for f in SUITE[name](spark, SF_DIR).schema.fields
+                if isinstance(f.dataType, ArrayType)
+            ]
+        )
+    }
+    assert not arrays, f"top-level ArrayType outputs: {arrays}"

@@ -170,6 +170,88 @@ def test_query_session_no_dbucket_shuffle(spark):
     assert exchange_between_scan_and_kernel(cold)
     sess.close()
 
+    # the warm phrase and query_string routes reuse that partitioning
+    post_pos, dic_pos, n_pos, ad_pos = _positional_index(spark)
+    psess = QuerySession(post_pos, dic_pos, n_pos, ad_pos).warm()
+    for warm in (
+        psess.search_phrase([(0, "the data")]),
+        psess.search_query_string([(0, '+data "the web" -crawl')]),
+    ):
+        assert not exchange_between_scan_and_kernel(_plan(warm))
+    psess.close()
+
+
+def _positional_index(spark):
+    """(postings, dictionary, n_docs, avgdl) of a small positions=True
+    index over the sf0.001 documents."""
+    from mario_spark import docs
+    from mario_spark.phrase import positional_tf
+    from mario_spark.postings import dictionary_from_postings, encode_tf_rows
+
+    d = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
+        "doc_id", "text"
+    )
+    tfpos = positional_tf(d)
+    st = docs.corpus_stats(tfpos.select("doc_id", "len").distinct()).collect()[0]
+    post = encode_tf_rows(tfpos, 256)
+    return post, dictionary_from_postings(post), st["n_docs"], st["avgdl"]
+
+
+def test_cold_dbucket_operators_plan_one_kernel_one_window(spark):
+    """Every cold index-backed operator is ONE scatter-gather: a single
+    per-dbucket pandas kernel and a single per-query rank window over
+    its output — no operator adds a second kernel pass or rank tail."""
+    import re
+
+    from mario_spark import phrase as ph
+    from mario_spark import qs
+    from mario_spark.fixtures import query_terms_df
+    from mario_spark.wand import search_wand
+
+    post, dic, n, ad = _positional_index(spark)
+    ops = {
+        "search_wand": search_wand(
+            post, dic, query_terms_df(spark, [(0, "data web")]), n, ad
+        ),
+        "search_phrase": ph.search_phrase(
+            post, dic, [(0, ["the", "data"])], n, ad
+        ),
+        "search_phrase_prefix": ph.search_phrase_prefix(
+            post, dic, [(0, ["the"], "da")], n, ad
+        ),
+        "search_span_or": ph.search_span_or(
+            post, dic, [(0, [["the", "data"], ["web"]])], n, ad
+        ),
+        "search_span_near_unordered": ph.search_span_near_unordered(
+            post, dic, [(0, ["data", "the"])], n, ad
+        ),
+        "search_span_not": ph.search_span_not(
+            post, dic, [(0, ["the", "data"], "web")], n, ad
+        ),
+        "search_span_first": ph.search_span_first(
+            post, dic, [(0, ["the", "data"], 20)], n, ad
+        ),
+        "search_span_contain": ph.search_span_contain(
+            post, dic, [(0, "the", "data", 3, "web")], n, ad
+        ),
+        "search_query_string_indexed": qs.search_query_string_indexed(
+            post, dic, [(0, '+data "the web" -crawl')], n, ad
+        ),
+        "search_query_string_fields_indexed": (
+            qs.search_query_string_fields_indexed(
+                post, dic, [(0, 'title:data "the web"')],
+                {"title": {"n_docs": n, "avgdl": ad},
+                 "contents": {"n_docs": n, "avgdl": ad}},
+                "contents",
+            )
+        ),
+    }
+    for name, df in ops.items():
+        plan = _plan(df)
+        kernels = re.findall(r"^\(\d+\) FlatMapGroupsInPandas\b", plan, re.M)
+        windows = re.findall(r"^\(\d+\) Window\b", plan, re.M)
+        assert (len(kernels), len(windows)) == (1, 1), name
+
 
 def test_filtered_search_semi_join_no_extra_shuffle(spark):
     """Filter context must plan the doc_id restriction as a (LeftSemi)
