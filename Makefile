@@ -1,6 +1,6 @@
 # Developer entry points (see README.md; driver contract in __spark_entry__.py)
 
-.PHONY: test test-bench bench bench-small scaling pyfiles smoke
+.PHONY: test test-bench bench bench-small scaling pyfiles smoke digest
 
 test:             ## tier-1 suite, exactly as ROADMAP.md runs it
 	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" \
@@ -10,6 +10,10 @@ test:             ## tier-1 suite, exactly as ROADMAP.md runs it
 
 test-bench:       ## the benchmark's own span/event-log parser tests
 	python -m pytest perfbench/test_spans.py -q
+
+digest:           ## per-operator rows/plan identity digest (SF_DIR=<sf0.001 dir>)
+	@test -n "$(SF_DIR)" || { echo "usage: make digest SF_DIR=<sf0.001 dir>"; exit 2; }
+	@python scripts/suite_digest.py "$(SF_DIR)"
 
 bench:            ## headline paths at sf0.1 on local[32] (one JSON line)
 	SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 python bench.py

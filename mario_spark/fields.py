@@ -41,8 +41,10 @@ from mario_spark.docs import assign_doc_ids
 from mario_spark.postings import (
     dictionary_from_postings,
     encode_tf_rows,
+    idf,
     pick_range_width,
 )
+from mario_spark.query import bm25_contrib, bm25_idf, bm25_scores, topk
 from mario_spark.wand import search_wand
 
 FIELD_SEP = ":"
@@ -222,8 +224,6 @@ def search_multi_field(
     bounded by the queried terms' postings, not the corpus. The union
     is one groupBy(query_id, doc_id) away from the final rank.
     """
-    from mario_spark import query as querymod
-
     if combine not in ("sum", "max", "dismax"):
         raise ValueError(
             f"combine must be 'sum', 'max' or 'dismax', got {combine!r}"
@@ -243,7 +243,7 @@ def search_multi_field(
             F.count("*").cast("double").alias("n_docs"),
             F.avg("len").alias("avgdl"),
         )
-        scored = querymod.bm25_scores(tf, dfreq, stats, query_terms)
+        scored = bm25_scores(tf, dfreq, stats, query_terms)
         parts.append(
             scored.select(
                 "query_id",
@@ -264,7 +264,7 @@ def search_multi_field(
     else:
         score = F.col("m") + float(tie_breaker) * (F.col("s") - F.col("m"))
     combined = g.select("query_id", "doc_id", score.alias("score"))
-    return querymod.topk(combined, k=k)
+    return topk(combined, k=k)
 
 
 def search_field(
@@ -300,8 +300,6 @@ def search_cross_fields(
     query_terms: DataFrame,
     boosts: dict[str, float],
     k: int = 10,
-    k1: float = None,
-    b: float = None,
 ) -> DataFrame:
     """ES multi_match type=cross_fields (term-centric, Lucene
     BlendedTermQuery): the searched fields act as ONE field per term —
@@ -316,10 +314,6 @@ def search_cross_fields(
     Plan shape: per-field tf frames are term-pruned by the broadcast
     (query ⋈ blended-df) dim; the per-term max and per-doc sum are two
     hash aggs over candidates only."""
-    from mario_spark.query import B, K1, topk
-
-    k1 = K1 if k1 is None else k1
-    b = B if b is None else b
     per_field, df_frames = [], []
     for field, boost in boosts.items():
         fd = fdocs.filter(F.col("field") == field).filter(F.col("len") > 0)
@@ -347,10 +341,7 @@ def search_cross_fields(
             .withColumn("dfc", F.least(F.col("bdf"), F.lit(n_docs)))
             .withColumn(
                 "idf",
-                F.log(
-                    F.lit(1.0)
-                    + (F.lit(n_docs) - F.col("dfc") + 0.5) / (F.col("dfc") + 0.5)
-                ),
+                bm25_idf(F.lit(n_docs), "dfc"),
             )
             .select("query_id", "term", "idf")
         )
@@ -358,11 +349,8 @@ def search_cross_fields(
             "query_id",
             "term",
             "doc_id",
-            (
-                F.lit(boost)
-                * F.col("idf")
-                * (F.col("tf") * (k1 + 1.0))
-                / (F.col("tf") + k1 * (1.0 - b + b * F.col("len") / avgdl))
+            bm25_contrib(
+                F.lit(boost) * F.col("idf"), "tf", "len", avgdl
             ).alias("c"),
         )
         parts.append(scored)
@@ -381,8 +369,6 @@ def search_combined_fields(
     query_terms: DataFrame,
     weights: dict[str, float],
     k: int = 10,
-    k1: float = None,
-    b: float = None,
 ) -> DataFrame:
     """ES combined_fields query (Lucene CombinedFieldQuery — the
     principled BM25F successor to cross_fields): the fields are merged
@@ -408,10 +394,6 @@ def search_combined_fields(
     combined tf — the same single-shuffle-then-broadcast skeleton as
     plain BM25; field count multiplies only the pre-agg map side.
     """
-    from mario_spark.query import B, K1, topk
-
-    k1 = K1 if k1 is None else k1
-    b = B if b is None else b
     tf_parts, len_parts = [], []
     for field, w in weights.items():
         fd = fdocs.filter(F.col("field") == field)
@@ -451,10 +433,7 @@ def search_combined_fields(
         .crossJoin(F.broadcast(stats))
         .withColumn(
             "idf",
-            F.log(
-                F.lit(1.0)
-                + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-            ),
+            bm25_idf("n_docs", "df"),
         )
         .select("query_id", "term", "idf", "avgdl")
     )
@@ -463,9 +442,7 @@ def search_combined_fields(
         .join(clen, "doc_id")
         .withColumn(
             "contrib",
-            F.col("idf")
-            * (F.col("tf") * (k1 + 1.0))
-            / (F.col("tf") + k1 * (1.0 - b + b * F.col("len") / F.col("avgdl"))),
+            bm25_contrib("idf", "tf", "len", "avgdl"),
         )
         .groupBy("query_id", "doc_id")
         .agg(F.sum("contrib").alias("score"))
@@ -479,8 +456,6 @@ def search_multi_phrase(
     queries: list[tuple[int, list[str]]],
     boosts: dict[str, float],
     k: int = 10,
-    k1: float = None,
-    b: float = None,
 ) -> DataFrame:
     """ES multi_match type=phrase: the phrase runs against EVERY
     field, each field scoring it as Lucene PhraseWeight with its OWN
@@ -495,10 +470,7 @@ def search_multi_phrase(
     """
     from mario_spark.analyze import tokenize_udf
     from mario_spark.qs import _chain_ctf_expr
-    from mario_spark.query import B, K1, topk
 
-    k1 = K1 if k1 is None else k1
-    b = B if b is None else b
     parts = []
     for fname, expr in fields.items():
         boost = float(boosts.get(fname, 1.0))
@@ -529,33 +501,20 @@ def search_multi_phrase(
             )
             .collect()
         }
-        import math
-
         for qid, terms in queries:
-            sidf = sum(
-                math.log(
-                    1.0 + (n_docs - dfreq.get(t, 0.0) + 0.5)
-                    / (dfreq.get(t, 0.0) + 0.5)
-                )
-                for t in terms
-                if t in dfreq
-            )
             if any(t not in dfreq for t in terms):
                 continue  # phrase needs every term present in the field
+            sidf = sum(idf(n_docs, dfreq[t]) for t in terms)
             ctf = _chain_ctf_expr(F.col("arr"), terms).cast("double")
             parts.append(
                 toks.select(
                     F.lit(qid).cast("long").alias("query_id"),
                     "doc_id",
-                    (
-                        F.lit(boost)
-                        * F.lit(sidf)
-                        * (ctf * (k1 + 1.0))
-                        / (
-                            ctf
-                            + k1
-                            * (1.0 - b + b * F.size("arr").cast("double") / avgdl)
-                        )
+                    bm25_contrib(
+                        F.lit(boost) * F.lit(sidf),
+                        ctf,
+                        F.size("arr").cast("double"),
+                        avgdl,
                     ).alias("c"),
                     ctf.alias("ctf"),
                 ).filter(F.col("ctf") > 0)

@@ -36,7 +36,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mario_spark.postings import idf as _idf
-from mario_spark.query import B, K1
 from mario_spark.wand import _run_kernel
 
 
@@ -225,8 +224,6 @@ def _search_expansion(
     n_docs: int,
     avgdl: float,
     k: int,
-    k1: float,
-    b: float,
     deleted=None,
 ) -> DataFrame:
     """Shared multi-term tail: collect the (tiny) expansion, score it
@@ -241,7 +238,7 @@ def _search_expansion(
         idf_map[r["term"]] = _idf(nd, float(r["df"]))
     queries = sorted((qid, sorted(ts)) for qid, ts in qmap.items())
     return _run_kernel(
-        postings, queries, idf_map, float(avgdl), k, k1, b,
+        postings, queries, idf_map, float(avgdl), k,
         conjunctive=False, deleted=deleted,
     )
 
@@ -255,8 +252,6 @@ def search_fuzzy(
     k: int = 10,
     max_edits: int = 1,
     prefix_length: int = 1,
-    k1: float = K1,
-    b: float = B,
     deleted=None,
 ) -> DataFrame:
     """Fuzzy BM25 top-k: expansion join (one dictionary pass) ->
@@ -264,7 +259,7 @@ def search_fuzzy(
     (query_id, rank, doc_id, score) like search_wand."""
     exp = expand_terms(dictionary, query_terms, max_edits, prefix_length)
     return _search_expansion(
-        postings, exp, n_docs, avgdl, k, k1, b, deleted=deleted
+        postings, exp, n_docs, avgdl, k, deleted=deleted
     )
 
 
@@ -275,15 +270,13 @@ def search_prefix(
     n_docs: int,
     avgdl: float,
     k: int = 10,
-    k1: float = K1,
-    b: float = B,
     deleted=None,
 ) -> DataFrame:
     """ES prefix query, scored as a disjunction (rewrite=
     scoring_boolean) over the matching dictionary terms."""
     exp = expand_prefix(dictionary, query_terms)
     return _search_expansion(
-        postings, exp, n_docs, avgdl, k, k1, b, deleted=deleted
+        postings, exp, n_docs, avgdl, k, deleted=deleted
     )
 
 
@@ -294,15 +287,13 @@ def search_regexp(
     n_docs: int,
     avgdl: float,
     k: int = 10,
-    k1: float = K1,
-    b: float = B,
     deleted=None,
 ) -> DataFrame:
     """ES regexp query (whole-term anchored patterns), scored as a
     disjunction over the matching dictionary terms."""
     exp = expand_regexp(dictionary, query_terms)
     return _search_expansion(
-        postings, exp, n_docs, avgdl, k, k1, b, deleted=deleted
+        postings, exp, n_docs, avgdl, k, deleted=deleted
     )
 
 
@@ -313,15 +304,13 @@ def search_wildcard(
     n_docs: int,
     avgdl: float,
     k: int = 10,
-    k1: float = K1,
-    b: float = B,
     deleted=None,
 ) -> DataFrame:
     """ES wildcard query (whole-term * / ? patterns), scored as a
     disjunction over the matching dictionary terms."""
     exp = expand_wildcard(dictionary, query_terms)
     return _search_expansion(
-        postings, exp, n_docs, avgdl, k, k1, b, deleted=deleted
+        postings, exp, n_docs, avgdl, k, deleted=deleted
     )
 
 
@@ -486,8 +475,6 @@ def search_fuzzy_damerau(
     avgdl: float,
     k: int = 10,
     prefix_length: int = 1,
-    k1: float = K1,
-    b: float = B,
     deleted=None,
 ) -> DataFrame:
     """Fuzzy BM25 top-k under fuzziness=1 with transpositions=true
@@ -495,7 +482,7 @@ def search_fuzzy_damerau(
     the standard WAND kernel."""
     exp = expand_terms_damerau(dictionary, query_terms, prefix_length)
     return _search_expansion(
-        postings, exp, n_docs, avgdl, k, k1, b, deleted=deleted
+        postings, exp, n_docs, avgdl, k, deleted=deleted
     )
 
 
@@ -505,8 +492,6 @@ def search_fuzzy_blended(
     max_edits: int = 1,
     prefix_length: int = 1,
     k: int = 10,
-    k1: float = K1,
-    b: float = B,
 ) -> DataFrame:
     """Lucene's DEFAULT fuzzy rewrite — top_terms_blended_freqs_N
     (BlendedTermQuery): every expansion in a query's blend group scores
@@ -522,7 +507,13 @@ def search_fuzzy_blended(
     partial+final agg — same plan as a plain OR query.
     """
     from mario_spark.docs import corpus_stats
-    from mario_spark.query import doc_frequencies, term_frequencies, topk
+    from mario_spark.query import (
+        bm25_contrib,
+        bm25_idf,
+        doc_frequencies,
+        term_frequencies,
+        topk,
+    )
 
     tf = term_frequencies(docs)
     dfreq = doc_frequencies(tf)
@@ -535,10 +526,7 @@ def search_fuzzy_blended(
         .crossJoin(F.broadcast(stats))
         .withColumn(
             "idf",
-            F.log(
-                F.lit(1.0)
-                + (F.col("n_docs") - F.col("bdf") + 0.5) / (F.col("bdf") + 0.5)
-            ),
+            bm25_idf("n_docs", "bdf"),
         )
         .select("query_id", "term", "idf", "avgdl")
     )
@@ -546,9 +534,7 @@ def search_fuzzy_blended(
         tf.join(F.broadcast(q_idf), "term")
         .withColumn(
             "contrib",
-            F.col("idf")
-            * (F.col("tf") * (k1 + 1.0))
-            / (F.col("tf") + k1 * (1.0 - b + b * F.col("len") / F.col("avgdl"))),
+            bm25_contrib("idf", "tf", "len", "avgdl"),
         )
         .groupBy("query_id", "doc_id")
         .agg(F.sum("contrib").alias("score"))

@@ -15,6 +15,10 @@ SURVEY §7 step 9):
     <root>/<index>/manifest/<seg>.parquet  per-(segment, dbucket) lineage
                                            + docs/postings/bytes metrics
 
+The k1 and b in _meta.json only record the similarity. Scoring reads
+query.K1 / query.B: the similarity is fixed, as an OpenSearch mapping
+fixes it, and no query can change it.
+
 Reference parity: index naming `<source>-<utc-ts>`
 (/root/reference/pkg/ingester/ingester.go:62-63); segments mirror
 Lucene's per-commit segments, which mario gets implicitly from ES bulk
@@ -828,13 +832,15 @@ class Index:
         data is an explicit refresh: open a new session (ES semantics —
         a PIT/scroll keeps serving its snapshot while the index moves
         on). Call .warm() before relying on that: warming materializes
-        the cache while the source files still exist."""
+        the cache while the source files still exist. Tombstones
+        committed at open are part of the snapshot: the session masks
+        them on every route, as the cold searches do."""
         from mario_spark.wand import QuerySession
 
         st = self.stats()
         return QuerySession(
             self.postings(), self.dictionary(), st["n_docs"], st["avgdl"],
-            **kwargs,
+            deleted_docs=self.deleted_ids(), **kwargs,
         )
 
     # ------------------------------------------------------ dense vectors
@@ -1293,7 +1299,7 @@ class Index:
         qlist = sorted((qid, sorted(ts)) for qid, ts in qmap.items())
         return _run_kernel(
             self.postings(), qlist, idf_map, float(fst["avgdl"]),
-            k, K1, B, conjunctive=False,
+            k, conjunctive=False,
             deleted=_collect_deleted(self.deleted_ids()),
         )
 

@@ -1483,4 +1483,9 @@ def ivf_recall_audit(
                 )
             )
             out = row if out is None else out.unionByName(row)
-    return out.orderBy("family", "n_probe")
+    # 2 rows per probe level: collect them so both cached exact twins
+    # are released before returning, and hand back a local relation
+    rows = out.orderBy("family", "n_probe").collect()
+    exact_g.unpersist()
+    exact_t.unpersist()
+    return embeddings.sparkSession.createDataFrame(rows, out.schema)

@@ -34,7 +34,7 @@ from mario_spark import codec
 from mario_spark.analyze import tokenize_positions_udf
 from mario_spark.docs import assign_doc_ids
 from mario_spark.postings import decode_block_positions
-from mario_spark.query import B, K1
+from mario_spark.query import bm25_contrib, bm25_contrib_np, bm25_idf
 from mario_spark.wand import (
     _result_frame,
     df_to_idf,
@@ -209,16 +209,13 @@ def _local_topk(qid, ids, scores, k):
     return np.full(top.size, qid, dtype=np.int64), ids[top], scores[top]
 
 
-def _score_and_topk(qid, ids, ptf, dl, sum_idf, avgdl, k, k1, b):
+def _score_and_topk(qid, ids, ptf, dl, sum_idf, avgdl, k):
     """Shared PhraseWeight scoring tail: saturated pseudo-term tf."""
     keep = ptf > 0
     ids, ptf, dl = ids[keep], ptf[keep], dl[keep]
     if ids.size == 0:
         return None
-    scores = (
-        sum_idf * ptf * (k1 + 1.0)
-        / (ptf + k1 * (1.0 - b + b * dl / avgdl))
-    )
+    scores = bm25_contrib_np(sum_idf, ptf, dl, avgdl)
     return _local_topk(qid, ids, scores, k)
 
 
@@ -229,8 +226,6 @@ def search_phrase_prefix(
     n_docs: int,
     avgdl: float,
     k: int = 10,
-    k1: float = K1,
-    b: float = B,
     max_expansions: int = 50,
 ) -> DataFrame:
     """ES match_phrase_prefix: `queries` is [(query_id, fixed_terms,
@@ -307,7 +302,7 @@ def search_phrase_prefix(
             lp = np.sort(np.concatenate(last))
             ptf[ci] = _chain_match_count(term_pos + [lp], len(fixed) + 1, 0)
             dl[ci] = float(fixed_tds[0].lens[int(rows_fixed[0][ci])])
-        return _score_and_topk(qid, cand, ptf, dl, sum_idf, ad, k, k1, b)
+        return _score_and_topk(qid, cand, ptf, dl, sum_idf, ad, k)
 
     return scatter_gather(
         postings, needed, _positional_kernel(kq, score_one), k
@@ -321,8 +316,6 @@ def search_phrase(
     n_docs: int,
     avgdl: float,
     k: int = 10,
-    k1: float = K1,
-    b: float = B,
     slop: int = 0,
     deleted_docs: DataFrame | None = None,
 ) -> DataFrame:
@@ -346,7 +339,7 @@ def search_phrase(
     terms = sorted({t for _, ts in phrase_queries for t in ts})
     return _rank_phrases(
         postings, phrase_queries, lookup_df(dictionary, terms), n_docs,
-        avgdl, k, k1, b, slop, _collect_deleted(deleted_docs),
+        avgdl, k, slop, _collect_deleted(deleted_docs),
     )
 
 
@@ -357,8 +350,6 @@ def _rank_phrases(
     n_docs: float,
     avgdl: float,
     k: int = 10,
-    k1: float = K1,
-    b: float = B,
     slop: int = 0,
     deleted: np.ndarray | None = None,
 ) -> DataFrame:
@@ -379,7 +370,7 @@ def _rank_phrases(
 
     def score_one(tds, qid, qterms, sum_idf):
         ids, ptf, lens, _ = _chain_doc_ptfs(tds, qterms, deleted, slop)
-        return _score_and_topk(qid, ids, ptf, lens, sum_idf, ad, k, k1, b)
+        return _score_and_topk(qid, ids, ptf, lens, sum_idf, ad, k)
 
     terms = sorted({t for _, ts in phrase_queries for t in ts})
     return scatter_gather(
@@ -412,8 +403,6 @@ def search_span_or(
     n_docs: int,
     avgdl: float,
     k: int = 10,
-    k1: float = K1,
-    b: float = B,
     deleted_docs: DataFrame | None = None,
 ) -> DataFrame:
     """Lucene SpanOrQuery over positional postings: a doc matches if
@@ -457,7 +446,7 @@ def search_span_or(
         ids = np.array(sorted(freq), dtype=np.int64)
         ptf = np.array([freq[int(d)] for d in ids], dtype=np.float64)
         dl = np.array([dlen[int(d)] for d in ids], dtype=np.float64)
-        return _score_and_topk(qid, ids, ptf, dl, sidf, ad, k, k1, b)
+        return _score_and_topk(qid, ids, ptf, dl, sidf, ad, k)
 
     return scatter_gather(
         postings, all_terms, _positional_kernel(queries, score_one), k
@@ -472,8 +461,6 @@ def search_span_near_unordered(
     avgdl: float,
     slop: int = 2,
     k: int = 10,
-    k1: float = K1,
-    b: float = B,
     deleted_docs: DataFrame | None = None,
 ) -> DataFrame:
     """Lucene span_near in_order=false over a term PAIR: a doc matches
@@ -522,7 +509,7 @@ def search_span_near_unordered(
             hi = np.searchsorted(pb, pa + w, side="right")
             ptf[ci] = float(np.count_nonzero(hi > lo))
             dl[ci] = float(ta.lens[int(ra[ci])])
-        return _score_and_topk(qid, ids, ptf, dl, sidf, ad, k, k1, b)
+        return _score_and_topk(qid, ids, ptf, dl, sidf, ad, k)
 
     return scatter_gather(
         postings, all_terms, _positional_kernel(queries, score_one), k
@@ -538,8 +525,6 @@ def search_span_not(
     k: int = 10,
     pre: int = 1,
     post: int = 1,
-    k1: float = K1,
-    b: float = B,
     deleted_docs: DataFrame | None = None,
 ) -> DataFrame:
     """Lucene SpanNotQuery over positional postings: matches of the
@@ -588,7 +573,7 @@ def search_span_not(
                     hi = np.searchsorted(xpos, ends + post_i, "right")
                     starts = starts[hi == lo]  # no overlap survives
             ptf[ci] = starts.size
-        return _score_and_topk(qid, ids_all, ptf, lens, sidf, ad, k, k1, b)
+        return _score_and_topk(qid, ids_all, ptf, lens, sidf, ad, k)
 
     return scatter_gather(
         postings, scan_terms, _positional_kernel(queries, score_one), k
@@ -602,8 +587,6 @@ def search_span_first(
     n_docs: int,
     avgdl: float,
     k: int = 10,
-    k1: float = K1,
-    b: float = B,
     deleted_docs: DataFrame | None = None,
 ) -> DataFrame:
     """Lucene SpanFirstQuery(SpanNearQuery(chain, slop=0), end) over
@@ -643,7 +626,7 @@ def search_span_first(
             _, ends = _chain_match_spans(term_pos, len(qterms))
             # ends are inclusive last positions; exclusive = +1
             ptf[ci] = float(np.count_nonzero(ends + 1 <= end))
-        return _score_and_topk(qid, ids, ptf, lens, sidf, ad, k, k1, b)
+        return _score_and_topk(qid, ids, ptf, lens, sidf, ad, k)
 
     return scatter_gather(
         postings, all_terms, _positional_kernel(queries, score_one), k
@@ -721,8 +704,6 @@ def search_span_contain(
     avgdl: float,
     mode: str = "containing",
     k: int = 10,
-    k1: float = K1,
-    b: float = B,
     deleted_docs: DataFrame | None = None,
 ) -> DataFrame:
     """Lucene SpanContainingQuery / SpanWithinQuery over positional
@@ -801,7 +782,7 @@ def search_span_contain(
                 i1c = np.maximum(i1, 0)
                 cov &= ends[i1c] >= xpos
                 ptf[ci] = float(np.count_nonzero(cov))
-        return _score_and_topk(qid, cand_ids, ptf, lens, sidf, ad, k, k1, b)
+        return _score_and_topk(qid, cand_ids, ptf, lens, sidf, ad, k)
 
     return scatter_gather(
         postings, scan_terms, _positional_kernel(queries, score_one), k
@@ -900,8 +881,6 @@ def search_synonym_graph(
     documents: DataFrame,
     query_set: list[tuple[int, str, str]],
     k: int = 10,
-    k1: float = K1,
-    b: float = B,
 ) -> DataFrame:
     """ES match with a query-time synonym_graph filter mapping a single
     term to a multi-word phrase (e.g. "ml" => "machine learning"):
@@ -952,7 +931,7 @@ def search_synonym_graph(
     # --- term path: standard BM25 contribution for the single token
     from mario_spark.query import bm25_scores
 
-    term_scored = bm25_scores(tf, dfreq, stats, q_term, k1=k1, b=b)
+    term_scored = bm25_scores(tf, dfreq, stats, q_term)
 
     # --- phrase path: adjacency-scan phrase_tf (codegen lambda over the
     # token array), PhraseWeight scoring with idf summed over members
@@ -965,10 +944,7 @@ def search_synonym_graph(
         .crossJoin(F.broadcast(stats))
         .withColumn(
             "idf",
-            F.log(
-                F.lit(1.0)
-                + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-            ),
+            bm25_idf("n_docs", "df"),
         )
         .groupBy("query_id")
         .agg(
@@ -1010,9 +986,7 @@ def search_synonym_graph(
         .filter(F.col("n_found") == F.col("n_terms"))
         .withColumn(
             "score",
-            F.col("sidf")
-            * (F.col("ptf") * (k1 + 1.0))
-            / (F.col("ptf") + k1 * (1.0 - b + b * F.col("len") / F.col("avgdl"))),
+            bm25_contrib("sidf", "ptf", "len", "avgdl"),
         )
         .select("query_id", "doc_id", "score")
     )

@@ -65,7 +65,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mario_spark import codec
-from mario_spark.query import B, K1, term_frequencies
+from mario_spark.query import bm25_contrib_np, term_frequencies
 
 BLOCK_SIZE = 128
 
@@ -302,13 +302,11 @@ def block_upper_bound(
     max_tf: np.ndarray,
     min_len: np.ndarray,
     avgdl: float,
-    k1: float = K1,
-    b: float = B,
 ) -> np.ndarray:
     """Query-time block-max bound from stored impacts + current stats."""
     mt = np.asarray(max_tf, dtype=np.float64)
     ml = np.asarray(min_len, dtype=np.float64)
-    return idf_t * mt * (k1 + 1.0) / (mt + k1 * (1.0 - b + b * ml / avgdl))
+    return bm25_contrib_np(idf_t, mt, ml, avgdl)
 
 
 def decode_block_positions(

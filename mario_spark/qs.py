@@ -50,7 +50,15 @@ from mario_spark.phrase import (
     _positional_kernel,
 )
 from mario_spark.postings import idf as _idf
-from mario_spark.query import B, K1, SCORE_DECIMALS, topk
+from mario_spark.query import (
+    B,
+    K1,
+    SCORE_DECIMALS,
+    bm25_contrib,
+    bm25_contrib_np,
+    bm25_idf,
+    topk,
+)
 from mario_spark.wand import lookup_df, scatter_gather
 
 _ATOM_RE = re.compile(r'([+-]?)(?:"([^"]*)"|(\S+))')
@@ -151,10 +159,7 @@ def search_query_string(
             F.sum(
                 F.when(
                     F.col("df").isNotNull(),
-                    F.log(
-                        F.lit(1.0)
-                        + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-                    ),
+                    bm25_idf("n_docs", "df"),
                 ).otherwise(F.lit(0.0))
             ).alias("sidf")
         )
@@ -213,12 +218,7 @@ def search_query_string(
         .withColumn(
             "contrib",
             F.when(F.col("kind") == "not", F.lit(0.0)).otherwise(
-                F.col("sidf")
-                * (F.col("ctf") * (K1 + 1.0))
-                / (
-                    F.col("ctf")
-                    + K1 * (1.0 - B + B * F.col("len") / F.col("avgdl"))
-                )
+                bm25_contrib("sidf", "ctf", "len", "avgdl")
             ),
         )
         .groupBy("query_id", "doc_id")
@@ -486,11 +486,7 @@ def search_query_string_fields(
             F.sum(
                 F.when(
                     F.col("df").isNotNull(),
-                    F.log(
-                        F.lit(1.0)
-                        + (F.col("n_docs") - F.col("df") + 0.5)
-                        / (F.col("df") + 0.5)
-                    ),
+                    bm25_idf("n_docs", "df"),
                 ).otherwise(F.lit(0.0))
             ).alias("sidf")
         )
@@ -563,12 +559,7 @@ def search_query_string_fields(
         .withColumn(
             "contrib",
             F.when(F.col("kind") == "not", F.lit(0.0)).otherwise(
-                F.col("sidf")
-                * (F.col("ctf") * (K1 + 1.0))
-                / (
-                    F.col("ctf")
-                    + K1 * (1.0 - B + B * F.col("len") / F.col("avgdl"))
-                )
+                bm25_contrib("sidf", "ctf", "len", "avgdl")
             ),
         )
         .groupBy("query_id", "doc_id")
@@ -746,8 +737,6 @@ def _score_query_string(
     req_must: int,
     n_should: int,
     k: int,
-    k1: float,
-    b: float,
     deleted=None,
 ):
     """Evaluate one parsed query_string query against ONE dbucket of a
@@ -776,10 +765,7 @@ def _score_query_string(
         if kind == "not":
             not_hit[pos] = True
             continue
-        score[pos] += (
-            sidf * ctf * (k1 + 1.0)
-            / (ctf + k1 * (1.0 - b + b * lens / ad))
-        )
+        score[pos] += bm25_contrib_np(sidf, ctf, lens, ad)
         if kind == "must":
             must_cnt[pos] += 1
         else:
@@ -827,8 +813,6 @@ def _rank_query_strings(
     dfm: dict[str, int],
     stats: dict,
     k: int = 10,
-    k1: float = K1,
-    b: float = B,
     deleted=None,
 ) -> DataFrame:
     """The indexed query_string body, given the posting keys' {key:
@@ -855,7 +839,7 @@ def _rank_query_strings(
 
     def score_one(tds, qid, clauses, req_must, n_should):
         return _score_query_string(
-            tds, qid, clauses, req_must, n_should, k, k1, b, deleted
+            tds, qid, clauses, req_must, n_should, k, deleted
         )
 
     return scatter_gather(
@@ -870,8 +854,6 @@ def search_query_string_indexed(
     n_docs: int,
     avgdl: float,
     k: int = 10,
-    k1: float = K1,
-    b: float = B,
     deleted_docs: DataFrame | None = None,
 ) -> DataFrame:
     """Serve query_string from a PERSISTED positional index: term
@@ -884,7 +866,7 @@ def search_query_string_indexed(
     parsed, keys = _indexed_clauses(queries)
     return _rank_query_strings(
         postings, parsed, keys, lookup_df(dictionary, keys),
-        {None: (n_docs, avgdl)}, k, k1, b, _collect_deleted(deleted_docs),
+        {None: (n_docs, avgdl)}, k, _collect_deleted(deleted_docs),
     )
 
 
@@ -895,8 +877,6 @@ def search_query_string_fields_indexed(
     field_stats: dict[str, dict],
     default_field: str,
     k: int = 10,
-    k1: float = K1,
-    b: float = B,
     deleted_docs: DataFrame | None = None,
 ) -> DataFrame:
     """Serve field-scoped query_string from a PERSISTED fields=... +
@@ -920,7 +900,7 @@ def search_query_string_fields_indexed(
     }
     return _rank_query_strings(
         postings, parsed, keys, lookup_df(dictionary, keys), stats,
-        k, k1, b, _collect_deleted(deleted_docs),
+        k, _collect_deleted(deleted_docs),
     )
 
 
@@ -1037,11 +1017,7 @@ def search_simple_query_string(
             F.sum(
                 F.when(
                     F.col("df").isNotNull(),
-                    F.log(
-                        F.lit(1.0)
-                        + (F.col("n_docs") - F.col("df") + 0.5)
-                        / (F.col("df") + 0.5)
-                    ),
+                    bm25_idf("n_docs", "df"),
                 ).otherwise(F.lit(0.0))
             ).alias("sidf")
         )
@@ -1121,11 +1097,8 @@ def search_simple_query_string(
             F.when(F.col("neg"), F.lit(0.0))
             .when(F.col("is_prefix"), F.lit(1.0))
             .otherwise(
-                F.coalesce("sidf", F.lit(0.0))
-                * (F.col("ctf") * (K1 + 1.0))
-                / (
-                    F.col("ctf")
-                    + K1 * (1.0 - B + B * F.col("len") / F.col("avgdl"))
+                bm25_contrib(
+                    F.coalesce("sidf", F.lit(0.0)), "ctf", "len", "avgdl"
                 )
             ),
         )

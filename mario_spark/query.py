@@ -8,6 +8,14 @@ Implements Okapi BM25 exactly as OpenSearch 1.2.4 / Lucene 8 defaults
     w(t, d) = tf * (k1+1) / (tf + k1 * (1 - b + b * len/avgdl))
     score   = sum_t idf(t) * w(t, d)        k1=1.2, b=0.75
 
+The similarity is fixed, as an OpenSearch mapping fixes it: K1 and B
+below are the one setting, and bm25_idf / bm25_contrib (Columns) and
+bm25_contrib_np (the per-bucket kernels) are the one definition every
+operator scores with. No search function takes per-call k1/b; only
+bm25_scores takes `b`, for the norms=false mapping (b = 0). The DuckDB
+oracles restate the formula on purpose: they are the independent
+reference.
+
 This module is pure DataFrame ops — Catalyst plans it; the candidate set
 is pruned by a broadcast semi-join on the (small) query-term table before
 any per-doc work, so at 100TB only postings rows for queried terms ever
@@ -24,12 +32,39 @@ mario_spark.wand; tests assert it is rank-identical to this scorer.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 K1 = 1.2
 B = 0.75
 SCORE_DECIMALS = 4
+
+
+def _col(c) -> Column:
+    return F.col(c) if isinstance(c, str) else c
+
+
+def bm25_idf(n, df) -> Column:
+    """idf(t) as a Column; `n` (doc count) and `df` are Columns or
+    column names."""
+    n, df = _col(n), _col(df)
+    return F.log(F.lit(1.0) + (n - df + 0.5) / (df + 0.5))
+
+
+def bm25_contrib(weight, tf, dl, avgdl, b: float = B) -> Column:
+    """weight * w(t, d) as a Column: the saturated term frequency
+    scaled by `weight` (an idf, a phrase's idf sum, or boost * idf).
+    Arguments are Columns or column names; avgdl may be a float. Only
+    bm25_scores passes `b` (0 for the norms=false mapping)."""
+    weight, tf, dl, avgdl = (_col(c) for c in (weight, tf, dl, avgdl))
+    return weight * (tf * (K1 + 1.0)) / (tf + K1 * (1.0 - b + b * dl / avgdl))
+
+
+def bm25_contrib_np(weight, tf, dl, avgdl):
+    """bm25_contrib over numpy arrays, in the kernels' operation order
+    (weight * tf first); a different order would change the last bit
+    of some scores."""
+    return weight * tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))
 
 
 def term_frequencies(docs: DataFrame) -> DataFrame:
@@ -75,10 +110,10 @@ def bm25_scores(
     dfreq: DataFrame,
     stats: DataFrame,
     query_terms: DataFrame,
-    k1: float = K1,
     b: float = B,
 ) -> DataFrame:
-    """-> (query_id, doc_id, score). Disjunctive (OR) semantics.
+    """-> (query_id, doc_id, score). Disjunctive (OR) semantics. `b`
+    is the length-normalization weight (0 for a norms=false field).
 
     Plan shape (scale-critical):
       query_terms (tiny, broadcast) ⋈ dfreq -> per-term idf (tiny, broadcast)
@@ -91,7 +126,7 @@ def bm25_scores(
         .crossJoin(F.broadcast(stats))
         .withColumn(
             "idf",
-            F.log(F.lit(1.0) + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)),
+            bm25_idf("n_docs", "df"),
         )
         .select("query_id", "term", "idf", "avgdl")
     )
@@ -99,9 +134,7 @@ def bm25_scores(
         tf.join(F.broadcast(q_idf), "term")
         .withColumn(
             "contrib",
-            F.col("idf")
-            * (F.col("tf") * (k1 + 1.0))
-            / (F.col("tf") + k1 * (1.0 - b + b * F.col("len") / F.col("avgdl"))),
+            bm25_contrib("idf", "tf", "len", "avgdl", b),
         )
         .groupBy("query_id", "doc_id")
         .agg(F.sum("contrib").alias("score"))
@@ -208,10 +241,7 @@ def more_like_this(
             "w",
             F.round(
                 F.col("tf")
-                * F.log(
-                    F.lit(1.0)
-                    + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-                ),
+                * bm25_idf("n_docs", "df"),
                 6,
             ),
         )
@@ -233,8 +263,6 @@ def search_synonyms(
     query_terms: DataFrame,
     synonyms: dict[str, list[str]],
     k: int = 10,
-    k1: float = K1,
-    b: float = B,
 ) -> DataFrame:
     """ES query-time synonym expansion with Lucene SynonymQuery
     scoring: each query term and its synonyms form ONE group scored as
@@ -268,7 +296,7 @@ def search_synonyms(
         .crossJoin(F.broadcast(stats))
         .withColumn(
             "idf",
-            F.log(F.lit(1.0) + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)),
+            bm25_idf("n_docs", "df"),
         )
         .select("query_id", "gterm", "idf", "avgdl")
     )
@@ -281,9 +309,7 @@ def search_synonyms(
         grouped.join(F.broadcast(g_idf), ["query_id", "gterm"])
         .withColumn(
             "contrib",
-            F.col("idf")
-            * (F.col("gtf") * (k1 + 1.0))
-            / (F.col("gtf") + k1 * (1.0 - b + b * F.col("len") / F.col("avgdl"))),
+            bm25_contrib("idf", "gtf", "len", "avgdl"),
         )
         .groupBy("query_id", "doc_id")
         .agg(F.sum("contrib").alias("score"))
@@ -319,7 +345,7 @@ def search_rescore(
         .crossJoin(F.broadcast(stats))
         .withColumn(
             "idf",
-            F.log(F.lit(1.0) + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)),
+            bm25_idf("n_docs", "df"),
         )
         .select("query_id", "term", "idf", "avgdl")
     )
@@ -330,9 +356,7 @@ def search_rescore(
         tf.join(F.broadcast(q_idf), "term")
         .withColumn(
             "contrib",
-            F.col("idf")
-            * (F.col("tf") * (K1 + 1.0))
-            / (F.col("tf") + K1 * (1.0 - B + B * F.col("len") / F.col("avgdl"))),
+            bm25_contrib("idf", "tf", "len", "avgdl"),
         )
         .groupBy("query_id", "doc_id")
         .agg(
@@ -417,16 +441,11 @@ def explain_scores(
         .crossJoin(F.broadcast(stats))
         .withColumn(
             "idf",
-            F.log(
-                F.lit(1.0)
-                + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-            ),
+            bm25_idf("n_docs", "df"),
         )
         .withColumn(
             "contrib",
-            F.col("idf")
-            * (F.col("tf") * (K1 + 1.0))
-            / (F.col("tf") + K1 * (1.0 - B + B * F.col("len") / F.col("avgdl"))),
+            bm25_contrib("idf", "tf", "len", "avgdl"),
         )
     )
     total = contribs.groupBy("query_id", "doc_id").agg(
@@ -455,8 +474,6 @@ def search_boosted_terms(
     docs: DataFrame,
     boosted_terms: DataFrame,
     k: int = 10,
-    k1: float = K1,
-    b: float = B,
 ) -> DataFrame:
     """ES per-clause boost: a bool.should of term clauses each carrying
     its own `boost` — Lucene wraps the TermQuery in a BoostQuery, which
@@ -477,10 +494,7 @@ def search_boosted_terms(
         .crossJoin(F.broadcast(stats))
         .withColumn(
             "idf",
-            F.log(
-                F.lit(1.0)
-                + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-            ),
+            bm25_idf("n_docs", "df"),
         )
         .select("query_id", "term", "idf", "boost", "avgdl")
     )
@@ -488,10 +502,7 @@ def search_boosted_terms(
         tf.join(F.broadcast(q_idf), "term")
         .withColumn(
             "contrib",
-            F.col("boost")
-            * F.col("idf")
-            * (F.col("tf") * (k1 + 1.0))
-            / (F.col("tf") + k1 * (1.0 - b + b * F.col("len") / F.col("avgdl"))),
+            bm25_contrib(F.col("boost") * F.col("idf"), "tf", "len", "avgdl"),
         )
         .groupBy("query_id", "doc_id")
         .agg(F.sum("contrib").alias("score"))
@@ -521,7 +532,7 @@ def search_exhaustive(
         .crossJoin(F.broadcast(stats))
         .withColumn(
             "idf",
-            F.log(F.lit(1.0) + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)),
+            bm25_idf("n_docs", "df"),
         )
         .select("query_id", "term", "idf", "avgdl")
     )
@@ -532,9 +543,7 @@ def search_exhaustive(
         tf.join(F.broadcast(q_idf), "term")
         .withColumn(
             "contrib",
-            F.col("idf")
-            * (F.col("tf") * (K1 + 1.0))
-            / (F.col("tf") + K1 * (1.0 - B + B * F.col("len") / F.col("avgdl"))),
+            bm25_contrib("idf", "tf", "len", "avgdl"),
         )
         .groupBy("query_id", "doc_id")
         .agg(
@@ -724,7 +733,7 @@ def search_terms_set(
         .crossJoin(F.broadcast(stats))
         .withColumn(
             "idf",
-            F.log(F.lit(1.0) + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)),
+            bm25_idf("n_docs", "df"),
         )
         .select("query_id", "term", "idf", "avgdl", "min_match")
     )
@@ -732,9 +741,7 @@ def search_terms_set(
         tf.join(F.broadcast(q_idf), "term")
         .withColumn(
             "contrib",
-            F.col("idf")
-            * (F.col("tf") * (K1 + 1.0))
-            / (F.col("tf") + K1 * (1.0 - B + B * F.col("len") / F.col("avgdl"))),
+            bm25_contrib("idf", "tf", "len", "avgdl"),
         )
         .groupBy("query_id", "doc_id")
         .agg(
@@ -956,10 +963,7 @@ def search_sparse_vector(
             "w",
             F.round(
                 F.log(F.lit(1.0) + F.col("tf"))
-                * F.log(
-                    F.lit(1.0)
-                    + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-                ),
+                * bm25_idf("n_docs", "df"),
                 4,
             ),
         )

@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 from mario_spark import codec
 from mario_spark.postings import block_upper_bound
 from mario_spark.postings import idf as _idf
-from mario_spark.query import B, K1, SCORE_DECIMALS, topk
+from mario_spark.query import SCORE_DECIMALS, bm25_contrib_np, topk
 
 _EPS = 1e-9
 
@@ -127,10 +127,10 @@ class _TermData:
     __slots__ = (
         "raw_ids", "raw_tfs", "raw_lens", "block_max", "block_lens",
         "first_doc", "last_doc",
-        "t_idf", "avgdl", "k1", "b", "_blocks", "_full",
+        "t_idf", "avgdl", "_blocks", "_full",
     )
 
-    def __init__(self, rows: pd.DataFrame, t_idf: float, avgdl: float, k1: float, b: float):
+    def __init__(self, rows: pd.DataFrame, t_idf: float, avgdl: float):
         self.raw_ids = rows["doc_ids"].tolist()
         self.raw_tfs = rows["tfs"].tolist()
         self.raw_lens = rows["lens"].tolist()
@@ -144,20 +144,14 @@ class _TermData:
             rows["max_tf"].to_numpy(),
             rows["min_len"].to_numpy(),
             avgdl,
-            k1,
-            b,
         )
         self.block_lens = rows["n"].to_numpy(np.int64)
-        self.t_idf, self.avgdl, self.k1, self.b = t_idf, avgdl, k1, b
+        self.t_idf, self.avgdl = t_idf, avgdl
         self._blocks: dict[int, tuple[np.ndarray, np.ndarray]] = {}
         self._full: tuple[np.ndarray, np.ndarray] | None = None
 
     def _contrib(self, tfs: np.ndarray, lens: np.ndarray) -> np.ndarray:
-        k1, b = self.k1, self.b
-        return (
-            self.t_idf * tfs * (k1 + 1.0)
-            / (tfs + k1 * (1.0 - b + b * lens / self.avgdl))
-        )
+        return bm25_contrib_np(self.t_idf, tfs, lens, self.avgdl)
 
     def _block(self, i: int) -> tuple[np.ndarray, np.ndarray]:
         hit = self._blocks.get(i)
@@ -262,8 +256,6 @@ def _bucket_kernel(
     idf_map: dict[str, float],
     avgdl: float,
     k: int,
-    k1: float,
-    b: float,
     conjunctive: bool = False,
     must_not: dict[int, list[str]] | None = None,
     msm: int = 1,
@@ -322,7 +314,7 @@ def _bucket_kernel(
     tds: dict[str, _TermData] = {
         t: _TermData(
             g.sort_values("block_id"), idf_map.get(t, 0.0),
-            _adl.get(t, avgdl), k1, b,
+            _adl.get(t, avgdl),
         )
         for t, g in pdf.groupby("term", sort=False)
     }
@@ -525,8 +517,6 @@ def _run_kernel(
     idf_map: dict[str, float],
     avgdl: float,
     k: int,
-    k1: float,
-    b: float,
     conjunctive: bool,
     must_not: dict[int, list[str]] | None = None,
     msm: int = 1,
@@ -544,7 +534,7 @@ def _run_kernel(
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         return _bucket_kernel(
-            pdf, queries, idf_map, avgdl, k, k1, b, conjunctive, must_not,
+            pdf, queries, idf_map, avgdl, k, conjunctive, must_not,
             msm, deleted, filter_terms, groups, avgdl_map,
         )
 
@@ -575,8 +565,6 @@ def search_wand(
     n_docs: int,
     avgdl: float,
     k: int = 10,
-    k1: float = K1,
-    b: float = B,
     conjunctive: bool = False,
     must_not_terms: DataFrame | None = None,
     min_should_match: int = 1,
@@ -629,7 +617,7 @@ def search_wand(
     # terms absent from the dictionary (OOV) simply have no postings
     idf_map = df_to_idf(lookup_df(dictionary, terms), n_docs)
     return _run_kernel(
-        postings, queries, idf_map, float(avgdl), k, k1, b, conjunctive,
+        postings, queries, idf_map, float(avgdl), k, conjunctive,
         must_not, min_should_match, _collect_deleted(deleted_docs),
         filter_terms,
     )
@@ -716,6 +704,10 @@ class QuerySession:
     Serves field-scoped indexes too: pass field_stats={field: (n_docs,
     avgdl)} at construction and search(field=...) — terms are prefixed
     and scored with the field's own statistics (fields.py semantics).
+
+    deleted_docs = tombstoned doc ids as of open (Index.open_session
+    passes the index's own): collected once at construction and masked
+    on every route with the cold paths' live-docs semantics.
     """
 
     def __init__(
@@ -728,7 +720,10 @@ class QuerySession:
         field_stats: dict[str, tuple[int, float]] | None = None,
         vocab_cache_max: int | None = VOCAB_CACHE_MAX,
         df_lru_max: int = DF_LRU_MAX,
+        deleted_docs: DataFrame | None = None,
     ):
+        from mario_spark.phrase import _collect_deleted
+
         spark = postings.sparkSession
         n = n_buckets or spark.sparkContext.defaultParallelism
         self.postings = postings.repartition(n, "dbucket").persist()
@@ -746,11 +741,19 @@ class QuerySession:
         self._rdict: DataFrame | None = None  # reversed-term twin, lazy
         self._df_lru: "OrderedDict[str, int]" = OrderedDict()
         self._df_lru_max = df_lru_max
-        n_terms = dictionary.count()
-        if vocab_cache_max is None or n_terms <= vocab_cache_max:
-            self._df_map = {
-                r["term"]: int(r["df"]) for r in dictionary.collect()
-            }
+        # tombstones as of open, collected once: the session keeps its
+        # snapshot even after clear_deletes drops the generation files
+        self._deleted = _collect_deleted(deleted_docs)
+        # one job: at most vocab_cache_max + 1 rows reach the driver,
+        # and overflowing the cap is what selects the sharded mode
+        # (coalesce(1): a limit over many partitions is collected by
+        # incremental take, one job per round)
+        head = dictionary
+        if vocab_cache_max is not None:
+            head = dictionary.coalesce(1).limit(vocab_cache_max + 1)
+        rows = head.collect()
+        if vocab_cache_max is None or len(rows) <= vocab_cache_max:
+            self._df_map = {r["term"]: int(r["df"]) for r in rows}
         else:
             self._dict_fwd = dictionary.repartitionByRange(
                 n, "term"
@@ -773,8 +776,6 @@ class QuerySession:
         self,
         queries: list[tuple[int, str]],
         k: int = 10,
-        k1: float = K1,
-        b: float = B,
         conjunctive: bool = False,
         driver_limit: int = 200_000,
         field: str | None = None,
@@ -855,12 +856,12 @@ class QuerySession:
             and sum(dfm.values()) <= driver_limit
         ):
             return self._search_driver(
-                qlist, idf_map, avgdl, k, k1, b, conjunctive,
+                qlist, idf_map, avgdl, k, conjunctive,
                 nmap or None, min_should_match, flist,
             )
         return _run_kernel(
-            self.postings, qlist, idf_map, avgdl, k, k1, b, conjunctive,
-            nmap or None, min_should_match, filter_terms=flist,
+            self.postings, qlist, idf_map, avgdl, k, conjunctive,
+            nmap or None, min_should_match, self._deleted, flist,
         )
 
     def search_cross_fields(
@@ -868,8 +869,6 @@ class QuerySession:
         queries: list[tuple[int, str]],
         boosts: dict[str, float],
         k: int = 10,
-        k1: float = K1,
-        b: float = B,
         driver_limit: int = 200_000,
     ) -> DataFrame:
         """ES multi_match type=cross_fields served warm THROUGH the
@@ -950,12 +949,12 @@ class QuerySession:
             and sum(dfm.get(t, 0) for t in all_terms) <= driver_limit
         ):
             return self._search_driver(
-                qlist, idf_map, self.avgdl, k, k1, b, False,
+                qlist, idf_map, self.avgdl, k, False,
                 groups=groups, avgdl_map=avgdl_map,
             )
         return _run_kernel(
-            self.postings, qlist, idf_map, self.avgdl, k, k1, b, False,
-            groups=groups, avgdl_map=avgdl_map,
+            self.postings, qlist, idf_map, self.avgdl, k, False,
+            deleted=self._deleted, groups=groups, avgdl_map=avgdl_map,
         )
 
     def search_phrase(
@@ -963,8 +962,6 @@ class QuerySession:
         queries: list[tuple[int, str]],
         k: int = 10,
         slop: int = 0,
-        k1: float = K1,
-        b: float = B,
     ) -> DataFrame:
         """Warm match_phrase serving over a positions=True index: the
         dbucket-cached postings skip the per-query shuffle and the
@@ -986,7 +983,7 @@ class QuerySession:
         terms = sorted({t for _, ts in phrase_queries for t in ts})
         return ph._rank_phrases(
             self.postings, phrase_queries, self._df_for(terms),
-            self.n_docs, self.avgdl, k, k1, b, slop,
+            self.n_docs, self.avgdl, k, slop, self._deleted,
         )
 
     def _df_for(self, terms: list[str]) -> dict[str, int]:
@@ -1017,8 +1014,6 @@ class QuerySession:
         self,
         queries: list[tuple[int, str]],
         k: int = 10,
-        k1: float = K1,
-        b: float = B,
         default_field: str | None = None,
     ) -> DataFrame:
         """Warm query_string serving (full mini-language incl. phrase
@@ -1050,7 +1045,7 @@ class QuerySession:
         parsed, keys = qsmod._indexed_clauses(queries, default_field)
         return qsmod._rank_query_strings(
             self.postings, parsed, keys, self._df_for(keys), stats,
-            k, k1, b,
+            k, self._deleted,
         )
 
     def _search_driver(
@@ -1059,8 +1054,6 @@ class QuerySession:
         idf_map: dict[str, float],
         avgdl: float,
         k: int,
-        k1: float,
-        b: float,
         conjunctive: bool,
         must_not: dict[int, list[str]] | None = None,
         msm: int = 1,
@@ -1077,8 +1070,8 @@ class QuerySession:
         rows = self.postings.filter(F.col("term").isin(scan_terms)).toPandas()
         parts = [
             _bucket_kernel(
-                g, qlist, idf_map, avgdl, k, k1, b, conjunctive, must_not,
-                msm, None, filter_terms, groups, avgdl_map,
+                g, qlist, idf_map, avgdl, k, conjunctive, must_not,
+                msm, self._deleted, filter_terms, groups, avgdl_map,
             )
             for _, g in rows.groupby("dbucket", sort=True)
         ]
@@ -1290,8 +1283,6 @@ class QuerySession:
         k: int = 10,
         max_edits: int = 1,
         prefix_length: int = 1,
-        k1: float = K1,
-        b: float = B,
         driver_limit: int = 200_000,
     ) -> DataFrame:
         """Warm-path fuzzy / prefix / wildcard: [(query_id, raw
@@ -1309,11 +1300,11 @@ class QuerySession:
             and sum(dfm.values()) <= driver_limit
         ):
             return self._search_driver(
-                qlist, idf_map, self.avgdl, k, k1, b, conjunctive=False
+                qlist, idf_map, self.avgdl, k, conjunctive=False
             )
         return _run_kernel(
-            self.postings, qlist, idf_map, self.avgdl, k, k1, b,
-            conjunctive=False,
+            self.postings, qlist, idf_map, self.avgdl, k,
+            conjunctive=False, deleted=self._deleted,
         )
 
     def close(self) -> None:

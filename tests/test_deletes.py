@@ -34,7 +34,8 @@ def test_delete_by_query_then_purge(spark, root):
     pages = pages_df(spark, 600, seed=5, partitions=4)
     idx = cat.create("pages-2026-01-01t00-00-00z")
     idx.ingest(pages, segment_docs=256)
-    q = query_terms_df(spark, make_pages_query_set(seed=5, n=8))
+    qset = make_pages_query_set(seed=5, n=8)
+    q = query_terms_df(spark, qset)
 
     res = idx.delete_by_query(["crawl"])
     assert res["deleted"] > 0
@@ -69,6 +70,17 @@ def test_delete_by_query_then_purge(spark, root):
     # tombstoned, so a prefix query that expands only to 'crawl'
     # returns nothing
     assert idx.search_multiterm([(0, "craw")], kind="prefix").count() == 0
+
+    # a warm session opened now masks the same tombstones on the driver
+    # fast path (default) and the distributed path (driver_limit=0)
+    sess = idx.open_session().warm()
+    for kw in ({}, {"driver_limit": 0}):
+        pd.testing.assert_frame_equal(
+            _canon(sess.search(qset, k=10, **kw)), got,
+            check_exact=False, atol=1e-9,
+        )
+    assert sess.search_multiterm([(0, "craw")], kind="prefix").count() == 0
+    sess.close()
 
     # ---- purging compaction
     n_before = idx.stats()["n_docs"]

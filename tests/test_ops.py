@@ -870,3 +870,26 @@ def test_component_candidate_gate_refuses_before_generating(spark, docs_pdf):
         .toPandas().sort_values("doc_id", ignore_index=True)
     )
     assert a.equals(b)
+
+
+def test_ivf_recall_audit_leaves_no_cached_frame(spark):
+    """ivf_recall_audit caches its two exact twins while it measures;
+    both must be released by the time it returns, and the result must
+    still hold one row per (family, probe level). Compared by RDD id,
+    not by count: RDDs that earlier tests left persisted may be
+    released (garbage-collected) while the call runs."""
+    spark.catalog.clearCache()
+    jsc = spark.sparkContext._jsc
+    rng = np.random.default_rng(7)
+    e = spark.createDataFrame(
+        [(i, rng.standard_normal(16).tolist()) for i in range(200)],
+        "vec_id long, embedding array<float>",
+    )
+    before = set(jsc.getPersistentRDDs().keys())
+    out = ann.ivf_recall_audit(
+        e, probe_levels=(1, 8), centroid_ids=list(range(10, 18))
+    ).toPandas()
+    assert set(jsc.getPersistentRDDs().keys()) <= before
+    assert sorted(zip(out["family"], out["n_probe"])) == [
+        ("graph", 1), ("graph", 8), ("topk", 1), ("topk", 8)
+    ]

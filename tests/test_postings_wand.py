@@ -309,7 +309,7 @@ def test_wand_msm_theta_prunes_blocks(spark, monkeypatch):
     monkeypatch.setattr(wand._TermData, "gather", spy)
     kout = wand._bucket_kernel(
         pdf, [(0, ["aaa", "bbb", "ccc"])], idf_map, float(st_["avgdl"]),
-        10, 1.2, 0.75, msm=2,
+        10, msm=2,
     )
     assert pruned["seen"] > 0
     assert pruned["n"] > 0, f"msm=2 pruned no blocks ({pruned})"
@@ -346,7 +346,7 @@ def test_wand_conjunctive_range_prunes_decode(spark, monkeypatch):
     monkeypatch.setattr(wand._TermData, "_block", spy)
     kout = wand._bucket_kernel(
         pdf, [(0, [t_rare, t_common])], idf_map, float(st_["avgdl"]),
-        10, 1.2, 0.75, conjunctive=True,
+        10, conjunctive=True,
     )
     total_blocks = int(pdf[pdf["term"].isin([t_rare, t_common])].shape[0])
     assert decoded["n"] < total_blocks, (
@@ -400,7 +400,7 @@ def test_wand_cross_fields_groups_prune_blocks(spark, monkeypatch):
     groups = {0: [["aaa", "bbb"], ["ddd"]]}
     kout = wand._bucket_kernel(
         pdf, [(0, ["aaa", "bbb", "ddd"])], idf_map, float(st_["avgdl"]),
-        10, 1.2, 0.75, groups=groups,
+        10, groups=groups,
     )
     assert pruned["seen"] > 0
     assert pruned["n"] > 0, f"grouped WAND pruned no blocks ({pruned})"
@@ -408,8 +408,7 @@ def test_wand_cross_fields_groups_prune_blocks(spark, monkeypatch):
     # brute reference: full decode, per-group dis-max, sum over groups
     tds = {
         t: wand._TermData(
-            g.sort_values("block_id"), idf_map[t], float(st_["avgdl"]),
-            1.2, 0.75,
+            g.sort_values("block_id"), idf_map[t], float(st_["avgdl"])
         )
         for t, g in pdf.groupby("term")
     }
@@ -437,7 +436,7 @@ def test_wand_cross_fields_groups_prune_blocks(spark, monkeypatch):
     with pytest.raises(ValueError, match="dis-max"):
         wand._bucket_kernel(
             pdf, [(0, ["aaa", "bbb", "ddd"])], idf_map,
-            float(st_["avgdl"]), 10, 1.2, 0.75, conjunctive=True,
+            float(st_["avgdl"]), 10, conjunctive=True,
             groups=groups,
         )
     d.unpersist()
