@@ -44,7 +44,13 @@ from mario_spark.postings import (
     idf,
     pick_range_width,
 )
-from mario_spark.query import bm25_contrib, bm25_idf, bm25_scores, topk
+from mario_spark.query import (
+    bm25_contrib,
+    bm25_idf,
+    bm25_scores,
+    empty_result,
+    topk,
+)
 from mario_spark.wand import search_wand
 
 FIELD_SEP = ":"
@@ -520,10 +526,7 @@ def search_multi_phrase(
                 ).filter(F.col("ctf") > 0)
             )
     if not parts:
-        spark = pages.sparkSession
-        return spark.createDataFrame(
-            [], "query_id long, rank long, doc_id long, score double"
-        )
+        return empty_result(pages.sparkSession)
     allf = parts[0]
     for p in parts[1:]:
         allf = allf.unionByName(p)

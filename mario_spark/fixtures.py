@@ -478,15 +478,17 @@ DOCUMENTS_BOOSTED_SET: list[tuple[int, str, float]] = [
 
 
 def query_terms_df(spark: SparkSession, query_set: list[tuple[int, str]]) -> DataFrame:
-    """(query_id, term) pairs — queries analyzed with the same tokenizer."""
+    """(query_id, term) pairs — queries analyzed with the same tokenizer.
+    A local relation: collecting it (search_wand does) runs no job."""
     from mario_spark.analyze import py_tokenize
+    from mario_spark.session import local_frame
 
     rows = [
         (qid, t)
         for qid, q in query_set
         for t in dict.fromkeys(py_tokenize(q))  # distinct, order-stable
     ]
-    return spark.createDataFrame(rows, "query_id long, term string")
+    return local_frame(spark, rows, "query_id long, term string")
 
 
 # ES terms_set query set: (query_id, terms, minimum_should_match).

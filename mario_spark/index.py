@@ -51,15 +51,50 @@ import shutil
 import time
 from dataclasses import dataclass
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from mario_spark import docs as docsmod
 from mario_spark.postings import build_postings, pick_range_width
-from mario_spark.query import B, K1
+from mario_spark.query import B, K1, empty_result
+from mario_spark.session import local_frame
 from mario_spark.wand import search_wand
 
 DOCS_COLS = ["doc_id", "url", "lang", "len"]
+# the footer key under which Spark stores a table's own schema (JSON)
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_schema(path: str) -> StructType | None:
+    """The Spark schema stored in the footer of the first part file of
+    the parquet table directory `path`, or None when `path` is not a
+    local directory, holds no part file, or carries no Spark schema."""
+    if not os.path.isdir(path):
+        return None
+    parts = sorted(
+        f for f in os.listdir(path)
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    )
+    if not parts:
+        return None
+    meta = pq.read_schema(os.path.join(path, parts[0])).metadata or {}
+    raw = meta.get(SPARK_SCHEMA_KEY)
+    return None if raw is None else StructType.fromJson(json.loads(raw))
+
+
+def read_table(spark: SparkSession, *paths: str) -> DataFrame:
+    """Read Spark-written parquet tables (segment postings/docs/
+    dictionary, manifests, tombstone generations) with no Spark job.
+    `spark.read.parquet` runs a job per read to infer the schema from a
+    part file's footer; this reads the schema Spark stored there on the
+    driver instead. Spark's inference reads the same key, so the schema
+    is identical. A table without the key (written by another tool)
+    takes the inferring read."""
+    schema = _footer_schema(paths[0])
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(*paths)
 
 
 class Committer:
@@ -756,7 +791,7 @@ class Index:
         }
         gen = (max(marker["generations"]) + 1) if marker["generations"] else 0
         old.write.mode("overwrite").parquet(self.paths.delete_gen(gen))
-        n_old = self.spark.read.parquet(self.paths.delete_gen(gen)).count()
+        n_old = read_table(self.spark, self.paths.delete_gen(gen)).count()
         marker["generations"].append(gen)
         marker["n_deleted"] = int(marker["n_deleted"]) + int(n_old)
         _atomic_write_json(self.paths.deletes_marker, marker)
@@ -779,15 +814,26 @@ class Index:
         return [os.path.join(self.paths.seg(s), sub) for s in segs]
 
     def postings(self, segments: list[int] | None = None) -> DataFrame:
-        return self.spark.read.parquet(*self._seg_paths("postings", segments))
+        return read_table(self.spark, *self._seg_paths("postings", segments))
 
     def docs(self, segments: list[int] | None = None) -> DataFrame:
-        return self.spark.read.parquet(*self._seg_paths("docs", segments))
+        return read_table(self.spark, *self._seg_paths("docs", segments))
+
+    def _segment_dictionaries(
+        self, segments: list[int] | None = None
+    ) -> DataFrame:
+        """The segment dictionaries' (term, df) rows, unaggregated: a
+        term repeats once per segment holding it. The cold searches pass
+        this to wand.lookup_df, which sums df on the driver."""
+        return read_table(self.spark, *self._seg_paths("dictionary", segments))
 
     def dictionary(self, segments: list[int] | None = None) -> DataFrame:
         """Union of segment dictionaries; df is additive (doc-disjoint)."""
-        d = self.spark.read.parquet(*self._seg_paths("dictionary", segments))
-        return d.groupBy("term").agg(F.sum("df").cast("long").alias("df"))
+        return (
+            self._segment_dictionaries(segments)
+            .groupBy("term")
+            .agg(F.sum("df").cast("long").alias("df"))
+        )
 
     def manifest(self) -> DataFrame:
         segs = self.paths.committed_segments()
@@ -795,8 +841,8 @@ class Index:
             raise ValueError(
                 f"index '{self.paths.name}' has no committed segments"
             )
-        return self.spark.read.parquet(
-            *[self.paths.manifest(s) for s in segs]
+        return read_table(
+            self.spark, *[self.paths.manifest(s) for s in segs]
         )
 
     def stats(self, segments: list[int] | None = None) -> dict:
@@ -1098,7 +1144,7 @@ class Index:
         if prev is not None:
             hits = hits.join(prev, "doc_id", "left_anti")
         hits.write.mode("overwrite").parquet(self.paths.delete_gen(gen))
-        n_new = self.spark.read.parquet(self.paths.delete_gen(gen)).count()
+        n_new = read_table(self.spark, self.paths.delete_gen(gen)).count()
         marker["generations"].append(gen)
         marker["n_deleted"] = int(marker["n_deleted"]) + int(n_new)
         _atomic_write_json(self.paths.deletes_marker, marker)
@@ -1108,15 +1154,17 @@ class Index:
         self, generations: list[int] | None = None
     ) -> DataFrame | None:
         """Union of committed tombstone generations, or None.
-        `generations` restricts to a pinned list (PIT snapshot)."""
+        `generations` restricts to a pinned list (PIT snapshot). No
+        `distinct`: generations are disjoint by construction, because
+        delete_by_query and upsert anti-join every earlier one."""
         if generations is None:
             marker = _read_json(self.paths.deletes_marker)
             generations = (marker or {}).get("generations", [])
         if not generations:
             return None
-        return self.spark.read.parquet(
-            *[self.paths.delete_gen(g) for g in generations]
-        ).select("doc_id").distinct()
+        return read_table(
+            self.spark, *[self.paths.delete_gen(g) for g in generations]
+        ).select("doc_id")
 
     def clear_deletes(self) -> None:
         """Retire all tombstones (called after a purging compaction):
@@ -1161,12 +1209,10 @@ class Index:
         # crashed-before-first-commit) returns empty results, like an
         # empty ES index — every other accessor keeps the loud error
         if not live_segs:
-            return self.spark.createDataFrame(
-                [], "query_id long, rank long, doc_id long, score double"
-            )
+            return empty_result(self.spark)
         st = self.stats(segments=segs)
         return search_wand(
-            self.postings(segs), self.dictionary(segs), query_terms,
+            self.postings(segs), self._segment_dictionaries(segs), query_terms,
             st["n_docs"], st["avgdl"], k=k,
             deleted_docs=self.deleted_ids(
                 pit["delete_gens"] if pit is not None else None
@@ -1209,9 +1255,7 @@ class Index:
                 queries, kind, k, max_edits, prefix_length, field
             )
         st = self.stats()
-        qdf = self.spark.createDataFrame(
-            list(queries), "query_id long, term string"
-        )
+        qdf = local_frame(self.spark, queries, "query_id long, term string")
         from mario_spark.phrase import _collect_deleted
 
         dele = _collect_deleted(self.deleted_ids())
@@ -1273,9 +1317,7 @@ class Index:
                 "df",
             )
         )
-        qdf = self.spark.createDataFrame(
-            list(queries), "query_id long, term string"
-        )
+        qdf = local_frame(self.spark, queries, "query_id long, term string")
         expanders = {
             "fuzzy": lambda: fuzzymod.expand_terms(
                 dic, qdf, max_edits, prefix_length
@@ -1357,9 +1399,7 @@ class Index:
                 for qid, q in queries
                 for s in dict.fromkeys(py_shingles(q))
             ]
-            qdf = self.spark.createDataFrame(
-                rows, "query_id long, term string"
-            )
+            qdf = local_frame(self.spark, rows, "query_id long, term string")
         else:
             qdf = query_terms_df(self.spark, queries)
         return fieldsmod.search_field(
@@ -1443,7 +1483,7 @@ class Index:
                     f"default_field as one of {sorted(meta['fields'])}"
                 )
             return search_query_string_fields_indexed(
-                self.postings(), self.dictionary(), queries,
+                self.postings(), self._segment_dictionaries(), queries,
                 self.field_stats(), default_field, k=k,
                 deleted_docs=self.deleted_ids(),
             )
@@ -1456,7 +1496,7 @@ class Index:
             )
         st = self.stats()
         return search_query_string_indexed(
-            self.postings(), self.dictionary(), queries,
+            self.postings(), self._segment_dictionaries(), queries,
             st["n_docs"], st["avgdl"], k=k,
             deleted_docs=self.deleted_ids(),
         )
@@ -1499,14 +1539,14 @@ class Index:
                 for qid, text in phrases
             ]
             return search_phrase(
-                self.postings(), self.dictionary(), queries,
+                self.postings(), self._segment_dictionaries(), queries,
                 fst["n_docs"], fst["avgdl"], k=k,
                 deleted_docs=self.deleted_ids(),
             )
         st = self.stats()
         queries = [(qid, py_tokenize(text)) for qid, text in phrases]
         return search_phrase(
-            self.postings(), self.dictionary(), queries,
+            self.postings(), self._segment_dictionaries(), queries,
             st["n_docs"], st["avgdl"], k=k,
             deleted_docs=self.deleted_ids(),
         )
@@ -1690,11 +1730,11 @@ class Catalog:
             seg_src, seg_dst = s.paths.seg(seg), d.paths.seg(seg)
             os.makedirs(seg_dst, exist_ok=True)
             for sub in ("docs", "postings", "dictionary"):
-                self.spark.read.parquet(
-                    os.path.join(seg_src, sub)
+                read_table(
+                    self.spark, os.path.join(seg_src, sub)
                 ).write.mode("overwrite").parquet(os.path.join(seg_dst, sub))
             os.makedirs(os.path.join(d.paths.base, "manifest"), exist_ok=True)
-            self.spark.read.parquet(s.paths.manifest(seg)).write.mode(
+            read_table(self.spark, s.paths.manifest(seg)).write.mode(
                 "overwrite"
             ).parquet(d.paths.manifest(seg))
             _atomic_write_json(

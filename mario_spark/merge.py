@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mario_spark import codec
-from mario_spark.index import Index, _atomic_write_json, _read_json
+from mario_spark.index import Index, _atomic_write_json, _read_json, read_table
 from mario_spark.postings import encode_tf_rows
 
 TF_ROWS_SCHEMA = "term string, doc_id long, tf long, len long"
@@ -120,13 +120,9 @@ def compact_segments(
             "pass purge_deletes=False for a partial compaction"
         )
     sp = index.spark
-    post = sp.read.parquet(*[os.path.join(p.seg(s), "postings") for s in seg_ids])
-    docs = sp.read.parquet(*[os.path.join(p.seg(s), "docs") for s in seg_ids])
-    dic = (
-        sp.read.parquet(*[os.path.join(p.seg(s), "dictionary") for s in seg_ids])
-        .groupBy("term")
-        .agg(F.sum("df").cast("long").alias("df"))
-    )
+    post = index.postings(seg_ids)
+    docs = index.docs(seg_ids)
+    dic = index.dictionary(seg_ids)
 
     tf_rows = decode_to_tf_rows(post)
     purged_stats: dict | None = None
@@ -231,7 +227,7 @@ def compact_segments(
     os.makedirs(os.path.join(p.base, "manifest"), exist_ok=True)
     if purged_stats is not None:
         man_src = (
-            sp.read.parquet(os.path.join(seg_dir, "postings"))
+            read_table(sp, os.path.join(seg_dir, "postings"))
             .groupBy("dbucket")
             .agg(
                 F.sum("n").cast("long").alias("postings"),
@@ -247,8 +243,9 @@ def compact_segments(
         )
     else:
         man_src = (
-            sp.read.parquet(
-                *[p.manifest(s) for s in seg_ids if os.path.exists(p.manifest(s))]
+            read_table(
+                sp,
+                *[p.manifest(s) for s in seg_ids if os.path.exists(p.manifest(s))],
             )
             .groupBy("dbucket")
             .agg(
@@ -419,7 +416,7 @@ def reshard(catalog, src: str, dst: str, range_width: int) -> "Index":
     seg_dir = d.paths.seg(0)
     os.makedirs(seg_dir, exist_ok=True)
     enc.write.mode("overwrite").parquet(os.path.join(seg_dir, "postings"))
-    written = sp.read.parquet(os.path.join(seg_dir, "postings"))
+    written = read_table(sp, os.path.join(seg_dir, "postings"))
     dictionary_from_postings(written).write.mode("overwrite").parquet(
         os.path.join(seg_dir, "dictionary")
     )

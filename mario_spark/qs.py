@@ -57,6 +57,7 @@ from mario_spark.query import (
     bm25_contrib,
     bm25_contrib_np,
     bm25_idf,
+    empty_result,
     topk,
 )
 from mario_spark.wand import lookup_df, scatter_gather
@@ -204,9 +205,7 @@ def search_query_string(
     if not parts:
         # every query analyzed to zero scoring clauses (empty string,
         # operators only, pure negation): Lucene matches nothing
-        return spark.createDataFrame(
-            [], "query_id long, rank long, doc_id long, score double"
-        )
+        return empty_result(spark)
     hits = parts[0]
     for p in parts[1:]:
         hits = hits.unionByName(p)
@@ -469,9 +468,7 @@ def search_query_string_fields(
             if len(terms) == 1:
                 term_cl_rows.append((qid, cid, kind, fld, terms[0]))
     if not cl_rows:
-        return spark.createDataFrame(
-            [], "query_id long, rank long, doc_id long, score double"
-        )
+        return empty_result(spark)
     cl = spark.createDataFrame(
         cl_rows,
         "query_id long, clause_id int, kind string, field string, term string",
@@ -545,9 +542,7 @@ def search_query_string_fields(
             )
         )
     if not parts:
-        return spark.createDataFrame(
-            [], "query_id long, rank long, doc_id long, score double"
-        )
+        return empty_result(spark)
     hits = parts[0]
     for p in parts[1:]:
         hits = hits.unionByName(p)
@@ -891,9 +886,7 @@ def search_query_string_fields_indexed(
     tests)."""
     parsed, keys = _indexed_clauses(queries, default_field)
     if not keys:
-        return postings.sparkSession.createDataFrame(
-            [], "query_id long, rank long, doc_id long, score double"
-        )
+        return empty_result(postings.sparkSession)
     stats = {
         f: (s.get("n_docs", 0), s.get("avgdl", 0.0))
         for f, s in field_stats.items()
@@ -1081,9 +1074,7 @@ def search_simple_query_string(
             )
         )
     if not parts:
-        return spark.createDataFrame(
-            [], "query_id long, rank long, doc_id long, score double"
-        )
+        return empty_result(spark)
     hits = parts[0]
     for p in parts[1:]:
         hits = hits.unionByName(p)

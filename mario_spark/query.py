@@ -32,12 +32,15 @@ mario_spark.wand; tests assert it is rank-identical to this scorer.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from mario_spark.session import local_frame
 
 K1 = 1.2
 B = 0.75
 SCORE_DECIMALS = 4
+RESULT_SCHEMA = "query_id long, rank long, doc_id long, score double"
 
 
 def _col(c) -> Column:
@@ -155,6 +158,12 @@ def topk(scored: DataFrame, k: int = 10) -> DataFrame:
         .filter(F.col("rank") <= k)
         .select("query_id", "rank", "doc_id", "score")
     )
+
+
+def empty_result(spark: SparkSession) -> DataFrame:
+    """topk's output shape with no rows, for a search that matches
+    nothing before any scan; collecting it runs no Spark job."""
+    return local_frame(spark, [], RESULT_SCHEMA)
 
 
 def search_filtered(

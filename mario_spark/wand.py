@@ -49,7 +49,14 @@ from pyspark.sql import functions as F
 from mario_spark import codec
 from mario_spark.postings import block_upper_bound
 from mario_spark.postings import idf as _idf
-from mario_spark.query import SCORE_DECIMALS, bm25_contrib_np, topk
+from mario_spark.query import (
+    RESULT_SCHEMA,
+    SCORE_DECIMALS,
+    bm25_contrib_np,
+    empty_result,
+    topk,
+)
+from mario_spark.session import local_frame
 
 _EPS = 1e-9
 
@@ -106,9 +113,16 @@ def _result_frame(
 
 def lookup_df(dictionary: DataFrame, terms: list[str]) -> dict[str, int]:
     """Cold {term: df} for the dictionary terms among `terms`: one
-    pushdown-filtered collect (OOV terms are simply absent)."""
-    rows = dictionary.filter(F.col("term").isin(terms)).collect()
-    return {r["term"]: int(r["df"]) for r in rows}
+    pushdown-filtered collect (OOV terms are simply absent).
+
+    `dictionary` may be the unaggregated union of segment dictionaries
+    (Index passes it on the cold paths, saving the groupBy shuffle):
+    a term's rows then repeat once per segment, and its df is their
+    sum, because segments are doc-disjoint."""
+    out: dict[str, int] = {}
+    for r in dictionary.filter(F.col("term").isin(terms)).collect():
+        out[r["term"]] = out.get(r["term"], 0) + int(r["df"])
+    return out
 
 
 def df_to_idf(dfm: dict[str, int], n_docs: float) -> dict[str, float]:
@@ -1063,9 +1077,8 @@ class QuerySession:
     ) -> DataFrame:
         terms = sorted({t for _, ts in qlist for t in ts if t in idf_map})
         spark = self.postings.sparkSession
-        schema = "query_id long, rank long, doc_id long, score double"
         if not terms:
-            return spark.createDataFrame([], schema)
+            return empty_result(spark)
         scan_terms = _scan_terms(terms, must_not, filter_terms)
         rows = self.postings.filter(F.col("term").isin(scan_terms)).toPandas()
         parts = [
@@ -1077,7 +1090,7 @@ class QuerySession:
         ]
         parts = [p for p in parts if len(p)]
         if not parts:
-            return spark.createDataFrame([], schema)
+            return empty_result(spark)
         local = pd.concat(parts, ignore_index=True)
         # replicate the distributed finish exactly: Spark F.round is
         # HALF_UP (pandas .round is half-even) -> floor(x*1e4+0.5)/1e4
@@ -1093,7 +1106,7 @@ class QuerySession:
         local["rank"] = local.groupby("query_id").cumcount() + 1
         local = local[local["rank"] <= k]
         return spark.createDataFrame(
-            local[["query_id", "rank", "doc_id", "score"]], schema
+            local[["query_id", "rank", "doc_id", "score"]], RESULT_SCHEMA
         )
 
     def _expand(
@@ -1189,9 +1202,8 @@ class QuerySession:
         DataFrame — the sharded mode's path for unanchored patterns."""
         from mario_spark import fuzzy as fuzzymod
 
-        spark = self.postings.sparkSession
-        qdf = spark.createDataFrame(
-            list(queries), "query_id long, term string"
+        qdf = local_frame(
+            self.postings.sparkSession, queries, "query_id long, term string"
         )
         exp = {
             "fuzzy": lambda: fuzzymod.expand_terms(

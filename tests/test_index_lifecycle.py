@@ -1386,3 +1386,89 @@ def test_cli_committer_flag_selects_s3(spark, root, capsys):
         assert name in out
     finally:
         idxmod.set_committer(prev)
+
+
+def test_read_table_schema_is_spark_inferred_schema(spark, root, tmp_path):
+    """read_table takes the schema from Spark's own key in a part
+    file's footer instead of running the schema-inference job. For
+    every table an index writes (plain, positions, fields=, sort_docs_by,
+    vector_col, a maybe_merge segment, tombstone generations) it must
+    equal what spark.read.parquet infers; a parquet file without the
+    key (written by pyarrow) takes the inferring read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from mario_spark.index import _footer_schema, _read_json, read_table
+    from mario_spark.merge import maybe_merge
+
+    pages = pages_df(spark, 256, seed=43, partitions=4).withColumn(
+        "embedding",
+        F.expr(
+            "transform(sequence(1, 4), i -> cast("
+            "conv(substring(md5(concat(url, i)), 1, 4), 16, 10)"
+            " as float) / 65535.0)"
+        ),
+    )
+    doc_num = F.regexp_extract("url", r"(\d+)$", 1).cast("long")
+    builds = {
+        "plain": {},
+        "positions": {"positions": True},
+        "fields": {"fields": {"contents": "text", "lang": "lang"}},
+        "sorted": {"sort_docs_by": "warc_ts"},
+        "vector": {"vector_col": "embedding"},
+    }
+    cat = Catalog(spark, root)
+    indexes = {}
+    for name, kw in builds.items():
+        idx = cat.create(f"{name}-2026-01-01t00-00-00z")
+        idx.ingest(pages.filter(doc_num < 200), segment_docs=256, **kw)
+        indexes[name] = idx
+
+    # plain: two small appends merged by the tiered policy, then
+    # delete -> upsert -> delete tombstone generations
+    plain = indexes["plain"]
+    for lo in (200, 228):
+        plain.append(pages.filter((doc_num >= lo) & (doc_num < lo + 28)))
+    merged = maybe_merge(plain, max_per_tier=2)
+    assert merged is not None
+    by_df = [
+        r["term"]
+        for r in plain.dictionary().orderBy(F.desc("df"), "term").limit(40)
+        .collect()
+    ]
+    assert plain.delete_by_query([by_df[30]])["deleted"] > 0
+    assert plain.upsert(pages.filter(doc_num < 20))["replaced"] > 0
+    assert plain.delete_by_query([by_df[35]])["deleted"] > 0
+    dele = plain.deleted_ids()
+    assert dele.count() == dele.distinct().count() > 0
+    assert dele.count() == plain.stats()["n_deleted"]
+
+    for name, idx in indexes.items():
+        p = idx.paths
+        tables = [p.manifest(s) for s in p.committed_segments()]
+        tables += [
+            os.path.join(p.seg(s), sub)
+            for s in p.committed_segments()
+            for sub in ("postings", "docs", "dictionary")
+        ]
+        marker = _read_json(p.deletes_marker) or {}
+        tables += [p.delete_gen(g) for g in marker.get("generations", [])]
+        assert len(tables) >= 4, name
+        for path in tables:
+            assert _footer_schema(path) is not None, path
+            got = read_table(spark, path).schema
+            assert got == spark.read.parquet(path).schema, path
+    assert merged in plain.paths.committed_segments()
+
+    # no Spark key in the footer: the plain inferring read
+    foreign = tmp_path / "foreign"
+    foreign.mkdir()
+    pq.write_table(
+        pa.table({"term": ["a", "b"], "df": [1, 2]}),
+        str(foreign / "part-0.parquet"),
+    )
+    assert _footer_schema(str(foreign)) is None
+    got = read_table(spark, str(foreign))
+    assert got.schema == spark.read.parquet(str(foreign)).schema
+    assert sorted(tuple(r) for r in got.collect()) == [("a", 1), ("b", 2)]

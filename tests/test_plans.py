@@ -3,6 +3,8 @@ be visible in .explain output, not just hoped for (SURVEY §4.2)."""
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -251,6 +253,75 @@ def test_cold_dbucket_operators_plan_one_kernel_one_window(spark):
         kernels = re.findall(r"^\(\d+\) FlatMapGroupsInPandas\b", plan, re.M)
         windows = re.findall(r"^\(\d+\) Window\b", plan, re.M)
         assert (len(kernels), len(windows)) == (1, 1), name
+
+
+def _job_count(spark, fn) -> int:
+    """Spark jobs that `fn()` launches, counted through a job group."""
+    sc = spark.sparkContext
+    group = f"job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status tracker learns of jobs from the asynchronous listener
+    # bus: drain it so the last job is counted
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_cold_searches_pay_only_for_their_own_jobs(spark, tmp_path):
+    """A cold Index.search / search_phrase / search_query_string over a
+    multi-segment index with a tombstone generation runs at most 5
+    jobs: the scatter-gather tail (pruned scan, kernel, rank window),
+    one dictionary lookup and one tombstone collect. Opening a segment
+    table infers no schema, the query-term frame and the empty result
+    are local relations, the lookup reads the segment dictionaries
+    without a groupBy shuffle and the tombstones without a distinct."""
+    from mario_spark.fixtures import pages_df, query_terms_df
+    from mario_spark.index import Index
+    from mario_spark.query import empty_result
+
+    idx = Index(spark, str(tmp_path / "idx"), "jobs")
+    idx.ingest(
+        pages_df(spark, 600, seed=5, partitions=4),
+        positions=True, segment_docs=300,
+    )
+    idx.append(pages_df(spark, 120, seed=6, partitions=4))
+    assert idx.stats()["segments"] == 3
+    # mid-frequency terms: the deleted one, and two that are queried
+    by_df = [
+        r["term"]
+        for r in idx.dictionary().orderBy(F.desc("df"), "term").limit(60)
+        .collect()
+    ]
+    assert idx.delete_by_query([by_df[50]])["deleted"] > 0
+    a, b, c = by_df[20], by_df[30], by_df[40]
+
+    calls = {
+        "search": lambda: idx.search(
+            query_terms_df(spark, [(0, f"{a} {b}")]), k=10
+        ),
+        "search_phrase": lambda: idx.search_phrase([(0, f"the {a}")], k=10),
+        "search_query_string": lambda: idx.search_query_string(
+            [(0, f'{a} "the {b}" -{c}')], k=10
+        ),
+    }
+    for name, call in calls.items():
+        rows = []
+        jobs = _job_count(spark, lambda: rows.extend(call().collect()))
+        assert jobs <= 5, (name, jobs)
+        assert rows, name
+
+    def open_tables():
+        idx.postings(), idx.docs(), idx.dictionary(), idx.deleted_ids()
+
+    assert _job_count(spark, open_tables) == 0
+    assert _job_count(
+        spark, lambda: query_terms_df(spark, [(0, f"{a} {b}")]).collect()
+    ) == 0
+    assert _job_count(spark, lambda: empty_result(spark).collect()) == 0
 
 
 def test_filtered_search_semi_join_no_extra_shuffle(spark):
