@@ -1,6 +1,6 @@
 # Developer entry points (see README.md; driver contract in __spark_entry__.py)
 
-.PHONY: test test-bench bench bench-small scaling pyfiles smoke digest
+.PHONY: test test-serving test-bench bench bench-small scaling pyfiles smoke digest
 
 test:             ## tier-1 suite, exactly as ROADMAP.md runs it
 	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" \
@@ -8,11 +8,21 @@ test:             ## tier-1 suite, exactly as ROADMAP.md runs it
 	timeout -k 10 2670 python -m pytest tests/ -q \
 		--continue-on-collection-errors -p no:cacheprovider
 
+test-serving:     ## fast loop: rank-identity, warm/cold and reader tests
+	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" \
+	SPARK_LOCAL_DIRS=/tmp/spark-local \
+	python -m pytest -q -p no:cacheprovider \
+		tests/test_postings_wand.py tests/test_session_sharded.py \
+		tests/test_qs_indexed.py tests/test_phrase_fields.py \
+		tests/test_fuzzy.py tests/test_append.py tests/test_deletes.py \
+		tests/test_plans.py
+
 test-bench:       ## the benchmark's own span/event-log parser tests
 	python -m pytest perfbench/test_spans.py -q
 
-digest:           ## per-operator rows/plan identity digest (SF_DIR=<sf0.001 dir>)
-	@test -n "$(SF_DIR)" || { echo "usage: make digest SF_DIR=<sf0.001 dir>"; exit 2; }
+SF_DIR ?= /root/testdata/sf0.001
+
+digest:           ## per-operator rows/plan identity digest (SF_DIR, default sf0.001)
 	@python scripts/suite_digest.py "$(SF_DIR)"
 
 bench:            ## headline paths at sf0.1 on local[32] (one JSON line)

@@ -13,18 +13,24 @@ subtlety is WHICH statistics score the shards:
   combined index would produce.
 
 Both modes map exactly onto this engine: an Index is the shard, its
-dictionary is the term-stats source, and search_wand already takes
-(dictionary, n_docs, avgdl) as INPUTS — so dfs mode is just "call every
-index with the merged dictionary and summed collection stats". The
-merge is a per-query rank over |indexes| x k rows — coordinator-sized.
+pinned Snapshot reads its postings and tombstones, and a Snapshot's
+TermStats is its only df source — so dfs mode is just "score every
+member's snapshot with one TermStats over all members' dictionaries
+and the summed collection stats". The merge is a per-query rank over
+|indexes| x k rows — coordinator-sized.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from mario_spark.wand import search_wand
+from mario_spark.session import local_frame
+from mario_spark.wand import Snapshot, TermStats, _by_query
+
+SCHEMA = "query_id long, rank long, index string, doc_id long, score double"
 
 
 def search_indexes(
@@ -87,41 +93,34 @@ def _search_opened(
     filter_terms: list[str] | None = None,
     indices_boost: dict[str, float] | None = None,
 ) -> DataFrame:
-    # empty members (fresh rollover targets) contribute nothing —
-    # exactly an empty ES index in a multi-index search
-    idxs = [
-        (n, idx) for n, idx in idxs if idx.paths.committed_segments()
+    # one pinned Snapshot per member; empty members (fresh rollover
+    # targets) contribute nothing — exactly an empty ES index in a
+    # multi-index search
+    snaps = [
+        (n, snap)
+        for n, snap in ((n, idx.open_pit()) for n, idx in idxs)
+        if snap.segments
     ]
-    if not idxs:
-        spark = query_terms.sparkSession
-        return spark.createDataFrame(
-            [],
-            "query_id long, rank long, index string, doc_id long, score double",
-        )
+    if not snaps:
+        return local_frame(query_terms.sparkSession, [], SCHEMA)
+    queries = sorted(_by_query(query_terms).items())
     if mode == "dfs_query_then_fetch":
-        merged_dic = None
-        tot_docs, tot_len = 0, 0.0
-        for _, idx in idxs:
-            d = idx.dictionary()
-            merged_dic = d if merged_dic is None else merged_dic.unionByName(d)
-            st = idx.stats()
-            tot_docs += st["n_docs"]
-            tot_len += st["avgdl"] * st["n_docs"]
-        merged_dic = merged_dic.groupBy("term").agg(
-            F.sum("df").cast("long").alias("df")
+        # the dfs pre-phase: ONE TermStats over every member's segment
+        # dictionaries (its lookup runs once, then serves every member
+        # from its LRU) and the summed collection stats
+        terms = TermStats(
+            reduce(DataFrame.unionByName, [s.terms.table for _, s in snaps])
         )
-        g_n, g_avgdl = tot_docs, (tot_len / tot_docs if tot_docs else 0.0)
+        n = sum(s.n_docs for _, s in snaps)
+        avgdl = sum(s.avgdl * s.n_docs for _, s in snaps) / n if n else 0.0
+        snaps = [
+            (name, Snapshot(s.postings, terms, n, avgdl,
+                            deleted_docs=s.deleted_docs))
+            for name, s in snaps
+        ]
     parts = []
-    for name, idx in idxs:
-        if mode == "dfs_query_then_fetch":
-            dic, n_docs, avgdl = merged_dic, g_n, g_avgdl
-        else:
-            st = idx.stats()
-            dic, n_docs, avgdl = idx.dictionary(), st["n_docs"], st["avgdl"]
-        local = search_wand(
-            idx.postings(), dic, query_terms, n_docs, avgdl, k=k,
-            deleted_docs=idx.deleted_ids(), filter_terms=filter_terms,
-        )
+    for name, snap in snaps:
+        local = snap.search_terms(queries, k, filter_terms=filter_terms)
         boost = float((indices_boost or {}).get(name, 1.0))
         parts.append(
             local.select(
@@ -131,9 +130,7 @@ def _search_opened(
                 F.round(F.col("score") * F.lit(boost), 4).alias("score"),
             )
         )
-    allp = parts[0]
-    for p in parts[1:]:
-        allp = allp.unionByName(p)
+    allp = reduce(DataFrame.unionByName, parts)
     w = Window.partitionBy("query_id").orderBy(
         F.desc("score"), F.asc("index"), F.asc("doc_id")
     )

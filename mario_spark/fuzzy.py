@@ -218,6 +218,30 @@ def expand_regexp(
     )
 
 
+def expand(
+    kind: str,
+    dictionary: DataFrame,
+    query_terms: DataFrame,
+    max_edits: int = 1,
+    prefix_length: int = 1,
+) -> DataFrame:
+    """(query_id, raw pattern) -> (query_id, term, df): the `kind`
+    expansion (fuzzy | prefix | wildcard | regexp), one dictionary
+    pass."""
+    if kind == "fuzzy":
+        return expand_terms(dictionary, query_terms, max_edits, prefix_length)
+    fns = {
+        "prefix": expand_prefix,
+        "wildcard": expand_wildcard,
+        "regexp": expand_regexp,
+    }
+    if kind not in fns:
+        raise ValueError(
+            f"kind must be fuzzy|prefix|wildcard|regexp, got {kind!r}"
+        )
+    return fns[kind](dictionary, query_terms)
+
+
 def _search_expansion(
     postings: DataFrame,
     expansion: DataFrame,

@@ -60,7 +60,7 @@ from mario_spark import docs as docsmod
 from mario_spark.postings import build_postings, pick_range_width
 from mario_spark.query import B, K1, empty_result
 from mario_spark.session import local_frame
-from mario_spark.wand import search_wand
+from mario_spark.wand import Snapshot, TermStats, _by_query
 
 DOCS_COLS = ["doc_id", "url", "lang", "len"]
 # the footer key under which Spark stores a table's own schema (JSON)
@@ -344,6 +344,26 @@ def _read_json(path: str) -> dict | None:
     return _COMMITTER.read_json(path)
 
 
+def _sum_stats(stats) -> tuple[int, float]:
+    """(n_docs, avgdl) summed from segment (or per-field) stats dicts
+    {n_docs, sum_len}: additive, because segments are doc-disjoint."""
+    n = s = 0
+    for st in stats:
+        n += st.get("n_docs", 0)
+        s += st.get("sum_len", 0)
+    return n, (s / n) if n else 0.0
+
+
+def _field_stats(markers) -> dict[str, tuple[int, float]]:
+    """{field: (n_docs, avgdl)} summed from the commit markers' per-field
+    stats (a field no segment holds a doc for has none)."""
+    per: dict[str, list[dict]] = {}
+    for m in markers:
+        for f, st in (m.get("field_stats") or {}).items():
+            per.setdefault(f, []).append(st)
+    return {f: _sum_stats(sts) for f, sts in per.items()}
+
+
 def _write_manifest(
     post: DataFrame, path: str, seg_id: int, lo: int, hi: int
 ) -> None:
@@ -400,16 +420,22 @@ class IndexPaths:
     def delete_gen(self, gen: int) -> str:
         return os.path.join(self.base, "deletes", f"{gen:05d}.parquet")
 
-    def committed_segments(self) -> list[int]:
+    def committed_markers(self) -> dict[int, dict]:
+        """{segment id: commit marker} of the committed segments, in id
+        order, each marker read once: the one listing of the segment
+        directory (committed_segments wraps it)."""
         segdir = os.path.join(self.base, "segments")
         if not os.path.isdir(segdir):
-            return []
-        out = []
+            return {}
+        out = {}
         for d in sorted(os.listdir(segdir)):
             m = _read_json(os.path.join(segdir, d, "_seg.json"))
             if m and m.get("status") == "committed":
-                out.append(int(d))
+                out[int(d)] = m
         return out
+
+    def committed_segments(self) -> list[int]:
+        return list(self.committed_markers())
 
 
 class Index:
@@ -724,11 +750,10 @@ class Index:
         if meta is None:
             return self.ingest(pages, source=source)
         rw = meta["range_width"]
-        committed = self.paths.committed_segments()
-        doc_hi = 0
-        for s in committed:
-            m = _read_json(self.paths.seg_meta(s)) or {}
-            doc_hi = max(doc_hi, m.get("doc_hi", 0))
+        committed = self.paths.committed_markers()
+        doc_hi = max(
+            (m.get("doc_hi", 0) for m in committed.values()), default=0
+        )
         base = int(math.ceil(doc_hi / rw) * rw)
 
         keep = [
@@ -807,11 +832,14 @@ class Index:
             self.paths.committed_segments() if segments is None else segments
         )
         if not segs:
-            raise ValueError(
-                f"index '{self.paths.name}' has no committed segments "
-                "(never ingested, or crashed before the first commit)"
-            )
+            raise self._no_segments()
         return [os.path.join(self.paths.seg(s), sub) for s in segs]
+
+    def _no_segments(self) -> ValueError:
+        return ValueError(
+            f"index '{self.paths.name}' has no committed segments "
+            "(never ingested, or crashed before the first commit)"
+        )
 
     def postings(self, segments: list[int] | None = None) -> DataFrame:
         return read_table(self.spark, *self._seg_paths("postings", segments))
@@ -819,21 +847,11 @@ class Index:
     def docs(self, segments: list[int] | None = None) -> DataFrame:
         return read_table(self.spark, *self._seg_paths("docs", segments))
 
-    def _segment_dictionaries(
-        self, segments: list[int] | None = None
-    ) -> DataFrame:
-        """The segment dictionaries' (term, df) rows, unaggregated: a
-        term repeats once per segment holding it. The cold searches pass
-        this to wand.lookup_df, which sums df on the driver."""
-        return read_table(self.spark, *self._seg_paths("dictionary", segments))
-
     def dictionary(self, segments: list[int] | None = None) -> DataFrame:
         """Union of segment dictionaries; df is additive (doc-disjoint)."""
-        return (
-            self._segment_dictionaries(segments)
-            .groupBy("term")
-            .agg(F.sum("df").cast("long").alias("df"))
-        )
+        return TermStats(
+            read_table(self.spark, *self._seg_paths("dictionary", segments))
+        ).dictionary
 
     def manifest(self) -> DataFrame:
         segs = self.paths.committed_segments()
@@ -845,48 +863,44 @@ class Index:
             self.spark, *[self.paths.manifest(s) for s in segs]
         )
 
-    def stats(self, segments: list[int] | None = None) -> dict:
-        """Collection stats by summing segment commit markers (no scan).
-        `segments` restricts to a pinned list (PIT snapshot)."""
-        segs = (
-            self.paths.committed_segments() if segments is None else segments
-        )
-        n, s = 0, 0
-        for seg in segs:
-            m = _read_json(self.paths.seg_meta(seg)) or {}
-            n += m.get("n_docs", 0)
-            s += m.get("sum_len", 0)
+    def stats(self) -> dict:
+        """Collection stats by summing segment commit markers (no scan)."""
+        markers = self.paths.committed_markers()
+        n, avgdl = _sum_stats(markers.values())
         dels = _read_json(self.paths.deletes_marker) or {}
         return {
             "n_docs": n,
-            "avgdl": (s / n) if n else 0.0,
-            "segments": len(segs),
+            "avgdl": avgdl,
+            "segments": len(markers),
             "n_deleted": int(dels.get("n_deleted", 0)),
         }
 
     def open_session(self, **kwargs) -> "QuerySession":
-        """Open a warm-serving QuerySession pinned to the index's
-        CURRENT committed-segment snapshot — the engine's point-in-time
-        contract (same as open_pit, but holding the postings cached and
-        the dictionary in driver memory for low-latency serving).
+        """Open a warm-serving QuerySession: the Snapshot open_pit pins
+        now, with its postings repartitioned on dbucket and cached and
+        its term statistics opened once (TermStats.open: the segment
+        dictionaries summed into a driver dict when they fit, two jobs
+        with the tombstone collect).
 
-        Snapshot semantics under concurrent writes: the session's
-        postings are repartitioned + persisted at open and its term
-        dictionary is collected once, so appends, merges — even merges
-        that DELETE the session's source segment files — do not change
-        (or break) what an already-warmed session serves. Seeing new
-        data is an explicit refresh: open a new session (ES semantics —
-        a PIT/scroll keeps serving its snapshot while the index moves
-        on). Call .warm() before relying on that: warming materializes
-        the cache while the source files still exist. Tombstones
-        committed at open are part of the snapshot: the session masks
-        them on every route, as the cold searches do."""
+        The snapshot is pinned at open. Appends, deletes and merges —
+        even merges that DELETE the session's source segment files —
+        do not change (or break) what a warmed session serves: its
+        postings are cached, its df held (or cached in shards) and its
+        tombstones collected at open. Seeing new data is an explicit
+        refresh: open a new session (ES semantics — a PIT/scroll keeps
+        serving its snapshot while the index moves on). Call .warm()
+        before relying on that: warming materializes the cache while
+        the source files still exist. `with idx.open_session() as s:`
+        releases the cached frames on exit. kwargs go to QuerySession;
+        a fields=... index serves search(field=...) with the snapshot's
+        per-field stats."""
         from mario_spark.wand import QuerySession
 
-        st = self.stats()
+        snap = self._pinned()
         return QuerySession(
-            self.postings(), self.dictionary(), st["n_docs"], st["avgdl"],
-            deleted_docs=self.deleted_ids(), **kwargs,
+            snap.postings, snap.terms.table, snap.n_docs, snap.avgdl,
+            deleted_docs=snap.deleted_docs,
+            **{"field_stats": snap.field_stats, **kwargs},
         )
 
     # ------------------------------------------------------ dense vectors
@@ -984,6 +998,12 @@ class Index:
         Returns {"segments", "threshold", "total_segments"} — threshold
         None means the index (after filters) holds fewer than k docs and
         everything selected must be read."""
+        return self._sorted_scan(k, where)[0]
+
+    def _sorted_scan(self, k: int, where) -> tuple:
+        """(sorted_scan_plan's plan, the docs scan it ran, sort key,
+        desc). The scan reads the tombstones once, so search_sorted
+        masks exactly the ones the plan did."""
         meta = _read_json(self.paths.meta) or {}
         sd = meta.get("sort_docs")
         if not sd:
@@ -993,10 +1013,8 @@ class Index:
                 "segment sort bounds"
             )
         key, desc = sd["field"], bool(sd["desc"])
-        segs = self.paths.committed_segments()
         known, unknown = [], []
-        for s in segs:
-            m = _read_json(self.paths.seg_meta(s)) or {}
+        for s, m in self.paths.committed_markers().items():
             sb = m.get("sort_bounds") or {}
             row = (s, sb.get("min"), sb.get("max"), m.get("n_docs", 0))
             # a segment without bounds (e.g. written by an older tool or
@@ -1008,12 +1026,12 @@ class Index:
         bounds = unknown + known
         kc = F.col(key)
         order = [kc.desc() if desc else kc.asc(), F.col("doc_id").asc()]
+        dele = self.deleted_ids()
 
         def _scan(sel):
             d = self.docs(sel).filter(kc.isNotNull())
             if where is not None:
                 d = d.filter(where)
-            dele = self.deleted_ids()
             if dele is not None:
                 d = d.join(dele, "doc_id", "left_anti")
             return d
@@ -1031,11 +1049,12 @@ class Index:
                 break
             n_prefix = min(len(bounds), max(n_prefix * 2, n_prefix + 1))
         if len(rows) < k:
-            return {
+            plan = {
                 "segments": [b[0] for b in bounds],
                 "threshold": None,
                 "total_segments": len(bounds),
             }
+            return plan, _scan, key, desc
         t = _jsonable(rows[-1][key])
         scanned = set(sel)
         sel += [
@@ -1047,11 +1066,12 @@ class Index:
                 or (mx >= t if desc else mn <= t)
             )
         ]
-        return {
+        plan = {
             "segments": sorted(sel),
             "threshold": t,
             "total_segments": len(bounds),
         }
+        return plan, _scan, key, desc
 
     def search_sorted(self, k: int = 10, where=None) -> DataFrame:
         """Top-k docs by the index sort field (ES sorted query with
@@ -1062,17 +1082,10 @@ class Index:
         segment file is SORTED by the key (the Spark shape of Lucene's
         per-segment sorted collector cutoff). `where` is an optional
         extra filter Column (ES query + sort)."""
-        plan = self.sorted_scan_plan(k, where=where)  # raises if unsorted
-        meta = _read_json(self.paths.meta) or {}
-        sd = meta["sort_docs"]
-        key, desc = sd["field"], bool(sd["desc"])
+        # raises if the index is unsorted
+        plan, scan, key, desc = self._sorted_scan(k, where)
         kc = F.col(key)
-        d = self.docs(plan["segments"]).filter(kc.isNotNull())
-        if where is not None:
-            d = d.filter(where)
-        dele = self.deleted_ids()
-        if dele is not None:
-            d = d.join(dele, "doc_id", "left_anti")
+        d = scan(plan["segments"])
         t = plan["threshold"]
         if t is not None:
             # marker bounds are JSON-encoded (timestamps as ISO text);
@@ -1084,22 +1097,58 @@ class Index:
         ).limit(k)
 
     # --------------------------------------------------- point in time
-    def open_pit(self) -> dict:
-        """ES point-in-time (PIT): pin the CURRENT committed segment
-        list and tombstone generations. A search passed this handle
-        sees exactly this snapshot — segments and tombstone generation
-        files are immutable once committed, so pinning the two lists
-        pins the data; later appends, upserts, and deletes stay
-        invisible until the caller drops the handle. (ES keeps segment
-        refcounts server-side; here the handle is just the pinned
-        lists, and validity lasts as long as a purging compaction
-        hasn't physically removed the pinned files — same contract as
-        ES's PIT keep_alive.)"""
-        marker = _read_json(self.paths.deletes_marker) or {}
-        return {
-            "segments": list(self.paths.committed_segments()),
-            "delete_gens": list(marker.get("generations", [])),
-        }
+    def open_pit(self) -> Snapshot:
+        """ES point-in-time (PIT): a Snapshot reader pinned to the
+        CURRENT commit. Pinning reads the index meta, the segment list
+        (each commit marker once) and the deletes marker exactly once;
+        the postings, the segment dictionaries behind its TermStats,
+        n_docs/avgdl and the per-field stats summed from the markers,
+        and the tombstone generations (collected at first use) all come
+        from that one read. So an append, merge or delete that commits
+        mid-search can never make the stats disagree with the postings
+        and df a search scores.
+
+        A search passed the handle (search(pit=...)) sees exactly this
+        snapshot: segment and tombstone generation files are immutable
+        once committed, so pinning the lists pins the data, and later
+        appends, upserts and deletes stay invisible. Validity lasts as
+        long as no compaction has physically removed the pinned files
+        (ES's PIT keep_alive contract; ES keeps segment refcounts
+        server-side). A session (open_session) caches what it pins, so
+        it keeps serving after the files go."""
+        meta = _read_json(self.paths.meta) or {}
+        markers = self.paths.committed_markers()
+        gens = (_read_json(self.paths.deletes_marker) or {}).get(
+            "generations", []
+        )
+        fields = meta.get("fields") or {}
+        field_stats = {f: (0, 0.0) for f in fields}
+        field_stats.update(_field_stats(markers.values()))
+        segs = list(markers)
+
+        def read(sub: str) -> DataFrame | None:
+            return (
+                read_table(self.spark, *self._seg_paths(sub, segs))
+                if segs else None
+            )
+
+        return Snapshot(
+            read("postings"), TermStats(read("dictionary")),
+            *_sum_stats(markers.values()),
+            field_stats=field_stats,
+            deleted_docs=self._tombstones(gens),
+            analyzers=_field_analyzers(fields),
+            name=self.paths.name,
+            segments=markers,
+        )
+
+    def _pinned(self) -> Snapshot:
+        """A Snapshot pinned now; an index with no committed segment
+        raises."""
+        snap = self.open_pit()
+        if not snap.segments:
+            raise self._no_segments()
+        return snap
 
     # ----------------------------------------------------------- deletes
     def delete_by_query(self, terms: list[str]) -> dict:
@@ -1150,16 +1199,15 @@ class Index:
         _atomic_write_json(self.paths.deletes_marker, marker)
         return {"deleted": int(n_new), "total_deleted": marker["n_deleted"]}
 
-    def deleted_ids(
-        self, generations: list[int] | None = None
-    ) -> DataFrame | None:
-        """Union of committed tombstone generations, or None.
-        `generations` restricts to a pinned list (PIT snapshot). No
+    def deleted_ids(self) -> DataFrame | None:
+        """Union of committed tombstone generations, or None."""
+        marker = _read_json(self.paths.deletes_marker) or {}
+        return self._tombstones(marker.get("generations", []))
+
+    def _tombstones(self, generations: list[int]) -> DataFrame | None:
+        """The doc ids of tombstone `generations`, or None. No
         `distinct`: generations are disjoint by construction, because
         delete_by_query and upsert anti-join every earlier one."""
-        if generations is None:
-            marker = _read_json(self.paths.deletes_marker)
-            generations = (marker or {}).get("generations", [])
         if not generations:
             return None
         return read_table(
@@ -1180,43 +1228,37 @@ class Index:
             shutil.rmtree(self.paths.delete_gen(g), ignore_errors=True)
 
     # ------------------------------------------------------------- query
+    # Every search pins ONE Snapshot (open_pit) and runs its body: the
+    # same Snapshot bodies a warm QuerySession serves with.
     def search(
         self,
         query_terms: DataFrame,
         k: int = 10,
         filter_terms: list[str] | None = None,
-        pit: dict | None = None,
+        pit: Snapshot | None = None,
     ) -> DataFrame:
-        """filter_terms = ES filter context (e.g. a filtered alias):
-        docs must contain at least one of the terms (analyzed form);
-        the filter never scores. See wand.search_wand.
+        """(query_id, term) rows -> (query_id, rank, doc_id, score).
+        filter_terms = ES filter context (e.g. a filtered alias): docs
+        must contain at least one of the terms (analyzed form); the
+        filter never scores. See wand.search_wand.
 
-        pit = a handle from open_pit(): the search runs against the
-        pinned segment/tombstone snapshot, so concurrent appends,
-        upserts, and deletes don't shift results between pages (the ES
-        PIT + search_after pagination contract)."""
-        meta = _read_json(self.paths.meta) or {}
-        if meta.get("fields"):
+        pit = a Snapshot from open_pit(): the search runs against the
+        pinned segments and tombstones, so concurrent appends, upserts
+        and deletes don't shift results between pages (the ES PIT +
+        search_after pagination contract)."""
+        snap = pit if pit is not None else self.open_pit()
+        if snap.field_stats:
             raise ValueError(
                 f"index '{self.paths.name}' is field-scoped; "
                 "use search_field(field, ...)"
             )
-        segs = pit["segments"] if pit is not None else None
-        live_segs = (
-            segs if segs is not None else self.paths.committed_segments()
-        )
         # an index with zero committed segments (fresh rollover target,
         # crashed-before-first-commit) returns empty results, like an
-        # empty ES index — every other accessor keeps the loud error
-        if not live_segs:
+        # empty ES index — every other search keeps the loud error
+        if not snap.segments:
             return empty_result(self.spark)
-        st = self.stats(segments=segs)
-        return search_wand(
-            self.postings(segs), self._segment_dictionaries(segs), query_terms,
-            st["n_docs"], st["avgdl"], k=k,
-            deleted_docs=self.deleted_ids(
-                pit["delete_gens"] if pit is not None else None
-            ),
+        return snap.search_terms(
+            sorted(_by_query(query_terms).items()), k,
             filter_terms=filter_terms,
         )
 
@@ -1244,123 +1286,33 @@ class Index:
         wildcard on one mapped field."""
         from mario_spark import fuzzy as fuzzymod
 
-        meta = _read_json(self.paths.meta) or {}
-        if meta.get("fields"):
-            if field is None:
-                raise ValueError(
-                    f"index '{self.paths.name}' is field-scoped; pass "
-                    f"field=... (one of {sorted(meta['fields'])})"
-                )
-            return self._search_multiterm_field(
-                queries, kind, k, max_edits, prefix_length, field
-            )
-        st = self.stats()
-        qdf = local_frame(self.spark, queries, "query_id long, term string")
-        from mario_spark.phrase import _collect_deleted
-
-        dele = _collect_deleted(self.deleted_ids())
-        fns = {
-            "fuzzy": lambda: fuzzymod.search_fuzzy(
-                self.postings(), self.dictionary(), qdf,
-                st["n_docs"], st["avgdl"], k=k,
-                max_edits=max_edits, prefix_length=prefix_length,
-                deleted=dele,
-            ),
-            "prefix": lambda: fuzzymod.search_prefix(
-                self.postings(), self.dictionary(), qdf,
-                st["n_docs"], st["avgdl"], k=k, deleted=dele,
-            ),
-            "wildcard": lambda: fuzzymod.search_wildcard(
-                self.postings(), self.dictionary(), qdf,
-                st["n_docs"], st["avgdl"], k=k, deleted=dele,
-            ),
-            "regexp": lambda: fuzzymod.search_regexp(
-                self.postings(), self.dictionary(), qdf,
-                st["n_docs"], st["avgdl"], k=k, deleted=dele,
-            ),
-        }
-        if kind not in fns:
-            raise ValueError(f"kind must be one of {sorted(fns)}, got {kind!r}")
-        return fns[kind]()
-
-    def _search_multiterm_field(
-        self,
-        queries: list[tuple[int, str]],
-        kind: str,
-        k: int,
-        max_edits: int,
-        prefix_length: int,
-        field: str,
-    ) -> DataFrame:
-        """Field-scoped multi-term path: expand against the field's
-        slice of the dictionary (prefix stripped so patterns see bare
-        terms), score with the field's stats through the WAND kernel."""
-        from mario_spark import fuzzy as fuzzymod
-        from mario_spark.phrase import _collect_deleted
-        from mario_spark.postings import idf as _idf
-        from mario_spark.wand import _run_kernel
-
-        meta = _read_json(self.paths.meta) or {}
-        if field not in (meta.get("fields") or {}):
-            raise ValueError(
-                f"unknown field '{field}'; index has "
-                f"{sorted(meta.get('fields') or {})}"
-            )
-        fst = self.field_stats().get(field, {"n_docs": 0, "avgdl": 0.0})
-        pfx = f"{field}:"
-        dic = (
-            self.dictionary()
-            .filter(F.col("term").startswith(pfx))
-            .select(
+        snap = self._pinned()
+        pfx, n_docs, avgdl = snap.scope(field)
+        dic = snap.terms.dictionary
+        if pfx:
+            dic = dic.filter(F.col("term").startswith(pfx)).select(
                 F.col("term").substr(F.lit(len(pfx) + 1), F.length("term"))
                 .alias("term"),
                 "df",
             )
-        )
         qdf = local_frame(self.spark, queries, "query_id long, term string")
-        expanders = {
-            "fuzzy": lambda: fuzzymod.expand_terms(
-                dic, qdf, max_edits, prefix_length
-            ),
-            "prefix": lambda: fuzzymod.expand_prefix(dic, qdf),
-            "wildcard": lambda: fuzzymod.expand_wildcard(dic, qdf),
-            "regexp": lambda: fuzzymod.expand_regexp(dic, qdf),
-        }
-        if kind not in expanders:
-            raise ValueError(
-                f"kind must be one of {sorted(expanders)}, got {kind!r}"
+        exp = fuzzymod.expand(kind, dic, qdf, max_edits, prefix_length)
+        if pfx:
+            exp = exp.select(
+                "query_id", F.concat(F.lit(pfx), "term").alias("term"), "df"
             )
-        rows = expanders[kind]().collect()
-        nd = float(fst["n_docs"])
-        qmap: dict[int, list[str]] = {}
-        idf_map: dict[str, float] = {}
-        for r in rows:
-            t = pfx + r["term"]
-            qmap.setdefault(int(r["query_id"]), []).append(t)
-            idf_map[t] = _idf(nd, float(r["df"]))
-        qlist = sorted((qid, sorted(ts)) for qid, ts in qmap.items())
-        return _run_kernel(
-            self.postings(), qlist, idf_map, float(fst["avgdl"]),
-            k, conjunctive=False,
-            deleted=_collect_deleted(self.deleted_ids()),
+        return fuzzymod._search_expansion(
+            snap.postings, exp, n_docs, avgdl, k, deleted=snap.deleted
         )
 
     def field_stats(self) -> dict[str, dict]:
         """Per-field (n_docs, avgdl) summed from segment markers —
         additive because segments are doc-disjoint."""
-        agg: dict[str, dict] = {}
-        for seg in self.paths.committed_segments():
-            m = _read_json(self.paths.seg_meta(seg)) or {}
-            for f, st in (m.get("field_stats") or {}).items():
-                a = agg.setdefault(f, {"n_docs": 0, "sum_len": 0})
-                a["n_docs"] += st["n_docs"]
-                a["sum_len"] += st["sum_len"]
         return {
-            f: {
-                "n_docs": a["n_docs"],
-                "avgdl": (a["sum_len"] / a["n_docs"]) if a["n_docs"] else 0.0,
-            }
-            for f, a in agg.items()
+            f: {"n_docs": n, "avgdl": ad}
+            for f, (n, ad) in _field_stats(
+                self.paths.committed_markers().values()
+            ).items()
         }
 
     def search_field(
@@ -1372,40 +1324,11 @@ class Index:
     ) -> DataFrame:
         """Field-scoped BM25 over a fields=... index:
         [(query_id, raw text)] -> (query_id, rank, doc_id, score),
-        scored with the FIELD's df/n_docs/avgdl."""
-        from mario_spark import fields as fieldsmod
-        from mario_spark.analyze import py_tokenize
-        from mario_spark.fixtures import query_terms_df
-
-        meta = _read_json(self.paths.meta) or {}
-        if not meta.get("fields"):
-            raise ValueError(
-                f"index '{self.paths.name}' was not built with fields=...; "
-                "field-scoped queries need a per-field index"
-            )
-        if field not in meta["fields"]:
-            raise ValueError(
-                f"unknown field '{field}'; index has {sorted(meta['fields'])}"
-            )
-        fst = self.field_stats().get(field, {"n_docs": 0, "avgdl": 0.0})
-        # analyze the query with the FIELD's analyzer (ES analyzes query
-        # text with the target field's search analyzer): a shingle field
-        # turns "data table scan" into its 2-shingles
-        if _field_analyzers(meta["fields"]).get(field) == "shingle":
-            from mario_spark.analyze import py_shingles
-
-            rows = [
-                (qid, s)
-                for qid, q in queries
-                for s in dict.fromkeys(py_shingles(q))
-            ]
-            qdf = local_frame(self.spark, rows, "query_id long, term string")
-        else:
-            qdf = query_terms_df(self.spark, queries)
-        return fieldsmod.search_field(
-            self.postings(), self.dictionary(), qdf, field,
-            fst["n_docs"], fst["avgdl"], k=k, conjunctive=conjunctive,
-            deleted_docs=self.deleted_ids(),
+        scored with the FIELD's df/n_docs/avgdl. The query is analyzed
+        with the field's analyzer (a shingle field turns "data table
+        scan" into its 2-shingles)."""
+        return self._pinned().search(
+            queries, k, conjunctive, field=field
         )
 
     def search_phrase_fast(
@@ -1419,8 +1342,8 @@ class Index:
         (Index.search_phrase), exactly like ES."""
         from mario_spark.analyze import py_tokenize
 
-        meta = _read_json(self.paths.meta) or {}
-        if _field_analyzers(meta.get("fields") or {}).get(field) != "shingle":
+        snap = self._pinned()
+        if snap.analyzers.get(field) != "shingle":
             raise ValueError(
                 f"field '{field}' is not a shingle field; declare it as "
                 '{"source": <col>, "analyzer": "shingle"} at ingest'
@@ -1430,7 +1353,7 @@ class Index:
                 raise ValueError(
                     f"index_phrases serves 2-term phrases: {q!r}"
                 )
-        return self.search_field(field, queries, k=k)
+        return snap.search(queries, k, field=field)
 
     def mget(self, urls: list[str]) -> DataFrame:
         """ES _mget by _id (the url IS the _id, matching the reference's
@@ -1454,52 +1377,10 @@ class Index:
         default_field: str | None = None,
     ) -> DataFrame:
         """Full query_string mini-language over a positions=True index
-        ([(query_id, raw query string)] — bare/+/-/"phrase" clauses):
-        term clauses read tf from the positional postings, phrase
-        clauses run the chain matcher, Lucene BooleanQuery matching
-        applies, tombstones are masked. Rank-identical to
-        qs.search_query_string over the raw pages (asserted in tests).
-
-        On a fields=... index the `field:term` / `field:"a phrase"`
-        syntax is live: pass `default_field` (the ES default_field
-        option) for unprefixed atoms; each clause scores with ITS
-        field's df/docCount/avgFieldLength via the field-prefixed
-        posting keys. Rank-identical to qs.search_query_string_fields."""
-        from mario_spark.qs import (
-            search_query_string_fields_indexed,
-            search_query_string_indexed,
-        )
-
-        meta = _read_json(self.paths.meta) or {}
-        if not meta.get("positions"):
-            raise ValueError(
-                f"index '{self.paths.name}' was built without positions; "
-                "query_string needs them for its phrase clauses"
-            )
-        if meta.get("fields"):
-            if default_field is None or default_field not in meta["fields"]:
-                raise ValueError(
-                    f"index '{self.paths.name}' is field-scoped; pass "
-                    f"default_field as one of {sorted(meta['fields'])}"
-                )
-            return search_query_string_fields_indexed(
-                self.postings(), self._segment_dictionaries(), queries,
-                self.field_stats(), default_field, k=k,
-                deleted_docs=self.deleted_ids(),
-            )
-        if default_field is not None:
-            # silently ignoring the flag would hide a typo'd
-            # --default-field on a single-field index
-            raise ValueError(
-                f"index '{self.paths.name}' has no fields config; "
-                "default_field only applies to a fields=... index"
-            )
-        st = self.stats()
-        return search_query_string_indexed(
-            self.postings(), self._segment_dictionaries(), queries,
-            st["n_docs"], st["avgdl"], k=k,
-            deleted_docs=self.deleted_ids(),
-        )
+        ([(query_id, raw query string)]); see
+        Snapshot.search_query_string. On a fields=... index pass
+        `default_field` for unprefixed atoms."""
+        return self._pinned().search_query_string(queries, k, default_field)
 
     def search_phrase(
         self, phrases: list[tuple[int, str]], k: int = 10,
@@ -1507,49 +1388,8 @@ class Index:
     ) -> DataFrame:
         """match_phrase over a positions=True index:
         [(query_id, raw phrase text)] -> (query_id, rank, doc_id, score).
-
-        On a fields=... index pass `field`: the phrase matches within
-        THAT field's position stream (ordinals are per-field, so a
-        phrase can never span a field boundary) and is scored with the
-        field's own df/n_docs/avgdl — ES match_phrase on one mapped
-        field."""
-        from mario_spark.analyze import py_tokenize
-        from mario_spark.phrase import search_phrase
-
-        meta = _read_json(self.paths.meta) or {}
-        if not meta.get("positions"):
-            raise ValueError(
-                f"index '{self.paths.name}' was built without positions; "
-                "re-ingest with positions=True to enable phrase queries"
-            )
-        if meta.get("fields"):
-            if field is None:
-                raise ValueError(
-                    f"index '{self.paths.name}' is field-scoped; pass "
-                    f"field=... (one of {sorted(meta['fields'])})"
-                )
-            if field not in meta["fields"]:
-                raise ValueError(
-                    f"unknown field '{field}'; index has "
-                    f"{sorted(meta['fields'])}"
-                )
-            fst = self.field_stats().get(field, {"n_docs": 0, "avgdl": 0.0})
-            queries = [
-                (qid, [f"{field}:{t}" for t in py_tokenize(text)])
-                for qid, text in phrases
-            ]
-            return search_phrase(
-                self.postings(), self._segment_dictionaries(), queries,
-                fst["n_docs"], fst["avgdl"], k=k,
-                deleted_docs=self.deleted_ids(),
-            )
-        st = self.stats()
-        queries = [(qid, py_tokenize(text)) for qid, text in phrases]
-        return search_phrase(
-            self.postings(), self._segment_dictionaries(), queries,
-            st["n_docs"], st["avgdl"], k=k,
-            deleted_docs=self.deleted_ids(),
-        )
+        On a fields=... index pass `field`; see Snapshot.search_phrase."""
+        return self._pinned().search_phrase(phrases, k, field=field)
 
 
 # ---------------------------------------------------------------- catalog

@@ -353,9 +353,9 @@ def _rank_phrases(
     slop: int = 0,
     deleted: np.ndarray | None = None,
 ) -> DataFrame:
-    """search_phrase's body, given the member terms' {term: df}: the
-    cold path looks dfm up in the dictionary, QuerySession answers it
-    from its warm one. Per bucket, each phrase scores as Lucene's
+    """search_phrase's body, given the member terms' {term: df}
+    (search_phrase looks it up in the dictionary, Snapshot.search_phrase
+    asks its TermStats). Per bucket, each phrase scores as Lucene's
     PhraseWeight over its chain matches; a tombstoned doc is masked
     out BEFORE local top-k, so it is replaced by the next-best, never
     just dropped from the page."""

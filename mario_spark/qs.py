@@ -45,7 +45,6 @@ from pyspark.sql import DataFrame, functions as F
 from mario_spark.analyze import py_tokenize, tokenize_udf
 from mario_spark.phrase import (
     _chain_doc_ptfs,
-    _collect_deleted,
     _local_topk,
     _positional_kernel,
 )
@@ -60,7 +59,7 @@ from mario_spark.query import (
     empty_result,
     topk,
 )
-from mario_spark.wand import lookup_df, scatter_gather
+from mario_spark.wand import Snapshot, TermStats, scatter_gather
 
 _ATOM_RE = re.compile(r'([+-]?)(?:"([^"]*)"|(\S+))')
 
@@ -811,10 +810,10 @@ def _rank_query_strings(
     deleted=None,
 ) -> DataFrame:
     """The indexed query_string body, given the posting keys' {key:
-    df}: the cold paths look dfm up in the dictionary, QuerySession
-    answers it from its warm one. `stats` maps each clause field (None
-    when unscoped) to its (n_docs, avgdl): a clause's idf sum uses its
-    field's docCount, its length norm the field's avgdl. Unmapped
+    df}, which Snapshot.search_query_string takes from its TermStats.
+    `stats` maps each clause field (None when unscoped) to its
+    (n_docs, avgdl): a clause's idf sum uses its field's docCount, its
+    length norm the field's avgdl. Unmapped
     fields keep Lucene behavior for free: no df (sidf 0), no postings
     (a must can never match)."""
     queries_c = []
@@ -858,11 +857,10 @@ def search_query_string_indexed(
     qs.search_query_string (tests assert rank identity between the
     two). Plan = search_wand's: term-pruned scan -> per-dbucket batch
     kernel -> tiny per-query rank window (wand.scatter_gather)."""
-    parsed, keys = _indexed_clauses(queries)
-    return _rank_query_strings(
-        postings, parsed, keys, lookup_df(dictionary, keys),
-        {None: (n_docs, avgdl)}, k, _collect_deleted(deleted_docs),
-    )
+    return Snapshot(
+        postings, TermStats(dictionary), n_docs, avgdl,
+        deleted_docs=deleted_docs,
+    ).search_query_string(queries, k)
 
 
 def search_query_string_fields_indexed(
@@ -884,17 +882,14 @@ def search_query_string_fields_indexed(
     construction, fields.field_tf). Rank-identical to
     qs.search_query_string_fields over the raw pages (asserted in
     tests)."""
-    parsed, keys = _indexed_clauses(queries, default_field)
-    if not keys:
-        return empty_result(postings.sparkSession)
     stats = {
         f: (s.get("n_docs", 0), s.get("avgdl", 0.0))
         for f, s in field_stats.items()
     }
-    return _rank_query_strings(
-        postings, parsed, keys, lookup_df(dictionary, keys), stats,
-        k, _collect_deleted(deleted_docs),
-    )
+    return Snapshot(
+        postings, TermStats(dictionary), 0, 0.0, field_stats=stats,
+        deleted_docs=deleted_docs,
+    ).search_query_string(queries, k, default_field)
 
 
 def parse_simple_query_string(

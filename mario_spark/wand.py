@@ -40,6 +40,7 @@ blocks are never VByte-decoded at all):
 from __future__ import annotations
 
 from collections import OrderedDict
+from functools import cached_property
 
 import numpy as np
 import pandas as pd
@@ -60,9 +61,9 @@ from mario_spark.session import local_frame
 
 _EPS = 1e-9
 
-# QuerySession dictionary bounds: vocabularies at most VOCAB_CACHE_MAX
-# terms are collected whole into driver memory (the warm fast path);
-# larger ones switch to executor-side range-partitioned shards with a
+# QuerySession TermStats bounds: dictionaries of at most VOCAB_CACHE_MAX
+# rows are held whole in driver memory (the warm fast path); larger
+# ones switch to executor-side range-partitioned shards with a
 # DF_LRU_MAX-entry driver LRU of query-touched dfs. 2M terms ~ 100 MB
 # of driver dict — comfortable; 10^8-10^9 web-vocab terms would be
 # tens of GB, which is the ceiling this bound removes.
@@ -111,17 +112,29 @@ def _result_frame(
     )
 
 
+def _sum_df(rows) -> dict[str, int]:
+    """(term, df) rows -> {term: df}. The segment dictionaries repeat a
+    term once per segment holding it; its df is the sum of those rows,
+    because segments are doc-disjoint."""
+    out: dict[str, int] = {}
+    for r in rows:
+        out[r["term"]] = out.get(r["term"], 0) + int(r["df"])
+    return out
+
+
 def lookup_df(dictionary: DataFrame, terms: list[str]) -> dict[str, int]:
     """Cold {term: df} for the dictionary terms among `terms`: one
     pushdown-filtered collect (OOV terms are simply absent).
+    `dictionary` may be the unaggregated union of segment dictionaries,
+    which saves the groupBy shuffle (see _sum_df)."""
+    return _sum_df(dictionary.filter(F.col("term").isin(terms)).collect())
 
-    `dictionary` may be the unaggregated union of segment dictionaries
-    (Index passes it on the cold paths, saving the groupBy shuffle):
-    a term's rows then repeat once per segment, and its df is their
-    sum, because segments are doc-disjoint."""
-    out: dict[str, int] = {}
-    for r in dictionary.filter(F.col("term").isin(terms)).collect():
-        out[r["term"]] = out.get(r["term"], 0) + int(r["df"])
+
+def _by_query(frame: DataFrame) -> dict[int, list[str]]:
+    """(query_id, term) rows -> {query_id: [terms]}, in row order."""
+    out: dict[int, list[str]] = {}
+    for r in frame.collect():
+        out.setdefault(int(r["query_id"]), []).append(r["term"])
     return out
 
 
@@ -608,32 +621,21 @@ def search_wand(
     with fewer terms than the minimum matches nothing, as in ES).
 
     Plan: collect the tiny query-term table driver-side (it IS the
-    query), filter postings to queried terms (predicate pushed into the
-    scan — at scale the postings layout prunes whole files by term),
-    group by dbucket -> batch scoring kernel -> per-query rank window
-    over the small candidate union.
+    query) and run Snapshot.search_terms over these frames: one
+    dictionary lookup for just the queried terms, then the term-pruned
+    scan -> per-dbucket kernel -> per-query rank (_run_kernel).
     """
-    from mario_spark.phrase import _collect_deleted
-
-    qrows = query_terms.collect()
-    qmap: dict[int, list[str]] = {}
-    for r in qrows:
-        qmap.setdefault(int(r["query_id"]), []).append(r["term"])
-    queries = sorted(qmap.items())
-    terms = sorted({t for _, ts in queries for t in ts})
-    must_not: dict[int, list[str]] | None = None
-    if must_not_terms is not None:
-        must_not = {}
-        for r in must_not_terms.collect():
-            must_not.setdefault(int(r["query_id"]), []).append(r["term"])
-
-    # tiny driver-side dictionary lookup for just the queried terms;
-    # terms absent from the dictionary (OOV) simply have no postings
-    idf_map = df_to_idf(lookup_df(dictionary, terms), n_docs)
-    return _run_kernel(
-        postings, queries, idf_map, float(avgdl), k, conjunctive,
-        must_not, min_should_match, _collect_deleted(deleted_docs),
-        filter_terms,
+    snap = Snapshot(
+        postings, TermStats(dictionary), n_docs, avgdl,
+        deleted_docs=deleted_docs,
+    )
+    return snap.search_terms(
+        sorted(_by_query(query_terms).items()), k, conjunctive,
+        must_not=(
+            None if must_not_terms is None else _by_query(must_not_terms)
+        ),
+        min_should_match=min_should_match,
+        filter_terms=filter_terms,
     )
 
 
@@ -682,330 +684,92 @@ def _window_anchor(kind: str, q: str, prefix_length: int) -> bool:
     return True
 
 
-class QuerySession:
-    """Warm query-serving handle — the coordinating-node state a search
-    engine keeps between queries, made explicit:
+class TermStats:
+    """A snapshot's one source of document frequencies, in one of two
+    shapes (results are identical across them, asserted in tests):
 
-    - postings re-partitioned ON dbucket and cached: groupBy(dbucket)
-      then reuses the cached partitioning, so a query runs WITHOUT a
-      shuffle stage (the cold path pays one per query).
-    - the term dictionary collected into a driver-side dict (one job at
-      open, ~vocab-sized — exactly the in-memory term dictionary an ES
-      data node holds per shard) while the vocabulary is at most
-      `vocab_cache_max` terms. Above it the session switches to the
-      SHARDED dictionary mode: the (term, df) table is range-partitioned
-      on term and cached executor-side (Lucene holds its terms index
-      per-shard, not on one node), the driver keeps a bounded LRU of
-      query-touched dfs (`df_lru_max` entries, misses batch-fetched by
-      one pushdown-filtered lookup), and multi-term expansion collects
-      only the pattern's own prefix/suffix WINDOW via range predicates
-      that prune the cached shards. Memory contract: driver heap in
-      sharded mode is O(df_lru_max + largest expansion window), never
-      O(vocab) — at 10^8-10^9 web-vocab terms the full dict would be
-      tens of GB. Results are bit-identical across modes (asserted in
-      tests).
-    - queries enter as raw text and are analyzed driver-side with the
-      pinned tokenizer (a query is a handful of terms — no Spark job).
-
-    Distributed routes run the cold operators' own bodies over the
-    cached postings (scatter_gather; phrase and query_string call the
-    df-taking bodies their cold entry points wrap), so only the
-    dictionary lookup job and the per-query dbucket shuffle are saved
-    and results are bit-identical to the cold paths (asserted in
-    tests). Small term queries can also take the coordinator fast path
-    (see search).
-
-    Serves field-scoped indexes too: pass field_stats={field: (n_docs,
-    avgdl)} at construction and search(field=...) — terms are prefixed
-    and scored with the field's own statistics (fields.py semantics).
-
-    deleted_docs = tombstoned doc ids as of open (Index.open_session
-    passes the index's own): collected once at construction and masked
-    on every route with the cold paths' live-docs semantics.
+    - held: the vocabulary's {term: df} in a driver dict, the in-heap
+      term dictionary an ES data node keeps. Lookups and multi-term
+      expansion run no Spark job.
+    - lookup: pushdown-filtered lookups against the (term, df) `table`,
+      behind a driver LRU of query-touched dfs (`lru_max` entries; 0
+      negative-caches an OOV term). A cold snapshot looks the segment
+      dictionaries up unaggregated, with no persist (_sum_df). A warm
+      session whose dictionary overflows `vocab_cache_max` aggregates
+      it once into `n_shards` range-partitioned shards cached
+      executor-side (Lucene holds its terms index per shard, not on one
+      node); multi-term expansion then collects only the pattern's
+      prefix/suffix WINDOW through range predicates that prune the
+      cached shards. Driver heap is O(lru_max + largest expansion
+      window), never O(vocab): at 10^8-10^9 web-vocab terms a held dict
+      would be tens of GB.
     """
 
     def __init__(
         self,
-        postings: DataFrame,
-        dictionary: DataFrame,
-        n_docs: int,
-        avgdl: float,
-        n_buckets: int | None = None,
-        field_stats: dict[str, tuple[int, float]] | None = None,
-        vocab_cache_max: int | None = VOCAB_CACHE_MAX,
-        df_lru_max: int = DF_LRU_MAX,
-        deleted_docs: DataFrame | None = None,
+        table: DataFrame | None = None,
+        df_map: dict[str, int] | None = None,
+        lru_max: int = DF_LRU_MAX,
+        n_shards: int = 0,
     ):
-        from mario_spark.phrase import _collect_deleted
-
-        spark = postings.sparkSession
-        n = n_buckets or spark.sparkContext.defaultParallelism
-        self.postings = postings.repartition(n, "dbucket").persist()
-        self.dictionary = dictionary
-        self.n_docs, self.avgdl = float(n_docs), float(avgdl)
-        # per-field (n_docs, avgdl) for serving a fields=... index:
-        # search(field=...) scopes terms and scores with these stats
-        self.field_stats = field_stats or {}
-        self._n_shards = n
-        self._df_map: dict[str, int] | None = None
-        # sharded-dictionary state (vocab > vocab_cache_max): executor-
-        # cached range-partitioned (term, df) shards + a bounded driver
-        # LRU of query-touched dfs (0 = negative-cached OOV term)
-        self._dict_fwd: DataFrame | None = None
-        self._rdict: DataFrame | None = None  # reversed-term twin, lazy
+        self.table = table
+        self._df_map = df_map
         self._df_lru: "OrderedDict[str, int]" = OrderedDict()
-        self._df_lru_max = df_lru_max
-        # tombstones as of open, collected once: the session keeps its
-        # snapshot even after clear_deletes drops the generation files
-        self._deleted = _collect_deleted(deleted_docs)
-        # one job: at most vocab_cache_max + 1 rows reach the driver,
-        # and overflowing the cap is what selects the sharded mode
-        # (coalesce(1): a limit over many partitions is collected by
-        # incremental take, one job per round)
+        self._df_lru_max = lru_max
+        self._n_shards = n_shards
+        self._rtable: DataFrame | None = None  # reversed-term twin, lazy
+        # sorted term arrays for bisect prefix windows (held shape,
+        # built lazily): the in-heap shape of Lucene's terms-index FST,
+        # so expansion walks only the matching prefix RANGE. The
+        # reversed-term twin serves leading wildcards (*suffix) the
+        # same way, Lucene's reverse-field trick.
+        self._vocab_arr: list[str] | None = None
+        self._rvocab_arr: list[str] | None = None
+
+    @classmethod
+    def open(
+        cls,
+        dictionary: DataFrame,
+        vocab_cache_max: int | None,
+        lru_max: int,
+        n_shards: int,
+    ) -> "TermStats":
+        """A warm session's TermStats over `dictionary` (aggregated, or
+        the unaggregated segment dictionaries): held when it has at
+        most `vocab_cache_max` rows, df summed on the driver, else
+        sharded. One job collects at most vocab_cache_max + 1 rows, so
+        choosing the shape never pulls the vocabulary to the driver
+        (coalesce(1): a limit over many partitions is collected by
+        incremental take, one job per round). Only the sharded shape
+        aggregates, because the distributed expansion join needs one
+        row per term."""
         head = dictionary
         if vocab_cache_max is not None:
             head = dictionary.coalesce(1).limit(vocab_cache_max + 1)
         rows = head.collect()
         if vocab_cache_max is None or len(rows) <= vocab_cache_max:
-            self._df_map = {r["term"]: int(r["df"]) for r in rows}
-        else:
-            self._dict_fwd = dictionary.repartitionByRange(
-                n, "term"
-            ).persist()
-        # sorted term array for bisect prefix windows (built lazily) —
-        # the in-heap shape of Lucene's terms-index FST: multi-term
-        # expansion walks only the matching prefix RANGE, not the
-        # whole vocabulary. The reversed-term twin serves leading
-        # wildcards (*suffix) the same way — Lucene's reverse-field.
-        self._vocab_arr: list[str] | None = None
-        self._rvocab_arr: list[str] | None = None
-
-    def warm(self) -> "QuerySession":
-        self.postings.count()
-        if self._dict_fwd is not None:
-            self._dict_fwd.count()  # materialize the dictionary shards
-        return self
-
-    def search(
-        self,
-        queries: list[tuple[int, str]],
-        k: int = 10,
-        conjunctive: bool = False,
-        driver_limit: int = 200_000,
-        field: str | None = None,
-        must_not: list[tuple[int, str]] | None = None,
-        min_should_match: int = 1,
-        filter_terms: list[str] | None = None,
-    ) -> DataFrame:
-        """[(query_id, raw text)] -> (query_id, rank, doc_id, score).
-
-        filter_terms: ES filter context (filtered alias) — raw terms,
-        analyzed with the pinned tokenizer; docs must contain at least
-        one, unscored (see search_wand).
-
-        must_not: [(query_id, raw text)] analyzed with the same
-        tokenizer — ES bool.must_not filter context (see search_wand).
-        min_should_match: ES minimum_should_match over the OR terms.
-
-        Coordinator fast path: the driver dictionary knows every query
-        term's df, so when the batch's total candidate postings fit
-        under `driver_limit` the candidate BLOCKS (compressed — ~1/4
-        byte per posting) are collected and scored driver-side with the
-        same kernel: ONE collect job instead of shuffle + window,
-        cutting rare-term single-query latency ~3x. Head-term queries
-        exceed the limit and stay fully distributed, so the path never
-        pulls more than `driver_limit` postings to the driver — exactly
-        an ES coordinating node's role split. driver_limit=0 disables.
-        Results are bit-identical either way (asserted in tests).
-        """
-        from mario_spark.analyze import py_tokenize
-
-        qlist = [
-            (int(qid), list(dict.fromkeys(py_tokenize(text))))
-            for qid, text in queries
-        ]
-        nmap: dict[int, list[str]] = {}
-        for qid, text in must_not or []:
-            nmap.setdefault(int(qid), []).extend(
-                dict.fromkeys(py_tokenize(text))
-            )
-        if field is not None:
-            if field not in self.field_stats:
-                raise ValueError(
-                    f"no field_stats for '{field}' "
-                    f"(have {sorted(self.field_stats)})"
-                )
-            qlist = [
-                (qid, [f"{field}:{t}" for t in ts]) for qid, ts in qlist
-            ]
-            nmap = {
-                qid: [f"{field}:{t}" for t in ts] for qid, ts in nmap.items()
-            }
-            n_docs, avgdl = (float(v) for v in self.field_stats[field])
-        else:
-            n_docs, avgdl = self.n_docs, self.avgdl
-        flist: list[str] | None = None
-        if filter_terms:
-            flist = sorted(
-                {t for raw in filter_terms for t in py_tokenize(raw)}
-            )
-            if field is not None:
-                flist = [f"{field}:{t}" for t in flist]
-        qlist = [(qid, ts) for qid, ts in sorted(qlist) if ts]
-        terms = sorted({t for _, ts in qlist for t in ts})
-        all_terms = sorted(
-            set(terms)
-            .union(t for ts in nmap.values() for t in ts)
-            .union(flist or [])
+            return cls(df_map=_sum_df(rows))
+        shards = (
+            cls(dictionary).dictionary
+            .repartitionByRange(n_shards, "term")
+            .persist()
         )
-        # one dictionary consult covers scoring idfs AND the fast-path
-        # candidate-volume gate — in sharded mode that is at most one
-        # batched LRU-miss lookup, never a full-vocab materialization
-        dfm = self._df_for(all_terms)
-        idf_map = {
-            t: _idf(n_docs, float(dfm[t])) for t in terms if t in dfm
-        }
-        if (
-            driver_limit
-            and sum(dfm.values()) <= driver_limit
-        ):
-            return self._search_driver(
-                qlist, idf_map, avgdl, k, conjunctive,
-                nmap or None, min_should_match, flist,
-            )
-        return _run_kernel(
-            self.postings, qlist, idf_map, avgdl, k, conjunctive,
-            nmap or None, min_should_match, self._deleted, flist,
+        return cls(shards, lru_max=lru_max, n_shards=n_shards)
+
+    @property
+    def dictionary(self) -> DataFrame:
+        """The lookup table as (term, df) with one row per term."""
+        if self._n_shards:
+            return self.table  # the shards are aggregated already
+        return self.table.groupBy("term").agg(
+            F.sum("df").cast("long").alias("df")
         )
 
-    def search_cross_fields(
-        self,
-        queries: list[tuple[int, str]],
-        boosts: dict[str, float],
-        k: int = 10,
-        driver_limit: int = 200_000,
-    ) -> DataFrame:
-        """ES multi_match type=cross_fields served warm THROUGH the
-        block-max WAND kernel (Lucene runs BlendedTermQuery under its
-        WANDScorer the same way). Semantics match
-        fields.search_cross_fields exactly (rank-identical, asserted in
-        tests): per term, df blends to the MAX across the searched
-        fields (capped at each field's docCount), each (field, term)
-        scores BM25 with the blended idf but the FIELD's own length
-        norm and boost, the best field wins per (query, term, doc)
-        (dis_max, tie_breaker=0), doc score = sum over terms.
-
-        Kernel mapping: each query term becomes a GROUP of
-        field-prefixed member terms; boost x blended-idf rides in the
-        member's idf slot and the field's avgFieldLength in avgdl_map,
-        so _TermData's contribution formula IS the cross-field
-        per-member score. Block-max pruning stays active at the group
-        level — see _bucket_kernel's docstring for the soundness
-        argument (pinned by a prune-count kernel test)."""
-        if not self.field_stats:
-            raise ValueError(
-                "cross_fields needs a field-scoped session "
-                "(construct with field_stats={field: (n_docs, avgdl)})"
-            )
-        unknown = sorted(set(boosts) - set(self.field_stats))
-        if unknown:
-            raise ValueError(
-                f"no field_stats for {unknown} "
-                f"(have {sorted(self.field_stats)})"
-            )
-        from mario_spark.analyze import py_tokenize
-
-        qtok = [
-            (int(qid), list(dict.fromkeys(py_tokenize(text))))
-            for qid, text in queries
-        ]
-        base_terms = sorted({t for _, ts in qtok for t in ts})
-        dfm = self._df_for(
-            [f"{f}:{t}" for t in base_terms for f in boosts]
-        )
-        idf_map: dict[str, float] = {}
-        avgdl_map: dict[str, float] = {}
-        for t in base_terms:
-            bdf = max(
-                (dfm.get(f"{f}:{t}", 0) for f in boosts), default=0
-            )
-            if bdf <= 0:
-                continue
-            for f, boost in boosts.items():
-                key = f"{f}:{t}"
-                if key not in dfm:
-                    continue  # term absent from this field: no member
-                n_f, ad_f = (float(v) for v in self.field_stats[f])
-                dfc = min(float(bdf), n_f)
-                idf_map[key] = float(boost) * _idf(n_f, dfc)
-                avgdl_map[key] = ad_f if ad_f else 1.0
-        groups: dict[int, list[list[str]]] = {}
-        qlist: list[tuple[int, list[str]]] = []
-        for qid, ts in sorted(qtok):
-            gs = [
-                m
-                for m in (
-                    [
-                        f"{f}:{t}"
-                        for f in boosts
-                        if f"{f}:{t}" in idf_map
-                    ]
-                    for t in ts
-                )
-                if m
-            ]
-            if gs:
-                groups[qid] = gs
-                qlist.append((qid, [t for g in gs for t in g]))
-        all_terms = sorted({t for _, ts in qlist for t in ts})
-        if (
-            driver_limit
-            and sum(dfm.get(t, 0) for t in all_terms) <= driver_limit
-        ):
-            return self._search_driver(
-                qlist, idf_map, self.avgdl, k, False,
-                groups=groups, avgdl_map=avgdl_map,
-            )
-        return _run_kernel(
-            self.postings, qlist, idf_map, self.avgdl, k, False,
-            deleted=self._deleted, groups=groups, avgdl_map=avgdl_map,
-        )
-
-    def search_phrase(
-        self,
-        queries: list[tuple[int, str]],
-        k: int = 10,
-        slop: int = 0,
-    ) -> DataFrame:
-        """Warm match_phrase serving over a positions=True index: the
-        dbucket-cached postings skip the per-query shuffle and the
-        driver dictionary answers member-term idf without a lookup job
-        — the same two savings the term path gets, applied to the
-        phrase kernel. [(query_id, raw phrase text)]; results identical
-        to phrase.search_phrase over the same postings (asserted)."""
-        from mario_spark import phrase as ph
-        from mario_spark.analyze import py_tokenize
-
-        if "poss" not in self.postings.columns:
-            raise ValueError(
-                "session postings carry no positions stream; build the "
-                "index with positions=True for phrase serving"
-            )
-        phrase_queries = [
-            (int(qid), py_tokenize(text)) for qid, text in queries
-        ]
-        terms = sorted({t for _, ts in phrase_queries for t in ts})
-        return ph._rank_phrases(
-            self.postings, phrase_queries, self._df_for(terms),
-            self.n_docs, self.avgdl, k, slop, self._deleted,
-        )
-
-    def _df_for(self, terms: list[str]) -> dict[str, int]:
-        """{term: df} for the dictionary terms among `terms`. Full-map
-        mode reads the driver dict; sharded mode serves from the
-        bounded LRU and batch-fetches misses with ONE pushdown-filtered
-        lookup against the cached shards (absent terms negative-cached
-        as 0 so repeated OOV queries cost no job)."""
+    def df(self, terms: list[str]) -> dict[str, int]:
+        """{term: df} for the vocabulary terms among `terms`: a dict
+        read when held, else LRU hits plus ONE pushdown-filtered lookup
+        for the misses (absent terms negative-cached as 0, so a repeated
+        OOV query costs no job)."""
         if self._df_map is not None:
             return {t: self._df_map[t] for t in terms if t in self._df_map}
         out: dict[str, int] = {}
@@ -1019,95 +783,15 @@ class QuerySession:
                 if v > 0:
                     out[t] = v
         if missing:
-            found = lookup_df(self._dict_fwd, sorted(missing))
+            found = lookup_df(self.table, sorted(missing))
             self._lru_put({t: found.get(t, 0) for t in missing})
             out.update(found)
         return out
 
-    def search_query_string(
-        self,
-        queries: list[tuple[int, str]],
-        k: int = 10,
-        default_field: str | None = None,
-    ) -> DataFrame:
-        """Warm query_string serving (full mini-language incl. phrase
-        clauses) over a positions=True session: the dbucket-cached
-        postings skip the per-query shuffle and the driver dictionary
-        answers every clause's idf sum without a lookup job — the same
-        two savings the term path gets. On a session constructed with
-        field_stats pass default_field and the `field:` syntax is live:
-        each clause scores with ITS field's df/docCount/avgFieldLength
-        (qs.search_query_string_fields_indexed semantics). Results are
-        rank-identical to the Index serving paths (asserted)."""
-        from mario_spark import qs as qsmod
-
-        if "poss" not in self.postings.columns:
-            raise ValueError(
-                "session postings carry no positions stream; "
-                "query_string phrase clauses need positions=True"
-            )
-        if self.field_stats:
-            if default_field not in self.field_stats:
-                raise ValueError(
-                    "field-scoped session: pass default_field as one of "
-                    f"{sorted(self.field_stats)}"
-                )
-            stats = self.field_stats
-        else:
-            default_field = None
-            stats = {None: (self.n_docs, self.avgdl)}
-        parsed, keys = qsmod._indexed_clauses(queries, default_field)
-        return qsmod._rank_query_strings(
-            self.postings, parsed, keys, self._df_for(keys), stats,
-            k, self._deleted,
-        )
-
-    def _search_driver(
-        self,
-        qlist: list[tuple[int, list[str]]],
-        idf_map: dict[str, float],
-        avgdl: float,
-        k: int,
-        conjunctive: bool,
-        must_not: dict[int, list[str]] | None = None,
-        msm: int = 1,
-        filter_terms: list[str] | None = None,
-        groups: dict[int, list[list[str]]] | None = None,
-        avgdl_map: dict[str, float] | None = None,
-    ) -> DataFrame:
-        terms = sorted({t for _, ts in qlist for t in ts if t in idf_map})
-        spark = self.postings.sparkSession
-        if not terms:
-            return empty_result(spark)
-        scan_terms = _scan_terms(terms, must_not, filter_terms)
-        rows = self.postings.filter(F.col("term").isin(scan_terms)).toPandas()
-        parts = [
-            _bucket_kernel(
-                g, qlist, idf_map, avgdl, k, conjunctive, must_not,
-                msm, self._deleted, filter_terms, groups, avgdl_map,
-            )
-            for _, g in rows.groupby("dbucket", sort=True)
-        ]
-        parts = [p for p in parts if len(p)]
-        if not parts:
-            return empty_result(spark)
-        local = pd.concat(parts, ignore_index=True)
-        # replicate the distributed finish exactly: Spark F.round is
-        # HALF_UP (pandas .round is half-even) -> floor(x*1e4+0.5)/1e4
-        # is valid for the non-negative BM25 scores
-        q = 10**SCORE_DECIMALS
-        local["score"] = np.floor(local["score"] * q + 0.5) / q
-        local = local.sort_values(
-            ["query_id", "score", "doc_id"],
-            ascending=[True, False, True],
-            kind="mergesort",
-            ignore_index=True,
-        )
-        local["rank"] = local.groupby("query_id").cumcount() + 1
-        local = local[local["rank"] <= k]
-        return spark.createDataFrame(
-            local[["query_id", "rank", "doc_id", "score"]], RESULT_SCHEMA
-        )
+    def _lru_put(self, dfs: dict[str, int]) -> None:
+        self._df_lru.update(dfs)
+        while len(self._df_lru) > self._df_lru_max:
+            self._df_lru.popitem(last=False)
 
     def _expand(
         self,
@@ -1116,25 +800,24 @@ class QuerySession:
         max_edits: int,
         prefix_length: int,
     ) -> dict[int, list[str]]:
-        """Multi-term expansion against the term dictionary. With the
-        driver dictionary cached this is a pure in-memory vocabulary
-        walk (exactly what an ES coordinating/data node does against
-        its in-heap terms index — no cluster round-trip). In sharded
-        mode the same walk runs against windows FETCHED from the
-        executor-side shards: a pattern anchored by a literal at either
-        end collects only its prefix (or reversed-suffix) range — the
-        driver never holds the vocabulary — while the rare both-ends-
-        open pattern (*a*, an unanchored regexp) routes to the one-pass
-        distributed expansion join."""
+        """Multi-term expansion against the term dictionary. Held, this
+        is a pure in-memory vocabulary walk (exactly what an ES
+        coordinating/data node does against its in-heap terms index —
+        no cluster round-trip). In the lookup shape the same walk runs
+        against windows FETCHED from the table: a pattern anchored by a
+        literal at either end collects only its prefix (or
+        reversed-suffix) range — the driver never holds the vocabulary
+        — while the rare both-ends-open pattern (*a*, an unanchored
+        regexp) routes to the one-pass distributed expansion join."""
         import re as _re
 
         from mario_spark import fuzzy as fuzzymod
 
-        sharded = self._df_map is None
+        held = self._df_map is not None
         deferred: list[tuple[int, str]] = []
         out: dict[int, list[str]] = {}
         for qid, q in queries:
-            if sharded and not _window_anchor(kind, q, prefix_length):
+            if not held and not _window_anchor(kind, q, prefix_length):
                 deferred.append((qid, q))
                 continue
             if kind == "fuzzy":
@@ -1184,53 +867,27 @@ class QuerySession:
             if hits:
                 out.setdefault(int(qid), []).extend(hits)
         if deferred:
-            dist = self._expand_distributed(
-                deferred, kind, max_edits, prefix_length
+            qdf = local_frame(
+                self.table.sparkSession, deferred, "query_id long, term string"
             )
-            for qid, ts in dist.items():
-                out.setdefault(qid, []).extend(ts)
-        return out
-
-    def _expand_distributed(
-        self,
-        queries: list[tuple[int, str]],
-        kind: str,
-        max_edits: int,
-        prefix_length: int,
-    ) -> dict[int, list[str]]:
-        """One-pass distributed expansion join against the dictionary
-        DataFrame — the sharded mode's path for unanchored patterns."""
-        from mario_spark import fuzzy as fuzzymod
-
-        qdf = local_frame(
-            self.postings.sparkSession, queries, "query_id long, term string"
-        )
-        exp = {
-            "fuzzy": lambda: fuzzymod.expand_terms(
-                self.dictionary, qdf, max_edits, prefix_length
-            ),
-            "prefix": lambda: fuzzymod.expand_prefix(self.dictionary, qdf),
-            "wildcard": lambda: fuzzymod.expand_wildcard(
-                self.dictionary, qdf
-            ),
-            "regexp": lambda: fuzzymod.expand_regexp(self.dictionary, qdf),
-        }[kind]()
-        out: dict[int, list[str]] = {}
-        for r in exp.collect():
-            out.setdefault(int(r["query_id"]), []).append(r["term"])
+            exp = fuzzymod.expand(
+                kind, self.dictionary, qdf, max_edits, prefix_length
+            )
+            for r in exp.collect():
+                out.setdefault(int(r["query_id"]), []).append(r["term"])
         return out
 
     def _prefix_window(self, pfx: str) -> list[str]:
-        """All vocabulary terms starting with `pfx`. Full-map mode:
-        bisect over the sorted term array — O(log V + window) instead
-        of O(V); empty prefix returns the whole vocabulary (sorted).
-        Sharded mode: ONE range-predicate collect against the cached
-        range-partitioned shards — the driver receives only the window
-        (the range bounds prune non-overlapping cached partitions), and
-        the fetched dfs prime the LRU since expansion always scores the
-        window terms right after. Callers guarantee pfx is non-empty in
-        sharded mode (_window_anchor routes unanchored patterns to the
-        distributed expansion)."""
+        """All vocabulary terms starting with `pfx`. Held: bisect over
+        the sorted term array — O(log V + window) instead of O(V); an
+        empty prefix returns the whole vocabulary (sorted). Lookup
+        shape: ONE range-predicate collect against the table — the
+        driver receives only the window (the range bounds prune
+        non-overlapping cached shards), and the fetched dfs prime the
+        LRU since expansion always scores the window terms right after.
+        Callers guarantee pfx is non-empty in the lookup shape
+        (_window_anchor routes unanchored patterns to the distributed
+        expansion)."""
         if self._df_map is not None:
             if self._vocab_arr is None:
                 self._vocab_arr = sorted(self._df_map)
@@ -1239,54 +896,457 @@ class QuerySession:
                 return arr
             lo, hi = _prefix_range(arr, pfx)
             return arr[lo:hi]
-        assert pfx, "sharded prefix window needs a non-empty literal"
-        ub = _prefix_ub(pfx)
-        cond = F.col("term") >= pfx
-        if ub is not None:
-            cond = cond & (F.col("term") < ub)
-        rows = self._dict_fwd.filter(cond).select("term", "df").collect()
-        self._lru_put({r["term"]: int(r["df"]) for r in rows})
-        return sorted(r["term"] for r in rows)
+        assert pfx, "a prefix window lookup needs a non-empty literal"
+        return self._window(self.table, "term", pfx)
 
     def _suffix_window(self, sfx: str) -> list[str]:
         """All vocabulary terms ENDING with `sfx` — Lucene's
         reverse-field trick for leading wildcards: *suffix becomes a
         prefix window over the reversed vocabulary, O(log V + window)
-        instead of O(V). Full-map mode bisects a reversed-term sorted
-        array (built lazily on the first leading-wildcard query; empty
-        suffix returns the whole vocabulary). Sharded mode collects the
+        instead of O(V). Held: bisect a reversed-term sorted array
+        (built lazily on the first leading-wildcard query; an empty
+        suffix returns the whole vocabulary). Lookup shape: collect the
         reversed-prefix range from a lazily built, range-partitioned
-        reversed-term twin of the dictionary shards."""
+        reversed-term twin of the table."""
         if self._df_map is not None:
-            if getattr(self, "_rvocab_arr", None) is None:
+            if self._rvocab_arr is None:
                 self._rvocab_arr = sorted(t[::-1] for t in self._df_map)
             arr = self._rvocab_arr
             if not sfx:
                 return [t[::-1] for t in arr]
             lo, hi = _prefix_range(arr, sfx[::-1])
             return [t[::-1] for t in arr[lo:hi]]
-        assert sfx, "sharded suffix window needs a non-empty literal"
-        if self._rdict is None:
-            self._rdict = (
-                self.dictionary.select(
-                    F.reverse("term").alias("rterm"), "term", "df"
-                )
-                .repartitionByRange(self._n_shards, "rterm")
-                .persist()
+        assert sfx, "a suffix window lookup needs a non-empty literal"
+        if self._rtable is None:
+            self._rtable = self.table.select(
+                F.reverse("term").alias("rterm"), "term", "df"
             )
-        rpfx = sfx[::-1]
-        ub = _prefix_ub(rpfx)
-        cond = F.col("rterm") >= rpfx
-        if ub is not None:
-            cond = cond & (F.col("rterm") < ub)
-        rows = self._rdict.filter(cond).select("term", "df").collect()
-        self._lru_put({r["term"]: int(r["df"]) for r in rows})
-        return sorted(r["term"] for r in rows)
+            if self._n_shards:
+                self._rtable = self._rtable.repartitionByRange(
+                    self._n_shards, "rterm"
+                ).persist()
+        return self._window(self._rtable, "rterm", sfx[::-1])
 
-    def _lru_put(self, dfs: dict[str, int]) -> None:
-        self._df_lru.update(dfs)
-        while len(self._df_lru) > self._df_lru_max:
-            self._df_lru.popitem(last=False)
+    def _window(self, table: DataFrame, col: str, pfx: str) -> list[str]:
+        """Sorted terms of `table` whose `col` starts with `pfx`, one
+        range-predicate collect; their dfs prime the LRU."""
+        ub = _prefix_ub(pfx)
+        cond = F.col(col) >= pfx
+        if ub is not None:
+            cond = cond & (F.col(col) < ub)
+        found = _sum_df(table.filter(cond).select("term", "df").collect())
+        self._lru_put(found)
+        return sorted(found)
+
+    def warm(self) -> None:
+        if self._n_shards:
+            self.table.count()  # materialize the dictionary shards
+
+    def close(self) -> None:
+        """Unpersist the shards this TermStats cached, if any."""
+        if self._n_shards:
+            self.table.unpersist()
+            if self._rtable is not None:
+                self._rtable.unpersist()
+
+
+class Snapshot:
+    """A point-in-time reader: the one handle every search reads an
+    index through (Lucene's reader over one commit). It holds
+
+    - `postings`, the segments' posting blocks;
+    - `terms`, the TermStats every df comes from;
+    - `n_docs`/`avgdl`, and `field_stats` = {field: (n_docs, avgdl)}
+      of a fields=... index (empty otherwise) with each field's
+      analyzer in `analyzers`;
+    - `deleted_docs`, the tombstoned doc ids, collected into one sorted
+      array (`deleted`) at first use and at most once;
+    - `segments` = {segment id: commit marker} when pinned from an
+      index.
+
+    Index.open_pit pins one from the commit markers; every cold Index
+    search pins its own; QuerySession is one whose postings and term
+    statistics are cached. The search bodies below are shared by all
+    of them, so cold, warm and federated results are identical
+    (asserted in tests). Tombstones use Lucene live-docs semantics:
+    deleted docs never surface, while collection stats keep counting
+    them until a compaction purges the postings.
+
+    Term routes score on the driver when the batch's candidate
+    postings fit under `driver_limit` (DRIVER_LIMIT when None; 0 never
+    does, so a cold call keeps the scatter-gather shape).
+    """
+
+    DRIVER_LIMIT = 0
+
+    def __init__(
+        self,
+        postings: DataFrame | None,
+        terms: TermStats,
+        n_docs: float,
+        avgdl: float,
+        field_stats: dict[str, tuple[int, float]] | None = None,
+        deleted_docs: DataFrame | None = None,
+        analyzers: dict[str, str] | None = None,
+        name: str | None = None,
+        segments: dict[int, dict] | None = None,
+    ):
+        self.postings = postings
+        self.terms = terms
+        self.n_docs, self.avgdl = float(n_docs), float(avgdl)
+        self.field_stats = field_stats or {}
+        self.deleted_docs = deleted_docs
+        self.analyzers = analyzers or {}
+        self.name = name
+        self.segments = segments
+
+    @cached_property
+    def deleted(self) -> np.ndarray | None:
+        """The tombstoned doc ids, sorted unique (None when there are
+        none): they ride in the kernels' task closures."""
+        from mario_spark.phrase import _collect_deleted
+
+        return _collect_deleted(self.deleted_docs)
+
+    @property
+    def _label(self) -> str:
+        return f"index '{self.name}'" if self.name else "the snapshot's index"
+
+    def scope(
+        self, field: str | None, arg: str = "field"
+    ) -> tuple[str, float, float]:
+        """(posting-key prefix, n_docs, avgdl) for a search over `field`:
+        a fields=... index needs one of its fields (postings are keyed
+        `<field>:<term>` and a field scores with its own stats), any
+        other index none. `arg` names the caller's argument."""
+        have = sorted(self.field_stats)
+        if not have:
+            if field is not None:
+                raise ValueError(
+                    f"{self._label} has no fields config; {arg} only "
+                    "applies to a fields=... index"
+                )
+            return "", self.n_docs, self.avgdl
+        if field is None:
+            raise ValueError(
+                f"{self._label} is field-scoped; pass {arg}=... "
+                f"(one of {have})"
+            )
+        if field not in self.field_stats:
+            raise ValueError(f"unknown field '{field}'; index has {have}")
+        n, ad = self.field_stats[field]
+        return f"{field}:", float(n), float(ad)
+
+    def require_positions(self, what: str) -> None:
+        if "poss" not in self.postings.columns:
+            raise ValueError(
+                f"{self._label} was built without positions; {what} "
+                "needs an index ingested with positions=True"
+            )
+
+    def _tokens(self, text: str, field: str | None) -> list[str]:
+        """`text` analyzed with `field`'s analyzer (ES analyzes query
+        text with the target field's search analyzer: a shingle field
+        turns "data table scan" into its 2-shingles), distinct and
+        order-stable."""
+        from mario_spark.analyze import py_shingles, py_tokenize
+
+        if self.analyzers.get(field) == "shingle":
+            return list(dict.fromkeys(py_shingles(text)))
+        return list(dict.fromkeys(py_tokenize(text)))
+
+    def search(
+        self,
+        queries: list[tuple[int, str]],
+        k: int = 10,
+        conjunctive: bool = False,
+        driver_limit: int | None = None,
+        field: str | None = None,
+        must_not: list[tuple[int, str]] | None = None,
+        min_should_match: int = 1,
+        filter_terms: list[str] | None = None,
+    ) -> DataFrame:
+        """[(query_id, raw text)] -> (query_id, rank, doc_id, score),
+        analyzed driver-side (a query is a handful of terms — no Spark
+        job) and scored by search_terms.
+
+        filter_terms: ES filter context (filtered alias) — raw terms,
+        analyzed like the query; docs must contain at least one,
+        unscored (see search_wand).
+
+        must_not: [(query_id, raw text)] analyzed the same way — ES
+        bool.must_not filter context (see search_wand).
+        min_should_match: ES minimum_should_match over the OR terms.
+        field: search one field of a fields=... index, scored with the
+        field's own statistics (fields.py semantics).
+        """
+        nmap: dict[int, list[str]] = {}
+        for qid, text in must_not or []:
+            nmap.setdefault(int(qid), []).extend(self._tokens(text, field))
+        flist: list[str] | None = None
+        if filter_terms:
+            flist = sorted(
+                {t for raw in filter_terms for t in self._tokens(raw, field)}
+            )
+        return self.search_terms(
+            [(int(qid), self._tokens(text, field)) for qid, text in queries],
+            k, conjunctive, driver_limit, field, nmap or None,
+            min_should_match, flist,
+        )
+
+    def search_terms(
+        self,
+        queries: list[tuple[int, list[str]]],
+        k: int = 10,
+        conjunctive: bool = False,
+        driver_limit: int | None = None,
+        field: str | None = None,
+        must_not: dict[int, list[str]] | None = None,
+        min_should_match: int = 1,
+        filter_terms: list[str] | None = None,
+    ) -> DataFrame:
+        """The term-query body every route shares, over ANALYZED
+        [(query_id, [terms])] (must_not = {query_id: [terms]}; see
+        search for the semantics): ONE TermStats consult covers the
+        scoring idfs and the driver fast-path candidate volume, then
+        the WAND kernel scores (_score)."""
+        pfx, n_docs, avgdl = self.scope(field)
+        if pfx:
+            queries = [(q, [pfx + t for t in ts]) for q, ts in queries]
+            must_not = must_not and {
+                q: [pfx + t for t in ts] for q, ts in must_not.items()
+            }
+            filter_terms = filter_terms and [pfx + t for t in filter_terms]
+        queries = [(q, ts) for q, ts in sorted(queries) if ts]
+        terms = sorted({t for _, ts in queries for t in ts})
+        dfm = self.terms.df(_scan_terms(terms, must_not, filter_terms))
+        idf_map = {
+            t: _idf(n_docs, float(dfm[t])) for t in terms if t in dfm
+        }
+        return self._score(
+            queries, idf_map, avgdl, k, sum(dfm.values()), driver_limit,
+            conjunctive=conjunctive, must_not=must_not,
+            msm=min_should_match, filter_terms=filter_terms,
+        )
+
+    def _score(
+        self,
+        queries: list[tuple[int, list[str]]],
+        idf_map: dict[str, float],
+        avgdl: float,
+        k: int,
+        candidates: int,
+        driver_limit: int | None,
+        **kernel_args,
+    ) -> DataFrame:
+        """The term kernel over the batch: on the driver when its
+        `candidates` postings fit under the limit, else scatter-gather
+        (_run_kernel). Results are bit-identical either way."""
+        limit = self.DRIVER_LIMIT if driver_limit is None else driver_limit
+        if limit and candidates <= limit:
+            return self._search_driver(
+                queries, idf_map, avgdl, k, **kernel_args
+            )
+        return _run_kernel(
+            self.postings, queries, idf_map, avgdl, k,
+            deleted=self.deleted, **kernel_args,
+        )
+
+    def _search_driver(
+        self,
+        qlist: list[tuple[int, list[str]]],
+        idf_map: dict[str, float],
+        avgdl: float,
+        k: int,
+        conjunctive: bool = False,
+        must_not: dict[int, list[str]] | None = None,
+        msm: int = 1,
+        filter_terms: list[str] | None = None,
+        groups: dict[int, list[list[str]]] | None = None,
+        avgdl_map: dict[str, float] | None = None,
+    ) -> DataFrame:
+        """Coordinator fast path: the candidate BLOCKS (compressed —
+        ~1/4 byte per posting) are collected and scored driver-side with
+        the same kernel: ONE collect job instead of shuffle + window.
+        Head-term batches exceed the limit and stay distributed, so the
+        driver never pulls more than the limit's postings — an ES
+        coordinating node's role split."""
+        terms = sorted({t for _, ts in qlist for t in ts if t in idf_map})
+        spark = self.postings.sparkSession
+        if not terms:
+            return empty_result(spark)
+        scan_terms = _scan_terms(terms, must_not, filter_terms)
+        rows = self.postings.filter(F.col("term").isin(scan_terms)).toPandas()
+        parts = [
+            _bucket_kernel(
+                g, qlist, idf_map, avgdl, k, conjunctive, must_not,
+                msm, self.deleted, filter_terms, groups, avgdl_map,
+            )
+            for _, g in rows.groupby("dbucket", sort=True)
+        ]
+        parts = [p for p in parts if len(p)]
+        if not parts:
+            return empty_result(spark)
+        local = pd.concat(parts, ignore_index=True)
+        # replicate the distributed finish exactly: Spark F.round is
+        # HALF_UP (pandas .round is half-even) -> floor(x*1e4+0.5)/1e4
+        # is valid for the non-negative BM25 scores
+        q = 10**SCORE_DECIMALS
+        local["score"] = np.floor(local["score"] * q + 0.5) / q
+        local = local.sort_values(
+            ["query_id", "score", "doc_id"],
+            ascending=[True, False, True],
+            kind="mergesort",
+            ignore_index=True,
+        )
+        local["rank"] = local.groupby("query_id").cumcount() + 1
+        local = local[local["rank"] <= k]
+        return spark.createDataFrame(
+            local[["query_id", "rank", "doc_id", "score"]], RESULT_SCHEMA
+        )
+
+    def search_cross_fields(
+        self,
+        queries: list[tuple[int, str]],
+        boosts: dict[str, float],
+        k: int = 10,
+        driver_limit: int | None = None,
+    ) -> DataFrame:
+        """ES multi_match type=cross_fields served THROUGH the block-max
+        WAND kernel (Lucene runs BlendedTermQuery under its WANDScorer
+        the same way). Semantics match fields.search_cross_fields
+        exactly (rank-identical, asserted in tests): per term, df
+        blends to the MAX across the searched fields (capped at each
+        field's docCount), each (field, term) scores BM25 with the
+        blended idf but the FIELD's own length norm and boost, the best
+        field wins per (query, term, doc) (dis_max, tie_breaker=0), doc
+        score = sum over terms.
+
+        Kernel mapping: each query term becomes a GROUP of
+        field-prefixed member terms; boost x blended-idf rides in the
+        member's idf slot and the field's avgFieldLength in avgdl_map,
+        so _TermData's contribution formula IS the cross-field
+        per-member score. Block-max pruning stays active at the group
+        level — see _bucket_kernel's docstring for the soundness
+        argument (pinned by a prune-count kernel test)."""
+        if not self.field_stats:
+            raise ValueError(
+                "cross_fields needs a field-scoped snapshot "
+                "(construct with field_stats={field: (n_docs, avgdl)})"
+            )
+        unknown = sorted(set(boosts) - set(self.field_stats))
+        if unknown:
+            raise ValueError(
+                f"no field_stats for {unknown} "
+                f"(have {sorted(self.field_stats)})"
+            )
+        qtok = [(int(qid), self._tokens(text, None)) for qid, text in queries]
+        base_terms = sorted({t for _, ts in qtok for t in ts})
+        dfm = self.terms.df(
+            [f"{f}:{t}" for t in base_terms for f in boosts]
+        )
+        idf_map: dict[str, float] = {}
+        avgdl_map: dict[str, float] = {}
+        for t in base_terms:
+            bdf = max(
+                (dfm.get(f"{f}:{t}", 0) for f in boosts), default=0
+            )
+            if bdf <= 0:
+                continue
+            for f, boost in boosts.items():
+                key = f"{f}:{t}"
+                if key not in dfm:
+                    continue  # term absent from this field: no member
+                n_f, ad_f = (float(v) for v in self.field_stats[f])
+                dfc = min(float(bdf), n_f)
+                idf_map[key] = float(boost) * _idf(n_f, dfc)
+                avgdl_map[key] = ad_f if ad_f else 1.0
+        groups: dict[int, list[list[str]]] = {}
+        qlist: list[tuple[int, list[str]]] = []
+        for qid, ts in sorted(qtok):
+            gs = [
+                m
+                for m in (
+                    [
+                        f"{f}:{t}"
+                        for f in boosts
+                        if f"{f}:{t}" in idf_map
+                    ]
+                    for t in ts
+                )
+                if m
+            ]
+            if gs:
+                groups[qid] = gs
+                qlist.append((qid, [t for g in gs for t in g]))
+        all_terms = sorted({t for _, ts in qlist for t in ts})
+        return self._score(
+            qlist, idf_map, self.avgdl, k,
+            sum(dfm.get(t, 0) for t in all_terms), driver_limit,
+            conjunctive=False, groups=groups, avgdl_map=avgdl_map,
+        )
+
+    def search_phrase(
+        self,
+        queries: list[tuple[int, str]],
+        k: int = 10,
+        slop: int = 0,
+        field: str | None = None,
+    ) -> DataFrame:
+        """match_phrase over a positions=True index: [(query_id, raw
+        phrase text)] -> (query_id, rank, doc_id, score). On a
+        fields=... index the phrase matches within `field`'s position
+        stream (ordinals are per-field, so a phrase never spans a field
+        boundary) and scores with the field's statistics. The body is
+        phrase._rank_phrases (slop semantics there)."""
+        from mario_spark import phrase as ph
+        from mario_spark.analyze import py_tokenize
+
+        self.require_positions("match_phrase")
+        pfx, n_docs, avgdl = self.scope(field)
+        phrase_queries = [
+            (int(qid), [pfx + t for t in py_tokenize(text)])
+            for qid, text in queries
+        ]
+        terms = sorted({t for _, ts in phrase_queries for t in ts})
+        return ph._rank_phrases(
+            self.postings, phrase_queries, self.terms.df(terms),
+            n_docs, avgdl, k, slop, self.deleted,
+        )
+
+    def search_query_string(
+        self,
+        queries: list[tuple[int, str]],
+        k: int = 10,
+        default_field: str | None = None,
+    ) -> DataFrame:
+        """The query_string mini-language (bare/+/-/"phrase" clauses)
+        over a positions=True index: term clauses read tf from the
+        positional postings, phrase clauses run the chain matcher,
+        Lucene BooleanQuery matching applies, tombstones are masked.
+        Rank-identical to qs.search_query_string over the raw pages
+        (asserted in tests).
+
+        On a fields=... index pass `default_field` (the ES option) for
+        unprefixed atoms; the `field:term` / `field:"a phrase"` syntax
+        is live and each clause scores with ITS field's
+        df/docCount/avgFieldLength (rank-identical to
+        qs.search_query_string_fields)."""
+        from mario_spark import qs as qsmod
+
+        self.require_positions("query_string phrase clauses")
+        if self.field_stats or default_field is not None:
+            self.scope(default_field, "default_field")
+            stats = self.field_stats
+        else:
+            stats = {None: (self.n_docs, self.avgdl)}
+        parsed, keys = qsmod._indexed_clauses(queries, default_field)
+        if not keys:
+            return empty_result(self.postings.sparkSession)
+        return qsmod._rank_query_strings(
+            self.postings, parsed, keys, self.terms.df(keys), stats,
+            k, self.deleted,
+        )
 
     def search_multiterm(
         self,
@@ -1295,33 +1355,83 @@ class QuerySession:
         k: int = 10,
         max_edits: int = 1,
         prefix_length: int = 1,
-        driver_limit: int = 200_000,
+        driver_limit: int | None = None,
     ) -> DataFrame:
-        """Warm-path fuzzy / prefix / wildcard: [(query_id, raw
-        pattern)] -> (query_id, rank, doc_id, score). Expansion happens
-        driver-side against the cached dictionary (no Spark job), then
-        the expanded disjunction routes through the same kernel paths
-        as search() — bit-identical to the cold fuzzy module."""
-        qmap = self._expand(queries, kind, max_edits, prefix_length)
+        """fuzzy / prefix / wildcard / regexp: [(query_id, raw
+        pattern)] -> (query_id, rank, doc_id, score). Expansion walks
+        the TermStats vocabulary (TermStats._expand), then the expanded
+        disjunction scores like search_terms — bit-identical to the
+        cold fuzzy module."""
+        qmap = self.terms._expand(queries, kind, max_edits, prefix_length)
         qlist = sorted((qid, sorted(ts)) for qid, ts in qmap.items())
-        terms = sorted({t for _, ts in qlist for t in ts})
-        dfm = self._df_for(terms)
-        idf_map = df_to_idf(dfm, self.n_docs)
-        if (
-            driver_limit
-            and sum(dfm.values()) <= driver_limit
-        ):
-            return self._search_driver(
-                qlist, idf_map, self.avgdl, k, conjunctive=False
-            )
-        return _run_kernel(
-            self.postings, qlist, idf_map, self.avgdl, k,
-            conjunctive=False, deleted=self._deleted,
+        dfm = self.terms.df(sorted({t for _, ts in qlist for t in ts}))
+        return self._score(
+            qlist, df_to_idf(dfm, self.n_docs), self.avgdl, k,
+            sum(dfm.values()), driver_limit, conjunctive=False,
         )
+
+
+class QuerySession(Snapshot):
+    """Warm query-serving handle: a Snapshot holding the state a search
+    engine's coordinating node keeps between queries.
+
+    - postings re-partitioned ON dbucket and cached: groupBy(dbucket)
+      then reuses the cached partitioning, so a query runs WITHOUT a
+      shuffle stage (the cold path pays one per query);
+    - term statistics opened once (TermStats.open): held in a driver
+      dict while the dictionary has at most `vocab_cache_max` rows,
+      else sharded executor-side behind a `df_lru_max`-entry LRU;
+    - the coordinator fast path: a term batch whose candidate postings
+      fit under `driver_limit` (DRIVER_LIMIT) is scored on the driver
+      in ONE collect job, cutting rare-term single-query latency ~3x;
+      driver_limit=0 disables it;
+    - tombstones (`deleted_docs`) collected at construction.
+
+    The search bodies are Snapshot's, so results are bit-identical to
+    the cold paths (asserted in tests); only the dictionary lookup job
+    and the per-query dbucket shuffle are saved. Serves field-scoped
+    indexes too: pass field_stats={field: (n_docs, avgdl)} and
+    search(field=...).
+
+    The cached frames live until close(); `with idx.open_session() as
+    s:` closes on exit.
+    """
+
+    DRIVER_LIMIT = 200_000
+
+    def __init__(
+        self,
+        postings: DataFrame,
+        dictionary: DataFrame,
+        n_docs: int,
+        avgdl: float,
+        n_buckets: int | None = None,
+        field_stats: dict[str, tuple[int, float]] | None = None,
+        vocab_cache_max: int | None = VOCAB_CACHE_MAX,
+        df_lru_max: int = DF_LRU_MAX,
+        deleted_docs: DataFrame | None = None,
+    ):
+        n = n_buckets or postings.sparkSession.sparkContext.defaultParallelism
+        super().__init__(
+            postings.repartition(n, "dbucket").persist(),
+            TermStats.open(dictionary, vocab_cache_max, df_lru_max, n),
+            n_docs, avgdl, field_stats, deleted_docs,
+        )
+        # collected now: the session keeps its tombstones even after
+        # clear_deletes drops the generation files
+        self.deleted
+
+    def warm(self) -> "QuerySession":
+        self.postings.count()
+        self.terms.warm()
+        return self
 
     def close(self) -> None:
         self.postings.unpersist()
-        if self._dict_fwd is not None:
-            self._dict_fwd.unpersist()
-        if self._rdict is not None:
-            self._rdict.unpersist()
+        self.terms.close()
+
+    def __enter__(self) -> "QuerySession":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.close()

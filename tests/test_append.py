@@ -213,3 +213,74 @@ def test_warm_session_snapshot_across_append_and_merge(spark, tmp_path):
     sess.postings.unpersist()
     fresh.postings.unpersist()
     pages.unpersist()
+
+
+def test_cold_search_lists_segments_and_reads_deletes_once(
+    spark, tmp_path, monkeypatch
+):
+    """Each cold search pins ONE snapshot: one listing of the committed
+    segments (every marker read once) and one read of the deletes
+    marker. Reading them again mid-call would let an append or merge
+    that commits in between make n_docs/avgdl disagree with the
+    postings and df the call scores (a torn read)."""
+    import collections
+    import os
+
+    from mario_spark import index as indexmod
+    from mario_spark.index import IndexPaths
+
+    cat = Catalog(spark, str(tmp_path / "cat"))
+    pages = pages_df(spark, 300, seed=41, partitions=4).withColumn(
+        "title", F.substring("text", 1, 48)
+    )
+    plain = cat.create("plain-2026-01-01t00-00-00z")
+    plain.ingest(pages, positions=True, segment_docs=128)
+    fielded = cat.create("fielded-2026-01-01t00-00-00z")
+    fielded.ingest(
+        pages, positions=True, segment_docs=128,
+        fields={"title": "title", "contents": "text"},
+    )
+    terms = [
+        r["term"]
+        for r in plain.dictionary().orderBy(F.desc("df"), "term").limit(30)
+        .collect()
+    ]
+    for idx in (plain, fielded):
+        assert idx.delete_by_query([terms[25]])["deleted"] > 0
+    a, b = terms[10], terms[20]
+    q = f"{a} {b}"
+
+    counts: collections.Counter = collections.Counter()
+    listing, read_json = IndexPaths.committed_markers, indexmod._read_json
+
+    def counted_listing(self):
+        counts["listings"] += 1
+        return listing(self)
+
+    def counted_read(path):
+        counts[os.path.basename(path)] += 1
+        return read_json(path)
+
+    calls = {
+        "search": (
+            plain, lambda: plain.search(query_terms_df(spark, [(0, q)]))
+        ),
+        "search_phrase": (plain, lambda: plain.search_phrase([(0, q)])),
+        "search_query_string": (
+            plain, lambda: plain.search_query_string([(0, f'{a} "{q}"')])
+        ),
+        "search_field": (
+            fielded, lambda: fielded.search_field("contents", [(0, q)])
+        ),
+    }
+    for name, (idx, call) in calls.items():
+        n_segs = len(idx.paths.committed_segments())
+        assert n_segs > 1
+        counts.clear()
+        with monkeypatch.context() as m:
+            m.setattr(IndexPaths, "committed_markers", counted_listing)
+            m.setattr(indexmod, "_read_json", counted_read)
+            call().collect()
+        assert counts["listings"] == 1, (name, counts)
+        assert counts["_seg.json"] == n_segs, (name, counts)
+        assert counts["_deletes.json"] == 1, (name, counts)

@@ -256,9 +256,7 @@ def test_warm_expansion_scans_only_prefix_window(spark, monkeypatch):
     vocab = {f"w{i:05d}": i % 97 + 1 for i in range(100_000)}
     vocab.update({"join": 3, "joim": 2, "joint": 4, "zeta": 5})
 
-    sess = object.__new__(wand.QuerySession)
-    sess._df_map = vocab
-    sess._vocab_arr = None
+    terms = wand.TermStats(df_map=vocab)
 
     calls = {"n": 0}
     orig = fuzzymod.levenshtein_le
@@ -268,21 +266,21 @@ def test_warm_expansion_scans_only_prefix_window(spark, monkeypatch):
         return orig(a, b, m)
 
     monkeypatch.setattr(fuzzymod, "levenshtein_le", spy)
-    got = wand.QuerySession._expand(
-        sess, [(0, "joim")], "fuzzy", max_edits=1, prefix_length=2
+    got = terms._expand(
+        [(0, "joim")], "fuzzy", max_edits=1, prefix_length=2
     )
     window = [t for t in vocab if t[:2] == "jo"]
     assert calls["n"] <= len(window) < 100  # not the 100k vocab
     assert sorted(got[0]) == ["joim", "join"]
 
     # prefix: identical to the full-scan answer
-    got = wand.QuerySession._expand(sess, [(1, "w0042")], "prefix", 1, 1)
+    got = terms._expand([(1, "w0042")], "prefix", 1, 1)
     assert sorted(got[1]) == sorted(
         t for t in vocab if t.startswith("w0042")
     )
 
     # wildcard with literal head: windowed, same hits as full scan
-    got = wand.QuerySession._expand(sess, [(2, "w999?7")], "wildcard", 1, 1)
+    got = terms._expand([(2, "w999?7")], "wildcard", 1, 1)
     pat = re.compile(r"w999.7")
     assert sorted(got[2]) == sorted(t for t in vocab if pat.fullmatch(t))
 
@@ -290,21 +288,21 @@ def test_warm_expansion_scans_only_prefix_window(spark, monkeypatch):
     # reverse-field trick) — the candidate scan must be suffix-window
     # sized, nowhere near the 100k vocab
     scans = {}
-    orig_sw = wand.QuerySession._suffix_window
+    orig_sw = wand.TermStats._suffix_window
 
     def spy_sw(self, sfx):
         out = orig_sw(self, sfx)
         scans[sfx] = len(out)
         return out
 
-    monkeypatch.setattr(wand.QuerySession, "_suffix_window", spy_sw)
-    got = wand.QuerySession._expand(sess, [(3, "*eta")], "wildcard", 1, 1)
+    monkeypatch.setattr(wand.TermStats, "_suffix_window", spy_sw)
+    got = terms._expand([(3, "*eta")], "wildcard", 1, 1)
     assert got[3] == ["zeta"]
     assert scans == {"eta": 1}  # one candidate scanned, not 100k
 
     # mixed-literal wildcard picks the LONGER literal run as its window:
     # head 'w' (1 char) loses to tail '042' (3 chars) over reversed terms
-    got = wand.QuerySession._expand(sess, [(5, "w*042")], "wildcard", 1, 1)
+    got = terms._expand([(5, "w*042")], "wildcard", 1, 1)
     import re as _re2
 
     pat = _re2.compile(r"w.*042")
@@ -312,7 +310,7 @@ def test_warm_expansion_scans_only_prefix_window(spark, monkeypatch):
     assert scans["042"] == sum(t.endswith("042") for t in vocab) < 2000
 
     # regexp: literal prefix extracted, quantified char excluded
-    got = wand.QuerySession._expand(sess, [(4, "joi?nt?")], "regexp", 1, 1)
+    got = terms._expand([(4, "joi?nt?")], "regexp", 1, 1)
     assert sorted(got[4]) == ["join", "joint"]
     assert wand._regex_literal_prefix("joi?nt?") == "jo"
     assert wand._regex_literal_prefix("ab|cd") == ""

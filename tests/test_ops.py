@@ -714,18 +714,18 @@ def test_prefix_window_includes_max_codepoint_terms():
     code-point increment: a vocabulary term pfx+U+10FFFF+suffix sorts
     ABOVE the naive pfx+chr(0x10FFFF) sentinel yet still matches the
     prefix, so the old bound silently dropped it."""
-    from mario_spark.wand import QuerySession
+    from mario_spark.wand import TermStats
 
-    s = QuerySession.__new__(QuerySession)
     weird = "ab\U0010ffffz"
-    s._df_map = {t: 1 for t in ["aa", "ab", "abc", weird, "ac", "b"]}
-    s._vocab_arr = None
+    s = TermStats(
+        df_map={t: 1 for t in ["aa", "ab", "abc", weird, "ac", "b"]}
+    )
     got = s._prefix_window("ab")
     assert got == ["ab", "abc", weird]
     # all-U+10FFFF prefix: no finite upper bound, window runs to end
-    s2 = QuerySession.__new__(QuerySession)
-    s2._df_map = {"\U0010ffff": 1, "\U0010ffff\U0010ffffx": 1, "a": 1}
-    s2._vocab_arr = None
+    s2 = TermStats(
+        df_map={"\U0010ffff": 1, "\U0010ffff\U0010ffffx": 1, "a": 1}
+    )
     assert s2._prefix_window("\U0010ffff") == [
         "\U0010ffff", "\U0010ffff\U0010ffffx"
     ]

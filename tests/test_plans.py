@@ -324,6 +324,62 @@ def test_cold_searches_pay_only_for_their_own_jobs(spark, tmp_path):
     assert _job_count(spark, lambda: empty_result(spark).collect()) == 0
 
 
+def test_open_session_sums_segment_dictionaries_on_driver(spark, tmp_path):
+    """Opening a session on a tombstoned multi-segment index runs at
+    most 2 jobs: one collect of the unaggregated segment dictionaries
+    (df summed on the driver, no groupBy shuffle) and the tombstone
+    collect. The held df map equals the aggregated dictionary."""
+    from mario_spark.fixtures import pages_df
+    from mario_spark.index import Index
+
+    idx = Index(spark, str(tmp_path / "idx"), "sess")
+    idx.ingest(pages_df(spark, 300, seed=5, partitions=4), segment_docs=128)
+    assert idx.stats()["segments"] > 1
+    dic = {r["term"]: r["df"] for r in idx.dictionary().collect()}
+    assert idx.delete_by_query([sorted(dic, key=dic.get)[-20]])["deleted"]
+    opened = []
+    assert _job_count(spark, lambda: opened.append(idx.open_session())) <= 2
+    sess = opened[0]
+    assert sess.terms._df_map == dic
+    assert sess.deleted is not None
+    sess.close()
+
+
+def test_federated_dfs_search_looks_df_up_once(spark, tmp_path):
+    """A dfs_query_then_fetch search over two 300-doc indexes, one with
+    a tombstone generation, runs at most 7 jobs: ONE df lookup over
+    both members' segment dictionaries, the tombstone collect and the
+    execution. A federated search over empty members returns a local
+    relation (no job)."""
+    from mario_spark.federate import search_indexes
+    from mario_spark.fixtures import pages_df, query_terms_df
+    from mario_spark.index import Catalog
+
+    cat = Catalog(spark, str(tmp_path / "cat"))
+    names = ["a-2026-01-01t00-00-00z", "b-2026-01-01t00-00-00z"]
+    for seed, name in enumerate(names):
+        cat.create(name).ingest(pages_df(spark, 300, seed=seed, partitions=4))
+    by_df = [
+        r["term"]
+        for r in cat.open(names[1]).dictionary()
+        .orderBy(F.desc("df"), "term").limit(40).collect()
+    ]
+    assert cat.open(names[1]).delete_by_query([by_df[30]])["deleted"] > 0
+    q = query_terms_df(spark, [(0, f"{by_df[10]} {by_df[20]}")])
+    rows = []
+    jobs = _job_count(
+        spark, lambda: rows.extend(search_indexes(cat, names, q).collect())
+    )
+    assert jobs <= 7, jobs
+    assert rows
+    cat.create("empty-2026-01-01t00-00-00z")
+    assert _job_count(
+        spark,
+        lambda: search_indexes(cat, ["empty-2026-01-01t00-00-00z"], q)
+        .collect(),
+    ) == 0
+
+
 def test_filtered_search_semi_join_no_extra_shuffle(spark):
     """Filter context must plan the doc_id restriction as a (LeftSemi)
     join after aggregation — and the filter side's predicate must push

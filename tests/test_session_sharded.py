@@ -50,7 +50,7 @@ def test_sharded_session_bit_identical_to_cold_and_never_holds_vocab(spark):
     sess = QuerySession(
         post, dic, st["n_docs"], st["avgdl"], vocab_cache_max=10
     ).warm()
-    assert sess._df_map is None and sess._dict_fwd is not None
+    assert sess.terms._df_map is None and sess.terms.table is not None
     for lim in (0, 10**9):
         got = _canon(sess.search(qset, k=10, driver_limit=lim))
         pd.testing.assert_frame_equal(got, want, check_exact=False, atol=1e-9)
@@ -58,9 +58,9 @@ def test_sharded_session_bit_identical_to_cold_and_never_holds_vocab(spark):
     got = _canon(sess.search(qset, k=10))
     pd.testing.assert_frame_equal(got, want, check_exact=False, atol=1e-9)
 
-    assert sess._df_map is None
-    assert sess._vocab_arr is None and sess._rvocab_arr is None
-    touched = len(sess._df_lru)
+    assert sess.terms._df_map is None
+    assert sess.terms._vocab_arr is None and sess.terms._rvocab_arr is None
+    touched = len(sess.terms._df_lru)
     assert 0 < touched < n_vocab  # query-touched terms only, never vocab
     sess.close()
     d.unpersist()
@@ -75,7 +75,7 @@ def test_sharded_session_must_not_msm_filter_compose(spark):
     shard = QuerySession(
         post, dic, st["n_docs"], st["avgdl"], vocab_cache_max=10
     )
-    assert full._df_map is not None and shard._df_map is None
+    assert full.terms._df_map is not None and shard.terms._df_map is None
     kw = dict(
         k=10,
         must_not=[(qset[0][0], "crawl")],
@@ -123,8 +123,8 @@ def test_sharded_multiterm_windows_match_full_cache(spark):
                 got, want, check_exact=False, atol=1e-9
             ), (kind, q)
     # the window fetches primed the LRU but never the whole vocab
-    assert shard._vocab_arr is None and shard._rvocab_arr is None
-    assert len(shard._df_lru) < dic.count()
+    assert shard.terms._vocab_arr is None and shard.terms._rvocab_arr is None
+    assert len(shard.terms._df_lru) < dic.count()
     full.close()
     shard.close()
     d.unpersist()
@@ -147,7 +147,7 @@ def test_sharded_lru_eviction_keeps_results_exact(spark):
     for _ in range(2):
         got = _canon(sess.search(qset, k=10))
         pd.testing.assert_frame_equal(got, want, check_exact=False, atol=1e-9)
-        assert len(sess._df_lru) <= 5
+        assert len(sess.terms._df_lru) <= 5
     sess.close()
     d.unpersist()
 
@@ -165,7 +165,7 @@ def test_sharded_phrase_and_query_string_match_full_cache(spark):
     shard = QuerySession(
         post, dic, st["n_docs"], st["avgdl"], vocab_cache_max=10
     )
-    assert shard._df_map is None
+    assert shard.terms._df_map is None
     phrases = [(0, "common crawl"), (1, "the web"), (2, "data set")]
     pd.testing.assert_frame_equal(
         _canon(shard.search_phrase(phrases, k=10)),
@@ -184,6 +184,28 @@ def test_sharded_phrase_and_query_string_match_full_cache(spark):
         check_exact=False,
         atol=1e-9,
     )
-    assert shard._vocab_arr is None and len(shard._df_lru) < dic.count()
+    assert shard.terms._vocab_arr is None and len(shard.terms._df_lru) < dic.count()
     full.close()
     shard.close()
+
+
+def test_session_context_releases_every_cached_frame(spark, tmp_path):
+    """`with idx.open_session() as s:` unpersists every frame the
+    session cached — the dbucket-partitioned postings, the TermStats
+    shards and their reversed-term twin — so the persisted RDD ids
+    after the block are a subset of those before it."""
+    from mario_spark.index import Index
+
+    idx = Index(spark, str(tmp_path / "idx"), "ctx")
+    idx.ingest(pages_df(spark, 300, seed=19, partitions=4), segment_docs=128)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    with idx.open_session(vocab_cache_max=10) as sess:
+        assert sess.terms.table is not None  # sharded: shards cached
+        sess.warm()
+        qset = make_pages_query_set(seed=19, n=4)
+        assert sess.search(qset, k=10, driver_limit=0).count() > 0
+        sess.search_multiterm([(0, "*002")], kind="wildcard").collect()
+        assert sess.terms._rtable is not None
+        assert set(jsc.getPersistentRDDs().keys()) - before
+    assert set(jsc.getPersistentRDDs().keys()) <= before
