@@ -1,6 +1,6 @@
 # Developer entry points (see README.md; driver contract in __spark_entry__.py)
 
-.PHONY: test test-serving test-bench bench bench-small scaling pyfiles smoke digest
+.PHONY: test test-serving test-bench bench bench-small bench-pairs scaling pyfiles smoke digest
 
 test:             ## tier-1 suite, exactly as ROADMAP.md runs it
 	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" \
@@ -24,6 +24,13 @@ SF_DIR ?= /root/testdata/sf0.001
 
 digest:           ## per-operator rows/plan identity digest (SF_DIR, default sf0.001)
 	@python scripts/suite_digest.py "$(SF_DIR)"
+
+REF ?= HEAD
+WORKLOAD ?= adhoc
+PAIRS ?= 10
+
+bench-pairs:      ## alternating perfbench pairs: REF vs the working tree
+	python3 scripts/bench_pairs.py --ref "$(REF)" --workload "$(WORKLOAD)" --pairs "$(PAIRS)"
 
 bench:            ## headline paths at sf0.1 on local[32] (one JSON line)
 	SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 python bench.py

@@ -257,13 +257,15 @@ def _search_expansion(
     qmap: dict[int, list[str]] = {}
     nd = float(n_docs)
     idf_map: dict[str, float] = {}
+    dfm: dict[str, int] = {}
     for r in rows:
         qmap.setdefault(int(r["query_id"]), []).append(r["term"])
+        dfm[r["term"]] = int(r["df"])
         idf_map[r["term"]] = _idf(nd, float(r["df"]))
     queries = sorted((qid, sorted(ts)) for qid, ts in qmap.items())
     return _run_kernel(
         postings, queries, idf_map, float(avgdl), k,
-        conjunctive=False, deleted=deleted,
+        conjunctive=False, deleted=deleted, dfm=dfm,
     )
 
 

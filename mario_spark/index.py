@@ -57,6 +57,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from mario_spark import docs as docsmod
+from mario_spark.localread import part_files
 from mario_spark.postings import build_postings, pick_range_width
 from mario_spark.query import B, K1, empty_result
 from mario_spark.session import local_frame
@@ -71,15 +72,10 @@ def _footer_schema(path: str) -> StructType | None:
     """The Spark schema stored in the footer of the first part file of
     the parquet table directory `path`, or None when `path` is not a
     local directory, holds no part file, or carries no Spark schema."""
-    if not os.path.isdir(path):
-        return None
-    parts = sorted(
-        f for f in os.listdir(path)
-        if f.endswith(".parquet") and not f.startswith(("_", "."))
-    )
+    parts = part_files(path)
     if not parts:
         return None
-    meta = pq.read_schema(os.path.join(path, parts[0])).metadata or {}
+    meta = pq.read_schema(parts[0]).metadata or {}
     raw = meta.get(SPARK_SCHEMA_KEY)
     return None if raw is None else StructType.fromJson(json.loads(raw))
 
@@ -708,7 +704,9 @@ class Index:
             )
 
         def _write_dictionary() -> None:
-            dic.write.mode("overwrite").parquet(
+            # sorted by term within each file: row-group statistics
+            # then prune the driver's dictionary lookups
+            dic.sortWithinPartitions("term").write.mode("overwrite").parquet(
                 os.path.join(seg_dir, "dictionary")
             )
 
@@ -879,8 +877,9 @@ class Index:
         """Open a warm-serving QuerySession: the Snapshot open_pit pins
         now, with its postings repartitioned on dbucket and cached and
         its term statistics opened once (TermStats.open: the segment
-        dictionaries summed into a driver dict when they fit, two jobs
-        with the tombstone collect).
+        dictionaries summed into a driver dict when they fit). The
+        dictionaries and the tombstones are read on the driver, so
+        opening runs no Spark job.
 
         The snapshot is pinned at open. Appends, deletes and merges —
         even merges that DELETE the session's source segment files —
@@ -898,8 +897,8 @@ class Index:
 
         snap = self._pinned()
         return QuerySession(
-            snap.postings, snap.terms.table, snap.n_docs, snap.avgdl,
-            deleted_docs=snap.deleted_docs,
+            snap.postings, snap.terms, snap.n_docs, snap.avgdl,
+            deleted_docs=snap.deleted_docs, deleted_files=snap.deleted_files,
             **{"field_stats": snap.field_stats, **kwargs},
         )
 
@@ -918,6 +917,16 @@ class Index:
         ops/ann.py), tombstones masked, `where` = ES kNN filter
         (pre-filtering: the predicate prunes the scan BEFORE any
         distance math)."""
+        return self._knn(self.open_pit(), query_vectors, k, where)
+
+    def _knn(
+        self,
+        snap: Snapshot,
+        query_vectors: list[tuple[int, list[float]]],
+        k: int,
+        where=None,
+    ) -> DataFrame:
+        """knn over the docs and tombstones `snap` pinned."""
         from mario_spark.ops.ann import brute_topk_vectors
 
         meta = _read_json(self.paths.meta) or {}
@@ -927,10 +936,10 @@ class Index:
                 f"index '{self.paths.name}' was not ingested with "
                 "vector_col=...; kNN needs a dense_vector column"
             )
-        d = self.docs().filter(F.col(vc).isNotNull())
+        d = self.docs(list(snap.segments)).filter(F.col(vc).isNotNull())
         if where is not None:
             d = d.filter(where)
-        dele = self.deleted_ids()
+        dele = snap.deleted_docs
         if dele is not None:
             d = d.join(dele, "doc_id", "left_anti")
         return brute_topk_vectors(d, "doc_id", vc, query_vectors, k=k)
@@ -949,15 +958,18 @@ class Index:
         rank-window of `window`, fused as sum 1/(rrf_k + rank)
         (Cormack et al. 2009). Both arms are already tiny per query at
         fusion time — the full-outer join and the final window touch
-        <= 2*window rows per query."""
+        <= 2*window rows per query. Both arms read ONE pinned Snapshot,
+        so a commit between them cannot make them mask different
+        tombstones or read different segments."""
         from mario_spark.fixtures import query_terms_df as _qtd
 
+        snap = self.open_pit()
         lex = (
             self.search(
-                _qtd(self.spark, queries), k=window
+                _qtd(self.spark, queries), k=window, pit=snap
             ).select("query_id", "doc_id", F.col("rank").alias("lrank"))
         )
-        den = self.knn(query_vectors, k=window).select(
+        den = self._knn(snap, query_vectors, k=window).select(
             "query_id", "doc_id", F.col("rank").alias("drank")
         )
         fused = lex.join(den, ["query_id", "doc_id"], "full_outer").withColumn(
@@ -1103,10 +1115,12 @@ class Index:
         (each commit marker once) and the deletes marker exactly once;
         the postings, the segment dictionaries behind its TermStats,
         n_docs/avgdl and the per-field stats summed from the markers,
-        and the tombstone generations (collected at first use) all come
-        from that one read. So an append, merge or delete that commits
-        mid-search can never make the stats disagree with the postings
-        and df a search scores.
+        and the tombstone generations all come from that one read. So an
+        append, merge or delete that commits mid-search can never make
+        the stats disagree with the postings and df a search scores.
+        The dictionary and tombstone part files are listed now too: a
+        search reads the query terms' df and the tombstones from them on
+        the driver with pyarrow, with no Spark job.
 
         A search passed the handle (search(pit=...)) sees exactly this
         snapshot: segment and tombstone generation files are immutable
@@ -1132,14 +1146,23 @@ class Index:
                 if segs else None
             )
 
+        # the dictionary and tombstone frames open at first use: a
+        # search reads their part files on the driver instead
+        dic_dirs = self._seg_paths("dictionary", segs) if segs else []
         return Snapshot(
-            read("postings"), TermStats(read("dictionary")),
+            read("postings"),
+            TermStats(
+                lambda: read("dictionary"), files=part_files(*dic_dirs)
+            ),
             *_sum_stats(markers.values()),
             field_stats=field_stats,
-            deleted_docs=self._tombstones(gens),
+            deleted_docs=lambda: self._tombstones(gens),
             analyzers=_field_analyzers(fields),
             name=self.paths.name,
             segments=markers,
+            deleted_files=part_files(
+                *[self.paths.delete_gen(g) for g in gens]
+            ),
         )
 
     def _pinned(self) -> Snapshot:
@@ -1214,17 +1237,24 @@ class Index:
             self.spark, *[self.paths.delete_gen(g) for g in generations]
         ).select("doc_id")
 
-    def clear_deletes(self) -> None:
-        """Retire all tombstones (called after a purging compaction):
-        ONE marker commit first, then the now-unreferenced gen files."""
+    def clear_deletes(self, generations: list[int]) -> None:
+        """Retire the tombstone `generations` a purging compaction read
+        and purged: ONE marker commit first, then the now-unreferenced
+        gen files. A generation committed after the compaction read its
+        list stays live, and n_deleted keeps counting its docs."""
         marker = _read_json(self.paths.deletes_marker)
         if not marker:
             return
         gens = marker.get("generations", [])
+        keep = [g for g in gens if g not in generations]
         _atomic_write_json(
-            self.paths.deletes_marker, {"generations": [], "n_deleted": 0}
+            self.paths.deletes_marker,
+            {
+                "generations": keep,
+                "n_deleted": self._tombstones(keep).count() if keep else 0,
+            },
         )
-        for g in gens:
+        for g in generations:
             shutil.rmtree(self.paths.delete_gen(g), ignore_errors=True)
 
     # ------------------------------------------------------------- query

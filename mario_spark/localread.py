@@ -1,0 +1,105 @@
+"""Driver-side reads of an index's small metadata tables with pyarrow.
+
+A search needs three small reads before it can score: the query terms'
+rows of the segment dictionaries, the tombstone generations, and (to
+open a warm session) the dictionary row count and df map. Through Spark
+each read is a job (50-60 ms plus planning on a 4-core box); pyarrow
+reads the same Spark-written part files on the driver in a few ms and
+launches no job. Only local table directories qualify: `part_files`
+returns None for any other path (an object-store URI), and callers keep
+their Spark read.
+"""
+
+from __future__ import annotations
+
+import bisect
+import os
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+
+
+def part_files(*dirs: str) -> list[str] | None:
+    """The parquet part files of the table directories `dirs`, in
+    order, or None when one of them is not a local directory (Spark's
+    `_SUCCESS` and `.crc` side files are skipped)."""
+    out: list[str] = []
+    for d in dirs:
+        if not os.path.isdir(d):
+            return None
+        out += [
+            os.path.join(d, f)
+            for f in sorted(os.listdir(d))
+            if f.endswith(".parquet") and not f.startswith(("_", "."))
+        ]
+    return out
+
+
+def _read(f: str, columns: list[str]) -> pa.Table:
+    with pq.ParquetFile(f) as pf:
+        return pf.read(columns=columns)
+
+
+def _row_groups(pf: pq.ParquetFile, column: str, keys: list[str]) -> list[int]:
+    """Row groups of `pf` whose [min, max] statistics on `column` hold
+    one of the sorted `keys`. A row group without statistics is kept."""
+    ci = pf.schema_arrow.get_field_index(column)
+    keep = []
+    for i in range(pf.metadata.num_row_groups):
+        st = pf.metadata.row_group(i).column(ci).statistics
+        if st is not None and st.has_min_max:
+            j = bisect.bisect_left(keys, st.min)
+            if j == len(keys) or keys[j] > st.max:
+                continue
+        keep.append(i)
+    return keep
+
+
+def read_df(files: list[str], terms: list[str]) -> dict[str, int]:
+    """{term: df} for the dictionary terms among `terms`, summed over
+    the (term, df) part `files` (segment dictionaries repeat a term once
+    per segment; segments are doc-disjoint). A dictionary written sorted
+    by term has narrow row groups, so their statistics skip every row
+    group that cannot hold a query term; an unsorted one is read whole,
+    with the same result."""
+    keys = sorted(set(terms))
+    out: dict[str, int] = {}
+    if not keys:
+        return out
+    value_set = pa.array(keys, pa.string())
+    for f in files:
+        with pq.ParquetFile(f) as pf:
+            rgs = _row_groups(pf, "term", keys)
+            if not rgs:
+                continue
+            t = pf.read_row_groups(rgs, columns=["term", "df"])
+        t = t.filter(pc.is_in(t["term"], value_set=value_set))
+        for term, df in zip(t["term"].to_pylist(), t["df"].to_pylist()):
+            out[term] = out.get(term, 0) + int(df)
+    return out
+
+
+def read_df_map(
+    files: list[str], max_rows: int | None
+) -> dict[str, int] | None:
+    """The whole {term: df} of the (term, df) part `files`, df summed
+    per term, or None when they hold more than `max_rows` rows (counted
+    from the footers, before any data is read)."""
+    if max_rows is not None:
+        if sum(pq.read_metadata(f).num_rows for f in files) > max_rows:
+            return None
+    if not files:
+        return {}
+    t = pa.concat_tables([_read(f, ["term", "df"]) for f in files])
+    agg = t.group_by("term").aggregate([("df", "sum")])
+    return dict(zip(agg["term"].to_pylist(), agg["df_sum"].to_pylist()))
+
+
+def read_doc_ids(files: list[str]) -> np.ndarray | None:
+    """The `doc_id` column of the part `files` as a sorted unique int64
+    array, or None when they hold no row."""
+    parts = [_read(f, ["doc_id"])["doc_id"].to_numpy() for f in files]
+    arr = np.concatenate(parts).astype(np.int64) if parts else np.empty(0)
+    return np.unique(arr) if arr.size else None

@@ -113,7 +113,10 @@ def compact_segments(
     rw = meta["range_width"]
     new_id = max(committed) + 1
 
-    deleted = index.deleted_ids() if purge_deletes else None
+    # the generations this compaction purges: only these are retired
+    # after the commit (a delete that commits meanwhile stays live)
+    gens = (_read_json(p.deletes_marker) or {}).get("generations", [])
+    deleted = index._tombstones(gens) if purge_deletes else None
     if deleted is not None and set(seg_ids) != set(committed):
         raise ValueError(
             "purging compaction must include every committed segment; "
@@ -210,10 +213,12 @@ def compact_segments(
             )
         )
         f_merged.result()
+        # sorted by term within each file, as Index._build_segment
+        # writes it: row-group statistics prune dictionary lookups
         f_dic = pool.submit(
-            lambda: dic.write.mode("overwrite").parquet(
-                os.path.join(seg_dir, "dictionary")
-            )
+            lambda: dic.sortWithinPartitions("term")
+            .write.mode("overwrite")
+            .parquet(os.path.join(seg_dir, "dictionary"))
         )
         f_docs.result()
         f_dic.result()
@@ -307,7 +312,7 @@ def compact_segments(
         if os.path.exists(p.manifest(s)):
             shutil.rmtree(p.manifest(s), ignore_errors=True)
     if deleted is not None:
-        index.clear_deletes()
+        index.clear_deletes(gens)
         tf_rows.unpersist()
     return new_id
 

@@ -253,9 +253,8 @@ def search_phrase_prefix(
         else []
     )
     exp_dfm = {r["term"]: int(r["df"]) for r in exp_rows}
-    idf_map = df_to_idf(
-        {**lookup_df(dictionary, fixed_all), **exp_dfm}, n_docs
-    )
+    dfm = {**lookup_df(dictionary, fixed_all), **exp_dfm}
+    idf_map = df_to_idf(dfm, n_docs)
     exp_terms_sorted = sorted(exp_dfm)
     kq: list[tuple[int, list[str], list[str], float]] = []
     for qid, fixed, prefix in queries:
@@ -305,7 +304,7 @@ def search_phrase_prefix(
         return _score_and_topk(qid, cand, ptf, dl, sum_idf, ad, k)
 
     return scatter_gather(
-        postings, needed, _positional_kernel(kq, score_one), k
+        postings, needed, _positional_kernel(kq, score_one), k, dfm
     )
 
 
@@ -374,7 +373,7 @@ def _rank_phrases(
 
     terms = sorted({t for _, ts in phrase_queries for t in ts})
     return scatter_gather(
-        postings, terms, _positional_kernel(queries, score_one), k
+        postings, terms, _positional_kernel(queries, score_one), k, dfm
     )
 
 
@@ -417,7 +416,8 @@ def search_span_or(
     all_terms = sorted(
         {t for _, chains in span_queries for ch in chains for t in ch}
     )
-    idf_map = df_to_idf(lookup_df(dictionary, all_terms), n_docs)
+    dfm = lookup_df(dictionary, all_terms)
+    idf_map = df_to_idf(dfm, n_docs)
     queries = []
     for qid, chains in span_queries:
         sidf = sum(
@@ -449,7 +449,7 @@ def search_span_or(
         return _score_and_topk(qid, ids, ptf, dl, sidf, ad, k)
 
     return scatter_gather(
-        postings, all_terms, _positional_kernel(queries, score_one), k
+        postings, all_terms, _positional_kernel(queries, score_one), k, dfm
     )
 
 
@@ -474,7 +474,8 @@ def search_span_near_unordered(
     term-pruned scan -> per-dbucket kernel -> tiny per-query rank
     window."""
     all_terms = sorted({t for _, ts in pair_queries for t in ts})
-    idf_map = df_to_idf(lookup_df(dictionary, all_terms), n_docs)
+    dfm = lookup_df(dictionary, all_terms)
+    idf_map = df_to_idf(dfm, n_docs)
     queries = []
     for qid, ts in pair_queries:
         if len(ts) != 2:
@@ -512,7 +513,7 @@ def search_span_near_unordered(
         return _score_and_topk(qid, ids, ptf, dl, sidf, ad, k)
 
     return scatter_gather(
-        postings, all_terms, _positional_kernel(queries, score_one), k
+        postings, all_terms, _positional_kernel(queries, score_one), k, dfm
     )
 
 
@@ -538,7 +539,9 @@ def search_span_not(
     inc_terms = sorted({t for _, ts, _ in span_queries for t in ts})
     exc_terms = sorted({x for _, _, x in span_queries})
     scan_terms = sorted(set(inc_terms) | set(exc_terms))
-    idf_map = df_to_idf(lookup_df(dictionary, inc_terms), n_docs)
+    # one lookup: the exclude terms' df only sizes the scan
+    dfm = lookup_df(dictionary, scan_terms)
+    idf_map = df_to_idf({t: dfm[t] for t in inc_terms if t in dfm}, n_docs)
     queries = [
         (qid, ts, x, sum(idf_map[t] for t in ts))
         for qid, ts, x in span_queries
@@ -576,7 +579,7 @@ def search_span_not(
         return _score_and_topk(qid, ids_all, ptf, lens, sidf, ad, k)
 
     return scatter_gather(
-        postings, scan_terms, _positional_kernel(queries, score_one), k
+        postings, scan_terms, _positional_kernel(queries, score_one), k, dfm
     )
 
 
@@ -603,7 +606,8 @@ def search_span_first(
     per-query rank window.
     """
     all_terms = sorted({t for _, ts, _ in span_queries for t in ts})
-    idf_map = df_to_idf(lookup_df(dictionary, all_terms), n_docs)
+    dfm = lookup_df(dictionary, all_terms)
+    idf_map = df_to_idf(dfm, n_docs)
     queries = [
         (qid, ts, int(end), sum(idf_map[t] for t in ts))
         for qid, ts, end in span_queries
@@ -629,7 +633,7 @@ def search_span_first(
         return _score_and_topk(qid, ids, ptf, lens, sidf, ad, k)
 
     return scatter_gather(
-        postings, all_terms, _positional_kernel(queries, score_one), k
+        postings, all_terms, _positional_kernel(queries, score_one), k, dfm
     )
 
 
@@ -726,7 +730,9 @@ def search_span_contain(
     lit_terms = sorted({x for *_, x in span_queries})
     scan_terms = sorted(set(big_terms) | set(lit_terms))
     need = big_terms if mode == "containing" else lit_terms
-    idf_map = df_to_idf(lookup_df(dictionary, need), n_docs)
+    # one lookup: the other side's df only sizes the scan
+    dfm = lookup_df(dictionary, scan_terms)
+    idf_map = df_to_idf({t: dfm[t] for t in need if t in dfm}, n_docs)
     queries = []
     for qid, t1, t2, g, x in span_queries:
         sidf = (
@@ -785,7 +791,7 @@ def search_span_contain(
         return _score_and_topk(qid, cand_ids, ptf, lens, sidf, ad, k)
 
     return scatter_gather(
-        postings, scan_terms, _positional_kernel(queries, score_one), k
+        postings, scan_terms, _positional_kernel(queries, score_one), k, dfm
     )
 
 

@@ -837,7 +837,7 @@ def _rank_query_strings(
         )
 
     return scatter_gather(
-        postings, keys, _positional_kernel(queries_c, score_one), k
+        postings, keys, _positional_kernel(queries_c, score_one), k, dfm
     )
 
 

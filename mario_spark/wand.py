@@ -40,7 +40,9 @@ blocks are never VByte-decoded at all):
 from __future__ import annotations
 
 from collections import OrderedDict
+from decimal import ROUND_HALF_UP, Decimal
 from functools import cached_property
+from typing import Callable
 
 import numpy as np
 import pandas as pd
@@ -48,6 +50,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mario_spark import codec
+from mario_spark.localread import read_df, read_df_map, read_doc_ids
 from mario_spark.postings import block_upper_bound
 from mario_spark.postings import idf as _idf
 from mario_spark.query import (
@@ -522,20 +525,102 @@ def _bucket_kernel(
     return _result_frame(out)
 
 
+# The coordinator route's bound: a batch whose candidate postings (the
+# summed df of its scan terms) are at most this many is scored on the
+# driver. 200,000 postings are a few MB of compressed blocks.
+DRIVER_LIMIT = 200_000
+
+
 def scatter_gather(
-    postings: DataFrame, scan_terms: list[str], kernel, k: int
+    postings: DataFrame,
+    scan_terms: list[str],
+    kernel,
+    k: int,
+    dfm: dict[str, int] | None = None,
+    limit: int | None = None,
 ) -> DataFrame:
-    """The distributed shape every index-backed query shares: scan the
-    postings pruned to `scan_terms` (predicate pushed into the scan),
-    run `kernel` once per dbucket over the whole query batch (pandas
-    frame of that bucket's blocks -> LOCAL_SCHEMA local top-k rows),
-    then rank the tiny union of bucket candidates per query
-    (query.topk). All of a doc's postings live in one dbucket, so any
-    kernel whose per-doc evaluation needs only that doc's postings is
-    exact bucket-locally."""
+    """The shape every index-backed query shares: scan the postings
+    pruned to `scan_terms` (predicate pushed into the scan), run
+    `kernel` once per dbucket over the whole query batch (pandas frame
+    of that bucket's blocks -> LOCAL_SCHEMA local top-k rows), then
+    rank the tiny union of bucket candidates per query. All of a doc's
+    postings live in one dbucket, so any kernel whose per-doc
+    evaluation needs only that doc's postings is exact bucket-locally.
+
+    Two routes, with identical rows. `dfm` ({term: df}; a scan term
+    absent from it is out of vocabulary) sizes the batch: when its
+    candidate postings, the summed df of the scan terms, are at most
+    `limit` (DRIVER_LIMIT when None; 0 turns the route off), the
+    coordinator route collects the pruned postings in ONE JVM-only
+    Arrow job, runs the same kernel per dbucket on the driver and ranks
+    there (_rank_on_driver); a batch with no candidate runs no job.
+    Otherwise the distributed route runs the kernel per dbucket in
+    `applyInPandas` and ranks with query.topk's window. Head-term
+    batches exceed the limit, so the driver never pulls more than the
+    limit's postings: an ES coordinating node's role split."""
+    spark = postings.sparkSession
+    limit = DRIVER_LIMIT if limit is None else limit
     cand = postings.filter(F.col("term").isin(scan_terms))
+    if dfm is not None and limit:
+        n = sum(dfm.get(t, 0) for t in scan_terms)
+        if n == 0:
+            return empty_result(spark)
+        if n <= limit:
+            rows = cand.toPandas()
+            parts = [kernel(g) for _, g in rows.groupby("dbucket", sort=True)]
+            parts = [p for p in parts if len(p)]
+            local = (
+                pd.concat(parts, ignore_index=True)
+                if parts else _result_frame([])
+            )
+            return _rank_on_driver(spark, local, k)
     local = cand.groupBy("dbucket").applyInPandas(kernel, LOCAL_SCHEMA)
     return topk(local, k)
+
+
+def round_half_up(x: np.ndarray, decimals: int = SCORE_DECIMALS) -> np.ndarray:
+    """Spark's round(x, decimals) on doubles, exactly: HALF_UP applied
+    to the shortest decimal repr of x (BigDecimal of Double.toString).
+    floor(x * 10^d + 0.5) / 10^d agrees everywhere except within
+    rounding error of a tie, where x * 10^d may land on either side of
+    .5 (5.39575 * 1e4 = 53957.49999999999); only those rows go through
+    Decimal."""
+    x = np.asarray(x, dtype=np.float64)
+    q = 10.0**decimals
+    y = x * q
+    out = np.floor(y + 0.5) / q
+    near = np.abs(y - np.floor(y) - 0.5) <= 1e-9 * np.maximum(1.0, np.abs(y))
+    if near.any():
+        step = Decimal(1).scaleb(-decimals)
+        out[near] = [
+            float(Decimal(repr(float(v))).quantize(step, ROUND_HALF_UP))
+            for v in x[near]
+        ]
+    return out
+
+
+def _rank_on_driver(spark, local: pd.DataFrame, k: int) -> DataFrame:
+    """query.topk on the driver over the kernels' LOCAL_SCHEMA rows:
+    score rounded as Spark rounds it, ranked by score desc, doc_id asc,
+    k per query; returned as a local relation (no job to collect)."""
+    qid = local["query_id"].to_numpy(np.int64)
+    doc = local["doc_id"].to_numpy(np.int64)
+    score = round_half_up(local["score"].to_numpy())
+    order = np.lexsort((doc, -score, qid))
+    qid, doc, score = qid[order], doc[order], score[order]
+    # rank = 1 + position within the query's run of rows
+    first = np.flatnonzero(np.r_[True, qid[1:] != qid[:-1]])
+    run = np.diff(np.r_[first, qid.size])
+    rank = np.arange(qid.size) - np.repeat(first, run) + 1
+    keep = rank <= k
+    return local_frame(
+        spark,
+        zip(
+            qid[keep].tolist(), rank[keep].tolist(),
+            doc[keep].tolist(), score[keep].tolist(),
+        ),
+        RESULT_SCHEMA,
+    )
 
 
 def _run_kernel(
@@ -551,13 +636,18 @@ def _run_kernel(
     filter_terms: list[str] | None = None,
     groups: dict[int, list[list[str]]] | None = None,
     avgdl_map: dict[str, float] | None = None,
+    dfm: dict[str, int] | None = None,
+    limit: int | None = None,
 ) -> DataFrame:
-    """Shared execution tail: term-pruned scan -> per-dbucket kernel ->
-    per-query rank window over the tiny candidate union. `deleted`
-    rides in the task closure (at 100TB ship it as a broadcast roaring
+    """The term kernel over a batch: a term-pruned scatter_gather of
+    _bucket_kernel (`dfm`/`limit` pick its route). `deleted` rides in
+    the kernel's closure (at 100TB ship it as a broadcast roaring
     bitmap partitioned by dbucket; the sorted-array form keeps the
-    sandbox kernel numpy-pure)."""
+    kernel numpy-pure). A batch with no scored term matches nothing
+    and runs no job."""
     terms = sorted({t for _, ts in queries for t in ts if t in idf_map})
+    if not terms:
+        return empty_result(postings.sparkSession)
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         return _bucket_kernel(
@@ -566,7 +656,8 @@ def _run_kernel(
         )
 
     return scatter_gather(
-        postings, _scan_terms(terms, must_not, filter_terms), kernel, k
+        postings, _scan_terms(terms, must_not, filter_terms), kernel, k,
+        dfm, limit,
     )
 
 
@@ -694,9 +785,11 @@ class TermStats:
     - lookup: pushdown-filtered lookups against the (term, df) `table`,
       behind a driver LRU of query-touched dfs (`lru_max` entries; 0
       negative-caches an OOV term). A cold snapshot looks the segment
-      dictionaries up unaggregated, with no persist (_sum_df). A warm
-      session whose dictionary overflows `vocab_cache_max` aggregates
-      it once into `n_shards` range-partitioned shards cached
+      dictionaries up unaggregated, with no persist (_sum_df); pinned
+      from an index, it knows their part `files` and reads the query
+      terms' rows on the driver with pyarrow (localread.read_df), no
+      job. A warm session whose dictionary overflows `vocab_cache_max`
+      aggregates it once into `n_shards` range-partitioned shards cached
       executor-side (Lucene holds its terms index per shard, not on one
       node); multi-term expansion then collects only the pattern's
       prefix/suffix WINDOW through range predicates that prune the
@@ -707,12 +800,19 @@ class TermStats:
 
     def __init__(
         self,
-        table: DataFrame | None = None,
+        table: DataFrame | Callable[[], DataFrame] | None = None,
         df_map: dict[str, int] | None = None,
         lru_max: int = DF_LRU_MAX,
         n_shards: int = 0,
+        files: list[str] | None = None,
     ):
-        self.table = table
+        # a function is called at the first use of `table`: a snapshot
+        # whose lookups read `files` (the local part files behind the
+        # table, pinned with it) opens the frame only for a route that
+        # needs Spark (an expansion, a sharded session, a federated
+        # union)
+        self._table = table
+        self.files = files
         self._df_map = df_map
         self._df_lru: "OrderedDict[str, int]" = OrderedDict()
         self._df_lru_max = lru_max
@@ -729,32 +829,45 @@ class TermStats:
     @classmethod
     def open(
         cls,
-        dictionary: DataFrame,
+        source: "TermStats",
         vocab_cache_max: int | None,
         lru_max: int,
         n_shards: int,
     ) -> "TermStats":
-        """A warm session's TermStats over `dictionary` (aggregated, or
-        the unaggregated segment dictionaries): held when it has at
-        most `vocab_cache_max` rows, df summed on the driver, else
-        sharded. One job collects at most vocab_cache_max + 1 rows, so
-        choosing the shape never pulls the vocabulary to the driver
-        (coalesce(1): a limit over many partitions is collected by
-        incremental take, one job per round). Only the sharded shape
-        aggregates, because the distributed expansion join needs one
-        row per term."""
-        head = dictionary
-        if vocab_cache_max is not None:
-            head = dictionary.coalesce(1).limit(vocab_cache_max + 1)
-        rows = head.collect()
-        if vocab_cache_max is None or len(rows) <= vocab_cache_max:
-            return cls(df_map=_sum_df(rows))
+        """A warm session's TermStats over the lookup-shaped `source`
+        (its table aggregated, or the unaggregated segment
+        dictionaries): held when the table has at most
+        `vocab_cache_max` rows, df summed on the driver, else sharded.
+        With part `files`, pyarrow counts the rows from the footers and
+        reads the held map on the driver, no job. Otherwise one job
+        collects at most vocab_cache_max + 1 rows, so choosing the shape
+        never pulls the vocabulary to the driver (coalesce(1): a limit
+        over many partitions is collected by incremental take, one job
+        per round). Only the sharded shape aggregates, because the
+        distributed expansion join needs one row per term."""
+        if source.files is not None:
+            held = read_df_map(source.files, vocab_cache_max)
+            if held is not None:
+                return cls(df_map=held)
+        else:
+            head = source.table
+            if vocab_cache_max is not None:
+                head = head.coalesce(1).limit(vocab_cache_max + 1)
+            rows = head.collect()
+            if vocab_cache_max is None or len(rows) <= vocab_cache_max:
+                return cls(df_map=_sum_df(rows))
         shards = (
-            cls(dictionary).dictionary
+            cls(source.table).dictionary
             .repartitionByRange(n_shards, "term")
             .persist()
         )
         return cls(shards, lru_max=lru_max, n_shards=n_shards)
+
+    @property
+    def table(self) -> DataFrame | None:
+        if callable(self._table):
+            self._table = self._table()
+        return self._table
 
     @property
     def dictionary(self) -> DataFrame:
@@ -767,9 +880,10 @@ class TermStats:
 
     def df(self, terms: list[str]) -> dict[str, int]:
         """{term: df} for the vocabulary terms among `terms`: a dict
-        read when held, else LRU hits plus ONE pushdown-filtered lookup
-        for the misses (absent terms negative-cached as 0, so a repeated
-        OOV query costs no job)."""
+        read when held, else LRU hits plus ONE lookup for the misses:
+        pyarrow over the part files when known, else a pushdown-filtered
+        collect (absent terms negative-cached as 0, so a repeated OOV
+        query costs no lookup)."""
         if self._df_map is not None:
             return {t: self._df_map[t] for t in terms if t in self._df_map}
         out: dict[str, int] = {}
@@ -783,7 +897,11 @@ class TermStats:
                 if v > 0:
                     out[t] = v
         if missing:
-            found = lookup_df(self.table, sorted(missing))
+            found = (
+                read_df(self.files, sorted(missing))
+                if self.files is not None
+                else lookup_df(self.table, sorted(missing))
+            )
             self._lru_put({t: found.get(t, 0) for t in missing})
             out.update(found)
         return out
@@ -960,7 +1078,9 @@ class Snapshot:
       of a fields=... index (empty otherwise) with each field's
       analyzer in `analyzers`;
     - `deleted_docs`, the tombstoned doc ids, collected into one sorted
-      array (`deleted`) at first use and at most once;
+      array (`deleted`) at first use and at most once: read on the
+      driver with pyarrow when their part files are known
+      (`deleted_files`, as open_pit pins them), else collected;
     - `segments` = {segment id: commit marker} when pinned from an
       index.
 
@@ -972,12 +1092,12 @@ class Snapshot:
     deleted docs never surface, while collection stats keep counting
     them until a compaction purges the postings.
 
-    Term routes score on the driver when the batch's candidate
-    postings fit under `driver_limit` (DRIVER_LIMIT when None; 0 never
-    does, so a cold call keeps the scatter-gather shape).
+    Every body ends in scatter_gather, which scores a batch whose
+    candidate postings fit under DRIVER_LIMIT on the driver (the one
+    limit every Snapshot shares; the term routes take a per-call
+    `driver_limit`, 0 forcing the distributed route), so a small cold
+    call is its metadata read on the driver plus one Spark job.
     """
-
-    DRIVER_LIMIT = 0
 
     def __init__(
         self,
@@ -986,19 +1106,28 @@ class Snapshot:
         n_docs: float,
         avgdl: float,
         field_stats: dict[str, tuple[int, float]] | None = None,
-        deleted_docs: DataFrame | None = None,
+        deleted_docs: DataFrame | Callable[[], DataFrame | None] | None = None,
         analyzers: dict[str, str] | None = None,
         name: str | None = None,
         segments: dict[int, dict] | None = None,
+        deleted_files: list[str] | None = None,
     ):
         self.postings = postings
         self.terms = terms
         self.n_docs, self.avgdl = float(n_docs), float(avgdl)
         self.field_stats = field_stats or {}
-        self.deleted_docs = deleted_docs
+        self._deleted_docs = deleted_docs
         self.analyzers = analyzers or {}
         self.name = name
         self.segments = segments
+        self.deleted_files = deleted_files
+
+    @property
+    def deleted_docs(self) -> DataFrame | None:
+        # like TermStats.table, a function is called at first use
+        if callable(self._deleted_docs):
+            self._deleted_docs = self._deleted_docs()
+        return self._deleted_docs
 
     @cached_property
     def deleted(self) -> np.ndarray | None:
@@ -1006,6 +1135,8 @@ class Snapshot:
         none): they ride in the kernels' task closures."""
         from mario_spark.phrase import _collect_deleted
 
+        if self.deleted_files is not None:
+            return read_doc_ids(self.deleted_files)
         return _collect_deleted(self.deleted_docs)
 
     @property
@@ -1108,8 +1239,8 @@ class Snapshot:
         """The term-query body every route shares, over ANALYZED
         [(query_id, [terms])] (must_not = {query_id: [terms]}; see
         search for the semantics): ONE TermStats consult covers the
-        scoring idfs and the driver fast-path candidate volume, then
-        the WAND kernel scores (_score)."""
+        scoring idfs and the batch's candidate volume, then the WAND
+        kernel scores (_run_kernel)."""
         pfx, n_docs, avgdl = self.scope(field)
         if pfx:
             queries = [(q, [pfx + t for t in ts]) for q, ts in queries]
@@ -1123,86 +1254,10 @@ class Snapshot:
         idf_map = {
             t: _idf(n_docs, float(dfm[t])) for t in terms if t in dfm
         }
-        return self._score(
-            queries, idf_map, avgdl, k, sum(dfm.values()), driver_limit,
-            conjunctive=conjunctive, must_not=must_not,
-            msm=min_should_match, filter_terms=filter_terms,
-        )
-
-    def _score(
-        self,
-        queries: list[tuple[int, list[str]]],
-        idf_map: dict[str, float],
-        avgdl: float,
-        k: int,
-        candidates: int,
-        driver_limit: int | None,
-        **kernel_args,
-    ) -> DataFrame:
-        """The term kernel over the batch: on the driver when its
-        `candidates` postings fit under the limit, else scatter-gather
-        (_run_kernel). Results are bit-identical either way."""
-        limit = self.DRIVER_LIMIT if driver_limit is None else driver_limit
-        if limit and candidates <= limit:
-            return self._search_driver(
-                queries, idf_map, avgdl, k, **kernel_args
-            )
         return _run_kernel(
-            self.postings, queries, idf_map, avgdl, k,
-            deleted=self.deleted, **kernel_args,
-        )
-
-    def _search_driver(
-        self,
-        qlist: list[tuple[int, list[str]]],
-        idf_map: dict[str, float],
-        avgdl: float,
-        k: int,
-        conjunctive: bool = False,
-        must_not: dict[int, list[str]] | None = None,
-        msm: int = 1,
-        filter_terms: list[str] | None = None,
-        groups: dict[int, list[list[str]]] | None = None,
-        avgdl_map: dict[str, float] | None = None,
-    ) -> DataFrame:
-        """Coordinator fast path: the candidate BLOCKS (compressed —
-        ~1/4 byte per posting) are collected and scored driver-side with
-        the same kernel: ONE collect job instead of shuffle + window.
-        Head-term batches exceed the limit and stay distributed, so the
-        driver never pulls more than the limit's postings — an ES
-        coordinating node's role split."""
-        terms = sorted({t for _, ts in qlist for t in ts if t in idf_map})
-        spark = self.postings.sparkSession
-        if not terms:
-            return empty_result(spark)
-        scan_terms = _scan_terms(terms, must_not, filter_terms)
-        rows = self.postings.filter(F.col("term").isin(scan_terms)).toPandas()
-        parts = [
-            _bucket_kernel(
-                g, qlist, idf_map, avgdl, k, conjunctive, must_not,
-                msm, self.deleted, filter_terms, groups, avgdl_map,
-            )
-            for _, g in rows.groupby("dbucket", sort=True)
-        ]
-        parts = [p for p in parts if len(p)]
-        if not parts:
-            return empty_result(spark)
-        local = pd.concat(parts, ignore_index=True)
-        # replicate the distributed finish exactly: Spark F.round is
-        # HALF_UP (pandas .round is half-even) -> floor(x*1e4+0.5)/1e4
-        # is valid for the non-negative BM25 scores
-        q = 10**SCORE_DECIMALS
-        local["score"] = np.floor(local["score"] * q + 0.5) / q
-        local = local.sort_values(
-            ["query_id", "score", "doc_id"],
-            ascending=[True, False, True],
-            kind="mergesort",
-            ignore_index=True,
-        )
-        local["rank"] = local.groupby("query_id").cumcount() + 1
-        local = local[local["rank"] <= k]
-        return spark.createDataFrame(
-            local[["query_id", "rank", "doc_id", "score"]], RESULT_SCHEMA
+            self.postings, queries, idf_map, avgdl, k, conjunctive,
+            must_not, min_should_match, self.deleted, filter_terms,
+            dfm=dfm, limit=driver_limit,
         )
 
     def search_cross_fields(
@@ -1279,11 +1334,10 @@ class Snapshot:
             if gs:
                 groups[qid] = gs
                 qlist.append((qid, [t for g in gs for t in g]))
-        all_terms = sorted({t for _, ts in qlist for t in ts})
-        return self._score(
-            qlist, idf_map, self.avgdl, k,
-            sum(dfm.get(t, 0) for t in all_terms), driver_limit,
-            conjunctive=False, groups=groups, avgdl_map=avgdl_map,
+        return _run_kernel(
+            self.postings, qlist, idf_map, self.avgdl, k, False,
+            deleted=self.deleted, groups=groups, avgdl_map=avgdl_map,
+            dfm=dfm, limit=driver_limit,
         )
 
     def search_phrase(
@@ -1365,9 +1419,9 @@ class Snapshot:
         qmap = self.terms._expand(queries, kind, max_edits, prefix_length)
         qlist = sorted((qid, sorted(ts)) for qid, ts in qmap.items())
         dfm = self.terms.df(sorted({t for _, ts in qlist for t in ts}))
-        return self._score(
-            qlist, df_to_idf(dfm, self.n_docs), self.avgdl, k,
-            sum(dfm.values()), driver_limit, conjunctive=False,
+        return _run_kernel(
+            self.postings, qlist, df_to_idf(dfm, self.n_docs), self.avgdl,
+            k, False, deleted=self.deleted, dfm=dfm, limit=driver_limit,
         )
 
 
@@ -1380,29 +1434,27 @@ class QuerySession(Snapshot):
       shuffle stage (the cold path pays one per query);
     - term statistics opened once (TermStats.open): held in a driver
       dict while the dictionary has at most `vocab_cache_max` rows,
-      else sharded executor-side behind a `df_lru_max`-entry LRU;
-    - the coordinator fast path: a term batch whose candidate postings
-      fit under `driver_limit` (DRIVER_LIMIT) is scored on the driver
-      in ONE collect job, cutting rare-term single-query latency ~3x;
-      driver_limit=0 disables it;
-    - tombstones (`deleted_docs`) collected at construction.
+      else sharded executor-side behind a `df_lru_max`-entry LRU.
+      `dictionary` is a (term, df) frame, or the TermStats of a pinned
+      snapshot, whose part files are then read on the driver;
+    - tombstones (`deleted_docs`) collected at construction (read on
+      the driver when `deleted_files` names their part files), so
+      Index.open_session runs no job before warm().
 
-    The search bodies are Snapshot's, so results are bit-identical to
-    the cold paths (asserted in tests); only the dictionary lookup job
-    and the per-query dbucket shuffle are saved. Serves field-scoped
-    indexes too: pass field_stats={field: (n_docs, avgdl)} and
-    search(field=...).
+    The search bodies and the coordinator route (DRIVER_LIMIT) are
+    Snapshot's, so results are bit-identical to the cold paths
+    (asserted in tests); a distributed query saves its per-query
+    dbucket shuffle. Serves field-scoped indexes too: pass
+    field_stats={field: (n_docs, avgdl)} and search(field=...).
 
     The cached frames live until close(); `with idx.open_session() as
     s:` closes on exit.
     """
 
-    DRIVER_LIMIT = 200_000
-
     def __init__(
         self,
         postings: DataFrame,
-        dictionary: DataFrame,
+        dictionary: DataFrame | TermStats,
         n_docs: int,
         avgdl: float,
         n_buckets: int | None = None,
@@ -1410,12 +1462,16 @@ class QuerySession(Snapshot):
         vocab_cache_max: int | None = VOCAB_CACHE_MAX,
         df_lru_max: int = DF_LRU_MAX,
         deleted_docs: DataFrame | None = None,
+        deleted_files: list[str] | None = None,
     ):
         n = n_buckets or postings.sparkSession.sparkContext.defaultParallelism
+        if not isinstance(dictionary, TermStats):
+            dictionary = TermStats(dictionary)
         super().__init__(
             postings.repartition(n, "dbucket").persist(),
             TermStats.open(dictionary, vocab_cache_max, df_lru_max, n),
             n_docs, avgdl, field_stats, deleted_docs,
+            deleted_files=deleted_files,
         )
         # collected now: the session keeps its tombstones even after
         # clear_deletes drops the generation files

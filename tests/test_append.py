@@ -284,3 +284,53 @@ def test_cold_search_lists_segments_and_reads_deletes_once(
         assert counts["listings"] == 1, (name, counts)
         assert counts["_seg.json"] == n_segs, (name, counts)
         assert counts["_deletes.json"] == 1, (name, counts)
+
+
+def test_hybrid_search_reads_one_snapshot(spark, tmp_path, monkeypatch):
+    """search_hybrid's lexical and dense arms read ONE pinned Snapshot:
+    one committed-segment listing and one deletes-marker read per
+    call, so a commit between the arms cannot make them mask different
+    tombstones or read different segments."""
+    import collections
+    import os
+
+    from mario_spark import index as indexmod
+    from mario_spark.index import IndexPaths
+
+    cat = Catalog(spark, str(tmp_path / "cat"))
+    pages = pages_df(spark, 300, seed=43, partitions=4).withColumn(
+        "embedding",
+        F.array(
+            (F.abs(F.hash("url")) % 97 + 1).cast("double"),
+            (F.abs(F.hash("text")) % 89 + 1).cast("double"),
+        ),
+    )
+    idx = cat.create("hybrid-2026-01-01t00-00-00z")
+    idx.ingest(pages, segment_docs=128, vector_col="embedding")
+    terms = [
+        r["term"]
+        for r in idx.dictionary().orderBy(F.desc("df"), "term").limit(30)
+        .collect()
+    ]
+    assert idx.delete_by_query([terms[25]])["deleted"] > 0
+
+    counts: collections.Counter = collections.Counter()
+    listing, read_json = IndexPaths.committed_markers, indexmod._read_json
+
+    def counted_listing(self):
+        counts["listings"] += 1
+        return listing(self)
+
+    def counted_read(path):
+        counts[os.path.basename(path)] += 1
+        return read_json(path)
+
+    with monkeypatch.context() as m:
+        m.setattr(IndexPaths, "committed_markers", counted_listing)
+        m.setattr(indexmod, "_read_json", counted_read)
+        rows = idx.search_hybrid(
+            [(0, f"{terms[10]} {terms[20]}")], [(0, [3.0, 5.0])], k=10
+        ).collect()
+    assert rows
+    assert counts["listings"] == 1, counts
+    assert counts["_deletes.json"] == 1, counts

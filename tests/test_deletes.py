@@ -347,3 +347,48 @@ def test_search_template_renders_and_matches_direct(spark, root):
     )
     pd.testing.assert_frame_equal(got, direct)
     assert len(got) > 0
+
+
+def test_purging_compaction_retires_only_what_it_purged(
+    spark, root, monkeypatch
+):
+    """A delete that commits while a purging compaction runs (after the
+    compaction read the tombstone generations, before it retires them)
+    stays live: the compaction retires only the generations it purged,
+    n_deleted counts the survivor's docs, and they stay out of
+    search."""
+    from mario_spark.index import Index
+
+    cat = Catalog(spark, root)
+    idx = cat.create("race-2026-01-01t00-00-00z")
+    idx.ingest(pages_df(spark, 400, seed=9, partitions=4), segment_docs=200)
+    by_df = [
+        r["term"]
+        for r in idx.dictionary().orderBy(F.desc("df"), "term").limit(40)
+        .collect()
+    ]
+    purged = idx.delete_by_query([by_df[30]])["deleted"]
+    assert purged > 0
+    late_term = by_df[10]
+    late: dict = {}
+    clear = Index.clear_deletes
+
+    def delete_then_clear(self, *args, **kwargs):
+        # commits between the compaction's read and its retire
+        late.update(idx.delete_by_query([late_term]))
+        return clear(self, *args, **kwargs)
+
+    monkeypatch.setattr(Index, "clear_deletes", delete_then_clear)
+    n_before = idx.stats()["n_docs"]
+    compact_segments(idx)
+    monkeypatch.undo()
+
+    assert late["deleted"] > 0
+    st = idx.stats()
+    assert st["n_docs"] == n_before - purged
+    assert st["n_deleted"] == late["deleted"]
+    late_ids = {r["doc_id"] for r in idx.deleted_ids().collect()}
+    assert len(late_ids) == late["deleted"]
+    q = query_terms_df(spark, [(0, f"{late_term} {by_df[20]}")])
+    got = {r["doc_id"] for r in idx.search(q, k=400).collect()}
+    assert got and not got & late_ids

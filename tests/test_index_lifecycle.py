@@ -1472,3 +1472,83 @@ def test_read_table_schema_is_spark_inferred_schema(spark, root, tmp_path):
     got = read_table(spark, str(foreign))
     assert got.schema == spark.read.parquet(str(foreign)).schema
     assert sorted(tuple(r) for r in got.collect()) == [("a", 1), ("b", 2)]
+
+
+def test_driver_reads_equal_spark_reads(spark, root):
+    """The pyarrow metadata reads a pinned Snapshot makes on the driver
+    equal the Spark reads they replace, on a tombstoned 3-segment
+    index: the query terms' df (an OOV term, a term present in one
+    segment only, terms in every segment), the held df map a session
+    opens with, and the tombstone array. New segments write their
+    dictionary sorted by term, so row-group statistics prune a lookup;
+    an unsorted (older) dictionary is read whole with the same
+    result."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from mario_spark.localread import _row_groups, read_df, read_df_map
+    from mario_spark.phrase import _collect_deleted
+    from mario_spark.wand import lookup_df
+
+    cat = Catalog(spark, root)
+    idx = cat.create("reads-2026-01-01t00-00-00z")
+    idx.ingest(pages_df(spark, 300, seed=11, partitions=4), segment_docs=128)
+    segs = idx.paths.committed_segments()
+    assert len(segs) == 3
+    seg_terms = [
+        {r["term"] for r in idx.dictionary([s]).collect()} for s in segs
+    ]
+    only_one = sorted(seg_terms[0] - seg_terms[1] - seg_terms[2])
+    in_all = sorted(seg_terms[0] & seg_terms[1] & seg_terms[2])
+    assert only_one and len(in_all) > 30
+    for gen_terms in ([in_all[-1]], [in_all[-2]]):
+        assert idx.delete_by_query(gen_terms)["deleted"] > 0
+    terms = ["zz-not-a-term", only_one[0], only_one[-1], *in_all[:20]]
+
+    def check():
+        snap = idx.open_pit()
+        assert snap.terms.files and snap.deleted_files
+        want = lookup_df(snap.terms.table, terms)
+        assert want[only_one[0]] > 0 and "zz-not-a-term" not in want
+        assert read_df(snap.terms.files, terms) == want
+        assert snap.terms.df(terms) == want
+        full = {r["term"]: r["df"] for r in idx.dictionary().collect()}
+        assert read_df_map(snap.terms.files, None) == full
+        assert read_df_map(snap.terms.files, len(full) * 3) == full
+        assert read_df_map(snap.terms.files, 10) is None
+        assert np.array_equal(
+            snap.deleted, _collect_deleted(snap.deleted_docs)
+        )
+        return snap
+
+    snap = check()
+    for f in snap.terms.files:
+        t = pq.read_table(f).column("term").to_pylist()
+        assert t == sorted(t), f
+
+    # rewrite segment 0's dictionary in many row groups: sorted, so
+    # the statistics prune, then shuffled, as an older segment wrote it
+    d0 = os.path.join(idx.paths.seg(segs[0]), "dictionary")
+    rows = pa.concat_tables(
+        [pq.read_table(f) for f in snap.terms.files if f.startswith(d0)]
+    ).sort_by("term")
+    for order in ("sorted", "unsorted"):
+        for f in os.listdir(d0):
+            os.remove(os.path.join(d0, f))
+        tbl = rows
+        if order == "unsorted":
+            perm = np.random.default_rng(3).permutation(rows.num_rows)
+            tbl = rows.take(pa.array(perm))
+        path = os.path.join(d0, "part-00000.parquet")
+        pq.write_table(tbl, path, row_group_size=16)
+        with pq.ParquetFile(path) as pf:
+            kept = _row_groups(pf, "term", sorted(terms))
+            n_groups = pf.metadata.num_row_groups
+        # sorted, few row groups can hold a query term; shuffled, each
+        # spans most of the vocabulary and most are read
+        assert (len(kept) < n_groups / 2) == (order == "sorted"), (
+            order, len(kept), n_groups,
+        )
+        check()

@@ -126,15 +126,19 @@ def test_ann_lsh_topk_uses_take_ordered(spark):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_query_session_no_dbucket_shuffle(spark):
+def test_query_session_no_dbucket_shuffle(spark, monkeypatch):
     """QuerySession's postings are cached pre-partitioned on dbucket,
     so the groupBy(dbucket).applyInPandas must NOT plan an Exchange
     between the cache scan and the kernel (the cold path does)."""
-    from mario_spark import docs
+    from mario_spark import docs, wand
     from mario_spark.fixtures import documents_as_pages
     from mario_spark.postings import build_postings
     from mario_spark.wand import QuerySession, search_wand
 
+    # the routes without a driver_limit argument (the cold search_wand,
+    # the warm phrase and query_string) take the distributed path only
+    # under a zero shared limit
+    monkeypatch.setattr(wand, "DRIVER_LIMIT", 0)
     d = docs.build_doc_table(documents_as_pages(spark, SF_DIR))
     st = docs.corpus_stats(d).collect()[0]
     post, dic, _ = build_postings(d, st["n_docs"], range_width=256)
@@ -199,16 +203,22 @@ def _positional_index(spark):
     return post, dictionary_from_postings(post), st["n_docs"], st["avgdl"]
 
 
-def test_cold_dbucket_operators_plan_one_kernel_one_window(spark):
-    """Every cold index-backed operator is ONE scatter-gather: a single
-    per-dbucket pandas kernel and a single per-query rank window over
-    its output — no operator adds a second kernel pass or rank tail."""
+def test_cold_dbucket_operators_plan_one_kernel_one_window(
+    spark, monkeypatch
+):
+    """Every cold index-backed operator is ONE scatter-gather: on the
+    distributed route (forced here by a zero limit; these small batches
+    would otherwise take the coordinator route) a single per-dbucket
+    pandas kernel and a single per-query rank window over its output —
+    no operator adds a second kernel pass or rank tail."""
     import re
 
     from mario_spark import phrase as ph
-    from mario_spark import qs
+    from mario_spark import qs, wand
     from mario_spark.fixtures import query_terms_df
     from mario_spark.wand import search_wand
+
+    monkeypatch.setattr(wand, "DRIVER_LIMIT", 0)
 
     post, dic, n, ad = _positional_index(spark)
     ops = {
@@ -273,12 +283,12 @@ def _job_count(spark, fn) -> int:
 
 def test_cold_searches_pay_only_for_their_own_jobs(spark, tmp_path):
     """A cold Index.search / search_phrase / search_query_string over a
-    multi-segment index with a tombstone generation runs at most 5
-    jobs: the scatter-gather tail (pruned scan, kernel, rank window),
-    one dictionary lookup and one tombstone collect. Opening a segment
-    table infers no schema, the query-term frame and the empty result
-    are local relations, the lookup reads the segment dictionaries
-    without a groupBy shuffle and the tombstones without a distinct."""
+    multi-segment index with a tombstone generation runs at most ONE
+    job: the dictionary lookup and the tombstones are read on the
+    driver (pyarrow) and the small batch takes the coordinator route,
+    one collect of its pruned postings. Opening a segment table infers
+    no schema, and the query-term frame and the empty result are local
+    relations."""
     from mario_spark.fixtures import pages_df, query_terms_df
     from mario_spark.index import Index
     from mario_spark.query import empty_result
@@ -311,7 +321,7 @@ def test_cold_searches_pay_only_for_their_own_jobs(spark, tmp_path):
     for name, call in calls.items():
         rows = []
         jobs = _job_count(spark, lambda: rows.extend(call().collect()))
-        assert jobs <= 5, (name, jobs)
+        assert jobs <= 1, (name, jobs)
         assert rows, name
 
     def open_tables():
@@ -324,11 +334,105 @@ def test_cold_searches_pay_only_for_their_own_jobs(spark, tmp_path):
     assert _job_count(spark, lambda: empty_result(spark).collect()) == 0
 
 
+def test_cold_search_over_the_limit_keeps_scatter_gather(
+    spark, tmp_path, monkeypatch
+):
+    """A cold call whose candidate postings exceed DRIVER_LIMIT keeps
+    the distributed plan (one kernel, one rank window) and returns the
+    rows the coordinator route returns under the default limit, whose
+    plan is a driver-built local relation."""
+    import re
+
+    from mario_spark import wand
+    from mario_spark.fixtures import pages_df, query_terms_df
+    from mario_spark.index import Index
+
+    idx = Index(spark, str(tmp_path / "idx"), "limit")
+    idx.ingest(
+        pages_df(spark, 300, seed=7, partitions=4),
+        positions=True, segment_docs=128,
+    )
+    by_df = [
+        r["term"]
+        for r in idx.dictionary().orderBy(F.desc("df"), "term").limit(40)
+        .collect()
+    ]
+    assert idx.delete_by_query([by_df[35]])["deleted"] > 0
+    a, b, c = by_df[5], by_df[15], by_df[25]
+    calls = {
+        "search": lambda: idx.search(
+            query_terms_df(spark, [(0, f"{a} {b}"), (1, c)]), k=10
+        ),
+        "search_phrase": lambda: idx.search_phrase(
+            [(0, f"the {a}"), (1, f"{b} {c}")], k=10
+        ),
+        "search_query_string": lambda: idx.search_query_string(
+            [(0, f'{a} "the {b}" -{c}')], k=10
+        ),
+    }
+
+    def shape(df) -> tuple[int, int]:
+        plan = _plan(df)
+        return (
+            len(re.findall(r"^\(\d+\) FlatMapGroupsInPandas\b", plan, re.M)),
+            len(re.findall(r"^\(\d+\) Window\b", plan, re.M)),
+        )
+
+    for name, call in calls.items():
+        small = call()
+        assert shape(small) == (0, 0), name
+        want = sorted(small.collect())
+        assert want, name
+        with monkeypatch.context() as m:
+            m.setattr(wand, "DRIVER_LIMIT", 1)
+            big = call()
+        assert shape(big) == (1, 1), name
+        assert sorted(big.collect()) == want, name
+
+
+def test_driver_rank_finish_rounds_like_spark(spark):
+    """The coordinator route's finish equals query.topk: scores rounded
+    exactly as Spark's round(x, 4) (HALF_UP on the shortest repr, where
+    floor(x * 1e4 + 0.5) misrounds near ties), then ranked by score
+    desc, doc_id asc."""
+    import numpy as np
+    import pandas as pd
+
+    from mario_spark.query import topk
+    from mario_spark.wand import _rank_on_driver, round_half_up
+
+    vals = [5.39575, 0.10704999999999999, 15.926449999999999]
+    assert list(round_half_up(np.array(vals))) == [5.3958, 0.107, 15.9264]
+    got = spark.createDataFrame(
+        pd.DataFrame({"x": vals})
+    ).select(F.round("x", 4).alias("r")).collect()
+    assert [r["r"] for r in got] == [5.3958, 0.107, 15.9264]
+
+    rng = np.random.default_rng(7)
+    ties = (rng.integers(0, 300_000, 3000) + 0.5) / 1e4
+    near = ties + rng.integers(-3, 4, 3000) * np.spacing(ties)
+    scores = np.concatenate([vals, ties, near, rng.uniform(0, 30, 3000)])
+    local = pd.DataFrame({
+        "query_id": np.arange(scores.size, dtype=np.int64) % 7,
+        "doc_id": rng.permutation(scores.size).astype(np.int64),
+        "score": scores,
+    })
+    for k in (10, scores.size):
+        want = topk(spark.createDataFrame(local), k).toPandas()
+        out = _rank_on_driver(spark, local, k).toPandas()
+        key = ["query_id", "rank"]
+        pd.testing.assert_frame_equal(
+            out.sort_values(key, ignore_index=True),
+            want.sort_values(key, ignore_index=True),
+            check_exact=True,
+        )
+
+
 def test_open_session_sums_segment_dictionaries_on_driver(spark, tmp_path):
-    """Opening a session on a tombstoned multi-segment index runs at
-    most 2 jobs: one collect of the unaggregated segment dictionaries
-    (df summed on the driver, no groupBy shuffle) and the tombstone
-    collect. The held df map equals the aggregated dictionary."""
+    """Opening a session on a tombstoned multi-segment index runs no
+    job: the unaggregated segment dictionaries (df summed on the
+    driver, no groupBy shuffle) and the tombstones are read with
+    pyarrow. The held df map equals the aggregated dictionary."""
     from mario_spark.fixtures import pages_df
     from mario_spark.index import Index
 
@@ -338,7 +442,7 @@ def test_open_session_sums_segment_dictionaries_on_driver(spark, tmp_path):
     dic = {r["term"]: r["df"] for r in idx.dictionary().collect()}
     assert idx.delete_by_query([sorted(dic, key=dic.get)[-20]])["deleted"]
     opened = []
-    assert _job_count(spark, lambda: opened.append(idx.open_session())) <= 2
+    assert _job_count(spark, lambda: opened.append(idx.open_session())) == 0
     sess = opened[0]
     assert sess.terms._df_map == dic
     assert sess.deleted is not None
