@@ -108,16 +108,19 @@ def _search_opened(
         # the dfs pre-phase: ONE TermStats over every member's segment
         # dictionaries (its lookup runs once, then serves every member
         # from its LRU) and the summed collection stats
-        files = [s.terms.files for _, s in snaps]
+        members = [s for _, s in snaps]
+        files = [s.terms.files for s in members]
         terms = TermStats(
-            reduce(DataFrame.unionByName, [s.terms.table for _, s in snaps]),
+            lambda: reduce(
+                DataFrame.unionByName, [s.terms.table for s in members]
+            ),
             files=None if None in files else [f for fs in files for f in fs],
         )
         n = sum(s.n_docs for _, s in snaps)
         avgdl = sum(s.avgdl * s.n_docs for _, s in snaps) / n if n else 0.0
         snaps = [
             (name, Snapshot(s.postings, terms, n, avgdl,
-                            deleted_docs=s.deleted_docs,
+                            deleted_docs=lambda s=s: s.deleted_docs,
                             deleted_files=s.deleted_files))
             for name, s in snaps
         ]

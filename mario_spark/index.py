@@ -847,9 +847,8 @@ class Index:
 
     def dictionary(self, segments: list[int] | None = None) -> DataFrame:
         """Union of segment dictionaries; df is additive (doc-disjoint)."""
-        return TermStats(
-            read_table(self.spark, *self._seg_paths("dictionary", segments))
-        ).dictionary
+        paths = self._seg_paths("dictionary", segments)
+        return TermStats(lambda: read_table(self.spark, *paths)).dictionary
 
     def manifest(self) -> DataFrame:
         segs = self.paths.committed_segments()
@@ -898,7 +897,8 @@ class Index:
         snap = self._pinned()
         return QuerySession(
             snap.postings, snap.terms, snap.n_docs, snap.avgdl,
-            deleted_docs=snap.deleted_docs, deleted_files=snap.deleted_files,
+            deleted_docs=lambda: snap.deleted_docs,
+            deleted_files=snap.deleted_files,
             **{"field_stats": snap.field_stats, **kwargs},
         )
 

@@ -36,6 +36,7 @@ from mario_spark.docs import assign_doc_ids
 from mario_spark.postings import decode_block_positions
 from mario_spark.query import bm25_contrib, bm25_contrib_np, bm25_idf
 from mario_spark.wand import (
+    POSITIONAL_WEIGHT,
     _result_frame,
     df_to_idf,
     lookup_df,
@@ -146,18 +147,29 @@ def _pos_term_map(pdf: pd.DataFrame) -> dict[str, _PosTermData]:
     }
 
 
-def _positional_kernel(queries: list[tuple], score_one):
-    """scatter_gather kernel from a per-query scorer: decode the
-    bucket's positional postings once, then score_one(tds, *query) ->
-    (query_ids, doc_ids, scores) local top-k, or None, for every query
-    of the batch."""
+def _positional_gather(
+    postings: DataFrame,
+    scan_terms: list[str],
+    queries: list[tuple],
+    score_one,
+    k: int,
+    dfm: dict[str, int],
+) -> DataFrame:
+    """scatter_gather of a per-query positional scorer: the kernel
+    decodes the bucket's positional postings once, then
+    score_one(tds, *query) -> (query_ids, doc_ids, scores) local top-k,
+    or None, for every query of the batch. A positional candidate
+    weighs POSITIONAL_WEIGHT term candidates against the coordinator
+    route's limit."""
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         tds = _pos_term_map(pdf)
         hits = (score_one(tds, *q) for q in queries)
         return _result_frame([h for h in hits if h])
 
-    return kernel
+    return scatter_gather(
+        postings, scan_terms, kernel, k, dfm, weight=POSITIONAL_WEIGHT
+    )
 
 
 def _chain_doc_ptfs(
@@ -303,8 +315,8 @@ def search_phrase_prefix(
             dl[ci] = float(fixed_tds[0].lens[int(rows_fixed[0][ci])])
         return _score_and_topk(qid, cand, ptf, dl, sum_idf, ad, k)
 
-    return scatter_gather(
-        postings, needed, _positional_kernel(kq, score_one), k, dfm
+    return _positional_gather(
+        postings, needed, kq, score_one, k, dfm
     )
 
 
@@ -372,8 +384,8 @@ def _rank_phrases(
         return _score_and_topk(qid, ids, ptf, lens, sum_idf, ad, k)
 
     terms = sorted({t for _, ts in phrase_queries for t in ts})
-    return scatter_gather(
-        postings, terms, _positional_kernel(queries, score_one), k, dfm
+    return _positional_gather(
+        postings, terms, queries, score_one, k, dfm
     )
 
 
@@ -448,8 +460,8 @@ def search_span_or(
         dl = np.array([dlen[int(d)] for d in ids], dtype=np.float64)
         return _score_and_topk(qid, ids, ptf, dl, sidf, ad, k)
 
-    return scatter_gather(
-        postings, all_terms, _positional_kernel(queries, score_one), k, dfm
+    return _positional_gather(
+        postings, all_terms, queries, score_one, k, dfm
     )
 
 
@@ -512,8 +524,8 @@ def search_span_near_unordered(
             dl[ci] = float(ta.lens[int(ra[ci])])
         return _score_and_topk(qid, ids, ptf, dl, sidf, ad, k)
 
-    return scatter_gather(
-        postings, all_terms, _positional_kernel(queries, score_one), k, dfm
+    return _positional_gather(
+        postings, all_terms, queries, score_one, k, dfm
     )
 
 
@@ -578,8 +590,8 @@ def search_span_not(
             ptf[ci] = starts.size
         return _score_and_topk(qid, ids_all, ptf, lens, sidf, ad, k)
 
-    return scatter_gather(
-        postings, scan_terms, _positional_kernel(queries, score_one), k, dfm
+    return _positional_gather(
+        postings, scan_terms, queries, score_one, k, dfm
     )
 
 
@@ -632,8 +644,8 @@ def search_span_first(
             ptf[ci] = float(np.count_nonzero(ends + 1 <= end))
         return _score_and_topk(qid, ids, ptf, lens, sidf, ad, k)
 
-    return scatter_gather(
-        postings, all_terms, _positional_kernel(queries, score_one), k, dfm
+    return _positional_gather(
+        postings, all_terms, queries, score_one, k, dfm
     )
 
 
@@ -790,8 +802,8 @@ def search_span_contain(
                 ptf[ci] = float(np.count_nonzero(cov))
         return _score_and_topk(qid, cand_ids, ptf, lens, sidf, ad, k)
 
-    return scatter_gather(
-        postings, scan_terms, _positional_kernel(queries, score_one), k, dfm
+    return _positional_gather(
+        postings, scan_terms, queries, score_one, k, dfm
     )
 
 

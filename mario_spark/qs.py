@@ -46,7 +46,7 @@ from mario_spark.analyze import py_tokenize, tokenize_udf
 from mario_spark.phrase import (
     _chain_doc_ptfs,
     _local_topk,
-    _positional_kernel,
+    _positional_gather,
 )
 from mario_spark.postings import idf as _idf
 from mario_spark.query import (
@@ -59,7 +59,7 @@ from mario_spark.query import (
     empty_result,
     topk,
 )
-from mario_spark.wand import Snapshot, TermStats, scatter_gather
+from mario_spark.wand import Snapshot, TermStats
 
 _ATOM_RE = re.compile(r'([+-]?)(?:"([^"]*)"|(\S+))')
 
@@ -836,8 +836,8 @@ def _rank_query_strings(
             tds, qid, clauses, req_must, n_should, k, deleted
         )
 
-    return scatter_gather(
-        postings, keys, _positional_kernel(queries_c, score_one), k, dfm
+    return _positional_gather(
+        postings, keys, queries_c, score_one, k, dfm
     )
 
 
@@ -858,8 +858,8 @@ def search_query_string_indexed(
     two). Plan = search_wand's: term-pruned scan -> per-dbucket batch
     kernel -> tiny per-query rank window (wand.scatter_gather)."""
     return Snapshot(
-        postings, TermStats(dictionary), n_docs, avgdl,
-        deleted_docs=deleted_docs,
+        postings, TermStats(lambda: dictionary), n_docs, avgdl,
+        deleted_docs=lambda: deleted_docs,
     ).search_query_string(queries, k)
 
 
@@ -887,8 +887,8 @@ def search_query_string_fields_indexed(
         for f, s in field_stats.items()
     }
     return Snapshot(
-        postings, TermStats(dictionary), 0, 0.0, field_stats=stats,
-        deleted_docs=deleted_docs,
+        postings, TermStats(lambda: dictionary), 0, 0.0, field_stats=stats,
+        deleted_docs=lambda: deleted_docs,
     ).search_query_string(queries, k, default_field)
 
 

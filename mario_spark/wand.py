@@ -527,8 +527,18 @@ def _bucket_kernel(
 
 # The coordinator route's bound: a batch whose candidate postings (the
 # summed df of its scan terms) are at most this many is scored on the
-# driver. 200,000 postings are a few MB of compressed blocks.
+# driver. Sized from the crossover with the distributed route
+# (scripts/route_crossover.py on a 4-core local[4] box, 24,000-doc
+# 3-segment positional index; CHANGES.md): term batches, cold and warm,
+# are still faster on the driver at ~350,000 candidates, so 200,000
+# keeps a margin. More executor cores move the crossover down.
 DRIVER_LIMIT = 200_000
+# A positional candidate (phrase, span and query_string kernels) costs
+# the serial driver kernel three to five term candidates, as it decodes
+# and chains positions. Warm positional batches cross over between
+# 70,000 and 100,000 candidates, so each counts 4 against DRIVER_LIMIT:
+# at most 50,000 take the driver route, cold or warm.
+POSITIONAL_WEIGHT = 4
 
 
 def scatter_gather(
@@ -536,8 +546,9 @@ def scatter_gather(
     scan_terms: list[str],
     kernel,
     k: int,
-    dfm: dict[str, int] | None = None,
+    dfm: dict[str, int],
     limit: int | None = None,
+    weight: int = 1,
 ) -> DataFrame:
     """The shape every index-backed query shares: scan the postings
     pruned to `scan_terms` (predicate pushed into the scan), run
@@ -549,23 +560,25 @@ def scatter_gather(
 
     Two routes, with identical rows. `dfm` ({term: df}; a scan term
     absent from it is out of vocabulary) sizes the batch: when its
-    candidate postings, the summed df of the scan terms, are at most
-    `limit` (DRIVER_LIMIT when None; 0 turns the route off), the
-    coordinator route collects the pruned postings in ONE JVM-only
-    Arrow job, runs the same kernel per dbucket on the driver and ranks
-    there (_rank_on_driver); a batch with no candidate runs no job.
-    Otherwise the distributed route runs the kernel per dbucket in
-    `applyInPandas` and ranks with query.topk's window. Head-term
-    batches exceed the limit, so the driver never pulls more than the
-    limit's postings: an ES coordinating node's role split."""
+    candidate postings, the summed df of the scan terms, times the
+    kernel's per-posting `weight` (POSITIONAL_WEIGHT for positional
+    kernels), are at most `limit` (DRIVER_LIMIT when None; 0 turns the
+    route off), the coordinator route collects the pruned postings in
+    ONE JVM-only Arrow job, runs the same kernel per dbucket on the
+    driver and ranks there (_rank_on_driver); a batch with no
+    candidate runs no job. Otherwise the distributed route runs the
+    kernel per dbucket in `applyInPandas` and ranks with query.topk's
+    window: a larger batch's kernel work is spread over the executors
+    and the driver never pulls more than the limit's postings (an ES
+    coordinating node's role split)."""
     spark = postings.sparkSession
     limit = DRIVER_LIMIT if limit is None else limit
     cand = postings.filter(F.col("term").isin(scan_terms))
-    if dfm is not None and limit:
+    if limit:
         n = sum(dfm.get(t, 0) for t in scan_terms)
         if n == 0:
             return empty_result(spark)
-        if n <= limit:
+        if n * weight <= limit:
             rows = cand.toPandas()
             parts = [kernel(g) for _, g in rows.groupby("dbucket", sort=True)]
             parts = [p for p in parts if len(p)]
@@ -636,7 +649,8 @@ def _run_kernel(
     filter_terms: list[str] | None = None,
     groups: dict[int, list[list[str]]] | None = None,
     avgdl_map: dict[str, float] | None = None,
-    dfm: dict[str, int] | None = None,
+    *,
+    dfm: dict[str, int],
     limit: int | None = None,
 ) -> DataFrame:
     """The term kernel over a batch: a term-pruned scatter_gather of
@@ -717,8 +731,8 @@ def search_wand(
     scan -> per-dbucket kernel -> per-query rank (_run_kernel).
     """
     snap = Snapshot(
-        postings, TermStats(dictionary), n_docs, avgdl,
-        deleted_docs=deleted_docs,
+        postings, TermStats(lambda: dictionary), n_docs, avgdl,
+        deleted_docs=lambda: deleted_docs,
     )
     return snap.search_terms(
         sorted(_by_query(query_terms).items()), k, conjunctive,
@@ -800,18 +814,18 @@ class TermStats:
 
     def __init__(
         self,
-        table: DataFrame | Callable[[], DataFrame] | None = None,
+        table: Callable[[], DataFrame | None] | None = None,
         df_map: dict[str, int] | None = None,
         lru_max: int = DF_LRU_MAX,
         n_shards: int = 0,
         files: list[str] | None = None,
     ):
-        # a function is called at the first use of `table`: a snapshot
-        # whose lookups read `files` (the local part files behind the
-        # table, pinned with it) opens the frame only for a route that
-        # needs Spark (an expansion, a sharded session, a federated
-        # union)
-        self._table = table
+        # `table` is a function that opens the frame at its first use:
+        # a snapshot whose lookups read `files` (the local part files
+        # behind the table, pinned with it) opens it only for a route
+        # that needs Spark (an expansion, a sharded session, a
+        # federated union)
+        self._open_table = table or (lambda: None)
         self.files = files
         self._df_map = df_map
         self._df_lru: "OrderedDict[str, int]" = OrderedDict()
@@ -857,17 +871,14 @@ class TermStats:
             if vocab_cache_max is None or len(rows) <= vocab_cache_max:
                 return cls(df_map=_sum_df(rows))
         shards = (
-            cls(source.table).dictionary
-            .repartitionByRange(n_shards, "term")
-            .persist()
+            source.dictionary.repartitionByRange(n_shards, "term").persist()
         )
-        return cls(shards, lru_max=lru_max, n_shards=n_shards)
+        return cls(lambda: shards, lru_max=lru_max, n_shards=n_shards)
 
-    @property
+    @cached_property
     def table(self) -> DataFrame | None:
-        if callable(self._table):
-            self._table = self._table()
-        return self._table
+        """The (term, df) lookup table, opened at first use."""
+        return self._open_table()
 
     @property
     def dictionary(self) -> DataFrame:
@@ -1094,9 +1105,10 @@ class Snapshot:
 
     Every body ends in scatter_gather, which scores a batch whose
     candidate postings fit under DRIVER_LIMIT on the driver (the one
-    limit every Snapshot shares; the term routes take a per-call
-    `driver_limit`, 0 forcing the distributed route), so a small cold
-    call is its metadata read on the driver plus one Spark job.
+    limit every Snapshot shares, a positional candidate counting
+    POSITIONAL_WEIGHT; the term routes take a per-call `driver_limit`,
+    0 forcing the distributed route), so a small cold call is its
+    metadata read on the driver plus one Spark job.
     """
 
     def __init__(
@@ -1106,7 +1118,7 @@ class Snapshot:
         n_docs: float,
         avgdl: float,
         field_stats: dict[str, tuple[int, float]] | None = None,
-        deleted_docs: DataFrame | Callable[[], DataFrame | None] | None = None,
+        deleted_docs: Callable[[], DataFrame | None] | None = None,
         analyzers: dict[str, str] | None = None,
         name: str | None = None,
         segments: dict[int, dict] | None = None,
@@ -1116,18 +1128,17 @@ class Snapshot:
         self.terms = terms
         self.n_docs, self.avgdl = float(n_docs), float(avgdl)
         self.field_stats = field_stats or {}
-        self._deleted_docs = deleted_docs
+        self._open_deleted = deleted_docs or (lambda: None)
         self.analyzers = analyzers or {}
         self.name = name
         self.segments = segments
         self.deleted_files = deleted_files
 
-    @property
+    @cached_property
     def deleted_docs(self) -> DataFrame | None:
-        # like TermStats.table, a function is called at first use
-        if callable(self._deleted_docs):
-            self._deleted_docs = self._deleted_docs()
-        return self._deleted_docs
+        """The tombstone frame, opened at first use (`deleted_docs` is
+        a function, like TermStats' table)."""
+        return self._open_deleted()
 
     @cached_property
     def deleted(self) -> np.ndarray | None:
@@ -1437,8 +1448,9 @@ class QuerySession(Snapshot):
       else sharded executor-side behind a `df_lru_max`-entry LRU.
       `dictionary` is a (term, df) frame, or the TermStats of a pinned
       snapshot, whose part files are then read on the driver;
-    - tombstones (`deleted_docs`) collected at construction (read on
-      the driver when `deleted_files` names their part files), so
+    - tombstones (`deleted_docs`, a function opening their frame as
+      in Snapshot) collected at construction (read on the driver when
+      `deleted_files` names their part files), so
       Index.open_session runs no job before warm().
 
     The search bodies and the coordinator route (DRIVER_LIMIT) are
@@ -1461,15 +1473,17 @@ class QuerySession(Snapshot):
         field_stats: dict[str, tuple[int, float]] | None = None,
         vocab_cache_max: int | None = VOCAB_CACHE_MAX,
         df_lru_max: int = DF_LRU_MAX,
-        deleted_docs: DataFrame | None = None,
+        deleted_docs: Callable[[], DataFrame | None] | None = None,
         deleted_files: list[str] | None = None,
     ):
         n = n_buckets or postings.sparkSession.sparkContext.defaultParallelism
-        if not isinstance(dictionary, TermStats):
-            dictionary = TermStats(dictionary)
+        terms = (
+            dictionary if isinstance(dictionary, TermStats)
+            else TermStats(lambda: dictionary)
+        )
         super().__init__(
             postings.repartition(n, "dbucket").persist(),
-            TermStats.open(dictionary, vocab_cache_max, df_lru_max, n),
+            TermStats.open(terms, vocab_cache_max, df_lru_max, n),
             n_docs, avgdl, field_stats, deleted_docs,
             deleted_files=deleted_files,
         )

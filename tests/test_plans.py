@@ -390,6 +390,61 @@ def test_cold_search_over_the_limit_keeps_scatter_gather(
         assert sorted(big.collect()) == want, name
 
 
+def test_positional_batches_weigh_more_against_the_limit(
+    spark, tmp_path, monkeypatch
+):
+    """A positional candidate counts POSITIONAL_WEIGHT term candidates
+    against DRIVER_LIMIT: under a limit between a batch's candidate
+    postings and their weighted count, a term search over its terms
+    takes the coordinator route while the phrase and query_string
+    batches over the same terms stay distributed, with equal rows on
+    either route."""
+    import re
+
+    from mario_spark import wand
+    from mario_spark.fixtures import pages_df, query_terms_df
+    from mario_spark.index import Index
+
+    idx = Index(spark, str(tmp_path / "idx"), "weight")
+    idx.ingest(pages_df(spark, 200, seed=8, partitions=4), positions=True)
+    top = idx.dictionary().orderBy(F.desc("df"), "term").limit(12).collect()
+    (a, da), (b, db) = [(r["term"], r["df"]) for r in top[10:12]]
+    n = da + db  # the candidate postings of every batch below
+
+    def shape(df) -> tuple[int, int]:
+        plan = _plan(df)
+        return (
+            len(re.findall(r"^\(\d+\) FlatMapGroupsInPandas\b", plan, re.M)),
+            len(re.findall(r"^\(\d+\) Window\b", plan, re.M)),
+        )
+
+    calls = {
+        "search": (lambda: idx.search(
+            query_terms_df(spark, [(0, f"{a} {b}")]), k=10
+        ), 1),
+        "search_phrase": (
+            lambda: idx.search_phrase([(0, f"{a} {b}")], k=10),
+            wand.POSITIONAL_WEIGHT,
+        ),
+        "search_query_string": (
+            lambda: idx.search_query_string([(0, f'{a} "{a} {b}"')], k=10),
+            wand.POSITIONAL_WEIGHT,
+        ),
+    }
+    assert wand.POSITIONAL_WEIGHT > 1
+    for name, (call, weight) in calls.items():
+        want = sorted(call().collect())
+        assert want, name
+        for limit in (n, n * weight - 1, n * weight):
+            monkeypatch.setattr(wand, "DRIVER_LIMIT", limit)
+            got = call()
+            driver = n * weight <= limit
+            assert shape(got) == ((0, 0) if driver else (1, 1)), (
+                name, limit,
+            )
+            assert sorted(got.collect()) == want, (name, limit)
+
+
 def test_driver_rank_finish_rounds_like_spark(spark):
     """The coordinator route's finish equals query.topk: scores rounded
     exactly as Spark's round(x, 4) (HALF_UP on the shortest repr, where
@@ -449,12 +504,15 @@ def test_open_session_sums_segment_dictionaries_on_driver(spark, tmp_path):
     sess.close()
 
 
-def test_federated_dfs_search_looks_df_up_once(spark, tmp_path):
+def test_federated_dfs_search_looks_df_up_once(spark, tmp_path, monkeypatch):
     """A dfs_query_then_fetch search over two 300-doc indexes, one with
     a tombstone generation, runs at most 7 jobs: ONE df lookup over
     both members' segment dictionaries, the tombstone collect and the
-    execution. A federated search over empty members returns a local
-    relation (no job)."""
+    execution. Like a single-index cold call it reads the dictionaries
+    and tombstones from their part files, so it opens only the members'
+    postings frames. A federated search over empty members returns a
+    local relation (no job)."""
+    from mario_spark import index as index_mod
     from mario_spark.federate import search_indexes
     from mario_spark.fixtures import pages_df, query_terms_df
     from mario_spark.index import Catalog
@@ -470,12 +528,21 @@ def test_federated_dfs_search_looks_df_up_once(spark, tmp_path):
     ]
     assert cat.open(names[1]).delete_by_query([by_df[30]])["deleted"] > 0
     q = query_terms_df(spark, [(0, f"{by_df[10]} {by_df[20]}")])
+    opened: list[str] = []
+    real_read_table = index_mod.read_table
+
+    def read_table(spark_, *paths):
+        opened.extend(paths)
+        return real_read_table(spark_, *paths)
+
+    monkeypatch.setattr(index_mod, "read_table", read_table)
     rows = []
     jobs = _job_count(
         spark, lambda: rows.extend(search_indexes(cat, names, q).collect())
     )
     assert jobs <= 7, jobs
     assert rows
+    assert opened and all("/postings" in p for p in opened), opened
     cat.create("empty-2026-01-01t00-00-00z")
     assert _job_count(
         spark,
