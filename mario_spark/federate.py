@@ -16,19 +16,21 @@ Both modes map exactly onto this engine: an Index is the shard, its
 pinned Snapshot reads its postings and tombstones, and a Snapshot's
 TermStats is its only df source — so dfs mode is just "score every
 member's snapshot with one TermStats over all members' dictionaries
-and the summed collection stats". The merge is a per-query rank over
-|indexes| x k rows — coordinator-sized.
+and the summed collection stats". The merge ranks the members'
+|indexes| x k rows per query on the driver, as the coordinating node
+does.
 """
 
 from __future__ import annotations
 
 from functools import reduce
+from itertools import groupby, islice
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+import numpy as np
+from pyspark.sql import DataFrame
 
 from mario_spark.session import local_frame
-from mario_spark.wand import Snapshot, TermStats, _by_query
+from mario_spark.wand import Snapshot, TermStats, _by_query, round_half_up
 
 SCHEMA = "query_id long, rank long, index string, doc_id long, score double"
 
@@ -124,24 +126,22 @@ def _search_opened(
                             deleted_files=s.deleted_files))
             for name, s in snaps
         ]
-    parts = []
+    # each member's result is a local relation (collecting it runs no
+    # job); boosted scores round as Spark's round(score * boost, 4)
+    hits = []
     for name, snap in snaps:
-        local = snap.search_terms(queries, k, filter_terms=filter_terms)
+        rows = snap.search_terms(queries, k, filter_terms=filter_terms)
+        rows = rows.collect()
         boost = float((indices_boost or {}).get(name, 1.0))
-        parts.append(
-            local.select(
-                "query_id",
-                F.lit(name).alias("index"),
-                "doc_id",
-                F.round(F.col("score") * F.lit(boost), 4).alias("score"),
-            )
-        )
-    allp = reduce(DataFrame.unionByName, parts)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("index"), F.asc("doc_id")
-    )
-    return (
-        allp.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "index", "doc_id", "score")
-    )
+        score = round_half_up(np.array([r["score"] for r in rows]) * boost)
+        hits += [
+            (r["query_id"], -s, name, r["doc_id"])
+            for r, s in zip(rows, score.tolist())
+        ]
+    hits.sort()  # score desc, then index, then doc_id, per query
+    out = [
+        (q, rank, name, doc, -s)
+        for q, group in groupby(hits, key=lambda h: h[0])
+        for rank, (_, s, name, doc) in enumerate(islice(group, k), 1)
+    ]
+    return local_frame(query_terms.sparkSession, out, SCHEMA)

@@ -17,7 +17,7 @@ Semantics (Lucene PhraseQuery, slop=0):
 Distributed shape = search_wand's: document-partitioned postings,
 per-dbucket batch kernel (a phrase's candidate docs need ALL member
 terms in the same dbucket — postings of one doc never straddle
-buckets), tiny per-query rank over bucket-local top-k. The postings
+buckets), bucket-local top-ks merged on the driver. The postings
 scan is pruned to the phrase's terms (pushed filter), and the position
 intersection runs only over docs that survive the doc-id intersection
 of every member term — the classic prox-evaluation order.
@@ -37,6 +37,7 @@ from mario_spark.postings import decode_block_positions
 from mario_spark.query import bm25_contrib, bm25_contrib_np, bm25_idf
 from mario_spark.wand import (
     POSITIONAL_WEIGHT,
+    _local_topk,
     _result_frame,
     df_to_idf,
     lookup_df,
@@ -158,9 +159,11 @@ def _positional_gather(
     """scatter_gather of a per-query positional scorer: the kernel
     decodes the bucket's positional postings once, then
     score_one(tds, *query) -> (query_ids, doc_ids, scores) local top-k,
-    or None, for every query of the batch. A positional candidate
-    weighs POSITIONAL_WEIGHT term candidates against the coordinator
-    route's limit."""
+    or None, for every query of the batch. Callers drop the queries
+    that cannot match and scan only the survivors' terms, so a batch
+    with none left scans nothing and runs no job. A positional
+    candidate weighs POSITIONAL_WEIGHT term candidates against the
+    coordinator route's limit."""
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         tds = _pos_term_map(pdf)
@@ -213,12 +216,6 @@ def _chain_doc_ptfs(
         ptf[ci] = _chain_match_count(term_pos, n_terms, slop)
         lens[ci] = float(term_tds[0].lens[int(rows_per_term[0][ci])])
     return cand, ptf, lens, rows_per_term
-
-
-def _local_topk(qid, ids, scores, k):
-    """Bucket-local top-k of one query (score desc, doc_id asc)."""
-    top = np.lexsort((ids, -scores))[:k]
-    return np.full(top.size, qid, dtype=np.int64), ids[top], scores[top]
 
 
 def _score_and_topk(qid, ids, ptf, dl, sum_idf, avgdl, k):
@@ -337,9 +334,7 @@ def search_phrase(
     stale until compaction).
 
     `phrase_queries` is [(query_id, [ordered terms])]; terms must be in
-    analyzer-output form (use analyze.py_tokenize on raw text). Plan is
-    search_wand's: term-pruned scan -> per-dbucket kernel -> per-query
-    rank window over the tiny candidate union (wand.scatter_gather).
+    analyzer-output form (use analyze.py_tokenize on raw text).
 
     slop > 0 = ordered proximity (ES span_near in_order=true; NOTE this
     deliberately deviates from match_phrase's sloppy-freq semantics,
@@ -383,7 +378,7 @@ def _rank_phrases(
         ids, ptf, lens, _ = _chain_doc_ptfs(tds, qterms, deleted, slop)
         return _score_and_topk(qid, ids, ptf, lens, sum_idf, ad, k)
 
-    terms = sorted({t for _, ts in phrase_queries for t in ts})
+    terms = sorted({t for _, ts, _ in queries for t in ts})
     return _positional_gather(
         postings, terms, queries, score_one, k, dfm
     )
@@ -422,9 +417,7 @@ def search_span_or(
     ALL alternatives (SpanWeight.buildSimWeight collects every clause's
     terms with df > 0, including clauses whose other member is OOV).
 
-    `span_queries` = [(query_id, [[chain terms], ...])]. Plan shape is
-    search_phrase's: term-pruned scan -> per-dbucket kernel -> tiny
-    per-query rank window."""
+    `span_queries` = [(query_id, [[chain terms], ...])]."""
     all_terms = sorted(
         {t for _, chains in span_queries for ch in chains for t in ch}
     )
@@ -460,8 +453,9 @@ def search_span_or(
         dl = np.array([dlen[int(d)] for d in ids], dtype=np.float64)
         return _score_and_topk(qid, ids, ptf, dl, sidf, ad, k)
 
+    live_terms = sorted({t for _, chs, _ in queries for ch in chs for t in ch})
     return _positional_gather(
-        postings, all_terms, queries, score_one, k, dfm
+        postings, live_terms, queries, score_one, k, dfm
     )
 
 
@@ -482,9 +476,7 @@ def search_span_near_unordered(
     term positions with a qualifying partner (the same per-start
     counting convention as the ordered path); scored as PhraseWeight
     (idf = sum of member idfs, saturated pseudo-term tf); an OOV member
-    empties the query like match_phrase. Plan shape is search_phrase's:
-    term-pruned scan -> per-dbucket kernel -> tiny per-query rank
-    window."""
+    empties the query like match_phrase."""
     all_terms = sorted({t for _, ts in pair_queries for t in ts})
     dfm = lookup_df(dictionary, all_terms)
     idf_map = df_to_idf(dfm, n_docs)
@@ -524,8 +516,9 @@ def search_span_near_unordered(
             dl[ci] = float(ta.lens[int(ra[ci])])
         return _score_and_topk(qid, ids, ptf, dl, sidf, ad, k)
 
+    live_terms = sorted({t for _, t0, t1, _ in queries for t in (t0, t1)})
     return _positional_gather(
-        postings, all_terms, queries, score_one, k, dfm
+        postings, live_terms, queries, score_one, k, dfm
     )
 
 
@@ -549,10 +542,9 @@ def search_span_not(
 
     `span_queries` = [(query_id, [include terms], exclude_term)]."""
     inc_terms = sorted({t for _, ts, _ in span_queries for t in ts})
-    exc_terms = sorted({x for _, _, x in span_queries})
-    scan_terms = sorted(set(inc_terms) | set(exc_terms))
+    all_terms = sorted(set(inc_terms) | {x for _, _, x in span_queries})
     # one lookup: the exclude terms' df only sizes the scan
-    dfm = lookup_df(dictionary, scan_terms)
+    dfm = lookup_df(dictionary, all_terms)
     idf_map = df_to_idf({t: dfm[t] for t in inc_terms if t in dfm}, n_docs)
     queries = [
         (qid, ts, x, sum(idf_map[t] for t in ts))
@@ -590,8 +582,9 @@ def search_span_not(
             ptf[ci] = starts.size
         return _score_and_topk(qid, ids_all, ptf, lens, sidf, ad, k)
 
+    live_terms = sorted({t for _, ts, x, _ in queries for t in (*ts, x)})
     return _positional_gather(
-        postings, scan_terms, queries, score_one, k, dfm
+        postings, live_terms, queries, score_one, k, dfm
     )
 
 
@@ -613,9 +606,7 @@ def search_span_first(
     span/phrase query here ("title-like prominence without a separate
     field" is the classic use).
 
-    `span_queries` = [(query_id, [chain terms], end)]. Plan shape =
-    search_phrase's: term-pruned scan -> per-dbucket kernel -> tiny
-    per-query rank window.
+    `span_queries` = [(query_id, [chain terms], end)].
     """
     all_terms = sorted({t for _, ts, _ in span_queries for t in ts})
     dfm = lookup_df(dictionary, all_terms)
@@ -644,8 +635,9 @@ def search_span_first(
             ptf[ci] = float(np.count_nonzero(ends + 1 <= end))
         return _score_and_topk(qid, ids, ptf, lens, sidf, ad, k)
 
+    live_terms = sorted({t for _, ts, _, _ in queries for t in ts})
     return _positional_gather(
-        postings, all_terms, queries, score_one, k, dfm
+        postings, live_terms, queries, score_one, k, dfm
     )
 
 
@@ -740,13 +732,15 @@ def search_span_contain(
         raise ValueError(f"mode must be containing|within, got {mode!r}")
     big_terms = sorted({t for _, t1, t2, _, _ in span_queries for t in (t1, t2)})
     lit_terms = sorted({x for *_, x in span_queries})
-    scan_terms = sorted(set(big_terms) | set(lit_terms))
+    all_terms = sorted(set(big_terms) | set(lit_terms))
     need = big_terms if mode == "containing" else lit_terms
     # one lookup: the other side's df only sizes the scan
-    dfm = lookup_df(dictionary, scan_terms)
+    dfm = lookup_df(dictionary, all_terms)
     idf_map = df_to_idf({t: dfm[t] for t in need if t in dfm}, n_docs)
     queries = []
     for qid, t1, t2, g, x in span_queries:
+        if not all(t in dfm for t in (t1, t2, x)):
+            continue  # an OOV member matches nothing
         sidf = (
             idf_map.get(t1, 0.0) + idf_map.get(t2, 0.0)
             if mode == "containing"
@@ -802,8 +796,11 @@ def search_span_contain(
                 ptf[ci] = float(np.count_nonzero(cov))
         return _score_and_topk(qid, cand_ids, ptf, lens, sidf, ad, k)
 
+    live_terms = sorted(
+        {t for _, t1, t2, _, x, _ in queries for t in (t1, t2, x)}
+    )
     return _positional_gather(
-        postings, scan_terms, queries, score_one, k, dfm
+        postings, live_terms, queries, score_one, k, dfm
     )
 
 

@@ -43,11 +43,7 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from mario_spark.analyze import py_tokenize, tokenize_udf
-from mario_spark.phrase import (
-    _chain_doc_ptfs,
-    _local_topk,
-    _positional_gather,
-)
+from mario_spark.phrase import _chain_doc_ptfs, _positional_gather
 from mario_spark.postings import idf as _idf
 from mario_spark.query import (
     B,
@@ -59,7 +55,7 @@ from mario_spark.query import (
     empty_result,
     topk,
 )
-from mario_spark.wand import Snapshot, TermStats
+from mario_spark.wand import Snapshot, TermStats, _local_topk
 
 _ATOM_RE = re.compile(r'([+-]?)(?:"([^"]*)"|(\S+))')
 
@@ -803,7 +799,6 @@ def _indexed_clauses(
 def _rank_query_strings(
     postings: DataFrame,
     parsed: list,
-    keys: list[str],
     dfm: dict[str, int],
     stats: dict,
     k: int = 10,
@@ -813,22 +808,26 @@ def _rank_query_strings(
     df}, which Snapshot.search_query_string takes from its TermStats.
     `stats` maps each clause field (None when unscoped) to its
     (n_docs, avgdl): a clause's idf sum uses its field's docCount, its
-    length norm the field's avgdl. Unmapped
-    fields keep Lucene behavior for free: no df (sidf 0), no postings
-    (a must can never match)."""
+    length norm the field's avgdl. A clause with a key of no df (an
+    OOV term, an unmapped field) never hits, so it is left out of the
+    kernel and the scan, and a query that then cannot match (a must
+    clause left out, or no must and no should clause left) is dropped
+    before any scan."""
     queries_c = []
     for qid, clauses in parsed:
-        cl = []
-        for kind, fld, pterms in clauses:
-            n_f, ad = stats.get(fld, (0, 0.0))
-            sidf = sum(
-                _idf(float(n_f), float(dfm[t])) for t in pterms if t in dfm
-            )
-            # avgdl placeholder 1.0 for unmapped fields is never read:
-            # such a clause has no postings, so it produces no hits
-            cl.append((kind, pterms, sidf, float(ad) or 1.0))
         req_must = sum(1 for kind, _, _ in clauses if kind == "must")
         n_should = sum(1 for kind, _, _ in clauses if kind == "should")
+        live = [c for c in clauses if all(t in dfm for t in c[2])]
+        kinds = [kind for kind, _, _ in live]
+        if kinds.count("must") < req_must or not (
+            req_must or "should" in kinds
+        ):
+            continue
+        cl = []
+        for kind, fld, pterms in live:
+            n_f, ad = stats.get(fld, (0, 0.0))
+            sidf = sum(_idf(float(n_f), float(dfm[t])) for t in pterms)
+            cl.append((kind, pterms, sidf, float(ad) or 1.0))
         queries_c.append((int(qid), cl, req_must, n_should))
 
     def score_one(tds, qid, clauses, req_must, n_should):
@@ -836,6 +835,9 @@ def _rank_query_strings(
             tds, qid, clauses, req_must, n_should, k, deleted
         )
 
+    keys = sorted(
+        {t for _, cl, _, _ in queries_c for _, ts, _, _ in cl for t in ts}
+    )
     return _positional_gather(
         postings, keys, queries_c, score_one, k, dfm
     )
@@ -855,8 +857,7 @@ def search_query_string_indexed(
     clauses run the positional chain matcher, and Lucene BooleanQuery
     matching applies bucket-locally — the production analogue of
     qs.search_query_string (tests assert rank identity between the
-    two). Plan = search_wand's: term-pruned scan -> per-dbucket batch
-    kernel -> tiny per-query rank window (wand.scatter_gather)."""
+    two)."""
     return Snapshot(
         postings, TermStats(lambda: dictionary), n_docs, avgdl,
         deleted_docs=lambda: deleted_docs,

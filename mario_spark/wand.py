@@ -7,12 +7,12 @@ mario's search contract is the mapping file — see SURVEY §3.3).
 Distributed shape = exactly the reference engine's: the index is
 document-partitioned (postings.dbucket == an ES shard); each task runs
 block-max-pruned scoring over ONE dbucket for the WHOLE query batch and
-emits local top-k per query; the global answer is a tiny per-query rank
-over the union of bucket candidates. No stage ever materializes a full
-posting list, and posting blocks are shipped to exactly one task each
-(the query set travels in the task closure, never joined against the
-postings — a postings x queries join would replicate head-term blocks
-once per query).
+emits local top-k per query; the driver merges those bucket top-ks, as
+an ES coordinating node merges shard top-ks (scatter_gather). No stage
+ever materializes a full posting list, and posting blocks are shipped
+to exactly one task each (the query set travels in the task closure,
+never joined against the postings — a postings x queries join would
+replicate head-term blocks once per query).
 
 Per-bucket kernel (sound pruning, fully vectorized, PRUNE BEFORE
 DECODE — the block-max mask is computed from stored impacts, so pruned
@@ -34,7 +34,7 @@ blocks are never VByte-decoded at all):
     batch amortization is kept while single-query latency now pays
     decode only for live blocks).
  4. Exact vectorized scoring (np.unique + bincount groupby) over the
-    surviving blocks; local top-k (score desc, doc_id asc).
+    surviving blocks; local top-k by the finish's rule (_local_topk).
 """
 
 from __future__ import annotations
@@ -58,7 +58,6 @@ from mario_spark.query import (
     SCORE_DECIMALS,
     bm25_contrib_np,
     empty_result,
-    topk,
 )
 from mario_spark.session import local_frame
 
@@ -112,6 +111,41 @@ def _result_frame(
             "doc_id": np.concatenate(ds),
             "score": np.concatenate(ss),
         }
+    )
+
+
+def round_half_up(x: np.ndarray, decimals: int = SCORE_DECIMALS) -> np.ndarray:
+    """Spark's round(x, decimals) on doubles, exactly: HALF_UP applied
+    to the shortest decimal repr of x (BigDecimal of Double.toString).
+    floor(x * 10^d + 0.5) / 10^d agrees everywhere except within
+    rounding error of a tie, where x * 10^d may land on either side of
+    .5 (5.39575 * 1e4 = 53957.49999999999); only those rows go through
+    Decimal."""
+    x = np.asarray(x, dtype=np.float64)
+    q = 10.0**decimals
+    y = x * q
+    out = np.floor(y + 0.5) / q
+    near = np.abs(y - np.floor(y) - 0.5) <= 1e-9 * np.maximum(1.0, np.abs(y))
+    if near.any():
+        step = Decimal(1).scaleb(-decimals)
+        out[near] = [
+            float(Decimal(repr(float(v))).quantize(step, ROUND_HALF_UP))
+            for v in x[near]
+        ]
+    return out
+
+
+def _local_topk(qid: int, ids: np.ndarray, scores: np.ndarray, k: int):
+    """One query's bucket-local top-k -> (query_ids, doc_ids, scores),
+    selected by the rule the driver finish ranks by: Spark-rounded
+    score desc, then doc_id asc. Any other key (the raw float, another
+    rounding) can keep the wrong doc when more than k docs of the
+    bucket tie at the k-th rounded score. Scores stay unrounded."""
+    top = np.lexsort((ids, -round_half_up(scores)))[:k]
+    return (
+        np.full(top.size, qid, dtype=np.int64),
+        ids[top].astype(np.int64, copy=False),
+        scores[top],
     )
 
 
@@ -408,18 +442,7 @@ def _bucket_kernel(
                 ids, totals = ids[keep], totals[keep]
             if ids.size == 0:
                 continue
-            # local selection must use the GLOBAL ranking criterion
-            # (4dp-rounded score, doc_id asc) — sorting on raw floats
-            # here can drop a doc that ties at the k-th rounded score,
-            # making results depend on the dbucket grid
-            order = np.lexsort((ids, -np.floor(totals * 1e4 + 0.5)))[:k]
-            out.append(
-                (
-                    np.full(order.size, qid, dtype=np.int64),
-                    ids[order].astype(np.int64),
-                    totals[order],
-                )
-            )
+            out.append(_local_topk(qid, ids, totals, k))
             continue
         # 1. bootstrap θ from the rarest term present in this bucket
         # (max idf == min df, so pick by idf) — the only forced decode.
@@ -513,15 +536,7 @@ def _bucket_kernel(
             uniq, totals = uniq[keep], totals[keep]
         if uniq.size == 0:
             continue
-        # same rounded-criterion local selection as the conjunctive path
-        order = np.lexsort((uniq, -np.floor(totals * 1e4 + 0.5)))[:k]
-        out.append(
-            (
-                np.full(order.size, qid, dtype=np.int64),
-                uniq[order].astype(np.int64),
-                totals[order],
-            )
-        )
+        out.append(_local_topk(qid, uniq, totals, k))
     return _result_frame(out)
 
 
@@ -553,69 +568,51 @@ def scatter_gather(
     """The shape every index-backed query shares: scan the postings
     pruned to `scan_terms` (predicate pushed into the scan), run
     `kernel` once per dbucket over the whole query batch (pandas frame
-    of that bucket's blocks -> LOCAL_SCHEMA local top-k rows), then
-    rank the tiny union of bucket candidates per query. All of a doc's
-    postings live in one dbucket, so any kernel whose per-doc
-    evaluation needs only that doc's postings is exact bucket-locally.
+    of that bucket's blocks -> LOCAL_SCHEMA rows, each query's
+    bucket-local top-k by _local_topk), then rank those rows per query
+    on the driver (_rank_on_driver). All of a doc's postings live in
+    one dbucket, so any kernel whose per-doc evaluation needs only that
+    doc's postings is exact bucket-locally.
 
-    Two routes, with identical rows. `dfm` ({term: df}; a scan term
-    absent from it is out of vocabulary) sizes the batch: when its
+    Two routes to the kernel rows, one finish, identical rows. `dfm`
+    ({term: df}; a scan term absent from it is out of vocabulary) sizes
+    the batch; a batch with no candidate runs no job. When its
     candidate postings, the summed df of the scan terms, times the
     kernel's per-posting `weight` (POSITIONAL_WEIGHT for positional
     kernels), are at most `limit` (DRIVER_LIMIT when None; 0 turns the
     route off), the coordinator route collects the pruned postings in
-    ONE JVM-only Arrow job, runs the same kernel per dbucket on the
-    driver and ranks there (_rank_on_driver); a batch with no
-    candidate runs no job. Otherwise the distributed route runs the
-    kernel per dbucket in `applyInPandas` and ranks with query.topk's
-    window: a larger batch's kernel work is spread over the executors
-    and the driver never pulls more than the limit's postings (an ES
-    coordinating node's role split)."""
+    ONE JVM-only Arrow job and runs the kernel per dbucket on the
+    driver. Otherwise the distributed route runs the kernel per dbucket
+    in `applyInPandas` on the executors and collects its rows: the
+    driver receives at most queries x dbuckets x k rows, the merge of
+    shard top-ks an ES coordinating node does, and never more than the
+    limit's postings."""
     spark = postings.sparkSession
     limit = DRIVER_LIMIT if limit is None else limit
+    n = sum(dfm.get(t, 0) for t in scan_terms)
+    if n == 0:
+        return empty_result(spark)
     cand = postings.filter(F.col("term").isin(scan_terms))
-    if limit:
-        n = sum(dfm.get(t, 0) for t in scan_terms)
-        if n == 0:
-            return empty_result(spark)
-        if n * weight <= limit:
-            rows = cand.toPandas()
-            parts = [kernel(g) for _, g in rows.groupby("dbucket", sort=True)]
-            parts = [p for p in parts if len(p)]
-            local = (
-                pd.concat(parts, ignore_index=True)
-                if parts else _result_frame([])
-            )
-            return _rank_on_driver(spark, local, k)
-    local = cand.groupBy("dbucket").applyInPandas(kernel, LOCAL_SCHEMA)
-    return topk(local, k)
-
-
-def round_half_up(x: np.ndarray, decimals: int = SCORE_DECIMALS) -> np.ndarray:
-    """Spark's round(x, decimals) on doubles, exactly: HALF_UP applied
-    to the shortest decimal repr of x (BigDecimal of Double.toString).
-    floor(x * 10^d + 0.5) / 10^d agrees everywhere except within
-    rounding error of a tie, where x * 10^d may land on either side of
-    .5 (5.39575 * 1e4 = 53957.49999999999); only those rows go through
-    Decimal."""
-    x = np.asarray(x, dtype=np.float64)
-    q = 10.0**decimals
-    y = x * q
-    out = np.floor(y + 0.5) / q
-    near = np.abs(y - np.floor(y) - 0.5) <= 1e-9 * np.maximum(1.0, np.abs(y))
-    if near.any():
-        step = Decimal(1).scaleb(-decimals)
-        out[near] = [
-            float(Decimal(repr(float(v))).quantize(step, ROUND_HALF_UP))
-            for v in x[near]
-        ]
-    return out
+    if n * weight <= limit:
+        rows = cand.toPandas()
+        local = pd.concat(
+            [_result_frame([])]
+            + [kernel(g) for _, g in rows.groupby("dbucket", sort=True)],
+            ignore_index=True,
+        )
+    else:
+        local = (
+            cand.groupBy("dbucket").applyInPandas(kernel, LOCAL_SCHEMA)
+            .toPandas()
+        )
+    return _rank_on_driver(spark, local, k)
 
 
 def _rank_on_driver(spark, local: pd.DataFrame, k: int) -> DataFrame:
-    """query.topk on the driver over the kernels' LOCAL_SCHEMA rows:
-    score rounded as Spark rounds it, ranked by score desc, doc_id asc,
-    k per query; returned as a local relation (no job to collect)."""
+    """The finish of every index-backed search, over the kernels'
+    LOCAL_SCHEMA rows: score rounded as Spark's round(score, 4), ranked
+    by score desc, doc_id asc (_local_topk's rule), k per query;
+    returned as a local relation (no job to collect)."""
     qid = local["query_id"].to_numpy(np.int64)
     doc = local["doc_id"].to_numpy(np.int64)
     score = round_half_up(local["score"].to_numpy())
@@ -657,8 +654,11 @@ def _run_kernel(
     _bucket_kernel (`dfm`/`limit` pick its route). `deleted` rides in
     the kernel's closure (at 100TB ship it as a broadcast roaring
     bitmap partitioned by dbucket; the sorted-array form keeps the
-    kernel numpy-pure). A batch with no scored term matches nothing
-    and runs no job."""
+    kernel numpy-pure). A conjunctive query with an OOV term matches
+    nothing and is dropped; a batch left with no scored term runs no
+    job."""
+    if conjunctive:
+        queries = [q for q in queries if all(t in idf_map for t in q[1])]
     terms = sorted({t for _, ts in queries for t in ts if t in idf_map})
     if not terms:
         return empty_result(postings.sparkSession)
@@ -727,8 +727,8 @@ def search_wand(
 
     Plan: collect the tiny query-term table driver-side (it IS the
     query) and run Snapshot.search_terms over these frames: one
-    dictionary lookup for just the queried terms, then the term-pruned
-    scan -> per-dbucket kernel -> per-query rank (_run_kernel).
+    dictionary lookup for just the queried terms, then the WAND kernel
+    through scatter_gather (_run_kernel).
     """
     snap = Snapshot(
         postings, TermStats(lambda: dictionary), n_docs, avgdl,
@@ -1409,7 +1409,7 @@ class Snapshot:
         if not keys:
             return empty_result(self.postings.sparkSession)
         return qsmod._rank_query_strings(
-            self.postings, parsed, keys, self.terms.df(keys), stats,
+            self.postings, parsed, self.terms.df(keys), stats,
             k, self.deleted,
         )
 

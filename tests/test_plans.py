@@ -3,6 +3,7 @@ be visible in .explain output, not just hoped for (SURVEY §4.2)."""
 
 from __future__ import annotations
 
+import re
 import uuid
 
 import pytest
@@ -17,6 +18,32 @@ def _plan(df) -> str:
             "formatted"
         )
     )
+
+
+def _shape(plan: str) -> tuple[int, int]:
+    """(per-dbucket kernels, rank windows) in a formatted plan."""
+    return (
+        len(re.findall(r"^\(\d+\) FlatMapGroupsInPandas\b", plan, re.M)),
+        len(re.findall(r"^\(\d+\) Window\b", plan, re.M)),
+    )
+
+
+def _collected_plans(monkeypatch) -> list[str]:
+    """Plans of the frames collected to pandas from now on, in order:
+    scatter_gather collects through DataFrame.toPandas on both routes
+    (the pruned postings on the coordinator route, the kernel rows on
+    the distributed one), so its route shows in the last plan here."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    plans: list[str] = []
+    real = DataFrame.toPandas
+
+    def spy(self):
+        plans.append(_plan(self))
+        return real(self)
+
+    monkeypatch.setattr(DataFrame, "toPandas", spy)
+    return plans
 
 
 def test_parquet_filter_pushdown(spark):
@@ -129,7 +156,8 @@ def test_ann_lsh_topk_uses_take_ordered(spark):
 def test_query_session_no_dbucket_shuffle(spark, monkeypatch):
     """QuerySession's postings are cached pre-partitioned on dbucket,
     so the groupBy(dbucket).applyInPandas must NOT plan an Exchange
-    between the cache scan and the kernel (the cold path does)."""
+    between the cache scan and the kernel (the cold path does): a warm
+    distributed search is ONE job, the collect of its kernel rows."""
     from mario_spark import docs, wand
     from mario_spark.fixtures import documents_as_pages
     from mario_spark.postings import build_postings
@@ -143,9 +171,13 @@ def test_query_session_no_dbucket_shuffle(spark, monkeypatch):
     st = docs.corpus_stats(d).collect()[0]
     post, dic, _ = build_postings(d, st["n_docs"], range_width=256)
     sess = QuerySession(post, dic, st["n_docs"], st["avgdl"]).warm()
+    plans = _collected_plans(monkeypatch)
     # driver_limit=0 forces the distributed path (the coordinator fast
     # path would otherwise serve this rare-term query driver-side)
-    plan = _plan(sess.search([(0, "join scan")], driver_limit=0))
+    assert _job_count(
+        spark, lambda: sess.search([(0, "join scan")], driver_limit=0)
+    ) <= 1
+    (plan,) = plans
 
     def exchange_between_scan_and_kernel(plan_text: str) -> bool:
         # walk the tree section below the kernel node until the first
@@ -167,12 +199,12 @@ def test_query_session_no_dbucket_shuffle(spark, monkeypatch):
     # and the cold path DOES have that exchange (sanity for the matcher)
     from mario_spark.fixtures import query_terms_df
 
-    cold = _plan(
-        search_wand(
-            post, dic, query_terms_df(spark, [(0, "join scan")]),
-            st["n_docs"], st["avgdl"],
-        )
+    plans.clear()
+    search_wand(
+        post, dic, query_terms_df(spark, [(0, "join scan")]),
+        st["n_docs"], st["avgdl"],
     )
+    (cold,) = plans
     assert exchange_between_scan_and_kernel(cold)
     sess.close()
 
@@ -180,10 +212,13 @@ def test_query_session_no_dbucket_shuffle(spark, monkeypatch):
     post_pos, dic_pos, n_pos, ad_pos = _positional_index(spark)
     psess = QuerySession(post_pos, dic_pos, n_pos, ad_pos).warm()
     for warm in (
-        psess.search_phrase([(0, "the data")]),
-        psess.search_query_string([(0, '+data "the web" -crawl')]),
+        lambda: psess.search_phrase([(0, "the data")]),
+        lambda: psess.search_query_string([(0, '+data "the web" -crawl')]),
     ):
-        assert not exchange_between_scan_and_kernel(_plan(warm))
+        plans.clear()
+        assert _job_count(spark, warm) <= 1
+        (plan,) = plans
+        assert not exchange_between_scan_and_kernel(plan)
     psess.close()
 
 
@@ -203,66 +238,75 @@ def _positional_index(spark):
     return post, dictionary_from_postings(post), st["n_docs"], st["avgdl"]
 
 
-def test_cold_dbucket_operators_plan_one_kernel_one_window(
+def test_cold_dbucket_operators_plan_one_kernel_no_window(
     spark, monkeypatch
 ):
     """Every cold index-backed operator is ONE scatter-gather: on the
     distributed route (forced here by a zero limit; these small batches
-    would otherwise take the coordinator route) a single per-dbucket
-    pandas kernel and a single per-query rank window over its output —
-    no operator adds a second kernel pass or rank tail."""
-    import re
-
+    would otherwise take the coordinator route) it collects a single
+    per-dbucket pandas kernel's rows and ranks them on the driver, so
+    neither the collected frame nor the returned one plans a rank
+    window, and no operator adds a second kernel pass."""
     from mario_spark import phrase as ph
     from mario_spark import qs, wand
+    from mario_spark.fields import build_field_doc_table, field_tf
     from mario_spark.fixtures import query_terms_df
+    from mario_spark.postings import dictionary_from_postings, encode_tf_rows
     from mario_spark.wand import search_wand
 
     monkeypatch.setattr(wand, "DRIVER_LIMIT", 0)
 
     post, dic, n, ad = _positional_index(spark)
+    fdocs = build_field_doc_table(
+        spark.read.parquet(f"{SF_DIR}/documents.parquet"),
+        {"title": F.substring("text", 1, 64), "contents": F.col("text")},
+        positions=True,
+    )
+    fpost = encode_tf_rows(field_tf(fdocs), 256)
+    fdic = dictionary_from_postings(fpost)
     ops = {
-        "search_wand": search_wand(
+        "search_wand": lambda: search_wand(
             post, dic, query_terms_df(spark, [(0, "data web")]), n, ad
         ),
-        "search_phrase": ph.search_phrase(
+        "search_phrase": lambda: ph.search_phrase(
             post, dic, [(0, ["the", "data"])], n, ad
         ),
-        "search_phrase_prefix": ph.search_phrase_prefix(
+        "search_phrase_prefix": lambda: ph.search_phrase_prefix(
             post, dic, [(0, ["the"], "da")], n, ad
         ),
-        "search_span_or": ph.search_span_or(
+        "search_span_or": lambda: ph.search_span_or(
             post, dic, [(0, [["the", "data"], ["web"]])], n, ad
         ),
-        "search_span_near_unordered": ph.search_span_near_unordered(
+        "search_span_near_unordered": lambda: ph.search_span_near_unordered(
             post, dic, [(0, ["data", "the"])], n, ad
         ),
-        "search_span_not": ph.search_span_not(
+        "search_span_not": lambda: ph.search_span_not(
             post, dic, [(0, ["the", "data"], "web")], n, ad
         ),
-        "search_span_first": ph.search_span_first(
+        "search_span_first": lambda: ph.search_span_first(
             post, dic, [(0, ["the", "data"], 20)], n, ad
         ),
-        "search_span_contain": ph.search_span_contain(
-            post, dic, [(0, "the", "data", 3, "web")], n, ad
+        "search_span_contain": lambda: ph.search_span_contain(
+            post, dic, [(0, "the", "data", 3, "query")], n, ad
         ),
-        "search_query_string_indexed": qs.search_query_string_indexed(
+        "search_query_string_indexed": lambda: qs.search_query_string_indexed(
             post, dic, [(0, '+data "the web" -crawl')], n, ad
         ),
-        "search_query_string_fields_indexed": (
+        "search_query_string_fields_indexed": lambda: (
             qs.search_query_string_fields_indexed(
-                post, dic, [(0, 'title:data "the web"')],
+                fpost, fdic, [(0, 'title:data "the query"')],
                 {"title": {"n_docs": n, "avgdl": ad},
                  "contents": {"n_docs": n, "avgdl": ad}},
                 "contents",
             )
         ),
     }
-    for name, df in ops.items():
-        plan = _plan(df)
-        kernels = re.findall(r"^\(\d+\) FlatMapGroupsInPandas\b", plan, re.M)
-        windows = re.findall(r"^\(\d+\) Window\b", plan, re.M)
-        assert (len(kernels), len(windows)) == (1, 1), name
+    plans = _collected_plans(monkeypatch)
+    for name, op in ops.items():
+        plans.clear()
+        df = op()
+        assert [_shape(p) for p in plans] == [(1, 0)], name
+        assert _shape(_plan(df)) == (0, 0), name
 
 
 def _job_count(spark, fn) -> int:
@@ -286,7 +330,8 @@ def test_cold_searches_pay_only_for_their_own_jobs(spark, tmp_path):
     multi-segment index with a tombstone generation runs at most ONE
     job: the dictionary lookup and the tombstones are read on the
     driver (pyarrow) and the small batch takes the coordinator route,
-    one collect of its pruned postings. Opening a segment table infers
+    one collect of its pruned postings; a batch that cannot match runs
+    none. Opening a segment table infers
     no schema, and the query-term frame and the empty result are local
     relations."""
     from mario_spark.fixtures import pages_df, query_terms_df
@@ -323,6 +368,18 @@ def test_cold_searches_pay_only_for_their_own_jobs(spark, tmp_path):
         jobs = _job_count(spark, lambda: rows.extend(call().collect()))
         assert jobs <= 1, (name, jobs)
         assert rows, name
+    # an OOV phrase member, must clause or conjunctive term drops its
+    # query before the scan: a batch left with no query runs no job
+    for call in (
+        lambda: idx.search_phrase([(0, f"{a} zzzqqq")], k=10),
+        lambda: idx.search_query_string([(0, f"+zzzqqq {a}")], k=10),
+        lambda: idx.open_pit().search(
+            [(0, f"{a} zzzqqq")], k=10, conjunctive=True
+        ),
+    ):
+        rows = []
+        assert _job_count(spark, lambda: rows.extend(call().collect())) == 0
+        assert rows == []
 
     def open_tables():
         idx.postings(), idx.docs(), idx.dictionary(), idx.deleted_ids()
@@ -338,11 +395,11 @@ def test_cold_search_over_the_limit_keeps_scatter_gather(
     spark, tmp_path, monkeypatch
 ):
     """A cold call whose candidate postings exceed DRIVER_LIMIT keeps
-    the distributed plan (one kernel, one rank window) and returns the
-    rows the coordinator route returns under the default limit, whose
-    plan is a driver-built local relation."""
-    import re
-
+    the distributed plan: it collects one kernel's rows (no rank
+    window) in at most two jobs, the postings scan's shuffle and the
+    kernel, and returns the rows the coordinator route returns under
+    the default limit, which collects the pruned postings instead.
+    Either way the returned frame is a driver-built local relation."""
     from mario_spark import wand
     from mario_spark.fixtures import pages_df, query_terms_df
     from mario_spark.index import Index
@@ -371,22 +428,23 @@ def test_cold_search_over_the_limit_keeps_scatter_gather(
         ),
     }
 
-    def shape(df) -> tuple[int, int]:
-        plan = _plan(df)
-        return (
-            len(re.findall(r"^\(\d+\) FlatMapGroupsInPandas\b", plan, re.M)),
-            len(re.findall(r"^\(\d+\) Window\b", plan, re.M)),
-        )
-
+    plans = _collected_plans(monkeypatch)
     for name, call in calls.items():
+        plans.clear()
         small = call()
-        assert shape(small) == (0, 0), name
+        assert [_shape(p) for p in plans] == [(0, 0)], name
+        assert _shape(_plan(small)) == (0, 0), name
         want = sorted(small.collect())
         assert want, name
+        got = []
+        plans.clear()
         with monkeypatch.context() as m:
             m.setattr(wand, "DRIVER_LIMIT", 1)
-            big = call()
-        assert shape(big) == (1, 1), name
+            jobs = _job_count(spark, lambda: got.append(call()))
+        assert [_shape(p) for p in plans] == [(1, 0)], name
+        assert jobs <= 2, (name, jobs)
+        (big,) = got
+        assert _shape(_plan(big)) == (0, 0), name
         assert sorted(big.collect()) == want, name
 
 
@@ -399,8 +457,6 @@ def test_positional_batches_weigh_more_against_the_limit(
     takes the coordinator route while the phrase and query_string
     batches over the same terms stay distributed, with equal rows on
     either route."""
-    import re
-
     from mario_spark import wand
     from mario_spark.fixtures import pages_df, query_terms_df
     from mario_spark.index import Index
@@ -410,13 +466,6 @@ def test_positional_batches_weigh_more_against_the_limit(
     top = idx.dictionary().orderBy(F.desc("df"), "term").limit(12).collect()
     (a, da), (b, db) = [(r["term"], r["df"]) for r in top[10:12]]
     n = da + db  # the candidate postings of every batch below
-
-    def shape(df) -> tuple[int, int]:
-        plan = _plan(df)
-        return (
-            len(re.findall(r"^\(\d+\) FlatMapGroupsInPandas\b", plan, re.M)),
-            len(re.findall(r"^\(\d+\) Window\b", plan, re.M)),
-        )
 
     calls = {
         "search": (lambda: idx.search(
@@ -432,29 +481,40 @@ def test_positional_batches_weigh_more_against_the_limit(
         ),
     }
     assert wand.POSITIONAL_WEIGHT > 1
+    plans = _collected_plans(monkeypatch)
     for name, (call, weight) in calls.items():
         want = sorted(call().collect())
         assert want, name
         for limit in (n, n * weight - 1, n * weight):
             monkeypatch.setattr(wand, "DRIVER_LIMIT", limit)
+            plans.clear()
             got = call()
+            # the coordinator route collects the postings, the
+            # distributed one the kernel's rows
             driver = n * weight <= limit
-            assert shape(got) == ((0, 0) if driver else (1, 1)), (
-                name, limit,
-            )
+            assert [_shape(p) for p in plans] == (
+                [(0, 0)] if driver else [(1, 0)]
+            ), (name, limit)
+            assert _shape(_plan(got)) == (0, 0), (name, limit)
             assert sorted(got.collect()) == want, (name, limit)
 
 
 def test_driver_rank_finish_rounds_like_spark(spark):
-    """The coordinator route's finish equals query.topk: scores rounded
-    exactly as Spark's round(x, 4) (HALF_UP on the shortest repr, where
+    """The driver finish equals query.topk: scores rounded exactly as
+    Spark's round(x, 4) (HALF_UP on the shortest repr, where
     floor(x * 1e4 + 0.5) misrounds near ties), then ranked by score
-    desc, doc_id asc."""
+    desc, doc_id asc. Fed each bucket's _local_topk rows, as the
+    kernels feed it, it still equals query.topk over all rows."""
     import numpy as np
     import pandas as pd
 
     from mario_spark.query import topk
-    from mario_spark.wand import _rank_on_driver, round_half_up
+    from mario_spark.wand import (
+        _local_topk,
+        _rank_on_driver,
+        _result_frame,
+        round_half_up,
+    )
 
     vals = [5.39575, 0.10704999999999999, 15.926449999999999]
     assert list(round_half_up(np.array(vals))) == [5.3958, 0.107, 15.9264]
@@ -472,15 +532,39 @@ def test_driver_rank_finish_rounds_like_spark(spark):
         "doc_id": rng.permutation(scores.size).astype(np.int64),
         "score": scores,
     })
-    for k in (10, scores.size):
+    # two queries whose 80 docs all round to one score, so each bucket
+    # below holds more than k docs tied at the k-th rounded score. In
+    # query 7 the 20 lowest doc ids score 5.39575, which Spark rounds
+    # up to 5.3958 and floor(x * 1e4 + 0.5) rounds down; in query 8 the
+    # lower the doc id, the lower the raw float
+    j = np.arange(80)
+    tied = pd.DataFrame({
+        "query_id": np.repeat(np.array([7, 8], dtype=np.int64), 80),
+        "doc_id": scores.size + np.r_[j, 80 + j].astype(np.int64),
+        "score": np.r_[
+            np.where(j < 20, 5.39575, 5.3958), 31 + (j - 40) * 1e-6
+        ],
+    })
+    local = pd.concat([local, tied], ignore_index=True)
+    key = ["query_id", "rank"]
+
+    def check(out, k):
         want = topk(spark.createDataFrame(local), k).toPandas()
-        out = _rank_on_driver(spark, local, k).toPandas()
-        key = ["query_id", "rank"]
         pd.testing.assert_frame_equal(
             out.sort_values(key, ignore_index=True),
             want.sort_values(key, ignore_index=True),
             check_exact=True,
         )
+
+    for k in (10, len(local)):
+        check(_rank_on_driver(spark, local, k).toPandas(), k)
+    # the kernels' path: each bucket's top-k per query (_local_topk),
+    # then the finish, equals the global top-k
+    picked = _result_frame([
+        _local_topk(q, g["doc_id"].to_numpy(), g["score"].to_numpy(), 10)
+        for (_, q), g in local.groupby([local["doc_id"] % 4, "query_id"])
+    ])
+    check(_rank_on_driver(spark, picked, 10).toPandas(), 10)
 
 
 def test_open_session_sums_segment_dictionaries_on_driver(spark, tmp_path):
