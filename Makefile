@@ -15,7 +15,7 @@ test-serving:     ## fast loop: rank-identity, warm/cold and reader tests
 		tests/test_postings_wand.py tests/test_session_sharded.py \
 		tests/test_qs_indexed.py tests/test_phrase_fields.py \
 		tests/test_fuzzy.py tests/test_append.py tests/test_deletes.py \
-		tests/test_plans.py
+		tests/test_plans.py tests/test_index_lifecycle.py
 
 test-bench:       ## the benchmark's own span/event-log parser tests
 	python -m pytest perfbench/test_spans.py -q

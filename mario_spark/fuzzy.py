@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mario_spark.postings import idf as _idf
+from mario_spark.session import local_frame
 from mario_spark.wand import _run_kernel
 
 
@@ -113,7 +114,7 @@ def suggest_terms(
     absent from the index — an input that exists as a term gets no
     rows. Same tiny broadcast anti-join gate."""
     spark = dictionary.sparkSession
-    inp = spark.createDataFrame([(t,) for t in inputs], "input string")
+    inp = local_frame(spark, [(t,) for t in inputs], "input string")
     cand = (
         dictionary.join(
             F.broadcast(inp),
@@ -376,9 +377,7 @@ def phrase_suggest(
         for iid, terms in inputs
         for pos, t in enumerate(terms)
     ]
-    inp = spark.createDataFrame(
-        rows, "input_id long, pos int, input string"
-    )
+    inp = local_frame(spark, rows, "input_id long, pos int, input string")
     cand = (
         dictionary.join(
             F.broadcast(inp),
@@ -407,7 +406,8 @@ def phrase_suggest(
             for t1, d1 in by_pos.get((iid, 1), []):
                 phrases.append((iid, t0, t1, d0 + d1))
     if not phrases:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "input_id long, rank long, suggestion string, "
             "freq long, tot_dist long",
@@ -431,7 +431,8 @@ def phrase_suggest(
         last_iid = iid
         if rk <= size:
             ranked.append((iid, rk, sug, freq, td))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         ranked,
         "input_id long, rank long, suggestion string, "
         "freq long, tot_dist long",

@@ -808,18 +808,9 @@ class Index:
         if prev is not None:
             old = old.join(prev, "doc_id", "left_anti")
         self.append(pages, source=source)
-        marker = _read_json(self.paths.deletes_marker) or {
-            "generations": [],
-            "n_deleted": 0,
-        }
-        gen = (max(marker["generations"]) + 1) if marker["generations"] else 0
-        old.write.mode("overwrite").parquet(self.paths.delete_gen(gen))
-        n_old = read_table(self.spark, self.paths.delete_gen(gen)).count()
-        marker["generations"].append(gen)
-        marker["n_deleted"] = int(marker["n_deleted"]) + int(n_old)
-        _atomic_write_json(self.paths.deletes_marker, marker)
+        n_old, _ = self._commit_tombstones(old)
         st = self.stats()
-        st["replaced"] = int(n_old)
+        st["replaced"] = n_old
         return st
 
     # ------------------------------------------------------------- reads
@@ -1192,11 +1183,6 @@ class Index:
         from mario_spark.merge import decode_to_tf_rows
 
         meta = _read_json(self.paths.meta) or {}
-        marker = _read_json(self.paths.deletes_marker) or {
-            "generations": [],
-            "n_deleted": 0,
-        }
-        gen = (max(marker["generations"]) + 1) if marker["generations"] else 0
         # on a field-scoped index a bare term matches ANY field
         # (postings keys are '<field>:<term>'); the scan filter stays a
         # pushable In() either way
@@ -1215,12 +1201,26 @@ class Index:
         prev = self.deleted_ids()
         if prev is not None:
             hits = hits.join(prev, "doc_id", "left_anti")
-        hits.write.mode("overwrite").parquet(self.paths.delete_gen(gen))
-        n_new = read_table(self.spark, self.paths.delete_gen(gen)).count()
+        n_new, total = self._commit_tombstones(hits)
+        return {"deleted": n_new, "total_deleted": total}
+
+    def _commit_tombstones(self, doc_ids: DataFrame) -> tuple[int, int]:
+        """Make `doc_ids` (disjoint from every earlier generation; the
+        callers anti-join them) the next tombstone generation: its
+        parquet is written first (invisible), counted, then ONE
+        deletes-marker commit makes it live. -> (docs tombstoned,
+        n_deleted after the commit)."""
+        marker = _read_json(self.paths.deletes_marker) or {
+            "generations": [],
+            "n_deleted": 0,
+        }
+        gen = max(marker["generations"], default=-1) + 1
+        doc_ids.write.mode("overwrite").parquet(self.paths.delete_gen(gen))
+        n = int(read_table(self.spark, self.paths.delete_gen(gen)).count())
         marker["generations"].append(gen)
-        marker["n_deleted"] = int(marker["n_deleted"]) + int(n_new)
+        marker["n_deleted"] = int(marker["n_deleted"]) + n
         _atomic_write_json(self.paths.deletes_marker, marker)
-        return {"deleted": int(n_new), "total_deleted": marker["n_deleted"]}
+        return n, marker["n_deleted"]
 
     def deleted_ids(self) -> DataFrame | None:
         """Union of committed tombstone generations, or None."""

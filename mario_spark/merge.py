@@ -329,17 +329,13 @@ def select_tiered_merge(
     are selected for one merge. Lowest tier wins first, so write
     amplification stays O(log N) per doc over the index's lifetime —
     the reason Lucene merges tier-by-tier instead of always-everything.
-    Reads only the segment commit markers (no data scan). Returns the
-    seg-id list or None when no tier is over-full."""
+    Reads only the segment commit markers, each once (no data scan).
+    Returns the seg-id list or None when no tier is over-full."""
     import math
 
-    p = index.paths
-    sizes: list[tuple[int, int]] = []
-    for s in p.committed_segments():
-        m = _read_json(p.seg_meta(s)) or {}
-        sizes.append((s, int(m.get("n_docs", 0))))
     tiers: dict[int, list[tuple[int, int]]] = {}
-    for s, n in sizes:
+    for s, m in index.paths.committed_markers().items():
+        n = int(m.get("n_docs", 0))
         t = int(math.floor(math.log(max(n, 1)) / math.log(tier_factor)))
         tiers.setdefault(t, []).append((s, n))
     for t in sorted(tiers):
@@ -363,8 +359,8 @@ def maybe_merge(
     if sel is None:
         return None
     full = set(sel) == set(index.paths.committed_segments())
-    purge = full and index.deleted_ids() is not None
-    return compact_segments(index, sel, purge_deletes=purge)
+    gens = (_read_json(index.paths.deletes_marker) or {}).get("generations")
+    return compact_segments(index, sel, purge_deletes=full and bool(gens))
 
 
 def reshard(catalog, src: str, dst: str, range_width: int) -> "Index":

@@ -14,13 +14,21 @@ Semantics (Lucene PhraseQuery, slop=0):
   scored as one pseudo-term whose idf is the sum of member idfs and
   whose tf is the phrase frequency, exactly Lucene's PhraseWeight.
 
+Every positional operator here (phrase, phrase_prefix and the span_*
+family) is a body over one wand.Snapshot, the reader every search goes
+through: df comes from its TermStats (snap.terms), tombstones from
+snap.deleted, and n_docs/avgdl from snap.scope. So an operator over a
+pinned index (Index.open_pit), a warm QuerySession or a frame-built
+Snapshot scores with the same statistics and masks the same docs.
+
 Distributed shape = search_wand's: document-partitioned postings,
 per-dbucket batch kernel (a phrase's candidate docs need ALL member
 terms in the same dbucket — postings of one doc never straddle
 buckets), bucket-local top-ks merged on the driver. The postings
 scan is pruned to the phrase's terms (pushed filter), and the position
 intersection runs only over docs that survive the doc-id intersection
-of every member term — the classic prox-evaluation order.
+of every member term with tombstones masked (_candidates) — the
+classic prox-evaluation order.
 """
 
 from __future__ import annotations
@@ -35,12 +43,13 @@ from mario_spark.analyze import tokenize_positions_udf
 from mario_spark.docs import assign_doc_ids
 from mario_spark.postings import decode_block_positions
 from mario_spark.query import bm25_contrib, bm25_contrib_np, bm25_idf
+from mario_spark.session import local_frame
 from mario_spark.wand import (
     POSITIONAL_WEIGHT,
+    Snapshot,
     _local_topk,
     _result_frame,
     df_to_idf,
-    lookup_df,
     scatter_gather,
 )
 
@@ -128,18 +137,6 @@ def _chain_match_count(
     return int(np.count_nonzero(alive & win))
 
 
-def _collect_deleted(deleted_docs) -> np.ndarray | None:
-    """DataFrame of tombstoned doc_ids -> sorted unique np array (or
-    None); rides in the task closure like the WAND kernel's set."""
-    if deleted_docs is None:
-        return None
-    arr = np.array(
-        [r["doc_id"] for r in deleted_docs.select("doc_id").collect()],
-        dtype=np.int64,
-    )
-    return np.unique(arr) if arr.size else None
-
-
 def _pos_term_map(pdf: pd.DataFrame) -> dict[str, _PosTermData]:
     """One dbucket's positional postings, decoded per term."""
     return {
@@ -175,36 +172,41 @@ def _positional_gather(
     )
 
 
+def _candidates(
+    term_tds: list[_PosTermData],
+    deleted: np.ndarray | None,
+    also: tuple[np.ndarray, ...] = (),
+) -> tuple[np.ndarray, list[np.ndarray]]:
+    """The candidate step of every positional kernel, in the classic
+    prox-evaluation order: -> (doc ids, row index of those docs in each
+    of `term_tds`). Candidates are the sorted doc ids every member term
+    (and every extra sorted id array in `also`) holds, intersected
+    rarest first, with tombstones masked before any position is
+    read."""
+    sets = sorted([td.ids for td in term_tds] + list(also), key=np.size)
+    cand = sets[0]
+    for ids in sets[1:]:
+        if cand.size == 0:
+            break
+        cand = cand[np.isin(cand, ids, assume_unique=True)]
+    if deleted is not None and cand.size:
+        cand = cand[~np.isin(cand, deleted, assume_unique=True)]
+    return cand, [np.searchsorted(td.ids, cand) for td in term_tds]
+
+
 def _chain_doc_ptfs(
     tds: dict, qterms: list[str], deleted: np.ndarray | None, slop: int = 0
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, list]:
     """One chain against one dbucket: -> (doc_ids, ptf, len, row_idx
-    per term) for candidate docs (doc-id intersection of every member
-    term, rarest first, tombstones masked) — the classic
-    prox-evaluation order. ptf counts the starts admitted within `slop`
-    (_chain_match_count) and is NOT yet filtered to > 0 — span
-    composition needs the span positions, so callers that only need
-    counts filter themselves."""
-    empty = (
-        np.array([], dtype=np.int64),
-        np.array([], dtype=np.float64),
-        np.array([], dtype=np.float64),
-        [],
-    )
+    per term) for its candidate docs (_candidates). ptf counts the
+    starts admitted within `slop` (_chain_match_count) and is NOT yet
+    filtered to > 0 — span composition needs the span positions, so
+    callers that only need counts filter themselves."""
     if any(t not in tds for t in qterms):
-        return empty
+        empty = np.array([], dtype=np.int64)
+        return empty, empty.astype(np.float64), empty.astype(np.float64), []
     term_tds = [tds[t] for t in qterms]
-    order = np.argsort([td.ids.size for td in term_tds])
-    cand = term_tds[order[0]].ids
-    for oi in order[1:]:
-        cand = cand[np.isin(cand, term_tds[oi].ids, assume_unique=True)]
-        if cand.size == 0:
-            return empty
-    if deleted is not None:
-        cand = cand[~np.isin(cand, deleted, assume_unique=True)]
-        if cand.size == 0:
-            return empty
-    rows_per_term = [np.searchsorted(td.ids, cand) for td in term_tds]
+    cand, rows_per_term = _candidates(term_tds, deleted)
     n_terms = len(term_tds)
     ptf = np.zeros(cand.size, dtype=np.float64)
     lens = np.zeros(cand.size, dtype=np.float64)
@@ -229,11 +231,8 @@ def _score_and_topk(qid, ids, ptf, dl, sum_idf, avgdl, k):
 
 
 def search_phrase_prefix(
-    postings: DataFrame,
-    dictionary: DataFrame,
+    snap: Snapshot,
     queries: list[tuple[int, list[str], str]],
-    n_docs: int,
-    avgdl: float,
     k: int = 10,
     max_expansions: int = 50,
 ) -> DataFrame:
@@ -244,42 +243,35 @@ def search_phrase_prefix(
     engines); a doc matches where the fixed terms run consecutively
     and the next token is any expansion. Scored as one pseudo-term
     (Lucene MultiPhraseWeight): idf = Σ idf(fixed) + Σ idf(expansions),
-    tf = admitting-start count. Expansion is ONE pruned dictionary
-    pass; the kernel runs per dbucket like search_phrase: a doc matches
-    at start p iff the fixed terms occur consecutively from p and the
-    NEXT position holds any expansion term (the last-slot position set
-    is the sorted union across expansion terms — Lucene
-    MultiPhraseQuery's union postings view)."""
-    prefixes = sorted({p for _, _, p in queries if p})
-    fixed_all = sorted({t for _, ts, _ in queries for t in ts})
-    pcond = None
-    for p in prefixes:
-        c = F.col("term").startswith(p)
-        pcond = c if pcond is None else (pcond | c)
-    exp_rows = (
-        dictionary.filter(pcond).select("term", "df").collect()
-        if pcond is not None
-        else []
+    tf = admitting-start count. Expansion is ONE TermStats answer for
+    the batch's prefixes (TermStats.prefix_windows), which also primes
+    the expansions' df; the kernel runs per dbucket like search_phrase:
+    a doc matches at start p iff the fixed terms occur consecutively
+    from p and the NEXT position holds any expansion term (the
+    last-slot position set is the sorted union across expansion terms —
+    Lucene MultiPhraseQuery's union postings view). An empty prefix
+    expands to nothing."""
+    _, n_docs, avgdl = snap.scope(None)
+    windows = snap.terms.prefix_windows(sorted({p for *_, p in queries if p}))
+    exps_of = {p: ts[:max_expansions] for p, ts in windows.items()}
+    dfm = snap.terms.df(
+        sorted(
+            {t for _, ts, _ in queries for t in ts}
+            | {t for ts in exps_of.values() for t in ts}
+        )
     )
-    exp_dfm = {r["term"]: int(r["df"]) for r in exp_rows}
-    dfm = {**lookup_df(dictionary, fixed_all), **exp_dfm}
     idf_map = df_to_idf(dfm, n_docs)
-    exp_terms_sorted = sorted(exp_dfm)
     kq: list[tuple[int, list[str], list[str], float]] = []
     for qid, fixed, prefix in queries:
-        if any(t not in idf_map for t in fixed):
-            continue  # OOV fixed member -> matches nothing
-        exps = [t for t in exp_terms_sorted if t.startswith(prefix)]
-        exps = exps[:max_expansions]
-        if not exps:
-            continue  # no expansion -> matches nothing (ES semantics)
-        sum_idf = sum(idf_map[t] for t in fixed) + sum(idf_map[t] for t in exps)
-        kq.append((qid, list(fixed), exps, sum_idf))
-    needed = sorted(
-        {t for _, fx, ex, _ in kq for t in fx}
-        | {t for _, fx, ex, _ in kq for t in ex}
-    )
-    ad = float(avgdl)
+        exps = exps_of.get(prefix, [])
+        # an OOV fixed member, or no expansion (ES), matches nothing
+        if exps and all(t in idf_map for t in fixed):
+            sum_idf = sum(idf_map[t] for t in fixed) + sum(
+                idf_map[t] for t in exps
+            )
+            kq.append((qid, list(fixed), exps, sum_idf))
+    needed = sorted({t for _, fx, ex, _ in kq for t in (*fx, *ex)})
+    deleted = snap.deleted
 
     def score_one(tds, qid, fixed, exps, sum_idf):
         if any(t not in tds for t in fixed):
@@ -288,12 +280,8 @@ def search_phrase_prefix(
         if not exp_tds:
             return None
         fixed_tds = [tds[t] for t in fixed]
-        cand = fixed_tds[0].ids
-        for td in fixed_tds[1:]:
-            cand = cand[np.isin(cand, td.ids, assume_unique=True)]
         exp_union = np.unique(np.concatenate([td.ids for td in exp_tds]))
-        cand = cand[np.isin(cand, exp_union, assume_unique=True)]
-        rows_fixed = [np.searchsorted(td.ids, cand) for td in fixed_tds]
+        cand, rows_fixed = _candidates(fixed_tds, deleted, (exp_union,))
         ptf = np.zeros(cand.size, dtype=np.float64)
         dl = np.zeros(cand.size, dtype=np.float64)
         for ci in range(cand.size):
@@ -310,61 +298,44 @@ def search_phrase_prefix(
             lp = np.sort(np.concatenate(last))
             ptf[ci] = _chain_match_count(term_pos + [lp], len(fixed) + 1, 0)
             dl[ci] = float(fixed_tds[0].lens[int(rows_fixed[0][ci])])
-        return _score_and_topk(qid, cand, ptf, dl, sum_idf, ad, k)
+        return _score_and_topk(qid, cand, ptf, dl, sum_idf, avgdl, k)
 
     return _positional_gather(
-        postings, needed, kq, score_one, k, dfm
+        snap.postings, needed, kq, score_one, k, dfm
     )
 
 
 def search_phrase(
-    postings: DataFrame,
-    dictionary: DataFrame,
+    snap: Snapshot,
     phrase_queries: list[tuple[int, list[str]]],
-    n_docs: int,
-    avgdl: float,
     k: int = 10,
     slop: int = 0,
-    deleted_docs: DataFrame | None = None,
+    field: str | None = None,
 ) -> DataFrame:
-    """positional postings x phrases -> (query_id, rank, doc_id, score).
-
-    deleted_docs = tombstoned doc ids (Index delete-by-query), applied
-    with Lucene live-docs semantics (excluded from results, stats
-    stale until compaction).
+    """`snap`'s positional postings x phrases -> (query_id, rank,
+    doc_id, score). The df of every member term comes from snap.terms,
+    and snap's tombstones are masked with Lucene live-docs semantics: a
+    tombstoned doc is masked out BEFORE local top-k, so it is replaced
+    by the next-best, never just dropped from the page, while the stats
+    keep counting it until compaction.
 
     `phrase_queries` is [(query_id, [ordered terms])]; terms must be in
-    analyzer-output form (use analyze.py_tokenize on raw text).
+    analyzer-output form (Snapshot.search_phrase analyzes raw text). On
+    a fields=... snapshot pass `field`: the terms are keyed
+    `<field>:<term>` and score with the field's statistics.
 
-    slop > 0 = ordered proximity (ES span_near in_order=true; NOTE this
-    deliberately deviates from match_phrase's sloppy-freq semantics,
-    which also admits REORDERED terms once slop >= 2 — order is
-    enforced here): terms must appear in query order within a window of
-    len(terms) + slop positions; ptf counts the admitting starts.
+    Per bucket, each phrase scores as Lucene's PhraseWeight over its
+    chain matches. slop > 0 = ordered proximity (ES span_near
+    in_order=true; NOTE this deliberately deviates from match_phrase's
+    sloppy-freq semantics, which also admits REORDERED terms once slop
+    >= 2 — order is enforced here): terms must appear in query order
+    within a window of len(terms) + slop positions; ptf counts the
+    admitting starts.
     """
-    terms = sorted({t for _, ts in phrase_queries for t in ts})
-    return _rank_phrases(
-        postings, phrase_queries, lookup_df(dictionary, terms), n_docs,
-        avgdl, k, slop, _collect_deleted(deleted_docs),
-    )
-
-
-def _rank_phrases(
-    postings: DataFrame,
-    phrase_queries: list[tuple[int, list[str]]],
-    dfm: dict[str, int],
-    n_docs: float,
-    avgdl: float,
-    k: int = 10,
-    slop: int = 0,
-    deleted: np.ndarray | None = None,
-) -> DataFrame:
-    """search_phrase's body, given the member terms' {term: df}
-    (search_phrase looks it up in the dictionary, Snapshot.search_phrase
-    asks its TermStats). Per bucket, each phrase scores as Lucene's
-    PhraseWeight over its chain matches; a tombstoned doc is masked
-    out BEFORE local top-k, so it is replaced by the next-best, never
-    just dropped from the page."""
+    snap.require_positions("match_phrase")
+    pfx, n_docs, avgdl = snap.scope(field)
+    phrase_queries = [(q, [pfx + t for t in ts]) for q, ts in phrase_queries]
+    dfm = snap.terms.df(sorted({t for _, ts in phrase_queries for t in ts}))
     idf_map = df_to_idf(dfm, n_docs)
     # a phrase containing an OOV term matches nothing — drop it now
     queries = [
@@ -372,15 +343,15 @@ def _rank_phrases(
         for qid, ts in phrase_queries
         if ts and all(t in idf_map for t in ts)
     ]
-    ad = float(avgdl)
+    deleted = snap.deleted
 
     def score_one(tds, qid, qterms, sum_idf):
         ids, ptf, lens, _ = _chain_doc_ptfs(tds, qterms, deleted, slop)
-        return _score_and_topk(qid, ids, ptf, lens, sum_idf, ad, k)
+        return _score_and_topk(qid, ids, ptf, lens, sum_idf, avgdl, k)
 
     terms = sorted({t for _, ts, _ in queries for t in ts})
     return _positional_gather(
-        postings, terms, queries, score_one, k, dfm
+        snap.postings, terms, queries, score_one, k, dfm
     )
 
 
@@ -403,25 +374,22 @@ def _chain_match_spans(
 
 
 def search_span_or(
-    postings: DataFrame,
-    dictionary: DataFrame,
+    snap: Snapshot,
     span_queries: list[tuple[int, list[list[str]]]],
-    n_docs: int,
-    avgdl: float,
     k: int = 10,
-    deleted_docs: DataFrame | None = None,
 ) -> DataFrame:
-    """Lucene SpanOrQuery over positional postings: a doc matches if
-    ANY alternative phrase chain occurs; freq = total span count across
-    alternatives; weight idf = Σ idf over the DISTINCT present terms of
-    ALL alternatives (SpanWeight.buildSimWeight collects every clause's
-    terms with df > 0, including clauses whose other member is OOV).
+    """Lucene SpanOrQuery over `snap`'s positional postings: a doc
+    matches if ANY alternative phrase chain occurs; freq = total span
+    count across alternatives; weight idf = Σ idf over the DISTINCT
+    present terms of ALL alternatives (SpanWeight.buildSimWeight
+    collects every clause's terms with df > 0, including clauses whose
+    other member is OOV).
 
     `span_queries` = [(query_id, [[chain terms], ...])]."""
-    all_terms = sorted(
-        {t for _, chains in span_queries for ch in chains for t in ch}
+    _, n_docs, avgdl = snap.scope(None)
+    dfm = snap.terms.df(
+        sorted({t for _, chains in span_queries for ch in chains for t in ch})
     )
-    dfm = lookup_df(dictionary, all_terms)
     idf_map = df_to_idf(dfm, n_docs)
     queries = []
     for qid, chains in span_queries:
@@ -433,8 +401,7 @@ def search_span_or(
         live = [ch for ch in chains if all(t in idf_map for t in ch)]
         if live and sidf > 0:
             queries.append((qid, live, sidf))
-    ad = float(avgdl)
-    deleted = _collect_deleted(deleted_docs)
+    deleted = snap.deleted
 
     def score_one(tds, qid, chains, sidf):
         freq: dict[int, float] = {}
@@ -451,23 +418,19 @@ def search_span_or(
         ids = np.array(sorted(freq), dtype=np.int64)
         ptf = np.array([freq[int(d)] for d in ids], dtype=np.float64)
         dl = np.array([dlen[int(d)] for d in ids], dtype=np.float64)
-        return _score_and_topk(qid, ids, ptf, dl, sidf, ad, k)
+        return _score_and_topk(qid, ids, ptf, dl, sidf, avgdl, k)
 
     live_terms = sorted({t for _, chs, _ in queries for ch in chs for t in ch})
     return _positional_gather(
-        postings, live_terms, queries, score_one, k, dfm
+        snap.postings, live_terms, queries, score_one, k, dfm
     )
 
 
 def search_span_near_unordered(
-    postings: DataFrame,
-    dictionary: DataFrame,
+    snap: Snapshot,
     pair_queries: list[tuple[int, list[str]]],
-    n_docs: int,
-    avgdl: float,
     slop: int = 2,
     k: int = 10,
-    deleted_docs: DataFrame | None = None,
 ) -> DataFrame:
     """Lucene span_near in_order=false over a term PAIR: a doc matches
     where the two terms occur within `slop` intervening positions in
@@ -477,8 +440,8 @@ def search_span_near_unordered(
     counting convention as the ordered path); scored as PhraseWeight
     (idf = sum of member idfs, saturated pseudo-term tf); an OOV member
     empties the query like match_phrase."""
-    all_terms = sorted({t for _, ts in pair_queries for t in ts})
-    dfm = lookup_df(dictionary, all_terms)
+    _, n_docs, avgdl = snap.scope(None)
+    dfm = snap.terms.df(sorted({t for _, ts in pair_queries for t in ts}))
     idf_map = df_to_idf(dfm, n_docs)
     queries = []
     for qid, ts in pair_queries:
@@ -491,18 +454,14 @@ def search_span_near_unordered(
             queries.append(
                 (int(qid), ts[0], ts[1], sum(idf_map[t] for t in ts))
             )
-    ad, w = float(avgdl), int(slop) + 1
-    deleted = _collect_deleted(deleted_docs)
+    w = int(slop) + 1
+    deleted = snap.deleted
 
     def score_one(tds, qid, t0, t1, sidf):
         if t0 not in tds or t1 not in tds:
             return None
         ta, tb = tds[t0], tds[t1]
-        ids = ta.ids[np.isin(ta.ids, tb.ids, assume_unique=True)]
-        if deleted is not None:
-            ids = ids[~np.isin(ids, deleted, assume_unique=True)]
-        ra = np.searchsorted(ta.ids, ids)
-        rb = np.searchsorted(tb.ids, ids)
+        ids, (ra, rb) = _candidates([ta, tb], deleted)
         ptf = np.zeros(ids.size, dtype=np.float64)
         dl = np.zeros(ids.size, dtype=np.float64)
         for ci in range(ids.size):
@@ -514,45 +473,42 @@ def search_span_near_unordered(
             hi = np.searchsorted(pb, pa + w, side="right")
             ptf[ci] = float(np.count_nonzero(hi > lo))
             dl[ci] = float(ta.lens[int(ra[ci])])
-        return _score_and_topk(qid, ids, ptf, dl, sidf, ad, k)
+        return _score_and_topk(qid, ids, ptf, dl, sidf, avgdl, k)
 
     live_terms = sorted({t for _, t0, t1, _ in queries for t in (t0, t1)})
     return _positional_gather(
-        postings, live_terms, queries, score_one, k, dfm
+        snap.postings, live_terms, queries, score_one, k, dfm
     )
 
 
 def search_span_not(
-    postings: DataFrame,
-    dictionary: DataFrame,
+    snap: Snapshot,
     span_queries: list[tuple[int, list[str], str]],
-    n_docs: int,
-    avgdl: float,
     k: int = 10,
     pre: int = 1,
     post: int = 1,
-    deleted_docs: DataFrame | None = None,
 ) -> DataFrame:
-    """Lucene SpanNotQuery over positional postings: matches of the
-    include phrase chain whose span, widened by `pre` positions before
-    and `post` after, contains NO occurrence of the exclude term.
-    freq = surviving span count; weight idf covers the INCLUDE terms
-    only (the exclusion is match-time filtering, exactly Lucene).
+    """Lucene SpanNotQuery over `snap`'s positional postings: matches
+    of the include phrase chain whose span, widened by `pre` positions
+    before and `post` after, contains NO occurrence of the exclude
+    term. freq = surviving span count; weight idf covers the INCLUDE
+    terms only (the exclusion is match-time filtering, exactly Lucene).
     An OOV/absent exclude term excludes nothing (pure phrase).
 
     `span_queries` = [(query_id, [include terms], exclude_term)]."""
+    _, n_docs, avgdl = snap.scope(None)
     inc_terms = sorted({t for _, ts, _ in span_queries for t in ts})
-    all_terms = sorted(set(inc_terms) | {x for _, _, x in span_queries})
     # one lookup: the exclude terms' df only sizes the scan
-    dfm = lookup_df(dictionary, all_terms)
+    dfm = snap.terms.df(
+        sorted(set(inc_terms) | {x for _, _, x in span_queries})
+    )
     idf_map = df_to_idf({t: dfm[t] for t in inc_terms if t in dfm}, n_docs)
     queries = [
         (qid, ts, x, sum(idf_map[t] for t in ts))
         for qid, ts, x in span_queries
         if all(t in idf_map for t in ts)
     ]
-    ad = float(avgdl)
-    deleted = _collect_deleted(deleted_docs)
+    deleted = snap.deleted
     pre_i, post_i = int(pre), int(post)
 
     def score_one(tds, qid, qterms, xterm, sidf):
@@ -580,44 +536,39 @@ def search_span_not(
                     hi = np.searchsorted(xpos, ends + post_i, "right")
                     starts = starts[hi == lo]  # no overlap survives
             ptf[ci] = starts.size
-        return _score_and_topk(qid, ids_all, ptf, lens, sidf, ad, k)
+        return _score_and_topk(qid, ids_all, ptf, lens, sidf, avgdl, k)
 
     live_terms = sorted({t for _, ts, x, _ in queries for t in (*ts, x)})
     return _positional_gather(
-        postings, live_terms, queries, score_one, k, dfm
+        snap.postings, live_terms, queries, score_one, k, dfm
     )
 
 
 def search_span_first(
-    postings: DataFrame,
-    dictionary: DataFrame,
+    snap: Snapshot,
     span_queries: list[tuple[int, list[str], int]],
-    n_docs: int,
-    avgdl: float,
     k: int = 10,
-    deleted_docs: DataFrame | None = None,
 ) -> DataFrame:
     """Lucene SpanFirstQuery(SpanNearQuery(chain, slop=0), end) over
-    positional postings: a chain match counts only if its span lies
-    entirely within the first `end` token positions — i.e. its
-    EXCLUSIVE end (0-based start + chain length) is <= `end`. freq =
-    qualifying span count; weight idf = Σ idf over the chain terms
+    `snap`'s positional postings: a chain match counts only if its
+    span lies entirely within the first `end` token positions — i.e.
+    its EXCLUSIVE end (0-based start + chain length) is <= `end`. freq
+    = qualifying span count; weight idf = Σ idf over the chain terms
     (SpanWeight), scored as one saturated pseudo-term like every
     span/phrase query here ("title-like prominence without a separate
     field" is the classic use).
 
     `span_queries` = [(query_id, [chain terms], end)].
     """
-    all_terms = sorted({t for _, ts, _ in span_queries for t in ts})
-    dfm = lookup_df(dictionary, all_terms)
+    _, n_docs, avgdl = snap.scope(None)
+    dfm = snap.terms.df(sorted({t for _, ts, _ in span_queries for t in ts}))
     idf_map = df_to_idf(dfm, n_docs)
     queries = [
         (qid, ts, int(end), sum(idf_map[t] for t in ts))
         for qid, ts, end in span_queries
         if all(t in idf_map for t in ts)
     ]
-    ad = float(avgdl)
-    deleted = _collect_deleted(deleted_docs)
+    deleted = snap.deleted
 
     def score_one(tds, qid, qterms, end, sidf):
         ids, _, lens, rows_per_term = _chain_doc_ptfs(tds, qterms, deleted)
@@ -633,11 +584,11 @@ def search_span_first(
             _, ends = _chain_match_spans(term_pos, len(qterms))
             # ends are inclusive last positions; exclusive = +1
             ptf[ci] = float(np.count_nonzero(ends + 1 <= end))
-        return _score_and_topk(qid, ids, ptf, lens, sidf, ad, k)
+        return _score_and_topk(qid, ids, ptf, lens, sidf, avgdl, k)
 
     live_terms = sorted({t for _, ts, _, _ in queries for t in ts})
     return _positional_gather(
-        postings, live_terms, queries, score_one, k, dfm
+        snap.postings, live_terms, queries, score_one, k, dfm
     )
 
 
@@ -705,19 +656,15 @@ def search_intervals_match(
 
 
 def search_span_contain(
-    postings: DataFrame,
-    dictionary: DataFrame,
+    snap: Snapshot,
     span_queries: list[tuple[int, str, str, int, str]],
-    n_docs: int,
-    avgdl: float,
     mode: str = "containing",
     k: int = 10,
-    deleted_docs: DataFrame | None = None,
 ) -> DataFrame:
-    """Lucene SpanContainingQuery / SpanWithinQuery over positional
-    postings. big = an ORDERED span_near pair (t1 then t2 within
-    max_gaps intervening tokens, greedy-minimal end per start — the
-    SpanNearQuery ordered iterator), little = a single term.
+    """Lucene SpanContainingQuery / SpanWithinQuery over `snap`'s
+    positional postings. big = an ORDERED span_near pair (t1 then t2
+    within max_gaps intervening tokens, greedy-minimal end per start —
+    the SpanNearQuery ordered iterator), little = a single term.
 
     mode="containing": matches are BIG spans [s, e] holding a little
     occurrence (s <= z <= e); freq = surviving big spans, weight idf =
@@ -730,12 +677,12 @@ def search_span_contain(
     """
     if mode not in ("containing", "within"):
         raise ValueError(f"mode must be containing|within, got {mode!r}")
+    _, n_docs, avgdl = snap.scope(None)
     big_terms = sorted({t for _, t1, t2, _, _ in span_queries for t in (t1, t2)})
     lit_terms = sorted({x for *_, x in span_queries})
-    all_terms = sorted(set(big_terms) | set(lit_terms))
     need = big_terms if mode == "containing" else lit_terms
     # one lookup: the other side's df only sizes the scan
-    dfm = lookup_df(dictionary, all_terms)
+    dfm = snap.terms.df(sorted(set(big_terms) | set(lit_terms)))
     idf_map = df_to_idf({t: dfm[t] for t in need if t in dfm}, n_docs)
     queries = []
     for qid, t1, t2, g, x in span_queries:
@@ -747,24 +694,14 @@ def search_span_contain(
             else idf_map.get(x, 0.0)
         )
         queries.append((qid, t1, t2, int(g), x, sidf))
-    ad = float(avgdl)
-    deleted = _collect_deleted(deleted_docs)
+    deleted = snap.deleted
     containing = mode == "containing"
 
     def score_one(tds, qid, t1, t2, g, xterm, sidf):
         if any(t not in tds for t in (t1, t2, xterm)):
             return None
         td1, td2, xtd = tds[t1], tds[t2], tds[xterm]
-        cand_ids = td1.ids
-        for other in (td2.ids, xtd.ids):
-            cand_ids = cand_ids[np.isin(cand_ids, other, assume_unique=True)]
-        if deleted is not None and cand_ids.size:
-            cand_ids = cand_ids[
-                ~np.isin(cand_ids, deleted, assume_unique=True)
-            ]
-        r1 = np.searchsorted(td1.ids, cand_ids)
-        r2 = np.searchsorted(td2.ids, cand_ids)
-        rx = np.searchsorted(xtd.ids, cand_ids)
+        cand_ids, (r1, r2, rx) = _candidates([td1, td2, xtd], deleted)
         ptf = np.zeros(cand_ids.size, dtype=np.float64)
         lens = np.zeros(cand_ids.size, dtype=np.float64)
         for ci in range(cand_ids.size):
@@ -794,13 +731,13 @@ def search_span_contain(
                 i1c = np.maximum(i1, 0)
                 cov &= ends[i1c] >= xpos
                 ptf[ci] = float(np.count_nonzero(cov))
-        return _score_and_topk(qid, cand_ids, ptf, lens, sidf, ad, k)
+        return _score_and_topk(qid, cand_ids, ptf, lens, sidf, avgdl, k)
 
     live_terms = sorted(
         {t for _, t1, t2, _, x, _ in queries for t in (t1, t2, x)}
     )
     return _positional_gather(
-        postings, live_terms, queries, score_one, k, dfm
+        snap.postings, live_terms, queries, score_one, k, dfm
     )
 
 
@@ -875,8 +812,7 @@ def search_phrase_shingle(
         if len(toks) != 2:
             raise ValueError(f"index_phrases serves 2-term phrases: {text!r}")
         rows.append((int(qid), f"{toks[0]} {toks[1]}"))
-    spark = documents.sparkSession
-    q = spark.createDataFrame(rows, "query_id long, term string")
+    q = local_frame(documents.sparkSession, rows, "query_id long, term string")
     tf = shingle_tf(documents)
     dl = tf.select("doc_id", "len").distinct()
     stats = dl.agg(
@@ -941,7 +877,7 @@ def search_synonym_graph(
         term_rows.append((int(qid), py_tokenize(term)[0]))
         phrase_terms[int(qid)] = ptoks
     spark = documents.sparkSession
-    q_term = spark.createDataFrame(term_rows, "query_id long, term string")
+    q_term = local_frame(spark, term_rows, "query_id long, term string")
 
     # --- term path: standard BM25 contribution for the single token
     from mario_spark.query import bm25_scores
@@ -953,7 +889,7 @@ def search_synonym_graph(
     member_rows = [
         (qid, t) for qid, ptoks in phrase_terms.items() for t in set(ptoks)
     ]
-    q_members = spark.createDataFrame(member_rows, "query_id long, term string")
+    q_members = local_frame(spark, member_rows, "query_id long, term string")
     idf_sum = (
         q_members.join(dfreq, "term")
         .crossJoin(F.broadcast(stats))
@@ -989,7 +925,8 @@ def search_synonym_graph(
     ptf_df = phrase_parts[0]
     for p in phrase_parts[1:]:
         ptf_df = ptf_df.unionByName(p)
-    n_members = spark.createDataFrame(
+    n_members = local_frame(
+        spark,
         [(qid, len(set(ts))) for qid, ts in phrase_terms.items()],
         "query_id long, n_terms long",
     )

@@ -55,7 +55,7 @@ from mario_spark.query import (
     empty_result,
     topk,
 )
-from mario_spark.wand import Snapshot, TermStats, _local_topk
+from mario_spark.wand import _local_topk
 
 _ATOM_RE = re.compile(r'([+-]?)(?:"([^"]*)"|(\S+))')
 
@@ -841,56 +841,6 @@ def _rank_query_strings(
     return _positional_gather(
         postings, keys, queries_c, score_one, k, dfm
     )
-
-
-def search_query_string_indexed(
-    postings: DataFrame,
-    dictionary: DataFrame,
-    queries: list[tuple[int, str]],
-    n_docs: int,
-    avgdl: float,
-    k: int = 10,
-    deleted_docs: DataFrame | None = None,
-) -> DataFrame:
-    """Serve query_string from a PERSISTED positional index: term
-    clauses read tf (= positions count) from the postings, phrase
-    clauses run the positional chain matcher, and Lucene BooleanQuery
-    matching applies bucket-locally — the production analogue of
-    qs.search_query_string (tests assert rank identity between the
-    two)."""
-    return Snapshot(
-        postings, TermStats(lambda: dictionary), n_docs, avgdl,
-        deleted_docs=lambda: deleted_docs,
-    ).search_query_string(queries, k)
-
-
-def search_query_string_fields_indexed(
-    postings: DataFrame,
-    dictionary: DataFrame,
-    queries: list[tuple[int, str]],
-    field_stats: dict[str, dict],
-    default_field: str,
-    k: int = 10,
-    deleted_docs: DataFrame | None = None,
-) -> DataFrame:
-    """Serve field-scoped query_string from a PERSISTED fields=... +
-    positions=True index (field-prefixed posting keys, fields.py).
-    Each clause's terms become `<field>:<term>` — pruning the postings
-    scan to exactly the queried fields' terms — and the clause scores
-    with ITS field's stats: idf from the prefixed dictionary df and the
-    FIELD's docCount, length norm from the field's avgdl (the lens
-    stored on a prefixed posting are that field's lengths by
-    construction, fields.field_tf). Rank-identical to
-    qs.search_query_string_fields over the raw pages (asserted in
-    tests)."""
-    stats = {
-        f: (s.get("n_docs", 0), s.get("avgdl", 0.0))
-        for f, s in field_stats.items()
-    }
-    return Snapshot(
-        postings, TermStats(lambda: dictionary), 0, 0.0, field_stats=stats,
-        deleted_docs=lambda: deleted_docs,
-    ).search_query_string(queries, k, default_field)
 
 
 def parse_simple_query_string(

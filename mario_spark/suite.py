@@ -522,9 +522,13 @@ _POS_CACHE: dict = {}
 
 
 def _pos_index(spark: SparkSession, sf_dir: str):
+    """The positional index as one Snapshot: persisted postings, a
+    TermStats over the persisted (aggregated) dictionary, no
+    tombstones. Its df LRU is shared by every positional operator."""
     from mario_spark import docs as docsmod
     from mario_spark import phrase as ph
     from mario_spark.postings import dictionary_from_postings, encode_tf_rows, pick_range_width
+    from mario_spark.wand import Snapshot, TermStats
 
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _POS_CACHE:
@@ -538,7 +542,9 @@ def _pos_index(spark: SparkSession, sf_dir: str):
         )
         post = encode_tf_rows(tfpos, rw).persist()
         dic = dictionary_from_postings(post).persist()
-        _POS_CACHE[key] = (post, dic, st)
+        _POS_CACHE[key] = Snapshot(
+            post, TermStats(lambda: dic), st["n_docs"], st["avgdl"]
+        )
     return _POS_CACHE[key]
 
 
@@ -624,11 +630,8 @@ def phrase_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mario_spark.analyze import py_tokenize
     from mario_spark.fixtures import DOCUMENTS_PHRASE_SET
 
-    post, dic, st = _pos_index(spark, sf_dir)
     queries = [(qid, py_tokenize(q)) for qid, q in DOCUMENTS_PHRASE_SET]
-    return ph.search_phrase(
-        post, dic, queries, st["n_docs"], st["avgdl"], k=10
-    )
+    return ph.search_phrase(_pos_index(spark, sf_dir), queries, k=10)
 
 
 def phrase_near_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -640,11 +643,8 @@ def phrase_near_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mario_spark.analyze import py_tokenize
     from mario_spark.fixtures import DOCUMENTS_NEAR_SET
 
-    post, dic, st = _pos_index(spark, sf_dir)
     queries = [(qid, py_tokenize(q)) for qid, q in DOCUMENTS_NEAR_SET]
-    return ph.search_phrase(
-        post, dic, queries, st["n_docs"], st["avgdl"], k=10, slop=2
-    )
+    return ph.search_phrase(_pos_index(spark, sf_dir), queries, k=10, slop=2)
 
 
 def phrase_prefix_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -655,14 +655,11 @@ def phrase_prefix_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mario_spark.analyze import py_tokenize
     from mario_spark.fixtures import DOCUMENTS_PHRASE_PREFIX_SET
 
-    post, dic, st = _pos_index(spark, sf_dir)
     queries = []
     for qid, q in DOCUMENTS_PHRASE_PREFIX_SET:
         toks = py_tokenize(q)
         queries.append((qid, toks[:-1], toks[-1]))
-    return ph.search_phrase_prefix(
-        post, dic, queries, st["n_docs"], st["avgdl"], k=10
-    )
+    return ph.search_phrase_prefix(_pos_index(spark, sf_dir), queries, k=10)
 
 
 def phrase_shingle_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1607,10 +1604,9 @@ def span_near_unordered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mario_spark.analyze import py_tokenize
     from mario_spark.fixtures import DOCUMENTS_NEAR_SET
 
-    post, dic, st = _pos_index(spark, sf_dir)
     queries = [(qid, py_tokenize(q)) for qid, q in DOCUMENTS_NEAR_SET]
     return ph.search_span_near_unordered(
-        post, dic, queries, st["n_docs"], st["avgdl"], slop=2, k=10
+        _pos_index(spark, sf_dir), queries, slop=2, k=10
     )
 
 
@@ -1984,14 +1980,11 @@ def span_or_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mario_spark.analyze import py_tokenize
     from mario_spark.fixtures import DOCUMENTS_SPAN_OR_SET
 
-    post, dic, st = _pos_index(spark, sf_dir)
     queries = [
         (qid, [py_tokenize(c) for c in chains])
         for qid, chains in DOCUMENTS_SPAN_OR_SET
     ]
-    return ph.search_span_or(
-        post, dic, queries, st["n_docs"], st["avgdl"], k=10
-    )
+    return ph.search_span_or(_pos_index(spark, sf_dir), queries, k=10)
 
 
 SPAN_MULTI_PREFIXES = [(0, "s"), (1, "b"), (2, "c")]
@@ -2000,26 +1993,18 @@ SPAN_MULTI_PREFIXES = [(0, "s"), (1, "b"), (2, "c")]
 def span_multi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ES span_multi wrapping a prefix query: the prefix rewrites to
     the index's matching dictionary terms (Lucene's multi-term
-    rewrite — a pushdown-filtered dictionary lookup, collected
-    driver-side like the query set itself), and the expansion becomes a
-    SpanOr of 1-term chains: freq = total occurrences of any matching
-    term, weight idf = Σ idf over the expansion
-    (phrase.search_span_or)."""
+    rewrite — one TermStats answer for every prefix, whose dfs the
+    scoring reuses), and the expansion becomes a SpanOr of 1-term
+    chains: freq = total occurrences of any matching term, weight idf =
+    Σ idf over the expansion (phrase.search_span_or)."""
     from mario_spark import phrase as ph
 
-    post, dic, st = _pos_index(spark, sf_dir)
-    queries = []
-    for qid, p in SPAN_MULTI_PREFIXES:
-        terms = sorted(
-            r["term"]
-            for r in dic.filter(F.col("term").startswith(p))
-            .select("term")
-            .collect()
-        )
-        queries.append((qid, [[t] for t in terms]))
-    return ph.search_span_or(
-        post, dic, queries, st["n_docs"], st["avgdl"], k=10
-    )
+    snap = _pos_index(spark, sf_dir)
+    windows = snap.terms.prefix_windows([p for _, p in SPAN_MULTI_PREFIXES])
+    queries = [
+        (qid, [[t] for t in windows[p]]) for qid, p in SPAN_MULTI_PREFIXES
+    ]
+    return ph.search_span_or(snap, queries, k=10)
 
 
 def span_not_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2031,13 +2016,12 @@ def span_not_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mario_spark.analyze import py_tokenize
     from mario_spark.fixtures import DOCUMENTS_SPAN_NOT_SET
 
-    post, dic, st = _pos_index(spark, sf_dir)
     queries = [
         (qid, py_tokenize(inc), exc)
         for qid, inc, exc in DOCUMENTS_SPAN_NOT_SET
     ]
     return ph.search_span_not(
-        post, dic, queries, st["n_docs"], st["avgdl"], k=10, pre=1, post=1
+        _pos_index(spark, sf_dir), queries, k=10, pre=1, post=1
     )
 
 
@@ -2510,14 +2494,11 @@ def span_first_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mario_spark.analyze import py_tokenize
     from mario_spark.fixtures import DOCUMENTS_SPAN_FIRST_SET
 
-    post, dic, st = _pos_index(spark, sf_dir)
     queries = [
         (qid, py_tokenize(p), end)
         for qid, p, end in DOCUMENTS_SPAN_FIRST_SET
     ]
-    return ph.search_span_first(
-        post, dic, queries, st["n_docs"], st["avgdl"], k=10
-    )
+    return ph.search_span_first(_pos_index(spark, sf_dir), queries, k=10)
 
 
 def pinned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2783,10 +2764,9 @@ def span_containing_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mario_spark import phrase as ph
     from mario_spark.fixtures import DOCUMENTS_SPAN_CONTAIN_SET
 
-    post, dic, st = _pos_index(spark, sf_dir)
     return ph.search_span_contain(
-        post, dic, DOCUMENTS_SPAN_CONTAIN_SET,
-        st["n_docs"], st["avgdl"], mode="containing", k=10,
+        _pos_index(spark, sf_dir), DOCUMENTS_SPAN_CONTAIN_SET,
+        mode="containing", k=10,
     )
 
 
@@ -2797,10 +2777,9 @@ def span_within_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mario_spark import phrase as ph
     from mario_spark.fixtures import DOCUMENTS_SPAN_CONTAIN_SET
 
-    post, dic, st = _pos_index(spark, sf_dir)
     return ph.search_span_contain(
-        post, dic, DOCUMENTS_SPAN_CONTAIN_SET,
-        st["n_docs"], st["avgdl"], mode="within", k=10,
+        _pos_index(spark, sf_dir), DOCUMENTS_SPAN_CONTAIN_SET,
+        mode="within", k=10,
     )
 
 

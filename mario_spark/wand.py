@@ -159,14 +159,6 @@ def _sum_df(rows) -> dict[str, int]:
     return out
 
 
-def lookup_df(dictionary: DataFrame, terms: list[str]) -> dict[str, int]:
-    """Cold {term: df} for the dictionary terms among `terms`: one
-    pushdown-filtered collect (OOV terms are simply absent).
-    `dictionary` may be the unaggregated union of segment dictionaries,
-    which saves the groupBy shuffle (see _sum_df)."""
-    return _sum_df(dictionary.filter(F.col("term").isin(terms)).collect())
-
-
 def _by_query(frame: DataFrame) -> dict[int, list[str]]:
     """(query_id, term) rows -> {query_id: [terms]}, in row order."""
     out: dict[int, list[str]] = {}
@@ -893,8 +885,9 @@ class TermStats:
         """{term: df} for the vocabulary terms among `terms`: a dict
         read when held, else LRU hits plus ONE lookup for the misses:
         pyarrow over the part files when known, else a pushdown-filtered
-        collect (absent terms negative-cached as 0, so a repeated OOV
-        query costs no lookup)."""
+        collect of the table, df summed per term (_sum_df). Absent terms
+        are negative-cached as 0, so a repeated OOV query costs no
+        lookup."""
         if self._df_map is not None:
             return {t: self._df_map[t] for t in terms if t in self._df_map}
         out: dict[str, int] = {}
@@ -908,10 +901,13 @@ class TermStats:
                 if v > 0:
                     out[t] = v
         if missing:
+            keys = sorted(missing)
             found = (
-                read_df(self.files, sorted(missing))
+                read_df(self.files, keys)
                 if self.files is not None
-                else lookup_df(self.table, sorted(missing))
+                else _sum_df(
+                    self.table.filter(F.col("term").isin(keys)).collect()
+                )
             )
             self._lru_put({t: found.get(t, 0) for t in missing})
             out.update(found)
@@ -1006,27 +1002,26 @@ class TermStats:
                 out.setdefault(int(r["query_id"]), []).append(r["term"])
         return out
 
-    def _prefix_window(self, pfx: str) -> list[str]:
-        """All vocabulary terms starting with `pfx`. Held: bisect over
-        the sorted term array — O(log V + window) instead of O(V); an
-        empty prefix returns the whole vocabulary (sorted). Lookup
-        shape: ONE range-predicate collect against the table — the
-        driver receives only the window (the range bounds prune
-        non-overlapping cached shards), and the fetched dfs prime the
-        LRU since expansion always scores the window terms right after.
-        Callers guarantee pfx is non-empty in the lookup shape
-        (_window_anchor routes unanchored patterns to the distributed
-        expansion)."""
+    def prefix_windows(self, prefixes: list[str]) -> dict[str, list[str]]:
+        """{prefix: sorted vocabulary terms starting with it} for a
+        batch of prefixes. Held: bisect windows over the sorted term
+        array, O(log V + window) each and no job; an empty prefix gets
+        the whole vocabulary. Lookup shape: ONE collect of the OR of
+        the prefix ranges (_window), whose dfs prime the LRU, since the
+        caller scores the window terms right after. Callers pass
+        non-empty prefixes in the lookup shape (_window_anchor routes
+        unanchored patterns to the distributed expansion)."""
         if self._df_map is not None:
             if self._vocab_arr is None:
                 self._vocab_arr = sorted(self._df_map)
             arr = self._vocab_arr
-            if not pfx:
-                return arr
-            lo, hi = _prefix_range(arr, pfx)
-            return arr[lo:hi]
-        assert pfx, "a prefix window lookup needs a non-empty literal"
-        return self._window(self.table, "term", pfx)
+        else:
+            arr = self._window(self.table, "term", prefixes)
+        return {p: arr[slice(*_prefix_range(arr, p))] for p in prefixes}
+
+    def _prefix_window(self, pfx: str) -> list[str]:
+        """All vocabulary terms starting with `pfx` (prefix_windows)."""
+        return self.prefix_windows([pfx])[pfx]
 
     def _suffix_window(self, sfx: str) -> list[str]:
         """All vocabulary terms ENDING with `sfx` — Lucene's
@@ -1054,15 +1049,26 @@ class TermStats:
                 self._rtable = self._rtable.repartitionByRange(
                     self._n_shards, "rterm"
                 ).persist()
-        return self._window(self._rtable, "rterm", sfx[::-1])
+        return self._window(self._rtable, "rterm", [sfx[::-1]])
 
-    def _window(self, table: DataFrame, col: str, pfx: str) -> list[str]:
-        """Sorted terms of `table` whose `col` starts with `pfx`, one
-        range-predicate collect; their dfs prime the LRU."""
-        ub = _prefix_ub(pfx)
-        cond = F.col(col) >= pfx
-        if ub is not None:
-            cond = cond & (F.col(col) < ub)
+    def _window(
+        self, table: DataFrame, col: str, prefixes: list[str]
+    ) -> list[str]:
+        """Sorted terms of `table` whose `col` starts with one of
+        `prefixes`: ONE collect of the OR of their ranges (the range
+        bounds prune non-overlapping cached shards), df summed per term
+        (_sum_df, so the unaggregated segment dictionaries count every
+        segment); the dfs prime the LRU. No prefix, no job."""
+        assert all(prefixes), "a window lookup needs non-empty literals"
+        cond = None
+        for pfx in prefixes:
+            ub = _prefix_ub(pfx)
+            c = F.col(col) >= pfx
+            if ub is not None:
+                c = c & (F.col(col) < ub)
+            cond = c if cond is None else cond | c
+        if cond is None:
+            return []
         found = _sum_df(table.filter(cond).select("term", "df").collect())
         self._lru_put(found)
         return sorted(found)
@@ -1144,11 +1150,13 @@ class Snapshot:
     def deleted(self) -> np.ndarray | None:
         """The tombstoned doc ids, sorted unique (None when there are
         none): they ride in the kernels' task closures."""
-        from mario_spark.phrase import _collect_deleted
-
         if self.deleted_files is not None:
             return read_doc_ids(self.deleted_files)
-        return _collect_deleted(self.deleted_docs)
+        if self.deleted_docs is None:
+            return None
+        rows = self.deleted_docs.select("doc_id").collect()
+        arr = np.array([r["doc_id"] for r in rows], dtype=np.int64)
+        return np.unique(arr) if arr.size else None
 
     @property
     def _label(self) -> str:
@@ -1363,20 +1371,14 @@ class Snapshot:
         fields=... index the phrase matches within `field`'s position
         stream (ordinals are per-field, so a phrase never spans a field
         boundary) and scores with the field's statistics. The body is
-        phrase._rank_phrases (slop semantics there)."""
+        phrase.search_phrase (slop semantics there)."""
         from mario_spark import phrase as ph
         from mario_spark.analyze import py_tokenize
 
-        self.require_positions("match_phrase")
-        pfx, n_docs, avgdl = self.scope(field)
-        phrase_queries = [
-            (int(qid), [pfx + t for t in py_tokenize(text)])
-            for qid, text in queries
-        ]
-        terms = sorted({t for _, ts in phrase_queries for t in ts})
-        return ph._rank_phrases(
-            self.postings, phrase_queries, self.terms.df(terms),
-            n_docs, avgdl, k, slop, self.deleted,
+        return ph.search_phrase(
+            self,
+            [(int(qid), py_tokenize(text)) for qid, text in queries],
+            k, slop, field,
         )
 
     def search_query_string(

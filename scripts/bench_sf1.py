@@ -204,7 +204,7 @@ def main() -> None:
         suite._wand_index(spark, sf_dir)[0].count()
         builds[sf_dir]["wand_index"] = round(time.perf_counter() - t0, 3)
         t0 = time.perf_counter()
-        suite._pos_index(spark, sf_dir)[0].count()
+        suite._pos_index(spark, sf_dir).postings.count()
         builds[sf_dir]["pos_index"] = round(time.perf_counter() - t0, 3)
 
         names = DOC_QUERIES + EMB_QUERIES

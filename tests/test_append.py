@@ -91,10 +91,18 @@ def test_ingest_from_html_extraction_matches_text(spark, tmp_path):
     pages.unpersist()
 
 
-def test_tiered_merge_policy(spark, tmp_path):
+def test_tiered_merge_policy(spark, tmp_path, monkeypatch):
     """Tiered merge selection: four small appended segments in the same
     size tier merge into one (the big base segment stays untouched);
-    results are rank-identical before/after; a second round is a no-op."""
+    selection lists the segments once and reads each commit marker
+    once; results are rank-identical before/after; a second round is a
+    no-op."""
+    import collections
+    import os
+
+    from mario_spark import index as indexmod
+    from mario_spark import merge as mergemod
+    from mario_spark.index import IndexPaths
     from mario_spark.merge import maybe_merge, select_tiered_merge
 
     cat = Catalog(spark, str(tmp_path / "cat"))
@@ -110,7 +118,24 @@ def test_tiered_merge_policy(spark, tmp_path):
     segs_before = idx.paths.committed_segments()
     assert len(segs_before) == 5
 
-    sel = select_tiered_merge(idx, max_per_tier=4, tier_factor=10.0)
+    counts: collections.Counter = collections.Counter()
+    listing, read_json = IndexPaths.committed_markers, indexmod._read_json
+
+    def counted_listing(self):
+        counts["listings"] += 1
+        return listing(self)
+
+    def counted_read(path):
+        counts[os.path.basename(path)] += 1
+        return read_json(path)
+
+    with monkeypatch.context() as m:
+        m.setattr(IndexPaths, "committed_markers", counted_listing)
+        m.setattr(indexmod, "_read_json", counted_read)
+        m.setattr(mergemod, "_read_json", counted_read)
+        sel = select_tiered_merge(idx, max_per_tier=4, tier_factor=10.0)
+    assert counts["listings"] == 1, counts
+    assert counts["_seg.json"] == len(segs_before), counts
     assert sel is not None and len(sel) == 4
     big = segs_before[0]
     assert big not in sel  # the 600-doc segment is in a higher tier

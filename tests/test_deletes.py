@@ -392,3 +392,78 @@ def test_purging_compaction_retires_only_what_it_purged(
     q = query_terms_df(spark, [(0, f"{late_term} {by_df[20]}")])
     got = {r["doc_id"] for r in idx.search(q, k=400).collect()}
     assert got and not got & late_ids
+
+
+def test_positional_operators_read_the_pinned_snapshot(spark, root):
+    """Every positional operator over idx.open_pit() (the unaggregated
+    segment dictionaries, read on the driver, and the tombstone part
+    files) returns exactly the rows of the same operator over a
+    Snapshot of the aggregated Index.dictionary() frame and the same
+    tombstone frame: df is summed over every segment on both, and no
+    tombstoned doc appears in any result, though the unmasked results
+    hold some."""
+    from mario_spark import phrase as ph
+    from mario_spark.wand import Snapshot, TermStats
+
+    cat = Catalog(spark, root)
+    idx = cat.create("pin-2026-01-01t00-00-00z")
+    idx.ingest(
+        pages_df(spark, 300, seed=11, partitions=4),
+        segment_docs=128, positions=True,
+    )
+    assert len(idx.paths.committed_segments()) == 3
+    words = ["the", "data", "web", "search", "index"]
+    dfs = {r["term"]: r["df"] for r in idx.dictionary().collect()}
+    # a mid-df term: it tombstones a share of every operator's matches
+    victim = min(
+        (t for t in dfs if t not in words), key=lambda t: abs(dfs[t] - 100)
+    )
+    assert idx.delete_by_query([victim])["deleted"] > 50
+    gone = {r["doc_id"] for r in idx.deleted_ids().collect()}
+
+    pit = idx.open_pit()
+    assert pit.terms.files and pit.deleted_files
+    frames = Snapshot(
+        pit.postings, TermStats(lambda: idx.dictionary()), pit.n_docs,
+        pit.avgdl, deleted_docs=lambda: idx.deleted_ids(),
+    )
+    unmasked = Snapshot(
+        pit.postings, TermStats(lambda: idx.dictionary()), pit.n_docs,
+        pit.avgdl,
+    )
+    ops = {
+        "phrase": lambda s: ph.search_phrase(
+            s, [(0, ["the", "data"]), (1, ["web", "search"])], k=20
+        ),
+        "phrase_slop": lambda s: ph.search_phrase(
+            s, [(0, ["data", "index"])], k=20, slop=2
+        ),
+        "phrase_prefix": lambda s: ph.search_phrase_prefix(
+            s, [(0, ["the"], "da"), (1, ["web"], "s"), (2, ["the"], "zzq")],
+            k=20,
+        ),
+        "span_or": lambda s: ph.search_span_or(
+            s, [(0, [["the", "web"], ["index"]])], k=20
+        ),
+        "span_near_unordered": lambda s: ph.search_span_near_unordered(
+            s, [(0, ["search", "data"])], k=20
+        ),
+        "span_not": lambda s: ph.search_span_not(
+            s, [(0, ["the", "data"], "web")], k=20
+        ),
+        "span_first": lambda s: ph.search_span_first(
+            s, [(0, ["the", "data"], 30)], k=20
+        ),
+        "span_containing": lambda s: ph.search_span_contain(
+            s, [(0, "the", "data", 3, "web")], mode="containing", k=20
+        ),
+        "span_within": lambda s: ph.search_span_contain(
+            s, [(0, "the", "data", 3, "web")], mode="within", k=20
+        ),
+    }
+    for name, op in ops.items():
+        got = _canon(op(pit))
+        assert len(got) > 0, name
+        pd.testing.assert_frame_equal(got, _canon(op(frames)), obj=name)
+        assert not set(got["doc_id"]) & gone, name
+        assert set(_canon(op(unmasked))["doc_id"]) & gone, name

@@ -1489,8 +1489,7 @@ def test_driver_reads_equal_spark_reads(spark, root):
     from pyspark.sql import functions as F
 
     from mario_spark.localread import _row_groups, read_df, read_df_map
-    from mario_spark.phrase import _collect_deleted
-    from mario_spark.wand import lookup_df
+    from mario_spark.wand import Snapshot, TermStats
 
     cat = Catalog(spark, root)
     idx = cat.create("reads-2026-01-01t00-00-00z")
@@ -1510,7 +1509,8 @@ def test_driver_reads_equal_spark_reads(spark, root):
     def check():
         snap = idx.open_pit()
         assert snap.terms.files and snap.deleted_files
-        want = lookup_df(snap.terms.table, terms)
+        # the Spark routes: a TermStats and a Snapshot without part files
+        want = TermStats(lambda: snap.terms.table).df(terms)
         assert want[only_one[0]] > 0 and "zz-not-a-term" not in want
         assert read_df(snap.terms.files, terms) == want
         assert snap.terms.df(terms) == want
@@ -1518,9 +1518,10 @@ def test_driver_reads_equal_spark_reads(spark, root):
         assert read_df_map(snap.terms.files, None) == full
         assert read_df_map(snap.terms.files, len(full) * 3) == full
         assert read_df_map(snap.terms.files, 10) is None
-        assert np.array_equal(
-            snap.deleted, _collect_deleted(snap.deleted_docs)
+        spark_read = Snapshot(
+            None, snap.terms, 0, 0.0, deleted_docs=lambda: snap.deleted_docs
         )
+        assert np.array_equal(snap.deleted, spark_read.deleted)
         return snap
 
     snap = check()

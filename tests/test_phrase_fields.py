@@ -61,6 +61,7 @@ def _phrase_results(spark, texts, phrase, k=10):
     from mario_spark import phrase as ph
     from mario_spark.analyze import py_tokenize
     from mario_spark.postings import dictionary_from_postings, encode_tf_rows
+    from mario_spark.wand import Snapshot, TermStats
 
     d = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
@@ -71,9 +72,8 @@ def _phrase_results(spark, texts, phrase, k=10):
     ).collect()[0]
     post = encode_tf_rows(tfpos, 256)
     dic = dictionary_from_postings(post)
-    out = ph.search_phrase(
-        post, dic, [(0, py_tokenize(phrase))], st_["n_docs"], st_["avgdl"], k=k
-    )
+    snap = Snapshot(post, TermStats(lambda: dic), st_["n_docs"], st_["avgdl"])
+    out = ph.search_phrase(snap, [(0, py_tokenize(phrase))], k=k)
     return out.toPandas().sort_values("rank", ignore_index=True)
 
 
@@ -186,6 +186,7 @@ def test_field_index_with_positions_phrase(spark, tmp_path):
     from mario_spark.fixtures import pages_df
     from mario_spark.index import Catalog
     from mario_spark.postings import build_postings
+    from mario_spark.wand import Snapshot, TermStats
 
     cat = Catalog(spark, str(tmp_path / "cat"))
     pages = pages_df(spark, 300, seed=11, partitions=4).withColumn(
@@ -215,11 +216,11 @@ def test_field_index_with_positions_phrase(spark, tmp_path):
     ).persist()
     fst = idx.field_stats()["title"]
     post, dic, _ = build_postings(d_title, 300)
+    title_snap = Snapshot(
+        post, TermStats(lambda: dic), fst["n_docs"], fst["avgdl"]
+    )
     want = (
-        phrasemod.search_phrase(
-            post, dic, [(0, py_tokenize(phrase))],
-            fst["n_docs"], fst["avgdl"], k=10,
-        )
+        phrasemod.search_phrase(title_snap, [(0, py_tokenize(phrase))], k=10)
         .toPandas()
         .sort_values(["query_id", "rank"], ignore_index=True)
     )
@@ -293,6 +294,7 @@ def test_span_containing_within_semantics(spark):
     from mario_spark.postings import (
         dictionary_from_postings, encode_tf_rows,
     )
+    from mario_spark.wand import Snapshot, TermStats
 
     # doc 0: spans of (a .. b, g=2): [1,3] and [5,6]; 'x' at 2 (inside
     # span 1) and at 8 (outside). doc 1: a..b too far apart (gap 3).
@@ -309,14 +311,11 @@ def test_span_containing_within_semantics(spark):
     ).collect()[0]
     post = encode_tf_rows(tfpos, 1024)
     dic = dictionary_from_postings(post)
+    snap = Snapshot(post, TermStats(lambda: dic), st["n_docs"], st["avgdl"])
     qs = [(0, "a", "b", 2, "x")]
-    cont = ph.search_span_contain(
-        post, dic, qs, st["n_docs"], st["avgdl"], mode="containing"
-    ).collect()
+    cont = ph.search_span_contain(snap, qs, mode="containing").collect()
     assert [(r["doc_id"]) for r in cont] == [0]  # only doc 0, 1 span
-    wth = ph.search_span_contain(
-        post, dic, qs, st["n_docs"], st["avgdl"], mode="within"
-    ).collect()
+    wth = ph.search_span_contain(snap, qs, mode="within").collect()
     assert [(r["doc_id"]) for r in wth] == [0]  # x@2 covered, x@8 not
 
 

@@ -248,15 +248,16 @@ def test_cold_dbucket_operators_plan_one_kernel_no_window(
     neither the collected frame nor the returned one plans a rank
     window, and no operator adds a second kernel pass."""
     from mario_spark import phrase as ph
-    from mario_spark import qs, wand
+    from mario_spark import wand
     from mario_spark.fields import build_field_doc_table, field_tf
     from mario_spark.fixtures import query_terms_df
     from mario_spark.postings import dictionary_from_postings, encode_tf_rows
-    from mario_spark.wand import search_wand
+    from mario_spark.wand import Snapshot, TermStats, search_wand
 
     monkeypatch.setattr(wand, "DRIVER_LIMIT", 0)
 
     post, dic, n, ad = _positional_index(spark)
+    snap = Snapshot(post, TermStats(lambda: dic), n, ad)
     fdocs = build_field_doc_table(
         spark.read.parquet(f"{SF_DIR}/documents.parquet"),
         {"title": F.substring("text", 1, 64), "contents": F.col("text")},
@@ -264,41 +265,40 @@ def test_cold_dbucket_operators_plan_one_kernel_no_window(
     )
     fpost = encode_tf_rows(field_tf(fdocs), 256)
     fdic = dictionary_from_postings(fpost)
+    fsnap = Snapshot(
+        fpost, TermStats(lambda: fdic), 0, 0.0,
+        field_stats={"title": (n, ad), "contents": (n, ad)},
+    )
     ops = {
         "search_wand": lambda: search_wand(
             post, dic, query_terms_df(spark, [(0, "data web")]), n, ad
         ),
         "search_phrase": lambda: ph.search_phrase(
-            post, dic, [(0, ["the", "data"])], n, ad
+            snap, [(0, ["the", "data"])]
         ),
         "search_phrase_prefix": lambda: ph.search_phrase_prefix(
-            post, dic, [(0, ["the"], "da")], n, ad
+            snap, [(0, ["the"], "da")]
         ),
         "search_span_or": lambda: ph.search_span_or(
-            post, dic, [(0, [["the", "data"], ["web"]])], n, ad
+            snap, [(0, [["the", "data"], ["web"]])]
         ),
         "search_span_near_unordered": lambda: ph.search_span_near_unordered(
-            post, dic, [(0, ["data", "the"])], n, ad
+            snap, [(0, ["data", "the"])]
         ),
         "search_span_not": lambda: ph.search_span_not(
-            post, dic, [(0, ["the", "data"], "web")], n, ad
+            snap, [(0, ["the", "data"], "web")]
         ),
         "search_span_first": lambda: ph.search_span_first(
-            post, dic, [(0, ["the", "data"], 20)], n, ad
+            snap, [(0, ["the", "data"], 20)]
         ),
         "search_span_contain": lambda: ph.search_span_contain(
-            post, dic, [(0, "the", "data", 3, "query")], n, ad
+            snap, [(0, "the", "data", 3, "query")]
         ),
-        "search_query_string_indexed": lambda: qs.search_query_string_indexed(
-            post, dic, [(0, '+data "the web" -crawl')], n, ad
+        "search_query_string": lambda: snap.search_query_string(
+            [(0, '+data "the web" -crawl')]
         ),
-        "search_query_string_fields_indexed": lambda: (
-            qs.search_query_string_fields_indexed(
-                fpost, fdic, [(0, 'title:data "the query"')],
-                {"title": {"n_docs": n, "avgdl": ad},
-                 "contents": {"n_docs": n, "avgdl": ad}},
-                "contents",
-            )
+        "search_query_string_fields": lambda: fsnap.search_query_string(
+            [(0, 'title:data "the query"')], default_field="contents"
         ),
     }
     plans = _collected_plans(monkeypatch)

@@ -220,7 +220,7 @@ def test_query_session_phrase_identical_to_cold_path(spark):
     from mario_spark.analyze import py_tokenize
     from mario_spark.fixtures import DOCUMENTS_PHRASE_SET, documents_as_pages
     from mario_spark.postings import dictionary_from_postings, encode_tf_rows
-    from mario_spark.wand import QuerySession
+    from mario_spark.wand import QuerySession, Snapshot, TermStats
 
     tfpos = ph.positional_tf(documents_as_pages(spark, SF_DIR))
     st_ = docs.corpus_stats(
@@ -230,13 +230,9 @@ def test_query_session_phrase_identical_to_cold_path(spark):
     dic = dictionary_from_postings(post)
     cold_q = [(qid, py_tokenize(t)) for qid, t in DOCUMENTS_PHRASE_SET]
     sess = QuerySession(post, dic, st_["n_docs"], st_["avgdl"]).warm()
+    cold = Snapshot(post, TermStats(lambda: dic), st_["n_docs"], st_["avgdl"])
     for slop in (0, 2):
-        want = _canon(
-            ph.search_phrase(
-                post, dic, cold_q, st_["n_docs"], st_["avgdl"], k=10,
-                slop=slop,
-            )
-        )
+        want = _canon(ph.search_phrase(cold, cold_q, k=10, slop=slop))
         got = _canon(sess.search_phrase(DOCUMENTS_PHRASE_SET, k=10, slop=slop))
         pd.testing.assert_frame_equal(got, want, check_exact=False, atol=1e-9)
     sess.close()

@@ -160,10 +160,11 @@ def test_sharded_phrase_and_query_string_match_full_cache(spark):
     the LRU must be invisible to results."""
     from mario_spark.suite import _pos_index
 
-    post, dic, st = _pos_index(spark, "/root/testdata/sf0.001")
-    full = QuerySession(post, dic, st["n_docs"], st["avgdl"])
+    snap = _pos_index(spark, "/root/testdata/sf0.001")
+    post, dic = snap.postings, snap.terms.table
+    full = QuerySession(post, dic, snap.n_docs, snap.avgdl)
     shard = QuerySession(
-        post, dic, st["n_docs"], st["avgdl"], vocab_cache_max=10
+        post, dic, snap.n_docs, snap.avgdl, vocab_cache_max=10
     )
     assert shard.terms._df_map is None
     phrases = [(0, "common crawl"), (1, "the web"), (2, "data set")]
