@@ -121,9 +121,10 @@ def _search_opened(
         n = sum(s.n_docs for _, s in snaps)
         avgdl = sum(s.avgdl * s.n_docs for _, s in snaps) / n if n else 0.0
         snaps = [
-            (name, Snapshot(s.postings, terms, n, avgdl,
+            (name, Snapshot(lambda s=s: s.postings, terms, n, avgdl,
                             deleted_docs=lambda s=s: s.deleted_docs,
-                            deleted_files=s.deleted_files))
+                            deleted_files=s.deleted_files,
+                            postings_files=s.postings_files))
             for name, s in snaps
         ]
     # each member's result is a local relation (collecting it runs no

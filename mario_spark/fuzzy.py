@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from mario_spark.postings import idf as _idf
 from mario_spark.session import local_frame
-from mario_spark.wand import _run_kernel
+from mario_spark.wand import Snapshot, TermStats, _run_kernel
 
 
 def levenshtein_le(a: str, b: str, limit: int) -> bool:
@@ -265,8 +265,8 @@ def _search_expansion(
         idf_map[r["term"]] = _idf(nd, float(r["df"]))
     queries = sorted((qid, sorted(ts)) for qid, ts in qmap.items())
     return _run_kernel(
-        postings, queries, idf_map, float(avgdl), k,
-        conjunctive=False, deleted=deleted, dfm=dfm,
+        Snapshot(postings, TermStats(), n_docs, avgdl), queries, idf_map,
+        float(avgdl), k, conjunctive=False, deleted=deleted, dfm=dfm,
     )
 
 

@@ -1109,9 +1109,10 @@ class Index:
         and the tombstone generations all come from that one read. So an
         append, merge or delete that commits mid-search can never make
         the stats disagree with the postings and df a search scores.
-        The dictionary and tombstone part files are listed now too: a
-        search reads the query terms' df and the tombstones from them on
-        the driver with pyarrow, with no Spark job.
+        The postings, dictionary and tombstone part files are listed now
+        too: a search reads the query terms' df, the tombstones and (on
+        the coordinator route) the pruned postings from them on the
+        driver with pyarrow, so a small cold search runs no Spark job.
 
         A search passed the handle (search(pit=...)) sees exactly this
         snapshot: segment and tombstone generation files are immutable
@@ -1137,14 +1138,14 @@ class Index:
                 if segs else None
             )
 
-        # the dictionary and tombstone frames open at first use: a
-        # search reads their part files on the driver instead
-        dic_dirs = self._seg_paths("dictionary", segs) if segs else []
+        def files(sub: str) -> list[str] | None:
+            return part_files(*self._seg_paths(sub, segs)) if segs else []
+
+        # the postings, dictionary and tombstone frames open at first
+        # use: a search reads their part files on the driver instead
         return Snapshot(
-            read("postings"),
-            TermStats(
-                lambda: read("dictionary"), files=part_files(*dic_dirs)
-            ),
+            lambda: read("postings"),
+            TermStats(lambda: read("dictionary"), files=files("dictionary")),
             *_sum_stats(markers.values()),
             field_stats=field_stats,
             deleted_docs=lambda: self._tombstones(gens),
@@ -1154,6 +1155,7 @@ class Index:
             deleted_files=part_files(
                 *[self.paths.delete_gen(g) for g in gens]
             ),
+            postings_files=files("postings"),
         )
 
     def _pinned(self) -> Snapshot:

@@ -1,13 +1,14 @@
-"""Driver-side reads of an index's small metadata tables with pyarrow.
+"""Driver-side reads of an index's part files with pyarrow.
 
 A search needs three small reads before it can score: the query terms'
 rows of the segment dictionaries, the tombstone generations, and (to
-open a warm session) the dictionary row count and df map. Through Spark
-each read is a job (50-60 ms plus planning on a 4-core box); pyarrow
-reads the same Spark-written part files on the driver in a few ms and
-launches no job. Only local table directories qualify: `part_files`
-returns None for any other path (an object-store URI), and callers keep
-their Spark read.
+open a warm session) the dictionary row count and df map. A small
+batch then scores on the driver over its term-pruned postings, a
+fourth read. Through Spark each read is a job (50-80 ms plus planning
+on a 4-core box); pyarrow reads the same Spark-written part files on
+the driver in a few ms and launches no job. Only local table
+directories qualify: `part_files` returns None for any other path (an
+object-store URI), and callers keep their Spark read.
 """
 
 from __future__ import annotations
@@ -16,6 +17,7 @@ import bisect
 import os
 
 import numpy as np
+import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
@@ -35,6 +37,11 @@ def part_files(*dirs: str) -> list[str] | None:
             if f.endswith(".parquet") and not f.startswith(("_", "."))
         ]
     return out
+
+
+def read_columns(f: str) -> list[str]:
+    """The column names in the footer schema of the part file `f`."""
+    return pq.read_schema(f).names
 
 
 def _read(f: str, columns: list[str]) -> pa.Table:
@@ -57,6 +64,25 @@ def _row_groups(pf: pq.ParquetFile, column: str, keys: list[str]) -> list[int]:
     return keep
 
 
+def _term_rows(
+    files: list[str], keys: list[str], columns: list[str] | None = None
+) -> list[pa.Table]:
+    """The rows of the part `files` whose `term` is one of the sorted
+    unique `keys`, one table per file that holds any: only the row
+    groups whose `term` statistics can hold a key are read
+    (_row_groups), then filtered on `term`."""
+    value_set = pa.array(keys, pa.string())
+    out = []
+    for f in files:
+        with pq.ParquetFile(f) as pf:
+            rgs = _row_groups(pf, "term", keys)
+            if not rgs:
+                continue
+            t = pf.read_row_groups(rgs, columns=columns)
+        out.append(t.filter(pc.is_in(t["term"], value_set=value_set)))
+    return out
+
+
 def read_df(files: list[str], terms: list[str]) -> dict[str, int]:
     """{term: df} for the dictionary terms among `terms`, summed over
     the (term, df) part `files` (segment dictionaries repeat a term once
@@ -68,17 +94,22 @@ def read_df(files: list[str], terms: list[str]) -> dict[str, int]:
     out: dict[str, int] = {}
     if not keys:
         return out
-    value_set = pa.array(keys, pa.string())
-    for f in files:
-        with pq.ParquetFile(f) as pf:
-            rgs = _row_groups(pf, "term", keys)
-            if not rgs:
-                continue
-            t = pf.read_row_groups(rgs, columns=["term", "df"])
-        t = t.filter(pc.is_in(t["term"], value_set=value_set))
+    for t in _term_rows(files, keys, ["term", "df"]):
         for term, df in zip(t["term"].to_pylist(), t["df"].to_pylist()):
             out[term] = out.get(term, 0) + int(df)
     return out
+
+
+def read_postings(files: list[str], terms: list[str]) -> pd.DataFrame:
+    """The posting-block rows of `terms` in the postings part `files`,
+    every column, as `toPandas` returns them from a Spark scan of the
+    same files filtered on `term` (row order aside). Like read_df it
+    skips the row groups whose `term` statistics hold no query term:
+    postings.encode_tf_rows writes each part file sorted by term."""
+    parts = _term_rows(files, sorted(set(terms)))
+    if not parts:
+        return pq.read_schema(files[0]).empty_table().to_pandas()
+    return pa.concat_tables(parts).to_pandas()
 
 
 def read_df_map(

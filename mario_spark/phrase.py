@@ -42,7 +42,12 @@ from mario_spark import codec
 from mario_spark.analyze import tokenize_positions_udf
 from mario_spark.docs import assign_doc_ids
 from mario_spark.postings import decode_block_positions
-from mario_spark.query import bm25_contrib, bm25_contrib_np, bm25_idf
+from mario_spark.query import (
+    RESULT_SCHEMA,
+    bm25_contrib,
+    bm25_contrib_np,
+    bm25_idf,
+)
 from mario_spark.session import local_frame
 from mario_spark.wand import (
     POSITIONAL_WEIGHT,
@@ -146,17 +151,17 @@ def _pos_term_map(pdf: pd.DataFrame) -> dict[str, _PosTermData]:
 
 
 def _positional_gather(
-    postings: DataFrame,
+    snap: Snapshot,
     scan_terms: list[str],
     queries: list[tuple],
     score_one,
     k: int,
     dfm: dict[str, int],
 ) -> DataFrame:
-    """scatter_gather of a per-query positional scorer: the kernel
-    decodes the bucket's positional postings once, then
-    score_one(tds, *query) -> (query_ids, doc_ids, scores) local top-k,
-    or None, for every query of the batch. Callers drop the queries
+    """scatter_gather over `snap`'s postings of a per-query positional
+    scorer: the kernel decodes the bucket's positional postings once,
+    then score_one(tds, *query) -> (query_ids, doc_ids, scores) local
+    top-k, or None, for every query of the batch. Callers drop the queries
     that cannot match and scan only the survivors' terms, so a batch
     with none left scans nothing and runs no job. A positional
     candidate weighs POSITIONAL_WEIGHT term candidates against the
@@ -168,7 +173,7 @@ def _positional_gather(
         return _result_frame([h for h in hits if h])
 
     return scatter_gather(
-        postings, scan_terms, kernel, k, dfm, weight=POSITIONAL_WEIGHT
+        snap, scan_terms, kernel, k, dfm, weight=POSITIONAL_WEIGHT
     )
 
 
@@ -250,7 +255,10 @@ def search_phrase_prefix(
     from p and the NEXT position holds any expansion term (the
     last-slot position set is the sorted union across expansion terms —
     Lucene MultiPhraseQuery's union postings view). An empty prefix
-    expands to nothing."""
+    expands to nothing. A query with no fixed term (a one-token
+    match_phrase_prefix) has one position, so it scores as Lucene
+    rewrites a one-position MultiPhraseQuery: the BM25 disjunction of
+    its expansions (Snapshot.search_terms)."""
     _, n_docs, avgdl = snap.scope(None)
     windows = snap.terms.prefix_windows(sorted({p for *_, p in queries if p}))
     exps_of = {p: ts[:max_expansions] for p, ts in windows.items()}
@@ -262,8 +270,12 @@ def search_phrase_prefix(
     )
     idf_map = df_to_idf(dfm, n_docs)
     kq: list[tuple[int, list[str], list[str], float]] = []
+    single: list[tuple[int, list[str]]] = []
     for qid, fixed, prefix in queries:
         exps = exps_of.get(prefix, [])
+        if not fixed:
+            single.append((qid, exps))
+            continue
         # an OOV fixed member, or no expansion (ES), matches nothing
         if exps and all(t in idf_map for t in fixed):
             sum_idf = sum(idf_map[t] for t in fixed) + sum(
@@ -300,8 +312,15 @@ def search_phrase_prefix(
             dl[ci] = float(fixed_tds[0].lens[int(rows_fixed[0][ci])])
         return _score_and_topk(qid, cand, ptf, dl, sum_idf, avgdl, k)
 
-    return _positional_gather(
-        snap.postings, needed, kq, score_one, k, dfm
+    if not single:
+        return _positional_gather(snap, needed, kq, score_one, k, dfm)
+    terms = snap.search_terms(single, k)
+    if not kq:
+        return terms
+    phrased = _positional_gather(snap, needed, kq, score_one, k, dfm)
+    # both are local relations: collecting them runs no job
+    return local_frame(
+        snap.spark, phrased.collect() + terms.collect(), RESULT_SCHEMA
     )
 
 
@@ -350,9 +369,7 @@ def search_phrase(
         return _score_and_topk(qid, ids, ptf, lens, sum_idf, avgdl, k)
 
     terms = sorted({t for _, ts, _ in queries for t in ts})
-    return _positional_gather(
-        snap.postings, terms, queries, score_one, k, dfm
-    )
+    return _positional_gather(snap, terms, queries, score_one, k, dfm)
 
 
 # --------------------------------------------------------- span queries
@@ -421,9 +438,7 @@ def search_span_or(
         return _score_and_topk(qid, ids, ptf, dl, sidf, avgdl, k)
 
     live_terms = sorted({t for _, chs, _ in queries for ch in chs for t in ch})
-    return _positional_gather(
-        snap.postings, live_terms, queries, score_one, k, dfm
-    )
+    return _positional_gather(snap, live_terms, queries, score_one, k, dfm)
 
 
 def search_span_near_unordered(
@@ -476,9 +491,7 @@ def search_span_near_unordered(
         return _score_and_topk(qid, ids, ptf, dl, sidf, avgdl, k)
 
     live_terms = sorted({t for _, t0, t1, _ in queries for t in (t0, t1)})
-    return _positional_gather(
-        snap.postings, live_terms, queries, score_one, k, dfm
-    )
+    return _positional_gather(snap, live_terms, queries, score_one, k, dfm)
 
 
 def search_span_not(
@@ -539,9 +552,7 @@ def search_span_not(
         return _score_and_topk(qid, ids_all, ptf, lens, sidf, avgdl, k)
 
     live_terms = sorted({t for _, ts, x, _ in queries for t in (*ts, x)})
-    return _positional_gather(
-        snap.postings, live_terms, queries, score_one, k, dfm
-    )
+    return _positional_gather(snap, live_terms, queries, score_one, k, dfm)
 
 
 def search_span_first(
@@ -587,9 +598,7 @@ def search_span_first(
         return _score_and_topk(qid, ids, ptf, lens, sidf, avgdl, k)
 
     live_terms = sorted({t for _, ts, _, _ in queries for t in ts})
-    return _positional_gather(
-        snap.postings, live_terms, queries, score_one, k, dfm
-    )
+    return _positional_gather(snap, live_terms, queries, score_one, k, dfm)
 
 
 def search_intervals_match(
@@ -736,9 +745,7 @@ def search_span_contain(
     live_terms = sorted(
         {t for _, t1, t2, _, x, _ in queries for t in (t1, t2, x)}
     )
-    return _positional_gather(
-        snap.postings, live_terms, queries, score_one, k, dfm
-    )
+    return _positional_gather(snap, live_terms, queries, score_one, k, dfm)
 
 
 # ---------------------------------------------------------------------------

@@ -55,7 +55,8 @@ from mario_spark.query import (
     empty_result,
     topk,
 )
-from mario_spark.wand import _local_topk
+from mario_spark.session import local_frame
+from mario_spark.wand import Snapshot, _local_topk
 
 _ATOM_RE = re.compile(r'([+-]?)(?:"([^"]*)"|(\S+))')
 
@@ -142,8 +143,9 @@ def search_query_string(
                 cl_rows.append((qid, cid, kind, t))
             if len(terms) == 1:
                 term_cl_rows.append((qid, cid, kind, terms[0]))
-    cl = spark.createDataFrame(
-        cl_rows, "query_id long, clause_id int, kind string, term string"
+    cl = local_frame(
+        spark, cl_rows,
+        "query_id long, clause_id int, kind string, term string",
     )
     # per-clause idf sum (terms absent from the corpus contribute 0 and
     # can never match — Lucene's behavior for OOV terms)
@@ -163,8 +165,9 @@ def search_query_string(
 
     parts = []
     if term_cl_rows:
-        tcl = spark.createDataFrame(
-            term_cl_rows, "query_id long, clause_id int, kind string, term string"
+        tcl = local_frame(
+            spark, term_cl_rows,
+            "query_id long, clause_id int, kind string, term string",
         )
         parts.append(
             tf.join(F.broadcast(tcl), "term").select(
@@ -229,8 +232,8 @@ def search_query_string(
             ),
         )
     )
-    qcdim = spark.createDataFrame(
-        [(qid, nm, ns) for qid, (nm, ns) in qc.items()],
+    qcdim = local_frame(
+        spark, [(qid, nm, ns) for qid, (nm, ns) in qc.items()],
         "query_id long, req_must int, n_should int",
     )
     ok = (
@@ -464,8 +467,8 @@ def search_query_string_fields(
                 term_cl_rows.append((qid, cid, kind, fld, terms[0]))
     if not cl_rows:
         return empty_result(spark)
-    cl = spark.createDataFrame(
-        cl_rows,
+    cl = local_frame(
+        spark, cl_rows,
         "query_id long, clause_id int, kind string, field string, term string",
     )
     # per-clause idf sum from the clause FIELD's stats; unmapped fields
@@ -486,8 +489,8 @@ def search_query_string_fields(
 
     parts = []
     if term_cl_rows:
-        tcl = spark.createDataFrame(
-            term_cl_rows,
+        tcl = local_frame(
+            spark, term_cl_rows,
             "query_id long, clause_id int, kind string, field string, term string",
         )
         parts.append(
@@ -566,8 +569,8 @@ def search_query_string_fields(
             ),
         )
     )
-    qcdim = spark.createDataFrame(
-        [(qid, nm, ns) for qid, (nm, ns) in qc.items()],
+    qcdim = local_frame(
+        spark, [(qid, nm, ns) for qid, (nm, ns) in qc.items()],
         "query_id long, req_must int, n_should int",
     )
     ok = (
@@ -797,15 +800,15 @@ def _indexed_clauses(
 
 
 def _rank_query_strings(
-    postings: DataFrame,
+    snap: Snapshot,
     parsed: list,
     dfm: dict[str, int],
     stats: dict,
     k: int = 10,
-    deleted=None,
 ) -> DataFrame:
-    """The indexed query_string body, given the posting keys' {key:
-    df}, which Snapshot.search_query_string takes from its TermStats.
+    """The indexed query_string body over `snap`'s postings and
+    tombstones, given the posting keys' {key: df}, which
+    Snapshot.search_query_string takes from `snap`'s TermStats.
     `stats` maps each clause field (None when unscoped) to its
     (n_docs, avgdl): a clause's idf sum uses its field's docCount, its
     length norm the field's avgdl. A clause with a key of no df (an
@@ -829,6 +832,7 @@ def _rank_query_strings(
             sidf = sum(_idf(float(n_f), float(dfm[t])) for t in pterms)
             cl.append((kind, pterms, sidf, float(ad) or 1.0))
         queries_c.append((int(qid), cl, req_must, n_should))
+    deleted = snap.deleted
 
     def score_one(tds, qid, clauses, req_must, n_should):
         return _score_query_string(
@@ -838,9 +842,7 @@ def _rank_query_strings(
     keys = sorted(
         {t for _, cl, _, _ in queries_c for _, ts, _, _ in cl for t in ts}
     )
-    return _positional_gather(
-        postings, keys, queries_c, score_one, k, dfm
-    )
+    return _positional_gather(snap, keys, queries_c, score_one, k, dfm)
 
 
 def parse_simple_query_string(
@@ -945,8 +947,8 @@ def search_simple_query_string(
                 else:
                     chains.append((qid, did, cid, neg, terms))
 
-    cl = spark.createDataFrame(
-        cl_rows, "query_id long, did int, cid int, term string"
+    cl = local_frame(
+        spark, cl_rows, "query_id long, did int, cid int, term string"
     )
     sidf = (
         cl.join(dfreq, "term", "left")
@@ -964,8 +966,8 @@ def search_simple_query_string(
 
     parts = []
     if term_rows:
-        tdim = spark.createDataFrame(
-            term_rows,
+        tdim = local_frame(
+            spark, term_rows,
             "query_id long, did int, cid int, neg boolean, term string",
         )
         parts.append(
@@ -976,8 +978,8 @@ def search_simple_query_string(
             )
         )
     if pref_rows:
-        pdim = spark.createDataFrame(
-            pref_rows,
+        pdim = local_frame(
+            spark, pref_rows,
             "query_id long, did int, cid int, neg boolean, prefix string",
         )
         parts.append(
@@ -1048,8 +1050,8 @@ def search_simple_query_string(
             F.max(F.when(F.col("neg"), 1).otherwise(0)).alias("any_neg"),
         )
     )
-    ddim = spark.createDataFrame(
-        disj_rows, "query_id long, did int, n_pos int"
+    ddim = local_frame(
+        spark, disj_rows, "query_id long, did int, n_pos int"
     )
     matched = (
         per_disj.join(F.broadcast(ddim), ["query_id", "did"])

@@ -46,11 +46,17 @@ from typing import Callable
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mario_spark import codec
-from mario_spark.localread import read_df, read_df_map, read_doc_ids
+from mario_spark.localread import (
+    read_columns,
+    read_df,
+    read_df_map,
+    read_doc_ids,
+    read_postings,
+)
 from mario_spark.postings import block_upper_bound
 from mario_spark.postings import idf as _idf
 from mario_spark.query import (
@@ -549,7 +555,7 @@ POSITIONAL_WEIGHT = 4
 
 
 def scatter_gather(
-    postings: DataFrame,
+    snap: "Snapshot",
     scan_terms: list[str],
     kernel,
     k: int,
@@ -557,14 +563,14 @@ def scatter_gather(
     limit: int | None = None,
     weight: int = 1,
 ) -> DataFrame:
-    """The shape every index-backed query shares: scan the postings
-    pruned to `scan_terms` (predicate pushed into the scan), run
-    `kernel` once per dbucket over the whole query batch (pandas frame
-    of that bucket's blocks -> LOCAL_SCHEMA rows, each query's
-    bucket-local top-k by _local_topk), then rank those rows per query
-    on the driver (_rank_on_driver). All of a doc's postings live in
-    one dbucket, so any kernel whose per-doc evaluation needs only that
-    doc's postings is exact bucket-locally.
+    """The shape every index-backed query shares: scan `snap`'s
+    postings pruned to `scan_terms`, run `kernel` once per dbucket over
+    the whole query batch (pandas frame of that bucket's blocks ->
+    LOCAL_SCHEMA rows, each query's bucket-local top-k by _local_topk),
+    then rank those rows per query on the driver (_rank_on_driver). All
+    of a doc's postings live in one dbucket, so any kernel whose
+    per-doc evaluation needs only that doc's postings is exact
+    bucket-locally.
 
     Two routes to the kernel rows, one finish, identical rows. `dfm`
     ({term: df}; a scan term absent from it is out of vocabulary) sizes
@@ -572,21 +578,27 @@ def scatter_gather(
     candidate postings, the summed df of the scan terms, times the
     kernel's per-posting `weight` (POSITIONAL_WEIGHT for positional
     kernels), are at most `limit` (DRIVER_LIMIT when None; 0 turns the
-    route off), the coordinator route collects the pruned postings in
-    ONE JVM-only Arrow job and runs the kernel per dbucket on the
-    driver. Otherwise the distributed route runs the kernel per dbucket
-    in `applyInPandas` on the executors and collects its rows: the
-    driver receives at most queries x dbuckets x k rows, the merge of
-    shard top-ks an ES coordinating node does, and never more than the
+    route off), the coordinator route runs the kernel per dbucket on
+    the driver over the pruned postings: read from the snapshot's part
+    files with pyarrow when it knows them (localread.read_postings, no
+    job), else collected in ONE JVM-only Arrow job (a session's cached
+    frame, a frame-built snapshot). Otherwise the distributed route
+    runs the kernel per dbucket in `applyInPandas` on the executors
+    (predicate pushed into the scan) and collects its rows: the driver
+    receives at most queries x dbuckets x k rows, the merge of shard
+    top-ks an ES coordinating node does, and never more than the
     limit's postings."""
-    spark = postings.sparkSession
     limit = DRIVER_LIMIT if limit is None else limit
     n = sum(dfm.get(t, 0) for t in scan_terms)
     if n == 0:
-        return empty_result(spark)
-    cand = postings.filter(F.col("term").isin(scan_terms))
+        return empty_result(snap.spark)
     if n * weight <= limit:
-        rows = cand.toPandas()
+        rows = (
+            read_postings(snap.postings_files, scan_terms)
+            if snap.postings_files
+            else snap.postings.filter(F.col("term").isin(scan_terms))
+            .toPandas()
+        )
         local = pd.concat(
             [_result_frame([])]
             + [kernel(g) for _, g in rows.groupby("dbucket", sort=True)],
@@ -594,10 +606,11 @@ def scatter_gather(
         )
     else:
         local = (
-            cand.groupBy("dbucket").applyInPandas(kernel, LOCAL_SCHEMA)
+            snap.postings.filter(F.col("term").isin(scan_terms))
+            .groupBy("dbucket").applyInPandas(kernel, LOCAL_SCHEMA)
             .toPandas()
         )
-    return _rank_on_driver(spark, local, k)
+    return _rank_on_driver(snap.spark, local, k)
 
 
 def _rank_on_driver(spark, local: pd.DataFrame, k: int) -> DataFrame:
@@ -626,7 +639,7 @@ def _rank_on_driver(spark, local: pd.DataFrame, k: int) -> DataFrame:
 
 
 def _run_kernel(
-    postings: DataFrame,
+    snap: "Snapshot",
     queries: list[tuple[int, list[str]]],
     idf_map: dict[str, float],
     avgdl: float,
@@ -643,17 +656,17 @@ def _run_kernel(
     limit: int | None = None,
 ) -> DataFrame:
     """The term kernel over a batch: a term-pruned scatter_gather of
-    _bucket_kernel (`dfm`/`limit` pick its route). `deleted` rides in
-    the kernel's closure (at 100TB ship it as a broadcast roaring
-    bitmap partitioned by dbucket; the sorted-array form keeps the
-    kernel numpy-pure). A conjunctive query with an OOV term matches
-    nothing and is dropped; a batch left with no scored term runs no
-    job."""
+    _bucket_kernel over `snap`'s postings (`dfm`/`limit` pick its
+    route). `deleted` rides in the kernel's closure (at 100TB ship it
+    as a broadcast roaring bitmap partitioned by dbucket; the
+    sorted-array form keeps the kernel numpy-pure). A conjunctive
+    query with an OOV term matches nothing and is dropped; a batch
+    left with no scored term runs no job."""
     if conjunctive:
         queries = [q for q in queries if all(t in idf_map for t in q[1])]
     terms = sorted({t for _, ts in queries for t in ts if t in idf_map})
     if not terms:
-        return empty_result(postings.sparkSession)
+        return empty_result(snap.spark)
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         return _bucket_kernel(
@@ -662,7 +675,7 @@ def _run_kernel(
         )
 
     return scatter_gather(
-        postings, _scan_terms(terms, must_not, filter_terms), kernel, k,
+        snap, _scan_terms(terms, must_not, filter_terms), kernel, k,
         dfm, limit,
     )
 
@@ -1089,7 +1102,10 @@ class Snapshot:
     """A point-in-time reader: the one handle every search reads an
     index through (Lucene's reader over one commit). It holds
 
-    - `postings`, the segments' posting blocks;
+    - `postings`, the segments' posting blocks, opened at first use
+      (`postings` may be the frame or a function that opens it, like
+      TermStats' table); `postings_files` names their part files when
+      pinned from a local index, as open_pit pins them;
     - `terms`, the TermStats every df comes from;
     - `n_docs`/`avgdl`, and `field_stats` = {field: (n_docs, avgdl)}
       of a fields=... index (empty otherwise) with each field's
@@ -1113,13 +1129,15 @@ class Snapshot:
     candidate postings fit under DRIVER_LIMIT on the driver (the one
     limit every Snapshot shares, a positional candidate counting
     POSITIONAL_WEIGHT; the term routes take a per-call `driver_limit`,
-    0 forcing the distributed route), so a small cold call is its
-    metadata read on the driver plus one Spark job.
+    0 forcing the distributed route). With `postings_files` it reads
+    the pruned postings with pyarrow, so a small cold call over a
+    local index runs no Spark job; without (a session, a frame-built
+    snapshot, an object-store index) it collects them in one job.
     """
 
     def __init__(
         self,
-        postings: DataFrame | None,
+        postings: DataFrame | Callable[[], DataFrame | None] | None,
         terms: TermStats,
         n_docs: float,
         avgdl: float,
@@ -1129,8 +1147,12 @@ class Snapshot:
         name: str | None = None,
         segments: dict[int, dict] | None = None,
         deleted_files: list[str] | None = None,
+        postings_files: list[str] | None = None,
     ):
-        self.postings = postings
+        self._open_postings = (
+            postings if callable(postings) else (lambda: postings)
+        )
+        self.postings_files = postings_files
         self.terms = terms
         self.n_docs, self.avgdl = float(n_docs), float(avgdl)
         self.field_stats = field_stats or {}
@@ -1139,6 +1161,18 @@ class Snapshot:
         self.name = name
         self.segments = segments
         self.deleted_files = deleted_files
+
+    @cached_property
+    def postings(self) -> DataFrame | None:
+        """The postings frame, opened at first use: the distributed
+        route and a snapshot without part files scan it."""
+        return self._open_postings()
+
+    @property
+    def spark(self) -> SparkSession:
+        """The session result frames are built in; asking for it opens
+        no postings frame."""
+        return SparkSession.active()
 
     @cached_property
     def deleted_docs(self) -> DataFrame | None:
@@ -1188,7 +1222,11 @@ class Snapshot:
         return f"{field}:", float(n), float(ad)
 
     def require_positions(self, what: str) -> None:
-        if "poss" not in self.postings.columns:
+        columns = (
+            read_columns(self.postings_files[0]) if self.postings_files
+            else self.postings.columns
+        )
+        if "poss" not in columns:
             raise ValueError(
                 f"{self._label} was built without positions; {what} "
                 "needs an index ingested with positions=True"
@@ -1274,7 +1312,7 @@ class Snapshot:
             t: _idf(n_docs, float(dfm[t])) for t in terms if t in dfm
         }
         return _run_kernel(
-            self.postings, queries, idf_map, avgdl, k, conjunctive,
+            self, queries, idf_map, avgdl, k, conjunctive,
             must_not, min_should_match, self.deleted, filter_terms,
             dfm=dfm, limit=driver_limit,
         )
@@ -1354,7 +1392,7 @@ class Snapshot:
                 groups[qid] = gs
                 qlist.append((qid, [t for g in gs for t in g]))
         return _run_kernel(
-            self.postings, qlist, idf_map, self.avgdl, k, False,
+            self, qlist, idf_map, self.avgdl, k, False,
             deleted=self.deleted, groups=groups, avgdl_map=avgdl_map,
             dfm=dfm, limit=driver_limit,
         )
@@ -1409,10 +1447,9 @@ class Snapshot:
             stats = {None: (self.n_docs, self.avgdl)}
         parsed, keys = qsmod._indexed_clauses(queries, default_field)
         if not keys:
-            return empty_result(self.postings.sparkSession)
+            return empty_result(self.spark)
         return qsmod._rank_query_strings(
-            self.postings, parsed, self.terms.df(keys), stats,
-            k, self.deleted,
+            self, parsed, self.terms.df(keys), stats, k
         )
 
     def search_multiterm(
@@ -1433,7 +1470,7 @@ class Snapshot:
         qlist = sorted((qid, sorted(ts)) for qid, ts in qmap.items())
         dfm = self.terms.df(sorted({t for _, ts in qlist for t in ts}))
         return _run_kernel(
-            self.postings, qlist, df_to_idf(dfm, self.n_docs), self.avgdl,
+            self, qlist, df_to_idf(dfm, self.n_docs), self.avgdl,
             k, False, deleted=self.deleted, dfm=dfm, limit=driver_limit,
         )
 

@@ -1553,3 +1553,249 @@ def test_driver_reads_equal_spark_reads(spark, root):
             order, len(kept), n_groups,
         )
         check()
+
+
+def test_pinned_postings_reads_equal_spark_collects(spark, root, monkeypatch):
+    """The coordinator route of a pinned snapshot reads its pruned
+    postings from the part files with pyarrow: every kernel kind over
+    idx.open_pit() returns exactly the rows of the same call over a
+    Snapshot of the same tables as frames, which collects them through
+    Spark. The positional index has 3 segments (one written by a
+    maybe_merge round) and a tombstone generation; the fields=... index
+    serves cross_fields and field-scoped query_string. The pinned calls
+    read part files and collect nothing; the frame calls collect and
+    read no part file."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from mario_spark import phrase as ph
+    from mario_spark import wand
+    from mario_spark.merge import maybe_merge
+    from mario_spark.wand import Snapshot, TermStats
+
+    reads, collects = [], []
+    real_read, real_collect = wand.read_postings, DataFrame.toPandas
+
+    def read(files, terms):
+        reads.append(terms)
+        return real_read(files, terms)
+
+    def collect(self):
+        collects.append(self)
+        return real_collect(self)
+
+    monkeypatch.setattr(wand, "read_postings", read)
+    monkeypatch.setattr(DataFrame, "toPandas", collect)
+
+    def frames(pit: Snapshot) -> Snapshot:
+        return Snapshot(
+            pit.postings, TermStats(lambda: pit.terms.table), pit.n_docs,
+            pit.avgdl, field_stats=pit.field_stats,
+            deleted_docs=lambda: pit.deleted_docs, analyzers=pit.analyzers,
+        )
+
+    def check(pit: Snapshot, ops: dict) -> None:
+        assert pit.postings_files
+        spark_side = frames(pit)
+        for name, op in ops.items():
+            reads.clear()
+            collects.clear()
+            got = op(pit)
+            assert reads and not collects, name
+            reads.clear()
+            want = op(spark_side)
+            assert collects and not reads, name
+            got, want = _canon(got), _canon(want)
+            assert len(got) > 0, name
+            pd.testing.assert_frame_equal(got, want, obj=name)
+
+    pages = pages_df(spark, 320, seed=11, partitions=4).withColumn(
+        "title", F.substring("text", 1, 48)
+    )
+    doc_num = F.regexp_extract("url", r"(\d+)$", 1).cast("long")
+    cat = Catalog(spark, root)
+    idx = cat.create("route-2026-01-01t00-00-00z")
+    idx.ingest(pages.filter(doc_num < 256), segment_docs=128, positions=True)
+    for lo in (256, 288):
+        idx.append(pages.filter((doc_num >= lo) & (doc_num < lo + 32)))
+    merged = maybe_merge(idx, max_per_tier=2)
+    assert merged in idx.paths.committed_segments()
+    assert len(idx.paths.committed_segments()) == 3
+    dfs = {r["term"]: r["df"] for r in idx.dictionary().collect()}
+    words = ["the", "data", "web", "search", "index"]
+    victim = min(
+        (t for t in dfs if t not in words), key=lambda t: abs(dfs[t] - 100)
+    )
+    assert idx.delete_by_query([victim])["deleted"] > 50
+
+    q = [(0, ["data", "web"]), (1, ["search", "index", "the"])]
+    check(idx.open_pit(), {
+        "term": lambda s: s.search_terms(q, 20),
+        "conjunctive": lambda s: s.search_terms(q, 20, conjunctive=True),
+        "must_not": lambda s: s.search_terms(q, 20, must_not={0: ["the"]}),
+        "filter": lambda s: s.search_terms(q, 20, filter_terms=["index"]),
+        "min_should_match": lambda s: s.search_terms(
+            q, 20, min_should_match=2
+        ),
+        "multiterm": lambda s: s.search_multiterm(
+            [(0, "da"), (1, "se")], kind="prefix", k=20
+        ),
+        "phrase": lambda s: ph.search_phrase(
+            s, [(0, ["the", "data"]), (1, ["web", "search"])], k=20
+        ),
+        "phrase_slop": lambda s: ph.search_phrase(
+            s, [(0, ["data", "index"])], k=20, slop=2
+        ),
+        "phrase_prefix": lambda s: ph.search_phrase_prefix(
+            s, [(0, ["the"], "da"), (1, [], "se")], k=20
+        ),
+        "span_or": lambda s: ph.search_span_or(
+            s, [(0, [["the", "web"], ["index"]])], k=20
+        ),
+        "span_near_unordered": lambda s: ph.search_span_near_unordered(
+            s, [(0, ["search", "data"])], k=20
+        ),
+        "span_not": lambda s: ph.search_span_not(
+            s, [(0, ["the", "data"], "web")], k=20
+        ),
+        "span_first": lambda s: ph.search_span_first(
+            s, [(0, ["the", "data"], 30)], k=20
+        ),
+        "span_contain": lambda s: ph.search_span_contain(
+            s, [(0, "the", "data", 3, "web")], mode="containing", k=20
+        ),
+        "query_string": lambda s: s.search_query_string(
+            [(0, '+data "the web" -crawl'), (1, 'index "search the"')], 20
+        ),
+    })
+
+    fidx = cat.create("route-fields-2026-01-01t00-00-00z")
+    fidx.ingest(
+        pages.filter(doc_num < 256), segment_docs=128, positions=True,
+        fields={"title": "title", "contents": "text"},
+    )
+    check(fidx.open_pit(), {
+        "cross_fields": lambda s: s.search_cross_fields(
+            [(0, "data web"), (1, "the search")],
+            {"title": 2.0, "contents": 1.0}, k=20,
+        ),
+        "query_string_fields": lambda s: s.search_query_string(
+            [(0, 'title:data "the web"')], 20, default_field="contents"
+        ),
+    })
+
+
+def test_phrase_prefix_of_one_position_is_a_disjunction(spark, root):
+    """A match_phrase_prefix with no fixed term (one analyzed token)
+    has one position, so it scores as Lucene rewrites a one-position
+    MultiPhraseQuery: the BM25 disjunction of its expansions, the rows
+    of search_terms over them. In a batch it rides next to positional
+    queries, whose rows it leaves unchanged."""
+    from mario_spark import phrase as ph
+
+    idx = Catalog(spark, root).create("one-2026-01-01t00-00-00z")
+    idx.ingest(pages_df(spark, 200, seed=12, partitions=4), positions=True)
+    pit = idx.open_pit()
+    vocab = [r["term"] for r in idx.dictionary().collect()]
+    # the first letter that starts the most terms
+    pfx = max(
+        sorted({t[0] for t in vocab}),
+        key=lambda p: sum(t.startswith(p) for t in vocab),
+    )
+    exps = pit.terms.prefix_windows([pfx])[pfx]
+    assert len(exps) > 3
+    for max_exp in (3, 50):
+        got = _canon(
+            ph.search_phrase_prefix(pit, [(0, [], pfx)], 10, max_exp)
+        )
+        want = _canon(pit.search_terms([(0, exps[:max_exp])], 10))
+        assert len(got) > 0
+        pd.testing.assert_frame_equal(got, want)
+    both = ph.search_phrase_prefix(
+        pit, [(0, ["the"], "da"), (1, [], pfx)], 10
+    )
+    got = _canon(both)
+    pd.testing.assert_frame_equal(
+        got[got["query_id"] == 1].reset_index(drop=True),
+        _canon(pit.search_terms([(1, exps[:50])], 10)),
+    )
+    pd.testing.assert_frame_equal(
+        got[got["query_id"] == 0].reset_index(drop=True),
+        _canon(ph.search_phrase_prefix(pit, [(0, ["the"], "da")], 10)),
+    )
+    assert (got["query_id"] == 0).any()
+
+
+def test_postings_reads_prune_row_groups(spark, root, monkeypatch):
+    """localread.read_postings equals the Spark scan it replaces. New
+    postings part files are sorted by term (postings.encode_tf_rows),
+    so after a segment's postings are rewritten in 16-row groups its
+    row-group statistics skip most of them; a shuffled (unsorted) copy
+    is read whole with the same rows."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from mario_spark import localread
+    from mario_spark.localread import read_postings
+
+    idx = Catalog(spark, root).create("prune-2026-01-01t00-00-00z")
+    idx.ingest(pages_df(spark, 300, seed=13, partitions=4), segment_docs=128)
+    segs = idx.paths.committed_segments()
+    assert len(segs) == 3
+    files = idx.open_pit().postings_files
+    for f in files:
+        t = pq.read_table(f, columns=["term"]).column("term").to_pylist()
+        assert t == sorted(t), f
+    dfs = sorted(
+        (r["df"], r["term"]) for r in idx.dictionary([segs[0]]).collect()
+    )
+    terms = ["zz-not-a-term"] + [t for _, t in dfs[len(dfs) // 2:][:4]]
+    key = ["term", "dbucket", "block_id"]
+
+    def canon(pdf):
+        return pdf.sort_values(key, ignore_index=True)
+
+    want = canon(
+        idx.postings().filter(F.col("term").isin(terms)).toPandas()
+    )
+    assert len(want) > 0
+    got = canon(read_postings(files, terms))
+    assert list(got.dtypes) == list(want.dtypes)
+    pd.testing.assert_frame_equal(got, want)
+
+    kept = []
+    real = localread._row_groups
+
+    def row_groups(pf, column, keys):
+        out = real(pf, column, keys)
+        kept.append((len(out), pf.metadata.num_row_groups))
+        return out
+
+    monkeypatch.setattr(localread, "_row_groups", row_groups)
+    p0 = os.path.join(idx.paths.seg(segs[0]), "postings")
+    rows = pa.concat_tables(
+        [pq.read_table(f) for f in files if f.startswith(p0)]
+    ).sort_by("term")
+    for order in ("sorted", "unsorted"):
+        for f in os.listdir(p0):
+            os.remove(os.path.join(p0, f))
+        tbl = rows
+        if order == "unsorted":
+            perm = np.random.default_rng(3).permutation(rows.num_rows)
+            tbl = rows.take(pa.array(perm))
+        pq.write_table(
+            tbl, os.path.join(p0, "part-00000.parquet"), row_group_size=16
+        )
+        kept.clear()
+        got = canon(read_postings(idx.open_pit().postings_files, terms))
+        pd.testing.assert_frame_equal(got, want, obj=order)
+        ((n_kept, n_groups),) = [
+            kn for kn in kept if kn[1] == -(-rows.num_rows // 16)
+        ]
+        # sorted, few row groups can hold a query term; shuffled, each
+        # spans most of the postings' terms and most are read
+        assert (n_kept < n_groups / 2) == (order == "sorted"), (
+            order, n_kept, n_groups,
+        )

@@ -30,9 +30,11 @@ def _shape(plan: str) -> tuple[int, int]:
 
 def _collected_plans(monkeypatch) -> list[str]:
     """Plans of the frames collected to pandas from now on, in order:
-    scatter_gather collects through DataFrame.toPandas on both routes
-    (the pruned postings on the coordinator route, the kernel rows on
-    the distributed one), so its route shows in the last plan here."""
+    scatter_gather collects through DataFrame.toPandas on the
+    distributed route (the kernel rows) and on the coordinator route of
+    a snapshot without part files (the pruned postings), so its route
+    shows in the last plan here. A pinned snapshot's coordinator route
+    reads its part files instead (_postings_reads)."""
     from pyspark.sql.classic.dataframe import DataFrame
 
     plans: list[str] = []
@@ -44,6 +46,22 @@ def _collected_plans(monkeypatch) -> list[str]:
 
     monkeypatch.setattr(DataFrame, "toPandas", spy)
     return plans
+
+
+def _postings_reads(monkeypatch) -> list[list[str]]:
+    """The scan terms of every pyarrow postings read scatter_gather's
+    coordinator route makes from now on (localread.read_postings)."""
+    from mario_spark import wand
+
+    reads: list[list[str]] = []
+    real = wand.read_postings
+
+    def spy(files, terms):
+        reads.append(list(terms))
+        return real(files, terms)
+
+    monkeypatch.setattr(wand, "read_postings", spy)
+    return reads
 
 
 def test_parquet_filter_pushdown(spark):
@@ -326,14 +344,14 @@ def _job_count(spark, fn) -> int:
 
 
 def test_cold_searches_pay_only_for_their_own_jobs(spark, tmp_path):
-    """A cold Index.search / search_phrase / search_query_string over a
-    multi-segment index with a tombstone generation runs at most ONE
-    job: the dictionary lookup and the tombstones are read on the
-    driver (pyarrow) and the small batch takes the coordinator route,
-    one collect of its pruned postings; a batch that cannot match runs
-    none. Opening a segment table infers
-    no schema, and the query-term frame and the empty result are local
-    relations."""
+    """A small cold Index.search / search_phrase / search_query_string
+    over a multi-segment index with a tombstone generation runs NO
+    Spark job: the dictionary lookup, the tombstones and, on the
+    coordinator route, the batch's pruned postings are all read from
+    the pinned part files on the driver (pyarrow), and the result is a
+    local relation; a batch that cannot match runs no job either.
+    Opening a segment table infers no schema, and the query-term frame
+    and the empty result are local relations."""
     from mario_spark.fixtures import pages_df, query_terms_df
     from mario_spark.index import Index
     from mario_spark.query import empty_result
@@ -366,7 +384,7 @@ def test_cold_searches_pay_only_for_their_own_jobs(spark, tmp_path):
     for name, call in calls.items():
         rows = []
         jobs = _job_count(spark, lambda: rows.extend(call().collect()))
-        assert jobs <= 1, (name, jobs)
+        assert jobs == 0, (name, jobs)
         assert rows, name
     # an OOV phrase member, must clause or conjunctive term drops its
     # query before the scan: a batch left with no query runs no job
@@ -398,8 +416,9 @@ def test_cold_search_over_the_limit_keeps_scatter_gather(
     the distributed plan: it collects one kernel's rows (no rank
     window) in at most two jobs, the postings scan's shuffle and the
     kernel, and returns the rows the coordinator route returns under
-    the default limit, which collects the pruned postings instead.
-    Either way the returned frame is a driver-built local relation."""
+    the default limit, which reads the pruned postings from the pinned
+    part files instead and collects nothing. Either way the returned
+    frame is a driver-built local relation."""
     from mario_spark import wand
     from mario_spark.fixtures import pages_df, query_terms_df
     from mario_spark.index import Index
@@ -429,19 +448,23 @@ def test_cold_search_over_the_limit_keeps_scatter_gather(
     }
 
     plans = _collected_plans(monkeypatch)
+    reads = _postings_reads(monkeypatch)
     for name, call in calls.items():
         plans.clear()
+        reads.clear()
         small = call()
-        assert [_shape(p) for p in plans] == [(0, 0)], name
+        assert plans == [] and len(reads) == 1, name
         assert _shape(_plan(small)) == (0, 0), name
         want = sorted(small.collect())
         assert want, name
         got = []
         plans.clear()
+        reads.clear()
         with monkeypatch.context() as m:
             m.setattr(wand, "DRIVER_LIMIT", 1)
             jobs = _job_count(spark, lambda: got.append(call()))
         assert [_shape(p) for p in plans] == [(1, 0)], name
+        assert reads == [], name
         assert jobs <= 2, (name, jobs)
         (big,) = got
         assert _shape(_plan(big)) == (0, 0), name
@@ -482,19 +505,22 @@ def test_positional_batches_weigh_more_against_the_limit(
     }
     assert wand.POSITIONAL_WEIGHT > 1
     plans = _collected_plans(monkeypatch)
+    reads = _postings_reads(monkeypatch)
     for name, (call, weight) in calls.items():
         want = sorted(call().collect())
         assert want, name
         for limit in (n, n * weight - 1, n * weight):
             monkeypatch.setattr(wand, "DRIVER_LIMIT", limit)
             plans.clear()
+            reads.clear()
             got = call()
-            # the coordinator route collects the postings, the
-            # distributed one the kernel's rows
+            # the coordinator route reads the pinned postings files,
+            # the distributed one collects the kernel's rows
             driver = n * weight <= limit
             assert [_shape(p) for p in plans] == (
-                [(0, 0)] if driver else [(1, 0)]
+                [] if driver else [(1, 0)]
             ), (name, limit)
+            assert len(reads) == (1 if driver else 0), (name, limit)
             assert _shape(_plan(got)) == (0, 0), (name, limit)
             assert sorted(got.collect()) == want, (name, limit)
 
@@ -590,13 +616,14 @@ def test_open_session_sums_segment_dictionaries_on_driver(spark, tmp_path):
 
 def test_federated_dfs_search_looks_df_up_once(spark, tmp_path, monkeypatch):
     """A dfs_query_then_fetch search over two 300-doc indexes, one with
-    a tombstone generation, runs at most 7 jobs: ONE df lookup over
-    both members' segment dictionaries, the tombstone collect and the
-    execution. Like a single-index cold call it reads the dictionaries
-    and tombstones from their part files, so it opens only the members'
-    postings frames. A federated search over empty members returns a
-    local relation (no job)."""
+    a tombstone generation, runs no job: like a single-index cold call
+    it reads the dictionaries (ONE df lookup over both members' segment
+    dictionaries), the tombstones and each member's small batch of
+    postings from their part files, so it opens no table frame. A
+    federated search over empty members returns a local relation (no
+    job)."""
     from mario_spark import index as index_mod
+    from mario_spark import wand
     from mario_spark.federate import search_indexes
     from mario_spark.fixtures import pages_df, query_terms_df
     from mario_spark.index import Catalog
@@ -619,14 +646,23 @@ def test_federated_dfs_search_looks_df_up_once(spark, tmp_path, monkeypatch):
         opened.extend(paths)
         return real_read_table(spark_, *paths)
 
+    lookups: list[list[str]] = []
+    real_read_df = wand.read_df
+
+    def read_df(files, terms):
+        lookups.append(terms)
+        return real_read_df(files, terms)
+
     monkeypatch.setattr(index_mod, "read_table", read_table)
+    monkeypatch.setattr(wand, "read_df", read_df)
     rows = []
     jobs = _job_count(
         spark, lambda: rows.extend(search_indexes(cat, names, q).collect())
     )
-    assert jobs <= 7, jobs
+    assert jobs == 0, jobs
     assert rows
-    assert opened and all("/postings" in p for p in opened), opened
+    assert opened == [], opened
+    assert len(lookups) == 1, lookups
     cat.create("empty-2026-01-01t00-00-00z")
     assert _job_count(
         spark,
