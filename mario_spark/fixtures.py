@@ -330,7 +330,8 @@ DOCUMENTS_QS_SET: list[tuple[int, str]] = [
 ]
 
 
-# field-scoped query_string set (qs.search_query_string_fields):
+# field-scoped query_string set (Snapshot.search_query_string with
+# default_field="contents", over the suite's positional field index):
 # `title:` / `contents:` prefixes scope clauses to per-field stats;
 # unprefixed atoms hit the default field (contents). Exercises field
 # should/must/not, a field phrase, cross-field composition, and the

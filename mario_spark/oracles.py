@@ -9,7 +9,7 @@ lineitem events documents embeddings are pre-registered DuckDB views.
 from __future__ import annotations
 
 from mario_spark.analyze import py_tokenize
-from mario_spark.fixtures import DOCUMENTS_QUERY_SET
+from mario_spark.fixtures import DOCUMENTS_QUERY_SET, DOCUMENTS_SQS_SET
 
 # Same token class as analyze.TOKEN_RE, in RE2 syntax.
 _TOK = r"[\p{L}\p{N}]+"
@@ -4257,24 +4257,32 @@ FROM ce CROSS JOIN cuts
 """
 
 
-def simple_qs_sql(k: int = 10, k1: float = 1.2, b: float = 0.75) -> str:
-    """simple_query_string oracle: one SELECT per disjunct computing
-    clause chain/prefix counts inline over the token array; a doc's
-    score is the sum over MATCHING disjuncts — mirrors
-    qs.search_simple_query_string exactly (same parser)."""
-    from mario_spark.fixtures import DOCUMENTS_SQS_SET
+def simple_qs_sql(
+    queries: list[tuple[int, str]] = DOCUMENTS_SQS_SET,
+    k: int = 10,
+    k1: float = 1.2,
+    b: float = 0.75,
+) -> str:
+    """simple_query_string oracle over `documents`: one SELECT per
+    disjunct computing clause chain/prefix counts inline over the token
+    array; a doc's score is the sum over MATCHING disjuncts. The
+    contract of qs.search_simple_query_string, which scores the same
+    parse over a positional index."""
     from mario_spark.qs import parse_simple_query_string
 
     def idf_sub(terms: list[str]) -> str:
-        inl = ", ".join(f"'{t}'" for t in terms)
+        # one VALUES row per occurrence: a repeated phrase term counts
+        # its idf once per occurrence (Lucene's PhraseWeight)
+        rows = ", ".join(f"('{t}')" for t in terms)
         return (
             "(SELECT coalesce(sum(ln(1.0 + (st2.n_docs - d2.df + 0.5)"
             " / (d2.df + 0.5))), 0.0)"
-            f" FROM dfr d2 CROSS JOIN st st2 WHERE d2.term IN ({inl}))"
+            f" FROM (VALUES {rows}) q2(term) JOIN dfr d2 USING (term)"
+            " CROSS JOIN st st2)"
         )
 
     selects = []
-    for qid, qtext in DOCUMENTS_SQS_SET:
+    for qid, qtext in queries:
         for clauses in parse_simple_query_string(qtext):
             conds, contribs = [], []
             for typ, neg, terms in clauses:

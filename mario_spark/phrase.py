@@ -89,6 +89,44 @@ def positional_tf(documents: DataFrame) -> DataFrame:
     )
 
 
+def positional_snapshot(
+    documents: DataFrame, field_exprs: dict | None = None
+) -> Snapshot:
+    """A frame Snapshot of a positional index over documents(doc_id,
+    text), no tombstones. With `field_exprs` ({field: Column}) it is the
+    field-keyed twin (fields.build_field_doc_table, positions=True):
+    `<field>:<term>` keys, each field's (n_docs, avgdl) in field_stats.
+    The tf table, the postings and the dictionary are persisted."""
+    from mario_spark import fields as fieldsmod
+    from mario_spark.docs import corpus_stats
+    from mario_spark.postings import (
+        dictionary_from_postings,
+        encode_tf_rows,
+        pick_range_width,
+    )
+    from mario_spark.wand import TermStats
+
+    fst = None
+    if field_exprs:
+        fdocs = fieldsmod.build_field_doc_table(
+            documents, field_exprs, positions=True
+        ).persist()
+        fst = {
+            r["field"]: (r["n_docs"], r["avgdl"])
+            for r in fieldsmod.field_stats(fdocs).collect()
+        }
+        tf = fieldsmod.field_tf(fdocs)
+        n_docs, avgdl = max(n for n, _ in fst.values()), 0.0
+    else:
+        tf = positional_tf(documents).persist()
+        st = corpus_stats(tf.select("doc_id", "len").distinct()).collect()[0]
+        n_docs, avgdl = st["n_docs"], st["avgdl"]
+    parallelism = documents.sparkSession.sparkContext.defaultParallelism
+    post = encode_tf_rows(tf, pick_range_width(n_docs, parallelism)).persist()
+    dic = dictionary_from_postings(post).persist()
+    return Snapshot(post, TermStats(lambda: dic), n_docs, avgdl, field_stats=fst)
+
+
 class _PosTermData:
     """Fully decoded positional postings of one term in one dbucket."""
 

@@ -1,5 +1,5 @@
-"""ES/Lucene `query_string` mini-language, compiled onto the engine's
-BM25 machinery.
+"""ES/Lucene `query_string` and `simple_query_string` mini-languages,
+compiled onto the engine's BM25 machinery.
 
 Mario's delegated engine exposes query_string on every search box
 (TIMDEX's simple search IS a query_string query); this module gives the
@@ -15,7 +15,10 @@ quoted atoms are phrases. Lucene BooleanQuery semantics: a doc matches
 iff every must clause matches, no must_not clause matches, and — when
 there are should clauses but no must clauses — at least one should
 clause matches (with musts present, shoulds are pure score boosts).
-Score = sum of matching must+should clause scores.
+Score = sum of matching must+should clause scores. `field:` prefixes
+scope a clause to one field of a fields=... index
+(parse_query_string_fields); simple_query_string's grammar is at
+parse_simple_query_string.
 
 Unified clause model: every scoring clause is a CHAIN of analyzer
 terms (length 1 = plain term, length > 1 = match_phrase). A clause
@@ -23,16 +26,23 @@ scores as Lucene PhraseWeight: idf = sum of member idfs, tf = chain
 frequency (plain tf for a single term), saturated by BM25 — so a
 single-term clause scores EXACTLY like a normal term query.
 
-Distributed shape: all TERM clauses share one tokenize + (doc, term)
-aggregation (a broadcast join against the tiny clause dim prunes it to
-query terms); each PHRASE clause is one extra projection over the
-token-array scan (adjacency counted in codegen, no UDF). The per-doc
-combine is a single hash aggregation; matching rules reduce to
-conditional counts joined against a broadcast per-query constants dim.
-Production serving would route term clauses through the compressed
-postings (wand.QuerySession) and phrases through positional postings
-(phrase.search_phrase); this module is the semantics/composition layer
-the suite verifies end-to-end against DuckDB.
+One engine serves both languages: _rank_query_strings scores their one
+clause form (see the indexed section below) over a wand.Snapshot's
+positional postings, for Snapshot.search_query_string (Index,
+QuerySession, PIT, the suite's query_string operators) and
+search_simple_query_string. The DuckDB oracles (query_string_sql,
+query_string_fields_sql, oracles.simple_qs_sql) are generated from the
+same parsers and are the contract.
+
+search_query_string is the composition reference over raw
+documents(doc_id, text), independent of the index, as
+query.search_exhaustive is for WAND: all TERM clauses share one
+tokenize + (doc, term) aggregation (a broadcast join against the tiny
+clause dim prunes it to query terms); each PHRASE clause is one extra
+projection over the token-array scan (adjacency counted in codegen, no
+UDF). The per-doc combine is a single hash aggregation; matching rules
+reduce to conditional counts joined against a broadcast per-query
+constants dim.
 """
 
 from __future__ import annotations
@@ -369,7 +379,9 @@ SELECT query_id, rank, doc_id, score FROM rk WHERE rank <= {k}
 # fields.search_field. Unmapped field prefixes keep Lucene behavior:
 # the clause can never match (a must on an unmapped field empties the
 # query; a should contributes nothing) — this falls out naturally
-# because an unmapped field has no corpus tokens, no df rows, no hits.
+# because an unmapped field has no postings, no df rows, no hits.
+# Snapshot.search_query_string(default_field=...) serves it from a
+# field-keyed positional index (`<field>:<term>` posting keys).
 
 _FIELD_ATOM_RE = re.compile(
     r'([+-]?)(?:([A-Za-z_][A-Za-z0-9_]*):)?(?:"([^"]*)"|(\S+))'
@@ -393,202 +405,6 @@ def parse_query_string_fields(
     return out
 
 
-def search_query_string_fields(
-    documents: DataFrame,
-    queries: list[tuple[int, str]],
-    field_exprs: dict,
-    default_field: str,
-    k: int = 10,
-) -> DataFrame:
-    """query_string with field scoping over documents(doc_id, text).
-    `field_exprs` maps field name -> Column deriving that field's text
-    (the same derivation fields.build_field_doc_table takes). Same
-    BooleanQuery matching rules and chain-clause scoring as
-    search_query_string, but every frame is keyed by (field, ...) so a
-    clause reads its own field's tf/df/len/avgdl.
-
-    Distributed shape: ONE corpus scan tokenizes every declared field
-    (an array-of-structs explode over the same row — the pandas UDF
-    runs once per field inside one projection), then the shared
-    (field, doc, term) aggregation serves all term clauses and the
-    per-field stats; phrase chains ride the same scan. Everything
-    after the explode is keyed by tiny (field, term) pairs — no text
-    crosses a shuffle."""
-    spark = documents.sparkSession
-    parsed = [
-        (qid, parse_query_string_fields(s, default_field))
-        for qid, s in queries
-    ]
-
-    docs_t = (
-        documents.select(
-            "doc_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(f).alias("field"),
-                            tokenize_udf(expr).alias("arr"),
-                        )
-                        for f, expr in field_exprs.items()
-                    ]
-                )
-            ).alias("fa"),
-        )
-        .select("doc_id", F.col("fa.field").alias("field"), F.col("fa.arr").alias("arr"))
-        .filter(F.size("arr") > 0)
-        .persist()
-    )
-    dl = docs_t.select(
-        "doc_id", "field", F.size("arr").cast("double").alias("len")
-    )
-    st = dl.groupBy("field").agg(
-        F.count("*").cast("double").alias("n_docs"),
-        F.avg("len").alias("avgdl"),
-    )
-    tf = (
-        docs_t.select("doc_id", "field", F.explode("arr").alias("term"))
-        .groupBy("field", "doc_id", "term")
-        .agg(F.count("*").cast("double").alias("tf"))
-    )
-    dfreq = tf.groupBy("field", "term").agg(
-        F.count("*").cast("double").alias("df")
-    )
-
-    cl_rows, term_cl_rows, qc = [], [], {}
-    for qid, clauses in parsed:
-        n_must = sum(1 for kind, _, _ in clauses if kind == "must")
-        n_should = sum(1 for kind, _, _ in clauses if kind == "should")
-        qc[qid] = (n_must, n_should)
-        for cid, (kind, fld, terms) in enumerate(clauses):
-            for t in terms:
-                cl_rows.append((qid, cid, kind, fld, t))
-            if len(terms) == 1:
-                term_cl_rows.append((qid, cid, kind, fld, terms[0]))
-    if not cl_rows:
-        return empty_result(spark)
-    cl = local_frame(
-        spark, cl_rows,
-        "query_id long, clause_id int, kind string, field string, term string",
-    )
-    # per-clause idf sum from the clause FIELD's stats; unmapped fields
-    # have no df/st rows and contribute 0 (and can never match)
-    sidf = (
-        cl.join(dfreq, ["field", "term"], "left")
-        .join(F.broadcast(st), "field", "left")
-        .groupBy("query_id", "clause_id")
-        .agg(
-            F.sum(
-                F.when(
-                    F.col("df").isNotNull(),
-                    bm25_idf("n_docs", "df"),
-                ).otherwise(F.lit(0.0))
-            ).alias("sidf")
-        )
-    )
-
-    parts = []
-    if term_cl_rows:
-        tcl = local_frame(
-            spark, term_cl_rows,
-            "query_id long, clause_id int, kind string, field string, term string",
-        )
-        parts.append(
-            tf.join(F.broadcast(tcl), ["field", "term"]).select(
-                "query_id",
-                "clause_id",
-                "kind",
-                "field",
-                "doc_id",
-                F.col("tf").alias("ctf"),
-            )
-        )
-    # multi-term chains share the one tokenized scan; each chain only
-    # fires on its own field's rows
-    chain_structs = [
-        F.struct(
-            F.lit(qid).cast("long").alias("query_id"),
-            F.lit(cid).cast("int").alias("clause_id"),
-            F.lit(kind).alias("kind"),
-            F.when(
-                F.col("field") == F.lit(fld),
-                _chain_ctf_expr(F.col("arr"), terms),
-            )
-            .otherwise(F.lit(0))
-            .cast("double")
-            .alias("ctf"),
-        )
-        for qid, clauses in parsed
-        for cid, (kind, fld, terms) in enumerate(clauses)
-        if len(terms) > 1
-    ]
-    if chain_structs:
-        parts.append(
-            docs_t.select(
-                "doc_id",
-                "field",
-                F.explode(F.array(*chain_structs)).alias("c"),
-            )
-            .filter(F.col("c.ctf") > 0)
-            .select(
-                "c.query_id",
-                "c.clause_id",
-                "c.kind",
-                "field",
-                "doc_id",
-                F.col("c.ctf").alias("ctf"),
-            )
-        )
-    if not parts:
-        return empty_result(spark)
-    hits = parts[0]
-    for p in parts[1:]:
-        hits = hits.unionByName(p)
-
-    scored = (
-        hits.join(F.broadcast(sidf), ["query_id", "clause_id"])
-        .join(dl, ["doc_id", "field"])
-        .join(F.broadcast(st), "field")
-        .withColumn(
-            "contrib",
-            F.when(F.col("kind") == "not", F.lit(0.0)).otherwise(
-                bm25_contrib("sidf", "ctf", "len", "avgdl")
-            ),
-        )
-        .groupBy("query_id", "doc_id")
-        .agg(
-            F.sum("contrib").alias("score"),
-            F.countDistinct(
-                F.when(F.col("kind") == "must", F.col("clause_id"))
-            ).alias("n_must_hit"),
-            F.max(F.when(F.col("kind") == "should", 1).otherwise(0)).alias(
-                "any_should"
-            ),
-            F.max(F.when(F.col("kind") == "not", 1).otherwise(0)).alias(
-                "any_not"
-            ),
-        )
-    )
-    qcdim = local_frame(
-        spark, [(qid, nm, ns) for qid, (nm, ns) in qc.items()],
-        "query_id long, req_must int, n_should int",
-    )
-    ok = (
-        scored.join(F.broadcast(qcdim), "query_id")
-        .filter(
-            (F.col("any_not") == 0)
-            & (F.col("n_must_hit") == F.col("req_must"))
-            & (
-                (F.col("n_should") == 0)
-                | (F.col("req_must") > 0)
-                | (F.col("any_should") == 1)
-            )
-        )
-        .select("query_id", "doc_id", "score")
-    )
-    return topk(ok, k)
-
-
 def query_string_fields_sql(
     queries: list[tuple[int, str]],
     field_exprs_sql: dict,
@@ -597,8 +413,9 @@ def query_string_fields_sql(
     k1: float = K1,
     b: float = B,
 ) -> str:
-    """DuckDB oracle for search_query_string_fields, generated from the
-    SAME parse; `field_exprs_sql` maps field name -> SQL expression
+    """DuckDB oracle for field-scoped query_string
+    (Snapshot.search_query_string with default_field), generated from
+    the SAME parse; `field_exprs_sql` maps field name -> SQL expression
     over `documents` deriving that field's text."""
     parsed = [
         (qid, parse_query_string_fields(s, default_field))
@@ -712,9 +529,23 @@ SELECT query_id, rank, doc_id, score FROM rk WHERE rank <= {k}
 
 
 # ------------------------------------------------- indexed serving path
-def _clause_hits(tds: dict, terms: tuple):
+# Both query languages compile to ONE clause form over a Snapshot's
+# positional postings, as ES compiles both to one Lucene BooleanQuery:
+# a query is a list of groups, a group a list of (kind, field, keys,
+# const) clauses, kind must | should | not. A chain clause hits where
+# its keys occur in order and scores as PhraseWeight; a constant-score
+# clause (const) hits where any of its keys occurs and adds 1.0. A doc
+# scores the sum over the groups it matches. query_string is one group,
+# simple_query_string one group per '|' disjunct.
+def _clause_hits(tds: dict, terms: tuple, const: bool):
     """-> (ids, ctf, lens) of one dbucket's docs where the clause chain
-    occurs (a single term's tf is its position count)."""
+    occurs (a single term's tf is its position count), or, const, where
+    any of its terms occurs (ctf and lens None)."""
+    if const:
+        parts = [tds[t].ids for t in terms if t in tds]
+        if not parts:
+            return np.empty(0, np.int64), None, None
+        return np.unique(np.concatenate(parts)), None, None
     if len(terms) == 1 and terms[0] in tds:
         td = tds[terms[0]]
         return td.ids, np.diff(td.pos_starts).astype(np.float64), td.lens
@@ -723,27 +554,16 @@ def _clause_hits(tds: dict, terms: tuple):
     return ids[keep], ctf[keep], lens[keep]
 
 
-def _score_query_string(
-    tds: dict,
-    qid: int,
-    clauses: list[tuple[str, tuple, float, float]],
-    req_must: int,
-    n_should: int,
-    k: int,
-    deleted=None,
-):
-    """Evaluate one parsed query_string query against ONE dbucket of a
-    positional index. Exact per bucket: all of a doc's postings live in
-    its dbucket, so must-counts, exclusions, and phrase positions are
-    bucket-local facts. `clauses` rows are (kind, terms, sidf, avgdl) —
-    avgdl is per-CLAUSE so field-scoped clauses normalize by their own
-    field's average length (unscoped queries pass the corpus avgdl on
-    every clause)."""
+def _group_hits(tds: dict, clauses: list, req_must: int, n_should: int):
+    """-> (ids, scores) of one dbucket's docs that match the group, or
+    None: BooleanQuery rules (module docstring). `clauses` rows are
+    (kind, const, terms, sidf, avgdl); avgdl is per clause so
+    field-scoped clauses normalize by their own field's length."""
     hits = [
-        (kind, sidf, ad, *_clause_hits(tds, terms))
-        for kind, terms, sidf, ad in clauses
+        (kind, const, sidf, ad, *_clause_hits(tds, terms, const))
+        for kind, const, terms, sidf, ad in clauses
     ]
-    parts = [h[3] for h in hits if h[3].size]
+    parts = [h[4] for h in hits if h[4].size]
     if not parts:
         return None
     all_ids = np.unique(np.concatenate(parts))
@@ -751,14 +571,14 @@ def _score_query_string(
     must_cnt = np.zeros(all_ids.size, dtype=np.int64)
     should_hit = np.zeros(all_ids.size, dtype=bool)
     not_hit = np.zeros(all_ids.size, dtype=bool)
-    for kind, sidf, ad, ids, ctf, lens in hits:
+    for kind, const, sidf, ad, ids, ctf, lens in hits:
         if ids.size == 0:
             continue
         pos = np.searchsorted(all_ids, ids)
         if kind == "not":
             not_hit[pos] = True
             continue
-        score[pos] += bm25_contrib_np(sidf, ctf, lens, ad)
+        score[pos] += 1.0 if const else bm25_contrib_np(sidf, ctf, lens, ad)
         if kind == "must":
             must_cnt[pos] += 1
         else:
@@ -768,9 +588,29 @@ def _score_query_string(
         & (must_cnt == req_must)
         & ((n_should == 0) | (req_must > 0) | should_hit)
     )
+    return all_ids[keep], score[keep]
+
+
+def _score_query_string(
+    tds: dict, qid: int, groups: list, k: int, deleted=None
+):
+    """Evaluate one compiled query ((clauses, req_must, n_should) per
+    group) against ONE dbucket of a positional index. Exact per bucket:
+    all of a doc's postings live in its dbucket, so must-counts,
+    exclusions, and phrase positions are bucket-local facts."""
+    matched = [m for m in (_group_hits(tds, *g) for g in groups) if m]
+    if not matched:
+        return None
+    if len(matched) == 1:  # every query_string; its ids are sorted unique
+        ids, sc = matched[0]
+    else:
+        ids = np.unique(np.concatenate([i for i, _ in matched]))
+        sc = np.zeros(ids.size)
+        for g_ids, g_sc in matched:
+            sc[np.searchsorted(ids, g_ids)] += g_sc
     if deleted is not None:
-        keep &= ~np.isin(all_ids, deleted, assume_unique=True)
-    ids, sc = all_ids[keep], score[keep]
+        live = ~np.isin(ids, deleted, assume_unique=True)
+        ids, sc = ids[live], sc[live]
     if ids.size == 0:
         return None
     return _local_topk(qid, ids, sc, k)
@@ -778,71 +618,83 @@ def _score_query_string(
 
 def _indexed_clauses(
     queries: list[tuple[int, str]], default_field: str | None = None
-) -> tuple[list, list[str]]:
-    """Parse for the indexed paths: -> ([(query_id, [(kind, field,
-    posting keys)])], sorted posting keys). Unscoped (default_field
-    None) clauses have field None and bare-term keys; field-scoped
-    clauses key their terms as `<field>:<term>` (fields.py)."""
+) -> list:
+    """query_string texts in the clause form, one group each. Unscoped
+    (default_field None) clauses have field None and bare-term keys;
+    field-scoped clauses key their terms as `<field>:<term>`
+    (fields.py)."""
 
-    def clauses(s: str) -> list[tuple[str, str | None, tuple]]:
+    def clauses(s: str) -> list[tuple[str, str | None, tuple, bool]]:
         if default_field is None:
             return [
-                (kind, None, tuple(ts)) for kind, ts in parse_query_string(s)
+                (kind, None, tuple(ts), False)
+                for kind, ts in parse_query_string(s)
             ]
         return [
-            (kind, fld, tuple(f"{fld}:{t}" for t in ts))
+            (kind, fld, tuple(f"{fld}:{t}" for t in ts), False)
             for kind, fld, ts in parse_query_string_fields(s, default_field)
         ]
 
-    parsed = [(qid, clauses(s)) for qid, s in queries]
-    keys = sorted({t for _, cls in parsed for _, _, ts in cls for t in ts})
-    return parsed, keys
+    return [(qid, [clauses(s)]) for qid, s in queries]
+
+
+def _live_group(clauses: list, dfm: dict[str, int], stats: dict):
+    """The group's kernel row (clauses, req_must, n_should), or None
+    when it cannot match. A clause none of whose keys has a df (const),
+    or one of whose keys has none (an OOV term, an unmapped field),
+    never hits and is left out; a group left without one of its must
+    clauses, or with no must and no should clause, is dropped. A
+    chain's idf sum uses its field's docCount, its length norm the
+    field's avgdl (`stats`)."""
+    req_must = sum(1 for c in clauses if c[0] == "must")
+    n_should = sum(1 for c in clauses if c[0] == "should")
+    live = [
+        c for c in clauses if (any if c[3] else all)(t in dfm for t in c[2])
+    ]
+    kinds = [c[0] for c in live]
+    if kinds.count("must") < req_must or not (req_must or "should" in kinds):
+        return None
+    rows = []
+    for kind, fld, keys, const in live:
+        n_f, ad = stats.get(fld, (0, 0.0))
+        sidf = 0.0 if const else sum(
+            _idf(float(n_f), float(dfm[t])) for t in keys
+        )
+        rows.append((kind, const, keys, sidf, float(ad) or 1.0))
+    return rows, req_must, n_should
 
 
 def _rank_query_strings(
-    snap: Snapshot,
-    parsed: list,
-    dfm: dict[str, int],
-    stats: dict,
-    k: int = 10,
+    snap: Snapshot, parsed: list, stats: dict, k: int = 10
 ) -> DataFrame:
-    """The indexed query_string body over `snap`'s postings and
-    tombstones, given the posting keys' {key: df}, which
-    Snapshot.search_query_string takes from `snap`'s TermStats.
-    `stats` maps each clause field (None when unscoped) to its
-    (n_docs, avgdl): a clause's idf sum uses its field's docCount, its
-    length norm the field's avgdl. A clause with a key of no df (an
-    OOV term, an unmapped field) never hits, so it is left out of the
-    kernel and the scan, and a query that then cannot match (a must
-    clause left out, or no must and no should clause left) is dropped
-    before any scan."""
+    """The indexed body of both languages over `snap`'s postings and
+    tombstones, every df from its TermStats: `parsed` queries in the
+    clause form, `stats` = {clause field (None unscoped): (n_docs,
+    avgdl)}. Groups with no must and no should clause are not looked
+    up, and those that cannot match given the dfs are dropped before
+    any scan (_live_group); a batch left with nothing runs no job."""
+    parsed = [
+        (qid, [g for g in groups if any(c[0] != "not" for c in g)])
+        for qid, groups in parsed
+    ]
+    keys = sorted({t for _, gs in parsed for g in gs for c in g for t in c[2]})
+    if not keys:
+        return empty_result(snap.spark)
+    dfm = snap.terms.df(keys)
     queries_c = []
-    for qid, clauses in parsed:
-        req_must = sum(1 for kind, _, _ in clauses if kind == "must")
-        n_should = sum(1 for kind, _, _ in clauses if kind == "should")
-        live = [c for c in clauses if all(t in dfm for t in c[2])]
-        kinds = [kind for kind, _, _ in live]
-        if kinds.count("must") < req_must or not (
-            req_must or "should" in kinds
-        ):
-            continue
-        cl = []
-        for kind, fld, pterms in live:
-            n_f, ad = stats.get(fld, (0, 0.0))
-            sidf = sum(_idf(float(n_f), float(dfm[t])) for t in pterms)
-            cl.append((kind, pterms, sidf, float(ad) or 1.0))
-        queries_c.append((int(qid), cl, req_must, n_should))
+    for qid, groups in parsed:
+        live = [r for r in (_live_group(g, dfm, stats) for g in groups) if r]
+        if live:
+            queries_c.append((int(qid), live))
     deleted = snap.deleted
 
-    def score_one(tds, qid, clauses, req_must, n_should):
-        return _score_query_string(
-            tds, qid, clauses, req_must, n_should, k, deleted
-        )
+    def score_one(tds, qid, groups):
+        return _score_query_string(tds, qid, groups, k, deleted)
 
-    keys = sorted(
-        {t for _, cl, _, _ in queries_c for _, ts, _, _ in cl for t in ts}
+    scan = sorted(
+        {t for _, gs in queries_c for g, _, _ in gs for c in g for t in c[2]}
     )
-    return _positional_gather(snap, keys, queries_c, score_one, k, dfm)
+    return _positional_gather(snap, scan, queries_c, score_one, k, dfm)
 
 
 def parse_simple_query_string(
@@ -889,177 +741,35 @@ def parse_simple_query_string(
 
 
 def search_simple_query_string(
-    documents: DataFrame,
+    snap: Snapshot,
     queries: list[tuple[int, str]],
     k: int = 10,
 ) -> DataFrame:
-    """ES simple_query_string over documents(doc_id, text), Lucene
-    BooleanQuery semantics for the ((a AND b) OR c) shape the grammar
-    parses to: a doc matches iff at least one disjunct matches (all its
-    positive clauses match, no negated clause does); score = sum over
-    MATCHING disjuncts of their positive clause scores. Chain clauses
-    score as PhraseWeight (single term = plain BM25); prefix clauses
-    are CONSTANT_SCORE +1.0 (Lucene's multi-term rewrite in this
-    parser). Returns (query_id, rank, doc_id, score).
+    """ES simple_query_string over a positions=True Snapshot; returns
+    (query_id, rank, doc_id, score). Each disjunct is one group of must
+    (positive) and not (negated) clauses, so a doc matches iff it
+    matches at least one disjunct, and scores the sum over the ones it
+    matches (Lucene BooleanQuery over ((a AND b) OR c)). Chain clauses
+    score as PhraseWeight (a single term is plain BM25); a `word*`
+    clause is CONSTANT_SCORE +1.0 (Lucene's multi-term rewrite in this
+    parser) over its TermStats.prefix_windows expansions, one window
+    read for the batch. A field-scoped snapshot refuses, as
+    search_terms does."""
+    _, n_docs, avgdl = snap.scope(None)
+    snap.require_positions("simple_query_string phrase clauses")
+    parsed = [(int(qid), parse_simple_query_string(s)) for qid, s in queries]
+    prefixes = sorted(
+        {ts[0] for _, gs in parsed for g in gs for typ, _, ts in g
+         if typ == "prefix"}
+    )
+    window = snap.terms.prefix_windows(prefixes) if prefixes else {}
 
-    Distributed shape follows search_query_string: one shared tf agg
-    serves every single-term clause via a broadcast clause dim; each
-    phrase is one codegen projection; prefixes are one startswith
-    theta-join of a broadcast dim; then TWO hash aggs (disjunct-level
-    match, query-level sum) — no per-clause scans of the corpus.
-    """
-    spark = documents.sparkSession
-    parsed = [(qid, parse_simple_query_string(s)) for qid, s in queries]
+    def clause(typ: str, neg: bool, ts: list[str]) -> tuple:
+        keys = window[ts[0]] if typ == "prefix" else ts
+        return ("not" if neg else "must", None, tuple(keys), typ == "prefix")
 
-    # persisted: the tokenize pandas UDF is the expensive pass, and
-    # docs_t feeds tf, dl, AND the fused chain scan — cache once, read
-    # three times (partitions cache as the first stage computes them,
-    # so this helps even within the single final action)
-    docs_t = documents.select(
-        "doc_id", tokenize_udf(F.col("text")).alias("arr")
-    ).filter(F.size("arr") > 0).persist()
-    dl = docs_t.select("doc_id", F.size("arr").cast("double").alias("len"))
-    st = dl.agg(
-        F.count("*").cast("double").alias("n_docs"),
-        F.avg("len").alias("avgdl"),
-    )
-    tf = (
-        docs_t.select("doc_id", F.explode("arr").alias("term"))
-        .groupBy("doc_id", "term")
-        .agg(F.count("*").cast("double").alias("tf"))
-    )
-    dfreq = tf.groupBy("term").agg(F.count("*").cast("double").alias("df"))
-
-    cl_rows, term_rows, pref_rows, disj_rows = [], [], [], []
-    chains = []  # (qid, did, cid, neg, terms) with len > 1
-    for qid, disjuncts in parsed:
-        for did, clauses in enumerate(disjuncts):
-            n_pos = sum(1 for _, neg, _ in clauses if not neg)
-            disj_rows.append((qid, did, n_pos))
-            for cid, (typ, neg, terms) in enumerate(clauses):
-                if typ == "prefix":
-                    pref_rows.append((qid, did, cid, neg, terms[0]))
-                    continue
-                for t in terms:
-                    cl_rows.append((qid, did, cid, t))
-                if len(terms) == 1:
-                    term_rows.append((qid, did, cid, neg, terms[0]))
-                else:
-                    chains.append((qid, did, cid, neg, terms))
-
-    cl = local_frame(
-        spark, cl_rows, "query_id long, did int, cid int, term string"
-    )
-    sidf = (
-        cl.join(dfreq, "term", "left")
-        .crossJoin(F.broadcast(st))
-        .groupBy("query_id", "did", "cid")
-        .agg(
-            F.sum(
-                F.when(
-                    F.col("df").isNotNull(),
-                    bm25_idf("n_docs", "df"),
-                ).otherwise(F.lit(0.0))
-            ).alias("sidf")
-        )
-    )
-
-    parts = []
-    if term_rows:
-        tdim = local_frame(
-            spark, term_rows,
-            "query_id long, did int, cid int, neg boolean, term string",
-        )
-        parts.append(
-            tf.join(F.broadcast(tdim), "term").select(
-                "query_id", "did", "cid", "neg", "doc_id",
-                F.col("tf").alias("ctf"),
-                F.lit(False).alias("is_prefix"),
-            )
-        )
-    if pref_rows:
-        pdim = local_frame(
-            spark, pref_rows,
-            "query_id long, did int, cid int, neg boolean, prefix string",
-        )
-        parts.append(
-            tf.join(
-                F.broadcast(pdim),
-                F.col("term").startswith(F.col("prefix")),
-            )
-            .select("query_id", "did", "cid", "neg", "doc_id")
-            .distinct()
-            .select(
-                "query_id", "did", "cid", "neg", "doc_id",
-                F.lit(1.0).alias("ctf"),
-                F.lit(True).alias("is_prefix"),
-            )
-        )
-    # all phrase chains in ONE shared corpus pass (see
-    # search_query_string — same fused array-of-structs explode)
-    if chains:
-        chain_structs = [
-            F.struct(
-                F.lit(qid).cast("long").alias("query_id"),
-                F.lit(did).cast("int").alias("did"),
-                F.lit(cid).cast("int").alias("cid"),
-                F.lit(bool(neg)).alias("neg"),
-                _chain_ctf_expr(F.col("arr"), terms)
-                .cast("double")
-                .alias("ctf"),
-            )
-            for qid, did, cid, neg, terms in chains
-        ]
-        parts.append(
-            docs_t.select(
-                "doc_id", F.explode(F.array(*chain_structs)).alias("c")
-            )
-            .filter(F.col("c.ctf") > 0)
-            .select(
-                "c.query_id", "c.did", "c.cid", "c.neg", "doc_id",
-                F.col("c.ctf").alias("ctf"),
-                F.lit(False).alias("is_prefix"),
-            )
-        )
-    if not parts:
-        return empty_result(spark)
-    hits = parts[0]
-    for p in parts[1:]:
-        hits = hits.unionByName(p)
-
-    per_disj = (
-        hits.join(F.broadcast(sidf), ["query_id", "did", "cid"], "left")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(st))
-        .withColumn(
-            "contrib",
-            F.when(F.col("neg"), F.lit(0.0))
-            .when(F.col("is_prefix"), F.lit(1.0))
-            .otherwise(
-                bm25_contrib(
-                    F.coalesce("sidf", F.lit(0.0)), "ctf", "len", "avgdl"
-                )
-            ),
-        )
-        .groupBy("query_id", "did", "doc_id")
-        .agg(
-            F.sum("contrib").alias("dscore"),
-            F.countDistinct(
-                F.when(~F.col("neg"), F.col("cid"))
-            ).alias("n_pos_hit"),
-            F.max(F.when(F.col("neg"), 1).otherwise(0)).alias("any_neg"),
-        )
-    )
-    ddim = local_frame(
-        spark, disj_rows, "query_id long, did int, n_pos int"
-    )
-    matched = (
-        per_disj.join(F.broadcast(ddim), ["query_id", "did"])
-        .filter(
-            (F.col("any_neg") == 0)
-            & (F.col("n_pos_hit") == F.col("n_pos"))
-        )
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("dscore").alias("score"))
-    )
-    return topk(matched, k)
+    compiled = [
+        (qid, [[clause(*c) for c in g] for g in groups])
+        for qid, groups in parsed
+    ]
+    return _rank_query_strings(snap, compiled, {None: (n_docs, avgdl)}, k)

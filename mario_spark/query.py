@@ -295,8 +295,8 @@ def search_synonyms(
         t = r["term"]
         for m in dict.fromkeys([t, *synonyms.get(t, [])]):
             rows.append((int(r["query_id"]), t, m))
-    exp = spark.createDataFrame(
-        rows, "query_id long, gterm string, term string"
+    exp = local_frame(
+        spark, rows, "query_id long, gterm string, term string"
     )
     g_idf = (
         exp.join(dfreq, "term")
@@ -597,7 +597,8 @@ def search_pinned(
     scored = bm25_scores(tf, dfreq, stats, query_terms).withColumn(
         "score", F.round("score", SCORE_DECIMALS)
     )
-    pin_df = spark.createDataFrame(
+    pin_df = local_frame(
+        spark,
         [
             (qid, int(did), i + 1)
             for qid, ids in pins
@@ -605,8 +606,10 @@ def search_pinned(
         ],
         "query_id long, doc_id long, pin_ord long",
     )
-    offs = spark.createDataFrame(
-        [(qid, len(ids)) for qid, ids in pins], "query_id long, n_pins long"
+    offs = local_frame(
+        spark,
+        [(qid, len(ids)) for qid, ids in pins],
+        "query_id long, n_pins long",
     )
     # pin score lookup: semi-prune the big scored frame to pinned rows
     # (broadcast-able), then left-join the tiny pin dim onto the result
@@ -726,7 +729,8 @@ def search_terms_set(
     from mario_spark.docs import corpus_stats
 
     spark = docs.sparkSession
-    q = spark.createDataFrame(
+    q = local_frame(
+        spark,
         [
             (qid, t, int(m))
             for qid, terms, m in qsets
@@ -829,7 +833,8 @@ def percolate(
     from mario_spark.analyze import py_tokenize
 
     spark = docs.sparkSession
-    q = spark.createDataFrame(
+    q = local_frame(
+        spark,
         [
             (qid, t)
             for qid, qtext in stored
@@ -883,7 +888,7 @@ def search_bool_prefix(
             full_rows.append((qid, t))
         pref_rows.append((qid, toks[-1]))
     tf = term_frequencies(docs)
-    pref = spark.createDataFrame(pref_rows, "query_id long, prefix string")
+    pref = local_frame(spark, pref_rows, "query_id long, prefix string")
     pmatch = (
         tf.join(F.broadcast(pref), F.col("term").startswith(F.col("prefix")))
         .select("query_id", "doc_id")
@@ -891,9 +896,7 @@ def search_bool_prefix(
         .withColumn("pscore", F.lit(1.0))
     )
     if full_rows:
-        qterms = spark.createDataFrame(
-            full_rows, "query_id long, term string"
-        )
+        qterms = local_frame(spark, full_rows, "query_id long, term string")
         dfreq = doc_frequencies(tf)
         stats = corpus_stats(docs)
         lex = bm25_scores(tf, dfreq, stats, qterms)
@@ -1015,7 +1018,8 @@ def search_rerank(
     from mario_spark.analyze import py_tokenize
 
     spark = docs.sparkSession
-    qterms = spark.createDataFrame(
+    qterms = local_frame(
+        spark,
         [
             (qid, t)
             for qid, qtext in queries
@@ -1026,7 +1030,7 @@ def search_rerank(
     first = search_exhaustive(docs, qterms, k=window).select(
         "query_id", "doc_id"
     )
-    qtexts = spark.createDataFrame(queries, "query_id long, qtext string")
+    qtexts = local_frame(spark, queries, "query_id long, qtext string")
     pairs = first.join(
         documents_text.select("doc_id", "text"), "doc_id"
     ).join(F.broadcast(qtexts), "query_id")

@@ -521,30 +521,21 @@ def bm25_topk_title(spark: SparkSession, sf_dir: str) -> DataFrame:
 _POS_CACHE: dict = {}
 
 
-def _pos_index(spark: SparkSession, sf_dir: str):
-    """The positional index as one Snapshot: persisted postings, a
-    TermStats over the persisted (aggregated) dictionary, no
-    tombstones. Its df LRU is shared by every positional operator."""
-    from mario_spark import docs as docsmod
-    from mario_spark import phrase as ph
-    from mario_spark.postings import dictionary_from_postings, encode_tf_rows, pick_range_width
-    from mario_spark.wand import Snapshot, TermStats
+def _pos_index(spark: SparkSession, sf_dir: str, fields: bool = False):
+    """The positional index as one Snapshot (phrase.positional_snapshot):
+    persisted postings, a TermStats over the persisted (aggregated)
+    dictionary, no tombstones. Its df LRU is shared by every positional
+    operator. fields=True builds its field-keyed twin over (title,
+    contents), as _field_docs derives them."""
+    from mario_spark.phrase import positional_snapshot
 
-    key = (spark.sparkContext.applicationId, sf_dir)
+    key = (spark.sparkContext.applicationId, sf_dir, fields)
     if key not in _POS_CACHE:
         d = _documents(spark, sf_dir).select("doc_id", "text")
-        tfpos = ph.positional_tf(d).persist()
-        st = docsmod.corpus_stats(
-            tfpos.select("doc_id", "len").distinct()
-        ).collect()[0]
-        rw = pick_range_width(
-            st["n_docs"], spark.sparkContext.defaultParallelism
-        )
-        post = encode_tf_rows(tfpos, rw).persist()
-        dic = dictionary_from_postings(post).persist()
-        _POS_CACHE[key] = Snapshot(
-            post, TermStats(lambda: dic), st["n_docs"], st["avgdl"]
-        )
+        fx = None
+        if fields:
+            fx = {"title": F.substring("text", 1, 64), "contents": F.col("text")}
+        _POS_CACHE[key] = positional_snapshot(d, fx)
     return _POS_CACHE[key]
 
 
@@ -1564,13 +1555,14 @@ def term_suggest_popular(spark: SparkSession, sf_dir: str) -> DataFrame:
 def query_string_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ES query_string mini-language (bare=should, +must, -must_not,
     quotes=phrase) compiled onto BM25: Lucene BooleanQuery matching
-    rules, every clause scored as a term/phrase chain (PhraseWeight).
-    See mario_spark.qs for the grammar and distributed shape."""
+    rules, every clause scored as a term/phrase chain (PhraseWeight),
+    served from the shared positional index (Snapshot.search_query_string;
+    see mario_spark.qs for the grammar and the clause form)."""
     from mario_spark.fixtures import DOCUMENTS_QS_SET
-    from mario_spark.qs import search_query_string
 
-    d = _documents(spark, sf_dir).select("doc_id", "text")
-    return search_query_string(d, DOCUMENTS_QS_SET, k=10)
+    return _pos_index(spark, sf_dir).search_query_string(
+        DOCUMENTS_QS_SET, k=10
+    )
 
 
 def query_string_fields_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1579,18 +1571,13 @@ def query_string_fields_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scores against THAT field's own stats (per-field df, docCount,
     avgFieldLength — Lucene per-field index semantics); unmapped-field
     clauses keep Lucene behavior (should contributes nothing, must
-    empties the query). Same BooleanQuery matching as query_string_topk
-    (qs.search_query_string_fields)."""
+    empties the query). Same BooleanQuery matching as query_string_topk,
+    served from the positional field index
+    (Snapshot.search_query_string with default_field)."""
     from mario_spark.fixtures import DOCUMENTS_QSF_SET
-    from mario_spark.qs import search_query_string_fields
 
-    d = _documents(spark, sf_dir).select("doc_id", "text")
-    return search_query_string_fields(
-        d,
-        DOCUMENTS_QSF_SET,
-        {"title": F.substring("text", 1, 64), "contents": F.col("text")},
-        default_field="contents",
-        k=10,
+    return _pos_index(spark, sf_dir, fields=True).search_query_string(
+        DOCUMENTS_QSF_SET, k=10, default_field="contents"
     )
 
 
@@ -2793,13 +2780,15 @@ def ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def simple_qs_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ES simple_query_string (default_operator=AND): '|' OR-groups of
-    AND'd clauses with negation, phrases, and constant-score prefixes
+    AND'd clauses with negation, phrases, and constant-score prefixes,
+    served from the shared positional index by the query_string body
     (qs.search_simple_query_string)."""
     from mario_spark import qs as qsmod
     from mario_spark.fixtures import DOCUMENTS_SQS_SET
 
-    d = _documents(spark, sf_dir).select("doc_id", "text")
-    return qsmod.search_simple_query_string(d, DOCUMENTS_SQS_SET, k=10)
+    return qsmod.search_simple_query_string(
+        _pos_index(spark, sf_dir), DOCUMENTS_SQS_SET, k=10
+    )
 
 
 def agg_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:

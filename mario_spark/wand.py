@@ -1430,13 +1430,15 @@ class Snapshot:
         positional postings, phrase clauses run the chain matcher,
         Lucene BooleanQuery matching applies, tombstones are masked.
         Rank-identical to qs.search_query_string over the raw pages
-        (asserted in tests).
+        and to the DuckDB oracle qs.query_string_sql (asserted in
+        tests). The body is qs._rank_query_strings, which
+        qs.search_simple_query_string shares.
 
         On a fields=... index pass `default_field` (the ES option) for
         unprefixed atoms; the `field:term` / `field:"a phrase"` syntax
         is live and each clause scores with ITS field's
-        df/docCount/avgFieldLength (rank-identical to
-        qs.search_query_string_fields)."""
+        df/docCount/avgFieldLength (rank-identical to the DuckDB oracle
+        qs.query_string_fields_sql)."""
         from mario_spark import qs as qsmod
 
         self.require_positions("query_string phrase clauses")
@@ -1445,11 +1447,8 @@ class Snapshot:
             stats = self.field_stats
         else:
             stats = {None: (self.n_docs, self.avgdl)}
-        parsed, keys = qsmod._indexed_clauses(queries, default_field)
-        if not keys:
-            return empty_result(self.spark)
         return qsmod._rank_query_strings(
-            self, parsed, self.terms.df(keys), stats, k
+            self, qsmod._indexed_clauses(queries, default_field), stats, k
         )
 
     def search_multiterm(

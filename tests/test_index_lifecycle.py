@@ -1569,7 +1569,7 @@ def test_pinned_postings_reads_equal_spark_collects(spark, root, monkeypatch):
     from pyspark.sql.classic.dataframe import DataFrame
 
     from mario_spark import phrase as ph
-    from mario_spark import wand
+    from mario_spark import qs, wand
     from mario_spark.merge import maybe_merge
     from mario_spark.wand import Snapshot, TermStats
 
@@ -1629,6 +1629,12 @@ def test_pinned_postings_reads_equal_spark_collects(spark, root, monkeypatch):
     assert idx.delete_by_query([victim])["deleted"] > 50
 
     q = [(0, ["data", "web"]), (1, ["search", "index", "the"])]
+
+    def simple_qs(s):
+        return qs.search_simple_query_string(
+            s, [(0, "data w0* | search"), (1, f'{victim} | "the web" ind*')], 20
+        )
+
     check(idx.open_pit(), {
         "term": lambda s: s.search_terms(q, 20),
         "conjunctive": lambda s: s.search_terms(q, 20, conjunctive=True),
@@ -1667,7 +1673,13 @@ def test_pinned_postings_reads_equal_spark_collects(spark, root, monkeypatch):
         "query_string": lambda s: s.search_query_string(
             [(0, '+data "the web" -crawl'), (1, 'index "search the"')], 20
         ),
+        "simple_query_string": simple_qs,
     })
+    # the simple_query_string group that only tombstoned docs match
+    # (the victim term) returns none of them
+    dele = {r["doc_id"] for r in idx.deleted_ids().collect()}
+    got = simple_qs(idx.open_pit()).toPandas()
+    assert len(got) > 0 and not set(got["doc_id"]) & dele
 
     fidx = cat.create("route-fields-2026-01-01t00-00-00z")
     fidx.ingest(

@@ -4,7 +4,6 @@ be visible in .explain output, not just hoped for (SURVEY §4.2)."""
 from __future__ import annotations
 
 import re
-import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -171,7 +170,7 @@ def test_ann_lsh_topk_uses_take_ordered(spark):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_query_session_no_dbucket_shuffle(spark, monkeypatch):
+def test_query_session_no_dbucket_shuffle(spark, monkeypatch, job_count):
     """QuerySession's postings are cached pre-partitioned on dbucket,
     so the groupBy(dbucket).applyInPandas must NOT plan an Exchange
     between the cache scan and the kernel (the cold path does): a warm
@@ -192,8 +191,8 @@ def test_query_session_no_dbucket_shuffle(spark, monkeypatch):
     plans = _collected_plans(monkeypatch)
     # driver_limit=0 forces the distributed path (the coordinator fast
     # path would otherwise serve this rare-term query driver-side)
-    assert _job_count(
-        spark, lambda: sess.search([(0, "join scan")], driver_limit=0)
+    assert job_count(
+        lambda: sess.search([(0, "join scan")], driver_limit=0)
     ) <= 1
     (plan,) = plans
 
@@ -234,7 +233,7 @@ def test_query_session_no_dbucket_shuffle(spark, monkeypatch):
         lambda: psess.search_query_string([(0, '+data "the web" -crawl')]),
     ):
         plans.clear()
-        assert _job_count(spark, warm) <= 1
+        assert job_count(warm) <= 1
         (plan,) = plans
         assert not exchange_between_scan_and_kernel(plan)
     psess.close()
@@ -266,26 +265,17 @@ def test_cold_dbucket_operators_plan_one_kernel_no_window(
     neither the collected frame nor the returned one plans a rank
     window, and no operator adds a second kernel pass."""
     from mario_spark import phrase as ph
-    from mario_spark import wand
-    from mario_spark.fields import build_field_doc_table, field_tf
+    from mario_spark import qs, wand
     from mario_spark.fixtures import query_terms_df
-    from mario_spark.postings import dictionary_from_postings, encode_tf_rows
     from mario_spark.wand import Snapshot, TermStats, search_wand
 
     monkeypatch.setattr(wand, "DRIVER_LIMIT", 0)
 
     post, dic, n, ad = _positional_index(spark)
     snap = Snapshot(post, TermStats(lambda: dic), n, ad)
-    fdocs = build_field_doc_table(
+    fsnap = ph.positional_snapshot(
         spark.read.parquet(f"{SF_DIR}/documents.parquet"),
         {"title": F.substring("text", 1, 64), "contents": F.col("text")},
-        positions=True,
-    )
-    fpost = encode_tf_rows(field_tf(fdocs), 256)
-    fdic = dictionary_from_postings(fpost)
-    fsnap = Snapshot(
-        fpost, TermStats(lambda: fdic), 0, 0.0,
-        field_stats={"title": (n, ad), "contents": (n, ad)},
     )
     ops = {
         "search_wand": lambda: search_wand(
@@ -318,6 +308,9 @@ def test_cold_dbucket_operators_plan_one_kernel_no_window(
         "search_query_string_fields": lambda: fsnap.search_query_string(
             [(0, 'title:data "the query"')], default_field="contents"
         ),
+        "search_simple_query_string": lambda: qs.search_simple_query_string(
+            snap, [(0, 'data quer* | "the web"')]
+        ),
     }
     plans = _collected_plans(monkeypatch)
     for name, op in ops.items():
@@ -327,23 +320,7 @@ def test_cold_dbucket_operators_plan_one_kernel_no_window(
         assert _shape(_plan(df)) == (0, 0), name
 
 
-def _job_count(spark, fn) -> int:
-    """Spark jobs that `fn()` launches, counted through a job group."""
-    sc = spark.sparkContext
-    group = f"job-count-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    # the status tracker learns of jobs from the asynchronous listener
-    # bus: drain it so the last job is counted
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_cold_searches_pay_only_for_their_own_jobs(spark, tmp_path):
+def test_cold_searches_pay_only_for_their_own_jobs(spark, tmp_path, job_count):
     """A small cold Index.search / search_phrase / search_query_string
     over a multi-segment index with a tombstone generation runs NO
     Spark job: the dictionary lookup, the tombstones and, on the
@@ -383,7 +360,7 @@ def test_cold_searches_pay_only_for_their_own_jobs(spark, tmp_path):
     }
     for name, call in calls.items():
         rows = []
-        jobs = _job_count(spark, lambda: rows.extend(call().collect()))
+        jobs = job_count(lambda: rows.extend(call().collect()))
         assert jobs == 0, (name, jobs)
         assert rows, name
     # an OOV phrase member, must clause or conjunctive term drops its
@@ -396,21 +373,21 @@ def test_cold_searches_pay_only_for_their_own_jobs(spark, tmp_path):
         ),
     ):
         rows = []
-        assert _job_count(spark, lambda: rows.extend(call().collect())) == 0
+        assert job_count(lambda: rows.extend(call().collect())) == 0
         assert rows == []
 
     def open_tables():
         idx.postings(), idx.docs(), idx.dictionary(), idx.deleted_ids()
 
-    assert _job_count(spark, open_tables) == 0
-    assert _job_count(
-        spark, lambda: query_terms_df(spark, [(0, f"{a} {b}")]).collect()
+    assert job_count(open_tables) == 0
+    assert job_count(
+        lambda: query_terms_df(spark, [(0, f"{a} {b}")]).collect()
     ) == 0
-    assert _job_count(spark, lambda: empty_result(spark).collect()) == 0
+    assert job_count(lambda: empty_result(spark).collect()) == 0
 
 
 def test_cold_search_over_the_limit_keeps_scatter_gather(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, job_count
 ):
     """A cold call whose candidate postings exceed DRIVER_LIMIT keeps
     the distributed plan: it collects one kernel's rows (no rank
@@ -462,7 +439,7 @@ def test_cold_search_over_the_limit_keeps_scatter_gather(
         reads.clear()
         with monkeypatch.context() as m:
             m.setattr(wand, "DRIVER_LIMIT", 1)
-            jobs = _job_count(spark, lambda: got.append(call()))
+            jobs = job_count(lambda: got.append(call()))
         assert [_shape(p) for p in plans] == [(1, 0)], name
         assert reads == [], name
         assert jobs <= 2, (name, jobs)
@@ -593,7 +570,9 @@ def test_driver_rank_finish_rounds_like_spark(spark):
     check(_rank_on_driver(spark, picked, 10).toPandas(), 10)
 
 
-def test_open_session_sums_segment_dictionaries_on_driver(spark, tmp_path):
+def test_open_session_sums_segment_dictionaries_on_driver(
+    spark, tmp_path, job_count
+):
     """Opening a session on a tombstoned multi-segment index runs no
     job: the unaggregated segment dictionaries (df summed on the
     driver, no groupBy shuffle) and the tombstones are read with
@@ -607,14 +586,16 @@ def test_open_session_sums_segment_dictionaries_on_driver(spark, tmp_path):
     dic = {r["term"]: r["df"] for r in idx.dictionary().collect()}
     assert idx.delete_by_query([sorted(dic, key=dic.get)[-20]])["deleted"]
     opened = []
-    assert _job_count(spark, lambda: opened.append(idx.open_session())) == 0
+    assert job_count(lambda: opened.append(idx.open_session())) == 0
     sess = opened[0]
     assert sess.terms._df_map == dic
     assert sess.deleted is not None
     sess.close()
 
 
-def test_federated_dfs_search_looks_df_up_once(spark, tmp_path, monkeypatch):
+def test_federated_dfs_search_looks_df_up_once(
+    spark, tmp_path, monkeypatch, job_count
+):
     """A dfs_query_then_fetch search over two 300-doc indexes, one with
     a tombstone generation, runs no job: like a single-index cold call
     it reads the dictionaries (ONE df lookup over both members' segment
@@ -656,16 +637,15 @@ def test_federated_dfs_search_looks_df_up_once(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(index_mod, "read_table", read_table)
     monkeypatch.setattr(wand, "read_df", read_df)
     rows = []
-    jobs = _job_count(
-        spark, lambda: rows.extend(search_indexes(cat, names, q).collect())
+    jobs = job_count(
+        lambda: rows.extend(search_indexes(cat, names, q).collect())
     )
     assert jobs == 0, jobs
     assert rows
     assert opened == [], opened
     assert len(lookups) == 1, lookups
     cat.create("empty-2026-01-01t00-00-00z")
-    assert _job_count(
-        spark,
+    assert job_count(
         lambda: search_indexes(cat, ["empty-2026-01-01t00-00-00z"], q)
         .collect(),
     ) == 0

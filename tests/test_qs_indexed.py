@@ -1,15 +1,19 @@
-"""query_string served from a persisted positional index must be
-rank-identical to the oracle-checked composition path
-(qs.search_query_string over the raw docs)."""
+"""query_string and simple_query_string served from a positional index
+must be rank-identical to their references: the composition path
+qs.search_query_string over the raw docs, and the DuckDB oracles
+generated from the same parsers (qs.query_string_fields_sql,
+oracles.simple_qs_sql) over the same docs."""
 
 from __future__ import annotations
 
+import duckdb
 import pandas as pd
 import pytest
 
 from mario_spark.docs import assign_doc_ids
 from mario_spark.fixtures import pages_df
 from mario_spark.index import Catalog
+from mario_spark.phrase import positional_snapshot
 from mario_spark.qs import search_query_string
 
 QUERIES = [
@@ -23,6 +27,18 @@ QUERIES = [
 
 def _canon(df):
     return df.toPandas().sort_values(["query_id", "rank"], ignore_index=True)
+
+
+def _canon_sql(docs, sql):
+    """The oracle `sql` run by DuckDB over a `documents` view of the
+    Spark frame `docs` (doc_id, text), in _canon's shape and dtypes."""
+    con = duckdb.connect()
+    con.register("documents", docs.toPandas())
+    return (
+        con.execute(sql).df()
+        .astype({"query_id": "int64", "rank": "int64", "doc_id": "int64"})
+        .sort_values(["query_id", "rank"], ignore_index=True)
+    )
 
 
 @pytest.fixture()
@@ -64,11 +80,11 @@ def test_query_string_indexed_matches_composition(spark, root):
 
 def test_query_string_fields_indexed_matches_composition(spark, root):
     """Field-scoped query_string served from a persisted fields=... +
-    positions=True index must be rank-identical to the oracle-checked
-    composition path (qs.search_query_string_fields over raw pages)."""
+    positions=True index must be rank-identical to its DuckDB oracle
+    (qs.query_string_fields_sql over the same raw pages)."""
     from pyspark.sql import functions as F
 
-    from mario_spark.qs import search_query_string_fields
+    from mario_spark.qs import query_string_fields_sql
 
     pages = pages_df(spark, 400, seed=13, partitions=4).withColumn(
         "title", F.substring("text", 1, 48)
@@ -90,14 +106,14 @@ def test_query_string_fields_indexed_matches_composition(spark, root):
     ]
     got = _canon(idx.search_query_string(queries, k=10, default_field="contents"))
     ref_docs = assign_doc_ids(pages).select("doc_id", "text")
-    want = _canon(
-        search_query_string_fields(
-            ref_docs,
+    want = _canon_sql(
+        ref_docs,
+        query_string_fields_sql(
             queries,
-            {"title": F.substring("text", 1, 48), "contents": F.col("text")},
+            {"title": "substr(text, 1, 48)", "contents": "text"},
             default_field="contents",
             k=10,
-        )
+        ),
     )
     assert len(got) > 0
     assert 4 not in set(got["query_id"])  # unmapped must matched nothing
@@ -151,8 +167,6 @@ def test_query_string_fields_scoping_semantics(spark):
     a field phrase requires adjacency within the field."""
     from pyspark.sql import functions as F
 
-    from mario_spark.qs import search_query_string_fields
-
     d = spark.createDataFrame(
         [
             (0, "alpha beta. gamma delta epsilon"),
@@ -166,8 +180,10 @@ def test_query_string_fields_scoping_semantics(spark):
         "contents": F.col("text"),
     }
 
+    fsnap = positional_snapshot(d, fx)
+
     def run(q):
-        out = search_query_string_fields(d, [(0, q)], fx, "contents", k=10)
+        out = fsnap.search_query_string([(0, q)], k=10, default_field="contents")
         return sorted(r["doc_id"] for r in out.collect())
 
     # title: scoping — 'alpha' is in doc 0's title only (docs 1,2 have
@@ -185,21 +201,64 @@ def test_query_string_fields_scoping_semantics(spark):
     assert run("beta -title:alpha") == [1, 2]
 
 
-def test_query_string_degenerate_inputs_empty_not_crash(spark):
+def test_query_string_degenerate_inputs_empty_not_crash(spark, job_count):
     """Empty / operator-only / pure-negative query strings match
-    NOTHING (Lucene's zero-clause BooleanQuery), never crash."""
-    from mario_spark.qs import (
-        search_query_string,
-        search_simple_query_string,
-    )
+    NOTHING (Lucene's zero-clause BooleanQuery) and never crash; over a
+    positional Snapshot they also run no Spark job: such a query has no
+    positive clause to look up."""
+    from mario_spark.qs import search_simple_query_string
 
     d = spark.createDataFrame(
         [(0, "join hash"), (1, "merge")], "doc_id long, text string"
     )
-    for fn in (search_query_string, search_simple_query_string):
-        for q in ("", "+", "-merge", '-"a b"' if fn is search_simple_query_string else "-x"):
-            out = fn(d, [(0, q)])
-            assert out.count() == 0, (fn.__name__, q)
+    for q in ("", "+", "-merge", "-x"):
+        assert search_query_string(d, [(0, q)]).count() == 0, q
+    snap = positional_snapshot(d)
+    runs = {
+        "query_string": (snap.search_query_string, "-x"),
+        "simple_query_string": (
+            lambda qs: search_simple_query_string(snap, qs), '-"a b"'
+        ),
+    }
+    for name, (fn, neg) in runs.items():
+        for q in ("", "+", "-merge", neg):
+            out = []
+            assert job_count(lambda: out.append(fn([(0, q)]))) == 0, (name, q)
+            assert out[0].count() == 0, (name, q)
+
+
+def test_simple_query_string_matches_oracle(spark, root):
+    """simple_query_string over a pinned positions=True index is
+    rank-identical to its DuckDB oracle (oracles.simple_qs_sql over the
+    same raw pages): '|' groups sum, negated chains and prefixes
+    exclude, phrases chain (a repeated phrase term adds its idf once
+    per occurrence), `word*` is constant-score over its expansions, and
+    an OOV term empties its group."""
+    from mario_spark.oracles import simple_qs_sql
+    from mario_spark.qs import search_simple_query_string
+
+    pages = pages_df(spark, 400, seed=19, partitions=4)
+    cat = Catalog(spark, root)
+    idx = cat.create("pages-2026-03-01t00-00-00z")
+    idx.ingest(pages, positions=True, segment_docs=256)
+
+    queries = [
+        (0, "data web | search spark"),
+        (1, 'index -crawl | "the data"'),
+        (2, "w001* score"),
+        (3, "data -w00* | zzzoov"),
+        (4, '"web search" -zzzoov | page query'),
+        (5, "zzzoov data"),
+        (6, "w000* | w001*"),
+        (7, '"the the" | "data data" web'),
+    ]
+    got = _canon(search_simple_query_string(idx.open_pit(), queries, k=10))
+    want = _canon_sql(
+        assign_doc_ids(pages).select("doc_id", "text"),
+        simple_qs_sql(queries, k=10),
+    )
+    assert set(got["query_id"]) == {0, 1, 2, 3, 4, 6, 7}
+    pd.testing.assert_frame_equal(got, want, check_exact=False, atol=1e-9)
 
 
 def test_cross_fields_warm_session_matches_composition(spark, root):
