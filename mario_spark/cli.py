@@ -71,8 +71,15 @@ def main(argv: list[str] | None = None) -> int:
         "conditional put (safe for CONCURRENT drivers; the shape an "
         "S3/GCS/Iceberg backend implements), 's3' = the same CAS loop "
         "through an S3-compatible If-None-Match put client (in-sandbox "
-        "a file-backed fake under <root>/.objectstore; real S3 is a "
-        "client swap)",
+        "a file-backed fake under <root>/.objectstore unless "
+        "--s3-bucket names a real bucket)",
+    )
+    ap.add_argument(
+        "--s3-bucket", default=None,
+        help="with --committer s3: commit to this real S3 bucket through "
+        "boto3 (endpoint from MARIO_S3_ENDPOINT, key prefix from "
+        "MARIO_S3_PREFIX, credentials from the AWS chain); without it "
+        "the file-backed fake is used",
     )
     sub = ap.add_subparsers(dest="cmd", required=True)
 
@@ -185,17 +192,20 @@ def main(argv: list[str] | None = None) -> int:
         from mario_spark.index import ObjectStoreCommitter, set_committer
         from mario_spark.objectstore import Boto3S3Store, FakeS3Store
 
-        # MARIO_S3_TEST_BUCKET set -> real boto3 client (endpoint/creds
-        # from MARIO_S3_ENDPOINT + the AWS chain); unset -> the
-        # file-backed fake under <root>/.objectstore, same contract
-        if os.environ.get("MARIO_S3_TEST_BUCKET"):
-            set_committer(ObjectStoreCommitter(Boto3S3Store.from_env()))
+        # the real store is an explicit opt-in: only --s3-bucket selects
+        # a boto3 client; otherwise the file-backed fake under
+        # <root>/.objectstore, same contract
+        if args.s3_bucket:
+            store = Boto3S3Store.from_env(args.s3_bucket)
+            where = f"s3://{args.s3_bucket}/{store.prefix}"
         else:
-            set_committer(
-                ObjectStoreCommitter(
-                    FakeS3Store(os.path.join(args.root, ".objectstore"))
-                )
-            )
+            where = os.path.join(args.root, ".objectstore")
+            store = FakeS3Store(where)
+        print(
+            f"committer: s3 via {type(store).__name__} at {where}",
+            file=sys.stderr,
+        )
+        set_committer(ObjectStoreCommitter(store))
     spark = _spark(args)
     cat = _catalog(spark, args)
 

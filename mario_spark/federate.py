@@ -16,13 +16,16 @@ Both modes map exactly onto this engine: an Index is the shard, its
 pinned Snapshot reads its postings and tombstones, and a Snapshot's
 TermStats is its only df source — so dfs mode is just "score every
 member's snapshot with one TermStats over all members' dictionaries
-and the summed collection stats". The merge ranks the members'
+and the summed collection stats". That TermStats and the dfs snapshots
+read the part files the members' pins hold open; the pins are closed
+once the members' hits are in. The merge ranks the members'
 |indexes| x k rows per query on the driver, as the coordinating node
 does.
 """
 
 from __future__ import annotations
 
+from contextlib import ExitStack
 from functools import reduce
 from itertools import groupby, islice
 
@@ -95,50 +98,61 @@ def _search_opened(
     filter_terms: list[str] | None = None,
     indices_boost: dict[str, float] | None = None,
 ) -> DataFrame:
-    # one pinned Snapshot per member; empty members (fresh rollover
-    # targets) contribute nothing — exactly an empty ES index in a
-    # multi-index search
-    snaps = [
-        (n, snap)
-        for n, snap in ((n, idx.open_pit()) for n, idx in idxs)
-        if snap.segments
-    ]
-    if not snaps:
-        return local_frame(query_terms.sparkSession, [], SCHEMA)
-    queries = sorted(_by_query(query_terms).items())
-    if mode == "dfs_query_then_fetch":
-        # the dfs pre-phase: ONE TermStats over every member's segment
-        # dictionaries (its lookup runs once, then serves every member
-        # from its LRU) and the summed collection stats
-        members = [s for _, s in snaps]
-        files = [s.terms.files for s in members]
-        terms = TermStats(
-            lambda: reduce(
-                DataFrame.unionByName, [s.terms.table for s in members]
-            ),
-            files=None if None in files else [f for fs in files for f in fs],
-        )
-        n = sum(s.n_docs for _, s in snaps)
-        avgdl = sum(s.avgdl * s.n_docs for _, s in snaps) / n if n else 0.0
+    with ExitStack() as pins:
+        # one pinned Snapshot per member; empty members (fresh rollover
+        # targets) contribute nothing — exactly an empty ES index in a
+        # multi-index search. Each pin holds its part files open until
+        # the members' hits are in
         snaps = [
-            (name, Snapshot(lambda s=s: s.postings, terms, n, avgdl,
-                            deleted_docs=lambda s=s: s.deleted_docs,
-                            deleted_files=s.deleted_files,
-                            postings_files=s.postings_files))
-            for name, s in snaps
+            (n, snap)
+            for n, snap in (
+                (n, pins.enter_context(idx.open_pit())) for n, idx in idxs
+            )
+            if snap.segments
         ]
-    # each member's result is a local relation (collecting it runs no
-    # job); boosted scores round as Spark's round(score * boost, 4)
-    hits = []
-    for name, snap in snaps:
-        rows = snap.search_terms(queries, k, filter_terms=filter_terms)
-        rows = rows.collect()
-        boost = float((indices_boost or {}).get(name, 1.0))
-        score = round_half_up(np.array([r["score"] for r in rows]) * boost)
-        hits += [
-            (r["query_id"], -s, name, r["doc_id"])
-            for r, s in zip(rows, score.tolist())
-        ]
+        if not snaps:
+            return local_frame(query_terms.sparkSession, [], SCHEMA)
+        queries = sorted(_by_query(query_terms).items())
+        if mode == "dfs_query_then_fetch":
+            # the dfs pre-phase: ONE TermStats over every member's
+            # segment dictionaries (its lookup runs once, then serves
+            # every member from its LRU) and the summed collection stats;
+            # it and the dfs snapshots below read the members' open files
+            members = [s for _, s in snaps]
+            files = [s.terms.files for s in members]
+            terms = TermStats(
+                lambda: reduce(
+                    DataFrame.unionByName, [s.terms.table for s in members]
+                ),
+                files=(
+                    None if None in files else [f for fs in files for f in fs]
+                ),
+            )
+            n = sum(s.n_docs for _, s in snaps)
+            avgdl = (
+                sum(s.avgdl * s.n_docs for _, s in snaps) / n if n else 0.0
+            )
+            snaps = [
+                (name, Snapshot(lambda s=s: s.postings, terms, n, avgdl,
+                                deleted_docs=lambda s=s: s.deleted_docs,
+                                deleted_files=s.deleted_files,
+                                postings_files=s.postings_files))
+                for name, s in snaps
+            ]
+        # each member's result is a local relation (collecting it runs
+        # no job); boosted scores round as Spark's round(score * boost, 4)
+        hits = []
+        for name, snap in snaps:
+            rows = snap.search_terms(queries, k, filter_terms=filter_terms)
+            rows = rows.collect()
+            boost = float((indices_boost or {}).get(name, 1.0))
+            score = round_half_up(
+                np.array([r["score"] for r in rows]) * boost
+            )
+            hits += [
+                (r["query_id"], -s, name, r["doc_id"])
+                for r, s in zip(rows, score.tolist())
+            ]
     hits.sort()  # score desc, then index, then doc_id, per query
     out = [
         (q, rank, name, doc, -s)

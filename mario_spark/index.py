@@ -57,7 +57,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from mario_spark import docs as docsmod
-from mario_spark.localread import part_files
+from mario_spark.localread import open_parts, part_files
 from mario_spark.postings import build_postings, pick_range_width
 from mario_spark.query import B, K1, empty_result
 from mario_spark.session import local_frame
@@ -864,32 +864,37 @@ class Index:
         }
 
     def open_session(self, **kwargs) -> "QuerySession":
-        """Open a warm-serving QuerySession: the Snapshot open_pit pins
-        now, with its postings repartitioned on dbucket and cached and
-        its term statistics opened once (TermStats.open: the segment
-        dictionaries summed into a driver dict when they fit). The
-        dictionaries and the tombstones are read on the driver, so
-        opening runs no Spark job.
+        """Open a warm-serving QuerySession over the Snapshot open_pit
+        pins now: its term statistics are opened once (TermStats.open:
+        the segment dictionaries summed into a driver dict when they
+        fit) and its tombstones read, both on the driver from the
+        pinned part files, so opening runs no Spark job. The session
+        keeps the pin's postings part files open: its coordinator route
+        reads a small batch's pruned postings from them with pyarrow,
+        no job, as a cold call does. Its postings are also
+        repartitioned on dbucket and cached for the distributed route.
 
         The snapshot is pinned at open. Appends, deletes and merges —
         even merges that DELETE the session's source segment files —
-        do not change (or break) what a warmed session serves: its
-        postings are cached, its df held (or cached in shards) and its
-        tombstones collected at open. Seeing new data is an explicit
+        do not change (or break) what a warmed session serves: its part
+        files stay open (readable after their removal on POSIX), its
+        postings cache stays, its df is held (or cached in shards) and
+        its tombstones were read at open. Seeing new data is an explicit
         refresh: open a new session (ES semantics — a PIT/scroll keeps
         serving its snapshot while the index moves on). Call .warm()
-        before relying on that: warming materializes the cache while
-        the source files still exist. `with idx.open_session() as s:`
-        releases the cached frames on exit. kwargs go to QuerySession;
-        a fields=... index serves search(field=...) with the snapshot's
-        per-field stats."""
+        before relying on that for the distributed route: warming
+        materializes the cache while the source files still exist. The
+        session holds one file descriptor per part file, and a
+        merged-away segment's disk space comes back only when it
+        closes; `with idx.open_session() as s:` releases the
+        cached frames and the part files on exit. kwargs go to
+        QuerySession; a fields=... index serves search(field=...) with
+        the snapshot's per-field stats."""
         from mario_spark.wand import QuerySession
 
         snap = self._pinned()
         return QuerySession(
-            snap.postings, snap.terms, snap.n_docs, snap.avgdl,
-            deleted_docs=lambda: snap.deleted_docs,
-            deleted_files=snap.deleted_files,
+            snap.postings, snap.terms, snap.n_docs, snap.avgdl, pit=snap,
             **{"field_stats": snap.field_stats, **kwargs},
         )
 
@@ -908,7 +913,8 @@ class Index:
         ops/ann.py), tombstones masked, `where` = ES kNN filter
         (pre-filtering: the predicate prunes the scan BEFORE any
         distance math)."""
-        return self._knn(self.open_pit(), query_vectors, k, where)
+        with self.open_pit() as snap:
+            return self._knn(snap, query_vectors, k, where)
 
     def _knn(
         self,
@@ -954,15 +960,15 @@ class Index:
         tombstones or read different segments."""
         from mario_spark.fixtures import query_terms_df as _qtd
 
-        snap = self.open_pit()
-        lex = (
-            self.search(
-                _qtd(self.spark, queries), k=window, pit=snap
-            ).select("query_id", "doc_id", F.col("rank").alias("lrank"))
-        )
-        den = self._knn(snap, query_vectors, k=window).select(
-            "query_id", "doc_id", F.col("rank").alias("drank")
-        )
+        with self.open_pit() as snap:
+            lex = (
+                self.search(
+                    _qtd(self.spark, queries), k=window, pit=snap
+                ).select("query_id", "doc_id", F.col("rank").alias("lrank"))
+            )
+            den = self._knn(snap, query_vectors, k=window).select(
+                "query_id", "doc_id", F.col("rank").alias("drank")
+            )
         fused = lex.join(den, ["query_id", "doc_id"], "full_outer").withColumn(
             "rrf",
             F.round(
@@ -1109,19 +1115,27 @@ class Index:
         and the tombstone generations all come from that one read. So an
         append, merge or delete that commits mid-search can never make
         the stats disagree with the postings and df a search scores.
-        The postings, dictionary and tombstone part files are listed now
-        too: a search reads the query terms' df, the tombstones and (on
-        the coordinator route) the pruned postings from them on the
-        driver with pyarrow, so a small cold search runs no Spark job.
+        The postings, dictionary and tombstone part files are opened now
+        too, each memory-mapped once (localread.open_parts): a search
+        reads the query terms' df, the tombstones and (on the
+        coordinator route) the pruned postings from them on the driver
+        with pyarrow, so a small cold search runs no Spark job.
 
         A search passed the handle (search(pit=...)) sees exactly this
         snapshot: segment and tombstone generation files are immutable
-        once committed, so pinning the lists pins the data, and later
-        appends, upserts and deletes stay invisible. Validity lasts as
-        long as no compaction has physically removed the pinned files
-        (ES's PIT keep_alive contract; ES keeps segment refcounts
-        server-side). A session (open_session) caches what it pins, so
-        it keeps serving after the files go."""
+        once committed, so pinning the open files pins the data, and
+        later appends, upserts and deletes stay invisible. The snapshot
+        stays valid until it is closed (close(), or `with
+        idx.open_pit() as pit:`) or dropped: a merge that removes its
+        segments leaves the open files readable (POSIX keeps an unlinked
+        file while it is open), as Lucene keeps a merged-away file until
+        its last reader closes and ES's PIT keep_alive rests on. The
+        costs: one file descriptor per part file while it is held, and
+        a merged-away segment's disk space comes back only when its last
+        reader closes. The routes that run Spark still read by path, so
+        they need the files on disk: a batch over the driver limit
+        scans the postings, and a multi-term expansion the
+        dictionaries."""
         meta = _read_json(self.paths.meta) or {}
         markers = self.paths.committed_markers()
         gens = (_read_json(self.paths.deletes_marker) or {}).get(
@@ -1138,11 +1152,11 @@ class Index:
                 if segs else None
             )
 
-        def files(sub: str) -> list[str] | None:
-            return part_files(*self._seg_paths(sub, segs)) if segs else []
+        def files(sub: str) -> list[pq.ParquetFile] | None:
+            return open_parts(*self._seg_paths(sub, segs)) if segs else []
 
         # the postings, dictionary and tombstone frames open at first
-        # use: a search reads their part files on the driver instead
+        # use: a search reads their open part files on the driver instead
         return Snapshot(
             lambda: read("postings"),
             TermStats(lambda: read("dictionary"), files=files("dictionary")),
@@ -1152,7 +1166,7 @@ class Index:
             analyzers=_field_analyzers(fields),
             name=self.paths.name,
             segments=markers,
-            deleted_files=part_files(
+            deleted_files=open_parts(
                 *[self.paths.delete_gen(g) for g in gens]
             ),
             postings_files=files("postings"),
@@ -1163,6 +1177,7 @@ class Index:
         raises."""
         snap = self.open_pit()
         if not snap.segments:
+            snap.close()
             raise self._no_segments()
         return snap
 
@@ -1278,7 +1293,10 @@ class Index:
         pinned segments and tombstones, so concurrent appends, upserts
         and deletes don't shift results between pages (the ES PIT +
         search_after pagination contract)."""
-        snap = pit if pit is not None else self.open_pit()
+        if pit is None:
+            with self.open_pit() as snap:
+                return self.search(query_terms, k, filter_terms, pit=snap)
+        snap = pit
         if snap.field_stats:
             raise ValueError(
                 f"index '{self.paths.name}' is field-scoped; "
@@ -1318,24 +1336,28 @@ class Index:
         wildcard on one mapped field."""
         from mario_spark import fuzzy as fuzzymod
 
-        snap = self._pinned()
-        pfx, n_docs, avgdl = snap.scope(field)
-        dic = snap.terms.dictionary
-        if pfx:
-            dic = dic.filter(F.col("term").startswith(pfx)).select(
-                F.col("term").substr(F.lit(len(pfx) + 1), F.length("term"))
-                .alias("term"),
-                "df",
+        with self._pinned() as snap:
+            pfx, n_docs, avgdl = snap.scope(field)
+            dic = snap.terms.dictionary
+            if pfx:
+                dic = dic.filter(F.col("term").startswith(pfx)).select(
+                    F.col("term")
+                    .substr(F.lit(len(pfx) + 1), F.length("term"))
+                    .alias("term"),
+                    "df",
+                )
+            qdf = local_frame(
+                self.spark, queries, "query_id long, term string"
             )
-        qdf = local_frame(self.spark, queries, "query_id long, term string")
-        exp = fuzzymod.expand(kind, dic, qdf, max_edits, prefix_length)
-        if pfx:
-            exp = exp.select(
-                "query_id", F.concat(F.lit(pfx), "term").alias("term"), "df"
+            exp = fuzzymod.expand(kind, dic, qdf, max_edits, prefix_length)
+            if pfx:
+                exp = exp.select(
+                    "query_id", F.concat(F.lit(pfx), "term").alias("term"),
+                    "df",
+                )
+            return fuzzymod._search_expansion(
+                snap.postings, exp, n_docs, avgdl, k, deleted=snap.deleted
             )
-        return fuzzymod._search_expansion(
-            snap.postings, exp, n_docs, avgdl, k, deleted=snap.deleted
-        )
 
     def field_stats(self) -> dict[str, dict]:
         """Per-field (n_docs, avgdl) summed from segment markers —
@@ -1359,9 +1381,8 @@ class Index:
         scored with the FIELD's df/n_docs/avgdl. The query is analyzed
         with the field's analyzer (a shingle field turns "data table
         scan" into its 2-shingles)."""
-        return self._pinned().search(
-            queries, k, conjunctive, field=field
-        )
+        with self._pinned() as snap:
+            return snap.search(queries, k, conjunctive, field=field)
 
     def search_phrase_fast(
         self, field: str, queries: list[tuple[int, str]], k: int = 10
@@ -1374,18 +1395,18 @@ class Index:
         (Index.search_phrase), exactly like ES."""
         from mario_spark.analyze import py_tokenize
 
-        snap = self._pinned()
-        if snap.analyzers.get(field) != "shingle":
-            raise ValueError(
-                f"field '{field}' is not a shingle field; declare it as "
-                '{"source": <col>, "analyzer": "shingle"} at ingest'
-            )
-        for _, q in queries:
-            if len(py_tokenize(q)) != 2:
+        with self._pinned() as snap:
+            if snap.analyzers.get(field) != "shingle":
                 raise ValueError(
-                    f"index_phrases serves 2-term phrases: {q!r}"
+                    f"field '{field}' is not a shingle field; declare it "
+                    'as {"source": <col>, "analyzer": "shingle"} at ingest'
                 )
-        return snap.search(queries, k, field=field)
+            for _, q in queries:
+                if len(py_tokenize(q)) != 2:
+                    raise ValueError(
+                        f"index_phrases serves 2-term phrases: {q!r}"
+                    )
+            return snap.search(queries, k, field=field)
 
     def mget(self, urls: list[str]) -> DataFrame:
         """ES _mget by _id (the url IS the _id, matching the reference's
@@ -1412,7 +1433,8 @@ class Index:
         ([(query_id, raw query string)]); see
         Snapshot.search_query_string. On a fields=... index pass
         `default_field` for unprefixed atoms."""
-        return self._pinned().search_query_string(queries, k, default_field)
+        with self._pinned() as snap:
+            return snap.search_query_string(queries, k, default_field)
 
     def search_phrase(
         self, phrases: list[tuple[int, str]], k: int = 10,
@@ -1421,7 +1443,8 @@ class Index:
         """match_phrase over a positions=True index:
         [(query_id, raw phrase text)] -> (query_id, rank, doc_id, score).
         On a fields=... index pass `field`; see Snapshot.search_phrase."""
-        return self._pinned().search_phrase(phrases, k, field=field)
+        with self._pinned() as snap:
+            return snap.search_phrase(phrases, k, field=field)
 
 
 # ---------------------------------------------------------------- catalog

@@ -6,8 +6,17 @@ open a warm session) the dictionary row count and df map. A small
 batch then scores on the driver over its term-pruned postings, a
 fourth read. Through Spark each read is a job (50-80 ms plus planning
 on a 4-core box); pyarrow reads the same Spark-written part files on
-the driver in a few ms and launches no job. Only local table
-directories qualify: `part_files` returns None for any other path (an
+the driver in a few ms and launches no job.
+
+Every read takes OPEN part files: `open_parts` maps each file once
+(`pq.ParquetFile(pa.memory_map(f))`, footer parsed at open) and the
+reader that pinned them (a wand.Snapshot, a session) keeps the handles
+until it is closed, Lucene's MMapDirectory reader over one commit. On
+POSIX a mapped file stays readable after a merge removes it, so a
+pinned reader survives the merge; the costs are one file descriptor
+per part file while the reader is open, and a removed file's disk
+space comes back only when its last reader closes. Only local table
+directories qualify: `open_parts` returns None for any other path (an
 object-store URI), and callers keep their Spark read.
 """
 
@@ -39,14 +48,26 @@ def part_files(*dirs: str) -> list[str] | None:
     return out
 
 
-def read_columns(f: str) -> list[str]:
-    """The column names in the footer schema of the part file `f`."""
-    return pq.read_schema(f).names
+def open_parts(*dirs: str) -> list[pq.ParquetFile] | None:
+    """The part files of the table directories `dirs` (part_files),
+    each memory-mapped and opened once, or None when one of them is not
+    a local directory. close_parts releases them; dropping the last
+    reference does too."""
+    files = part_files(*dirs)
+    if files is None:
+        return None
+    return [pq.ParquetFile(pa.memory_map(f)) for f in files]
 
 
-def _read(f: str, columns: list[str]) -> pa.Table:
-    with pq.ParquetFile(f) as pf:
-        return pf.read(columns=columns)
+def close_parts(parts: list[pq.ParquetFile] | None) -> None:
+    """Unmap and close `parts` (open_parts); closing twice is a no-op."""
+    for pf in parts or []:
+        pf.close(force=True)
+
+
+def read_columns(pf: pq.ParquetFile) -> list[str]:
+    """The column names in the footer schema of the part file `pf`."""
+    return pf.schema_arrow.names
 
 
 def _row_groups(pf: pq.ParquetFile, column: str, keys: list[str]) -> list[int]:
@@ -65,72 +86,74 @@ def _row_groups(pf: pq.ParquetFile, column: str, keys: list[str]) -> list[int]:
 
 
 def _term_rows(
-    files: list[str], keys: list[str], columns: list[str] | None = None
+    parts: list[pq.ParquetFile], keys: list[str],
+    columns: list[str] | None = None,
 ) -> list[pa.Table]:
-    """The rows of the part `files` whose `term` is one of the sorted
-    unique `keys`, one table per file that holds any: only the row
-    groups whose `term` statistics can hold a key are read
+    """The rows of the open part files `parts` whose `term` is one of
+    the sorted unique `keys`, one table per file that holds any: only
+    the row groups whose `term` statistics can hold a key are read
     (_row_groups), then filtered on `term`."""
     value_set = pa.array(keys, pa.string())
     out = []
-    for f in files:
-        with pq.ParquetFile(f) as pf:
-            rgs = _row_groups(pf, "term", keys)
-            if not rgs:
-                continue
-            t = pf.read_row_groups(rgs, columns=columns)
+    for pf in parts:
+        rgs = _row_groups(pf, "term", keys)
+        if not rgs:
+            continue
+        t = pf.read_row_groups(rgs, columns=columns)
         out.append(t.filter(pc.is_in(t["term"], value_set=value_set)))
     return out
 
 
-def read_df(files: list[str], terms: list[str]) -> dict[str, int]:
+def read_df(parts: list[pq.ParquetFile], terms: list[str]) -> dict[str, int]:
     """{term: df} for the dictionary terms among `terms`, summed over
-    the (term, df) part `files` (segment dictionaries repeat a term once
-    per segment; segments are doc-disjoint). A dictionary written sorted
-    by term has narrow row groups, so their statistics skip every row
-    group that cannot hold a query term; an unsorted one is read whole,
-    with the same result."""
+    the (term, df) part files `parts` (segment dictionaries repeat a
+    term once per segment; segments are doc-disjoint). A dictionary
+    written sorted by term has narrow row groups, so their statistics
+    skip every row group that cannot hold a query term; an unsorted one
+    is read whole, with the same result."""
     keys = sorted(set(terms))
     out: dict[str, int] = {}
     if not keys:
         return out
-    for t in _term_rows(files, keys, ["term", "df"]):
+    for t in _term_rows(parts, keys, ["term", "df"]):
         for term, df in zip(t["term"].to_pylist(), t["df"].to_pylist()):
             out[term] = out.get(term, 0) + int(df)
     return out
 
 
-def read_postings(files: list[str], terms: list[str]) -> pd.DataFrame:
-    """The posting-block rows of `terms` in the postings part `files`,
-    every column, as `toPandas` returns them from a Spark scan of the
-    same files filtered on `term` (row order aside). Like read_df it
-    skips the row groups whose `term` statistics hold no query term:
+def read_postings(
+    parts: list[pq.ParquetFile], terms: list[str]
+) -> pd.DataFrame:
+    """The posting-block rows of `terms` in the postings part files
+    `parts`, every column, as `toPandas` returns them from a Spark scan
+    of the same files filtered on `term` (row order aside). Like read_df
+    it skips the row groups whose `term` statistics hold no query term:
     postings.encode_tf_rows writes each part file sorted by term."""
-    parts = _term_rows(files, sorted(set(terms)))
-    if not parts:
-        return pq.read_schema(files[0]).empty_table().to_pandas()
-    return pa.concat_tables(parts).to_pandas()
+    tables = _term_rows(parts, sorted(set(terms)))
+    if not tables:
+        return parts[0].schema_arrow.empty_table().to_pandas()
+    return pa.concat_tables(tables).to_pandas()
 
 
 def read_df_map(
-    files: list[str], max_rows: int | None
+    parts: list[pq.ParquetFile], max_rows: int | None
 ) -> dict[str, int] | None:
-    """The whole {term: df} of the (term, df) part `files`, df summed
-    per term, or None when they hold more than `max_rows` rows (counted
-    from the footers, before any data is read)."""
+    """The whole {term: df} of the (term, df) part files `parts`, df
+    summed per term, or None when they hold more than `max_rows` rows
+    (counted from the footers, before any data is read)."""
     if max_rows is not None:
-        if sum(pq.read_metadata(f).num_rows for f in files) > max_rows:
+        if sum(pf.metadata.num_rows for pf in parts) > max_rows:
             return None
-    if not files:
+    if not parts:
         return {}
-    t = pa.concat_tables([_read(f, ["term", "df"]) for f in files])
+    t = pa.concat_tables([pf.read(columns=["term", "df"]) for pf in parts])
     agg = t.group_by("term").aggregate([("df", "sum")])
     return dict(zip(agg["term"].to_pylist(), agg["df_sum"].to_pylist()))
 
 
-def read_doc_ids(files: list[str]) -> np.ndarray | None:
-    """The `doc_id` column of the part `files` as a sorted unique int64
-    array, or None when they hold no row."""
-    parts = [_read(f, ["doc_id"])["doc_id"].to_numpy() for f in files]
-    arr = np.concatenate(parts).astype(np.int64) if parts else np.empty(0)
+def read_doc_ids(parts: list[pq.ParquetFile]) -> np.ndarray | None:
+    """The `doc_id` column of the part files `parts` as a sorted unique
+    int64 array, or None when they hold no row."""
+    cols = [pf.read(columns=["doc_id"])["doc_id"].to_numpy() for pf in parts]
+    arr = np.concatenate(cols).astype(np.int64) if cols else np.empty(0)
     return np.unique(arr) if arr.size else None

@@ -331,10 +331,19 @@ def select_tiered_merge(
     the reason Lucene merges tier-by-tier instead of always-everything.
     Reads only the segment commit markers, each once (no data scan).
     Returns the seg-id list or None when no tier is over-full."""
+    return _select_tiered(
+        index.paths.committed_markers(), max_per_tier, tier_factor
+    )
+
+
+def _select_tiered(
+    markers: dict[int, dict], max_per_tier: int, tier_factor: float
+) -> list[int] | None:
+    """select_tiered_merge over the commit `markers` of one listing."""
     import math
 
     tiers: dict[int, list[tuple[int, int]]] = {}
-    for s, m in index.paths.committed_markers().items():
+    for s, m in markers.items():
         n = int(m.get("n_docs", 0))
         t = int(math.floor(math.log(max(n, 1)) / math.log(tier_factor)))
         tiers.setdefault(t, []).append((s, n))
@@ -354,11 +363,14 @@ def maybe_merge(
     compacts the selected segments into one new segment and returns its
     id (None = nothing to do). Tombstones are purged only when the
     selection happens to cover every committed segment (the
-    compact_segments safety rule); partial merges keep them masked."""
-    sel = select_tiered_merge(index, max_per_tier, tier_factor)
+    compact_segments safety rule); partial merges keep them masked.
+    The selection and that full-coverage check read one listing of the
+    commit markers."""
+    markers = index.paths.committed_markers()
+    sel = _select_tiered(markers, max_per_tier, tier_factor)
     if sel is None:
         return None
-    full = set(sel) == set(index.paths.committed_segments())
+    full = set(sel) == set(markers)
     gens = (_read_json(index.paths.deletes_marker) or {}).get("generations")
     return compact_segments(index, sel, purge_deletes=full and bool(gens))
 

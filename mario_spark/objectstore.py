@@ -151,7 +151,8 @@ class Boto3S3Store:
     Credentials ride the standard AWS chain (env/config/IMDS);
     `endpoint_url` points the client at a non-AWS endpoint. from_env()
     builds the store the integration tests use: MARIO_S3_TEST_BUCKET
-    (required), MARIO_S3_ENDPOINT and MARIO_S3_PREFIX (optional).
+    (required unless `bucket` is passed, as the CLI's --s3-bucket
+    does), MARIO_S3_ENDPOINT and MARIO_S3_PREFIX (optional).
     """
 
     def __init__(
@@ -176,8 +177,8 @@ class Boto3S3Store:
         self.prefix = prefix
 
     @classmethod
-    def from_env(cls) -> "Boto3S3Store":
-        bucket = os.environ["MARIO_S3_TEST_BUCKET"]
+    def from_env(cls, bucket: str | None = None) -> "Boto3S3Store":
+        bucket = bucket or os.environ["MARIO_S3_TEST_BUCKET"]
         return cls(
             bucket,
             prefix=os.environ.get("MARIO_S3_PREFIX", ""),

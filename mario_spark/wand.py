@@ -46,11 +46,13 @@ from typing import Callable
 
 import numpy as np
 import pandas as pd
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mario_spark import codec
 from mario_spark.localread import (
+    close_parts,
     read_columns,
     read_df,
     read_df_map,
@@ -579,15 +581,18 @@ def scatter_gather(
     kernel's per-posting `weight` (POSITIONAL_WEIGHT for positional
     kernels), are at most `limit` (DRIVER_LIMIT when None; 0 turns the
     route off), the coordinator route runs the kernel per dbucket on
-    the driver over the pruned postings: read from the snapshot's part
-    files with pyarrow when it knows them (localread.read_postings, no
-    job), else collected in ONE JVM-only Arrow job (a session's cached
-    frame, a frame-built snapshot). Otherwise the distributed route
-    runs the kernel per dbucket in `applyInPandas` on the executors
-    (predicate pushed into the scan) and collects its rows: the driver
-    receives at most queries x dbuckets x k rows, the merge of shard
-    top-ks an ES coordinating node does, and never more than the
-    limit's postings."""
+    the driver over the pruned postings: read with pyarrow from the
+    part files the snapshot holds open (`postings_files`: a pinned
+    snapshot, a session opened from a local index;
+    localread.read_postings, no job), else collected in ONE JVM-only
+    Arrow job (a frame-built snapshot or session, an object-store
+    index). Otherwise the distributed route runs the kernel per dbucket
+    in `applyInPandas` on the executors (predicate pushed into the
+    scan) and collects its rows: the driver receives at most queries x
+    dbuckets x k rows, the merge of shard top-ks an ES coordinating
+    node does, and never more than the limit's postings. `kernel` is
+    pickled into those tasks, so it must not capture the snapshot:
+    open part files do not pickle."""
     limit = DRIVER_LIMIT if limit is None else limit
     n = sum(dfm.get(t, 0) for t in scan_terms)
     if n == 0:
@@ -805,16 +810,16 @@ class TermStats:
       behind a driver LRU of query-touched dfs (`lru_max` entries; 0
       negative-caches an OOV term). A cold snapshot looks the segment
       dictionaries up unaggregated, with no persist (_sum_df); pinned
-      from an index, it knows their part `files` and reads the query
-      terms' rows on the driver with pyarrow (localread.read_df), no
-      job. A warm session whose dictionary overflows `vocab_cache_max`
-      aggregates it once into `n_shards` range-partitioned shards cached
-      executor-side (Lucene holds its terms index per shard, not on one
-      node); multi-term expansion then collects only the pattern's
-      prefix/suffix WINDOW through range predicates that prune the
-      cached shards. Driver heap is O(lru_max + largest expansion
-      window), never O(vocab): at 10^8-10^9 web-vocab terms a held dict
-      would be tens of GB.
+      from an index, it holds their part `files` open (open_parts) and
+      reads the query terms' rows on the driver with pyarrow
+      (localread.read_df), no job, until close(). A warm session whose
+      dictionary overflows `vocab_cache_max` aggregates it once into
+      `n_shards` range-partitioned shards cached executor-side (Lucene
+      holds its terms index per shard, not on one node); multi-term
+      expansion then collects only the pattern's prefix/suffix WINDOW
+      through range predicates that prune the cached shards. Driver heap
+      is O(lru_max + largest expansion window), never O(vocab): at
+      10^8-10^9 web-vocab terms a held dict would be tens of GB.
     """
 
     def __init__(
@@ -823,12 +828,12 @@ class TermStats:
         df_map: dict[str, int] | None = None,
         lru_max: int = DF_LRU_MAX,
         n_shards: int = 0,
-        files: list[str] | None = None,
+        files: list[pq.ParquetFile] | None = None,
     ):
         # `table` is a function that opens the frame at its first use:
-        # a snapshot whose lookups read `files` (the local part files
-        # behind the table, pinned with it) opens it only for a route
-        # that needs Spark (an expansion, a sharded session, a
+        # a snapshot whose lookups read `files` (the open local part
+        # files behind the table, pinned with it) opens it only for a
+        # route that needs Spark (an expansion, a sharded session, a
         # federated union)
         self._open_table = table or (lambda: None)
         self.files = files
@@ -857,8 +862,8 @@ class TermStats:
         (its table aggregated, or the unaggregated segment
         dictionaries): held when the table has at most
         `vocab_cache_max` rows, df summed on the driver, else sharded.
-        With part `files`, pyarrow counts the rows from the footers and
-        reads the held map on the driver, no job. Otherwise one job
+        With open part `files`, pyarrow counts the rows from the footers
+        and reads the held map on the driver, no job. Otherwise one job
         collects at most vocab_cache_max + 1 rows, so choosing the shape
         never pulls the vocabulary to the driver (coalesce(1): a limit
         over many partitions is collected by incremental take, one job
@@ -897,10 +902,10 @@ class TermStats:
     def df(self, terms: list[str]) -> dict[str, int]:
         """{term: df} for the vocabulary terms among `terms`: a dict
         read when held, else LRU hits plus ONE lookup for the misses:
-        pyarrow over the part files when known, else a pushdown-filtered
-        collect of the table, df summed per term (_sum_df). Absent terms
-        are negative-cached as 0, so a repeated OOV query costs no
-        lookup."""
+        pyarrow over the open part files when held, else a
+        pushdown-filtered collect of the table, df summed per term
+        (_sum_df). Absent terms are negative-cached as 0, so a repeated
+        OOV query costs no lookup."""
         if self._df_map is not None:
             return {t: self._df_map[t] for t in terms if t in self._df_map}
         out: dict[str, int] = {}
@@ -1091,7 +1096,9 @@ class TermStats:
             self.table.count()  # materialize the dictionary shards
 
     def close(self) -> None:
-        """Unpersist the shards this TermStats cached, if any."""
+        """Close the part files this TermStats holds and unpersist the
+        shards it cached, if any."""
+        close_parts(self.files)
         if self._n_shards:
             self.table.unpersist()
             if self._rtable is not None:
@@ -1104,15 +1111,15 @@ class Snapshot:
 
     - `postings`, the segments' posting blocks, opened at first use
       (`postings` may be the frame or a function that opens it, like
-      TermStats' table); `postings_files` names their part files when
-      pinned from a local index, as open_pit pins them;
+      TermStats' table); `postings_files` holds their part files open
+      when pinned from a local index (open_pit maps them at pin time);
     - `terms`, the TermStats every df comes from;
     - `n_docs`/`avgdl`, and `field_stats` = {field: (n_docs, avgdl)}
       of a fields=... index (empty otherwise) with each field's
       analyzer in `analyzers`;
     - `deleted_docs`, the tombstoned doc ids, collected into one sorted
       array (`deleted`) at first use and at most once: read on the
-      driver with pyarrow when their part files are known
+      driver with pyarrow when their part files are held open
       (`deleted_files`, as open_pit pins them), else collected;
     - `segments` = {segment id: commit marker} when pinned from an
       index.
@@ -1130,9 +1137,18 @@ class Snapshot:
     limit every Snapshot shares, a positional candidate counting
     POSITIONAL_WEIGHT; the term routes take a per-call `driver_limit`,
     0 forcing the distributed route). With `postings_files` it reads
-    the pruned postings with pyarrow, so a small cold call over a
-    local index runs no Spark job; without (a session, a frame-built
-    snapshot, an object-store index) it collects them in one job.
+    the pruned postings with pyarrow, so a small call over a local
+    index, cold or on a session, runs no Spark job; without (a
+    frame-built snapshot or session, an object-store index) it
+    collects them in one job.
+
+    The part files it holds stay readable until close() (`with
+    idx.open_pit() as pit:` closes on exit) or until the snapshot is
+    dropped, even after a merge removes them from disk: Lucene's
+    reader over a commit, which keeps a merged-away file until its
+    last reader closes. That costs one file descriptor per held part
+    file, and a removed file's disk space comes back only when its last
+    reader closes.
     """
 
     def __init__(
@@ -1146,8 +1162,8 @@ class Snapshot:
         analyzers: dict[str, str] | None = None,
         name: str | None = None,
         segments: dict[int, dict] | None = None,
-        deleted_files: list[str] | None = None,
-        postings_files: list[str] | None = None,
+        deleted_files: list[pq.ParquetFile] | None = None,
+        postings_files: list[pq.ParquetFile] | None = None,
     ):
         self._open_postings = (
             postings if callable(postings) else (lambda: postings)
@@ -1191,6 +1207,19 @@ class Snapshot:
         rows = self.deleted_docs.select("doc_id").collect()
         arr = np.array([r["doc_id"] for r in rows], dtype=np.int64)
         return np.unique(arr) if arr.size else None
+
+    def close(self) -> None:
+        """Release the part files this snapshot holds open (postings,
+        dictionary, tombstones); a closed snapshot reads them no more."""
+        close_parts(self.postings_files)
+        close_parts(self.deleted_files)
+        self.terms.close()
+
+    def __enter__(self) -> "Snapshot":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.close()
 
     @property
     def _label(self) -> str:
@@ -1478,27 +1507,35 @@ class QuerySession(Snapshot):
     """Warm query-serving handle: a Snapshot holding the state a search
     engine's coordinating node keeps between queries.
 
-    - postings re-partitioned ON dbucket and cached: groupBy(dbucket)
-      then reuses the cached partitioning, so a query runs WITHOUT a
-      shuffle stage (the cold path pays one per query);
+    - postings re-partitioned ON dbucket and cached for the distributed
+      route: groupBy(dbucket) then reuses the cached partitioning, so a
+      query runs WITHOUT a shuffle stage (the cold path pays one per
+      query);
+    - the coordinator route reads the pinned part files `pit` holds
+      open, with pyarrow as a cold call does, so a small warm query
+      runs no Spark job; without a `pit` (a frame-built session, or a
+      pin of an object-store index) it collects its pruned postings
+      from the cache in one JVM-only job;
     - term statistics opened once (TermStats.open): held in a driver
       dict while the dictionary has at most `vocab_cache_max` rows,
       else sharded executor-side behind a `df_lru_max`-entry LRU.
       `dictionary` is a (term, df) frame, or the TermStats of a pinned
       snapshot, whose part files are then read on the driver;
-    - tombstones (`deleted_docs`, a function opening their frame as
-      in Snapshot) collected at construction (read on the driver when
-      `deleted_files` names their part files), so
-      Index.open_session runs no job before warm().
+    - tombstones: `pit`'s, read at construction, so Index.open_session
+      runs no job before warm().
 
-    The search bodies and the coordinator route (DRIVER_LIMIT) are
-    Snapshot's, so results are bit-identical to the cold paths
-    (asserted in tests); a distributed query saves its per-query
-    dbucket shuffle. Serves field-scoped indexes too: pass
-    field_stats={field: (n_docs, avgdl)} and search(field=...).
+    `pit` is the Snapshot Index.open_session pins; the session owns it
+    from then on and closes it with itself. The search bodies and the
+    coordinator route (DRIVER_LIMIT) are Snapshot's, so results are
+    bit-identical to the cold paths (asserted in tests); a distributed
+    query saves its per-query dbucket shuffle. Serves field-scoped
+    indexes too: pass field_stats={field: (n_docs, avgdl)} and
+    search(field=...).
 
-    The cached frames live until close(); `with idx.open_session() as
-    s:` closes on exit.
+    The cached frames and `pit`'s open part files live until close();
+    `with idx.open_session() as s:` closes on exit. Until then the
+    session holds one file descriptor per part file, and a merged-away
+    segment's disk space comes back only when it closes.
     """
 
     def __init__(
@@ -1511,8 +1548,7 @@ class QuerySession(Snapshot):
         field_stats: dict[str, tuple[int, float]] | None = None,
         vocab_cache_max: int | None = VOCAB_CACHE_MAX,
         df_lru_max: int = DF_LRU_MAX,
-        deleted_docs: Callable[[], DataFrame | None] | None = None,
-        deleted_files: list[str] | None = None,
+        pit: Snapshot | None = None,
     ):
         n = n_buckets or postings.sparkSession.sparkContext.defaultParallelism
         terms = (
@@ -1522,12 +1558,14 @@ class QuerySession(Snapshot):
         super().__init__(
             postings.repartition(n, "dbucket").persist(),
             TermStats.open(terms, vocab_cache_max, df_lru_max, n),
-            n_docs, avgdl, field_stats, deleted_docs,
-            deleted_files=deleted_files,
+            n_docs, avgdl, field_stats,
+            postings_files=pit and pit.postings_files,
         )
-        # collected now: the session keeps its tombstones even after
-        # clear_deletes drops the generation files
-        self.deleted
+        self._pit = pit
+        if pit is not None:
+            # read now: the session keeps its tombstones even after
+            # clear_deletes drops the generation files
+            self.deleted = pit.deleted
 
     def warm(self) -> "QuerySession":
         self.postings.count()
@@ -1537,9 +1575,5 @@ class QuerySession(Snapshot):
     def close(self) -> None:
         self.postings.unpersist()
         self.terms.close()
-
-    def __enter__(self) -> "QuerySession":
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.close()
+        if self._pit is not None:
+            self._pit.close()

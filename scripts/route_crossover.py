@@ -11,13 +11,15 @@ a temporary directory, opens a warm session on it, then times each call
 shape on both routes, interleaved, `--reps` times after one untimed
 round: the distributed route with wand.DRIVER_LIMIT = 0, the
 coordinator route with no limit. A cold call pins a snapshot of the
-index, so its coordinator route reads the pruned postings from the
-segment part files with pyarrow (no Spark job); a warm call collects
-them from the session's cached frame (one job). A shape's query at size C is m >= 3
-vocabulary terms whose summed df is near C (a term query, the same
-terms as one phrase, and `a "b c ..."` as a query_string). Prints one
-JSON line per (size, shape) with both medians and whether the two
-routes returned the same rows. wand.DRIVER_LIMIT and
+index and a warm call reads through the session's pin, so on both the
+coordinator route reads the pruned postings from the open segment part
+files with pyarrow (no Spark job); the warm distributed route scans the
+session's cached, dbucket-partitioned frame (no shuffle), the cold one
+the part files. A shape's query at size C is m >= 3 vocabulary terms
+whose summed df is near C (a term query, the same terms as one phrase,
+and `a "b c ..."` as a query_string). Prints one JSON line per (size,
+shape) with both medians and whether the two routes returned the same
+rows. wand.DRIVER_LIMIT and
 wand.POSITIONAL_WEIGHT are sized from this table.
 """
 

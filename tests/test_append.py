@@ -240,6 +240,53 @@ def test_warm_session_snapshot_across_append_and_merge(spark, tmp_path):
     pages.unpersist()
 
 
+def test_pit_survives_a_merge_that_removes_its_segments(spark, tmp_path):
+    """A PIT holds its part files open from pin time, so a tiered merge
+    that rewrites four of its five segments and DELETES their files
+    leaves it readable: its term, phrase and query_string searches
+    return exactly their pre-merge rows (Lucene keeps a merged-away
+    file until its last reader closes)."""
+    import os
+
+    from mario_spark.merge import maybe_merge
+
+    cat = Catalog(spark, str(tmp_path / "cat"))
+    pages = pages_df(spark, 680, seed=31, partitions=4).persist()
+    doc_num = F.regexp_extract("url", r"(\d+)$", 1).cast("long")
+    idx = cat.create("pit-2026-01-01t00-00-00z")
+    idx.ingest(pages.filter(doc_num < 600), segment_docs=1024, positions=True)
+    for i in range(4):  # four small same-tier appends: one merge's worth
+        idx.append(
+            pages.filter((doc_num >= 600 + 20 * i) & (doc_num < 620 + 20 * i))
+        )
+
+    queries = make_pages_query_set(seed=31, n=10)
+    calls = {
+        "search": lambda s: s.search(queries, k=10),
+        "search_phrase": lambda s: s.search_phrase(
+            [(0, "the data"), (1, "web search"), (2, "search index")], k=10
+        ),
+        "search_query_string": lambda s: s.search_query_string(
+            [(0, 'data "the web" -crawl'), (1, '+index "web search"')], k=10
+        ),
+    }
+    with idx.open_pit() as pit:
+        assert len(pit.segments) == 5
+        before = {name: _canon(call(pit)) for name, call in calls.items()}
+        assert all(len(rows) > 0 for rows in before.values()), before
+        merged = maybe_merge(idx, max_per_tier=4, tier_factor=10.0)
+        assert merged is not None
+        gone = sorted(set(pit.segments) - set(idx.paths.committed_segments()))
+        assert len(gone) == 4
+        assert not any(os.path.exists(idx.paths.seg(s)) for s in gone)
+        for name, call in calls.items():
+            pd.testing.assert_frame_equal(_canon(call(pit)), before[name])
+    # leaving the block closes every part file the pin held
+    held = pit.postings_files + pit.terms.files
+    assert held and all(pf.closed for pf in held)
+    pages.unpersist()
+
+
 def test_cold_search_lists_segments_and_reads_deletes_once(
     spark, tmp_path, monkeypatch
 ):

@@ -1388,6 +1388,35 @@ def test_cli_committer_flag_selects_s3(spark, root, capsys):
         idxmod.set_committer(prev)
 
 
+def test_cli_s3_committer_needs_an_explicit_bucket(
+    spark, root, capsys, monkeypatch
+):
+    """--committer s3 selects the real boto3 store only when --s3-bucket
+    names a bucket: a stray MARIO_S3_TEST_BUCKET in the environment
+    leaves commits in the file-backed fake under <root>/.objectstore,
+    and the CLI names the store it chose on stderr."""
+    from mario_spark import index as idxmod
+    from mario_spark.cli import main
+    from mario_spark.objectstore import FakeS3Store
+
+    monkeypatch.setenv("MARIO_S3_TEST_BUCKET", "stray-bucket")
+    prev = idxmod._COMMITTER
+    try:
+        name = "pages-2026-07-03t00-00-00z"
+        os.makedirs(os.path.join(root, name), exist_ok=True)
+        capsys.readouterr()
+        assert main(["--root", root, "--committer", "s3",
+                     "promote", "-i", name]) == 0
+        err = capsys.readouterr().err
+        assert "FakeS3Store" in err and ".objectstore" in err, err
+        assert isinstance(idxmod._COMMITTER.client, FakeS3Store)
+        store = FakeS3Store(os.path.join(root, ".objectstore"))
+        reg = os.path.join(root, "aliases.json")
+        assert store.list_keys(reg + ".g") == [reg + ".g1"]
+    finally:
+        idxmod.set_committer(prev)
+
+
 def test_read_table_schema_is_spark_inferred_schema(spark, root, tmp_path):
     """read_table takes the schema from Spark's own key in a part
     file's footer instead of running the schema-inference job. For
@@ -1488,7 +1517,12 @@ def test_driver_reads_equal_spark_reads(spark, root):
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
-    from mario_spark.localread import _row_groups, read_df, read_df_map
+    from mario_spark.localread import (
+        _row_groups,
+        part_files,
+        read_df,
+        read_df_map,
+    )
     from mario_spark.wand import Snapshot, TermStats
 
     cat = Catalog(spark, root)
@@ -1526,14 +1560,14 @@ def test_driver_reads_equal_spark_reads(spark, root):
 
     snap = check()
     for f in snap.terms.files:
-        t = pq.read_table(f).column("term").to_pylist()
+        t = f.read(columns=["term"]).column("term").to_pylist()
         assert t == sorted(t), f
 
     # rewrite segment 0's dictionary in many row groups: sorted, so
     # the statistics prune, then shuffled, as an older segment wrote it
     d0 = os.path.join(idx.paths.seg(segs[0]), "dictionary")
     rows = pa.concat_tables(
-        [pq.read_table(f) for f in snap.terms.files if f.startswith(d0)]
+        [pq.read_table(f) for f in part_files(d0)]
     ).sort_by("term")
     for order in ("sorted", "unsorted"):
         for f in os.listdir(d0):
@@ -1750,7 +1784,7 @@ def test_postings_reads_prune_row_groups(spark, root, monkeypatch):
     from pyspark.sql import functions as F
 
     from mario_spark import localread
-    from mario_spark.localread import read_postings
+    from mario_spark.localread import part_files, read_postings
 
     idx = Catalog(spark, root).create("prune-2026-01-01t00-00-00z")
     idx.ingest(pages_df(spark, 300, seed=13, partitions=4), segment_docs=128)
@@ -1758,7 +1792,7 @@ def test_postings_reads_prune_row_groups(spark, root, monkeypatch):
     assert len(segs) == 3
     files = idx.open_pit().postings_files
     for f in files:
-        t = pq.read_table(f, columns=["term"]).column("term").to_pylist()
+        t = f.read(columns=["term"]).column("term").to_pylist()
         assert t == sorted(t), f
     dfs = sorted(
         (r["df"], r["term"]) for r in idx.dictionary([segs[0]]).collect()
@@ -1788,7 +1822,7 @@ def test_postings_reads_prune_row_groups(spark, root, monkeypatch):
     monkeypatch.setattr(localread, "_row_groups", row_groups)
     p0 = os.path.join(idx.paths.seg(segs[0]), "postings")
     rows = pa.concat_tables(
-        [pq.read_table(f) for f in files if f.startswith(p0)]
+        [pq.read_table(f) for f in part_files(p0)]
     ).sort_by("term")
     for order in ("sorted", "unsorted"):
         for f in os.listdir(p0):

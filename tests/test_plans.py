@@ -570,6 +570,109 @@ def test_driver_rank_finish_rounds_like_spark(spark):
     check(_rank_on_driver(spark, picked, 10).toPandas(), 10)
 
 
+@pytest.fixture(scope="module")
+def served(spark, tmp_path_factory):
+    """(index, tail terms a, b, c): a 2-segment positional index with a
+    tombstone generation, and three mid-df terms whose batches stay
+    under the driver limit."""
+    from mario_spark.fixtures import pages_df
+    from mario_spark.index import Index
+
+    idx = Index(spark, str(tmp_path_factory.mktemp("served")), "served")
+    idx.ingest(
+        pages_df(spark, 400, seed=9, partitions=4),
+        positions=True, segment_docs=200,
+    )
+    by_df = [
+        r["term"]
+        for r in idx.dictionary().orderBy(F.desc("df"), "term").limit(60)
+        .collect()
+    ]
+    assert idx.delete_by_query([by_df[50]])["deleted"] > 0
+    return idx, by_df[20], by_df[30], by_df[40]
+
+
+def _route_calls(served) -> dict:
+    """name -> fn(snapshot) for the term, phrase and query_string
+    bodies over the `served` index's tail terms."""
+    _, a, b, c = served
+    return {
+        "search": lambda s: s.search([(0, f"{a} {b}"), (1, c)], k=10),
+        "search_phrase": lambda s: s.search_phrase(
+            [(0, f"the {a}"), (1, f"{b} {c}")], k=10
+        ),
+        "search_query_string": lambda s: s.search_query_string(
+            [(0, f'{a} "the {b}" -{c}')], k=10
+        ),
+    }
+
+
+def test_warm_session_reads_its_pinned_files(
+    spark, served, monkeypatch, job_count
+):
+    """A session opened from a local index reads a small batch's pruned
+    postings from the part files its pin holds open, as a cold call
+    does: a warm tail term, phrase and query_string search runs NO Spark
+    job and returns the cold call's rows. A frame-built session has no
+    part files and still collects its pruned postings from its cache,
+    in one job."""
+    from mario_spark.wand import QuerySession
+
+    idx, a, b, _ = served
+    calls = _route_calls(served)
+    reads = _postings_reads(monkeypatch)
+    with idx.open_session().warm() as sess, idx.open_pit() as pit:
+        assert sess.postings_files
+        for name, call in calls.items():
+            got = []
+            reads.clear()
+            assert job_count(lambda: got.extend(call(sess).collect())) == 0
+            assert len(reads) == 1, name
+            assert got and sorted(got) == sorted(call(pit).collect()), name
+    # closing the session closes the part files of its pin
+    assert all(pf.closed for pf in sess.postings_files)
+
+    st = idx.stats()
+    with QuerySession(
+        idx.postings(), idx.dictionary(), st["n_docs"], st["avgdl"]
+    ).warm() as framed:
+        assert framed.postings_files is None
+        rows = []
+        reads.clear()
+        jobs = job_count(
+            lambda: rows.extend(framed.search([(0, f"{a} {b}")]).collect())
+        )
+        assert jobs == 1 and rows and reads == []
+
+
+def test_pinned_distributed_route_ships_no_snapshot(
+    spark, served, monkeypatch, job_count
+):
+    """The distributed route of a snapshot that holds open part files
+    (a pin, a session opened from the index) still runs for term,
+    phrase and query_string batches, with the coordinator route's rows:
+    its kernel closures are pickled into the tasks, and an open part
+    file does not pickle, so no kernel may capture the snapshot."""
+    from mario_spark import wand
+
+    idx = served[0]
+    calls = _route_calls(served)
+    reads = _postings_reads(monkeypatch)
+    with idx.open_session() as sess, idx.open_pit() as pit:
+        for snap in (pit, sess):
+            assert snap.postings_files
+            for name, call in calls.items():
+                want = sorted(call(snap).collect())
+                assert want, name
+                reads.clear()
+                with monkeypatch.context() as m:
+                    m.setattr(wand, "DRIVER_LIMIT", 0)
+                    got = []
+                    jobs = job_count(lambda: got.extend(call(snap).collect()))
+                assert jobs >= 1 and reads == [], name
+                assert sorted(got) == want, name
+
+
 def test_open_session_sums_segment_dictionaries_on_driver(
     spark, tmp_path, job_count
 ):
