@@ -141,7 +141,8 @@ def main(argv: list[str] | None = None) -> int:
         ],
         default="match",
         help="query kind; non-match kinds expand the raw pattern "
-        "against the term dictionary (ES fuzzy/prefix/wildcard/regexp); "
+        "against the term dictionary (ES fuzzy/prefix/wildcard/regexp; "
+        "a regexp must use the syntax common to Java and Python regex); "
         "query_string parses the full +must/-not/\"phrase\" mini-language "
         "(needs an index ingested with --positions)",
     )

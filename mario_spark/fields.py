@@ -51,7 +51,6 @@ from mario_spark.query import (
     empty_result,
     topk,
 )
-from mario_spark.wand import search_wand
 
 FIELD_SEP = ":"
 
@@ -197,13 +196,6 @@ def build_field_postings(
     return enc, dictionary_from_postings(enc), rw
 
 
-def scope_query_terms(query_terms: DataFrame, field: str) -> DataFrame:
-    """(query_id, term) -> (query_id, '<field>:<term>')."""
-    return query_terms.select(
-        "query_id", F.concat_ws(FIELD_SEP, F.lit(field), "term").alias("term")
-    )
-
-
 def search_multi_field(
     fdocs: DataFrame,
     query_terms: DataFrame,
@@ -271,34 +263,6 @@ def search_multi_field(
         score = F.col("m") + float(tie_breaker) * (F.col("s") - F.col("m"))
     combined = g.select("query_id", "doc_id", score.alias("score"))
     return topk(combined, k=k)
-
-
-def search_field(
-    postings: DataFrame,
-    dictionary: DataFrame,
-    query_terms: DataFrame,
-    field: str,
-    field_n_docs: int,
-    field_avgdl: float,
-    k: int = 10,
-    conjunctive: bool = False,
-    deleted_docs: DataFrame | None = None,
-) -> DataFrame:
-    """Field-scoped BM25 top-k via the production WAND path.
-
-    The prefixed query terms prune the postings scan to the field's
-    terms only; scoring uses the FIELD's (n_docs, avgdl, df).
-    deleted_docs = tombstoned doc ids (Lucene live-docs semantics)."""
-    return search_wand(
-        postings,
-        dictionary,
-        scope_query_terms(query_terms, field),
-        field_n_docs,
-        field_avgdl,
-        k=k,
-        conjunctive=conjunctive,
-        deleted_docs=deleted_docs,
-    )
 
 
 def search_cross_fields(

@@ -478,18 +478,23 @@ DOCUMENTS_BOOSTED_SET: list[tuple[int, str, float]] = [
 ]
 
 
-def query_terms_df(spark: SparkSession, query_set: list[tuple[int, str]]) -> DataFrame:
-    """(query_id, term) pairs — queries analyzed with the same tokenizer.
-    A local relation: collecting it (search_wand does) runs no job."""
+def query_term_rows(query_set: list[tuple[int, str]]) -> list[tuple[int, str]]:
+    """(query_id, term) pairs — queries analyzed with the same tokenizer,
+    each query's terms distinct and in order."""
     from mario_spark.analyze import py_tokenize
+
+    return [(qid, t) for qid, q in query_set
+            for t in dict.fromkeys(py_tokenize(q))]
+
+
+def query_terms_df(spark: SparkSession, query_set: list[tuple[int, str]]) -> DataFrame:
+    """query_term_rows as a local relation: collecting it (search_wand
+    does) runs no job."""
     from mario_spark.session import local_frame
 
-    rows = [
-        (qid, t)
-        for qid, q in query_set
-        for t in dict.fromkeys(py_tokenize(q))  # distinct, order-stable
-    ]
-    return local_frame(spark, rows, "query_id long, term string")
+    return local_frame(
+        spark, query_term_rows(query_set), "query_id long, term string"
+    )
 
 
 # ES terms_set query set: (query_id, terms, minimum_should_match).

@@ -1,11 +1,16 @@
-"""Multi-term queries: fuzzy, prefix, wildcard (Lucene MultiTermQuery).
+"""Multi-term queries: fuzzy, prefix, wildcard, regexp (Lucene
+MultiTermQuery) — their dictionary expansions.
 
-Mario's delegated engine answers `"fuzziness": N`, `prefix` and
-`wildcard` queries out of the box on every text field; this module
-re-expresses them Spark-first. All three share one shape: a single
-pruned pass over the term DICTIONARY produces the expansion set, which
-is then scored as a disjunction with per-variant idf by the standard
-WAND kernel (SCORING_BOOLEAN_REWRITE).
+Mario's delegated engine answers `"fuzziness": N`, `prefix`,
+`wildcard` and `regexp` queries out of the box on every text field.
+Here every one of them runs one body, wand.Snapshot.search_multiterm:
+the pattern expands against the snapshot's TermStats vocabulary, then
+the expansion is scored as a disjunction with per-variant idf by the
+standard WAND kernel (SCORING_BOOLEAN_REWRITE). This module holds the
+expansions: the driver-side edit-distance predicates the TermStats
+walk uses (levenshtein_le, is_transposition), and the Spark joins
+(expand*) that are TermStats' deferred route for a pattern no
+dictionary window bounds, and the tests' independent reference.
 
 Semantics (documented precisely because engines differ):
 - A query term expands to every DICTIONARY term within classic
@@ -13,7 +18,8 @@ Semantics (documented precisely because engines differ):
   `prefix_length` characters (ES `prefix_length`; Lucene counts a
   transposition as ONE edit — Damerau — while Spark's F.levenshtein
   and DuckDB's levenshtein are classic, so a transposition costs 2
-  here on BOTH the engine and the oracle side).
+  here on BOTH the engine and the oracle side). transpositions=True
+  is Lucene's metric at distance 1 (OSA, expand_terms).
 - The expanded set is scored as a disjunctive bool query, each
   variant with its own idf (Lucene MultiTermQuery
   SCORING_BOOLEAN_REWRITE); expansions are deduped per query.
@@ -25,9 +31,10 @@ query-term table (the prefix key prunes the scan the way the
 automaton's first transition does), then a levenshtein filter. The
 dictionary is ~vocab-sized (millions of rows at 10^12 docs), so this
 is a metadata-scale job, never a corpus-scale one; the expansion
-result is a handful of rows collected driver-side. Scoring then runs
-the standard block-max WAND kernel over the expanded terms — postings
-scan pruned to the expansion, per-dbucket batch kernel, tiny rank.
+result is a handful of rows collected driver-side.
+search_fuzzy_blended (Lucene's blended rewrite) stays an exhaustive
+composition: its idf is blended per query, which a term-keyed
+kernel cannot take.
 """
 
 from __future__ import annotations
@@ -35,18 +42,29 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mario_spark.postings import idf as _idf
 from mario_spark.session import local_frame
-from mario_spark.wand import Snapshot, TermStats, _run_kernel
 
 
 def levenshtein_le(a: str, b: str, limit: int) -> bool:
     """CLASSIC Levenshtein distance <= limit (matches Spark's
     F.levenshtein and DuckDB's levenshtein: transposition = 2 edits).
-    Banded DP with early exit — used by the driver-side warm expansion,
-    so it MUST agree with the distributed join's semantics."""
+    Used by the driver-side expansion walk once per window term, so it
+    MUST agree with the distributed join's semantics. limit <= 1 (every
+    fuzzy query's default) is one linear scan; larger limits run a
+    banded DP with early exit."""
     if abs(len(a) - len(b)) > limit:
         return False
+    if limit == 0:
+        return a == b
+    if limit == 1:
+        # one scan: past the common prefix the rest must agree after one
+        # substitution, or one deletion from the longer string
+        if len(a) < len(b):
+            a, b = b, a
+        i = 0
+        while i < len(b) and a[i] == b[i]:
+            i += 1
+        return a[i + 1:] == b[i + (len(a) == len(b)):]
     prev = list(range(len(b) + 1))
     for i, ca in enumerate(a, 1):
         cur = [i]
@@ -65,25 +83,76 @@ def levenshtein_le(a: str, b: str, limit: int) -> bool:
     return prev[-1] <= limit
 
 
+def is_transposition(a: str, b: str) -> bool:
+    """True when `a` is `b` with ONE adjacent pair swapped: the pairs
+    OSA distance 1 admits that classic Levenshtein prices at 2 (same
+    length, exactly two mismatches, adjacent, crosswise-equal). The
+    driver-side twin of _TRANSPOSITION_EXPR."""
+    if len(a) != len(b):
+        return False
+    diff = [i for i, (x, y) in enumerate(zip(a, b)) if x != y]
+    return (
+        len(diff) == 2 and diff[1] == diff[0] + 1
+        and a[diff[0]] == b[diff[1]] and a[diff[1]] == b[diff[0]]
+    )
+
+
+# OSA-distance-1 "extra" predicate: the pairs Damerau admits at one
+# edit that classic Levenshtein prices at 2 — exactly the adjacent
+# transpositions. Same length, EXACTLY two mismatch positions, adjacent,
+# crosswise-equal. Pure Spark codegen (no Python, no UDF); DuckDB's
+# builtin damerau_levenshtein plays oracle.
+_TRANSPOSITION_EXPR = (
+    "(length(term) = length(qterm) AND ("
+    "  size(filter(sequence(1, length(term)),"
+    "       i -> substring(term, i, 1) != substring(qterm, i, 1))) = 2"
+    ") AND ("
+    "  try_element_at(filter(sequence(1, length(term)),"
+    "       i -> substring(term, i, 1) != substring(qterm, i, 1)), 1) + 1 ="
+    "  try_element_at(filter(sequence(1, length(term)),"
+    "       i -> substring(term, i, 1) != substring(qterm, i, 1)), 2)"
+    ") AND ("
+    "  substring(term, try_element_at(filter(sequence(1, length(term)),"
+    "       i -> substring(term, i, 1) != substring(qterm, i, 1)), 1), 2) ="
+    "  reverse(substring(qterm, try_element_at(filter(sequence(1, length(term)),"
+    "       i -> substring(term, i, 1) != substring(qterm, i, 1)), 1), 2))"
+    "))"
+)
+
+
 def expand_terms(
     dictionary: DataFrame,
     query_terms: DataFrame,
     max_edits: int = 1,
     prefix_length: int = 1,
+    transpositions: bool = False,
 ) -> DataFrame:
     """(query_id, term) -> (query_id, term, df) over dictionary terms
     within `max_edits` (classic Levenshtein) sharing the first
     `prefix_length` chars. prefix_length=0 degrades to a full-vocab
     scan per term (ES's default, costlier — the join key becomes '').
+
+    transpositions=True is LUCENE'S ACTUAL default edit metric at
+    max_edits=1: an adjacent transposition counts as ONE edit (Damerau
+    / OSA — Lucene FuzzyQuery transpositions=true, what ES `fuzziness`
+    really means; OSA == full Damerau-Levenshtein at distance 1, so
+    DuckDB's damerau_levenshtein oracle agrees exactly; at distance
+    >= 2 the variants diverge). OSA<=1 decomposes as: classic
+    levenshtein <= 1, OR the adjacent-transposition structure
+    (_TRANSPOSITION_EXPR) — both pure codegen, so the dictionary pass
+    stays JVM-side.
     """
     pfx = lambda c: F.substring(c, 1, prefix_length)  # noqa: E731
     q = query_terms.select(
         "query_id", F.col("term").alias("qterm"), pfx("term").alias("pfx")
     )
     d = dictionary.withColumn("pfx", pfx("term"))
+    near = F.levenshtein("term", "qterm") <= max_edits
+    if transpositions:
+        near = near | F.expr(_TRANSPOSITION_EXPR)
     return (
         d.join(F.broadcast(q), "pfx")
-        .filter(F.levenshtein("term", "qterm") <= max_edits)
+        .filter(near)
         .select("query_id", "term", "df")
         .dropDuplicates(["query_id", "term"])
     )
@@ -225,12 +294,16 @@ def expand(
     query_terms: DataFrame,
     max_edits: int = 1,
     prefix_length: int = 1,
+    transpositions: bool = False,
 ) -> DataFrame:
     """(query_id, raw pattern) -> (query_id, term, df): the `kind`
     expansion (fuzzy | prefix | wildcard | regexp), one dictionary
-    pass."""
+    pass. transpositions=True is the OSA <= 1 fuzzy expansion
+    (expand_terms)."""
     if kind == "fuzzy":
-        return expand_terms(dictionary, query_terms, max_edits, prefix_length)
+        return expand_terms(
+            dictionary, query_terms, max_edits, prefix_length, transpositions
+        )
     fns = {
         "prefix": expand_prefix,
         "wildcard": expand_wildcard,
@@ -241,104 +314,6 @@ def expand(
             f"kind must be fuzzy|prefix|wildcard|regexp, got {kind!r}"
         )
     return fns[kind](dictionary, query_terms)
-
-
-def _search_expansion(
-    postings: DataFrame,
-    expansion: DataFrame,
-    n_docs: int,
-    avgdl: float,
-    k: int,
-    deleted=None,
-) -> DataFrame:
-    """Shared multi-term tail: collect the (tiny) expansion, score it
-    as a disjunction with per-variant idf via the WAND kernel
-    (MultiTermQuery SCORING_BOOLEAN_REWRITE)."""
-    rows = expansion.collect()  # tiny: queries x bounded fan-out
-    qmap: dict[int, list[str]] = {}
-    nd = float(n_docs)
-    idf_map: dict[str, float] = {}
-    dfm: dict[str, int] = {}
-    for r in rows:
-        qmap.setdefault(int(r["query_id"]), []).append(r["term"])
-        dfm[r["term"]] = int(r["df"])
-        idf_map[r["term"]] = _idf(nd, float(r["df"]))
-    queries = sorted((qid, sorted(ts)) for qid, ts in qmap.items())
-    return _run_kernel(
-        Snapshot(postings, TermStats(), n_docs, avgdl), queries, idf_map,
-        float(avgdl), k, conjunctive=False, deleted=deleted, dfm=dfm,
-    )
-
-
-def search_fuzzy(
-    postings: DataFrame,
-    dictionary: DataFrame,
-    query_terms: DataFrame,
-    n_docs: int,
-    avgdl: float,
-    k: int = 10,
-    max_edits: int = 1,
-    prefix_length: int = 1,
-    deleted=None,
-) -> DataFrame:
-    """Fuzzy BM25 top-k: expansion join (one dictionary pass) ->
-    standard WAND kernel over the expanded disjunction. Returns
-    (query_id, rank, doc_id, score) like search_wand."""
-    exp = expand_terms(dictionary, query_terms, max_edits, prefix_length)
-    return _search_expansion(
-        postings, exp, n_docs, avgdl, k, deleted=deleted
-    )
-
-
-def search_prefix(
-    postings: DataFrame,
-    dictionary: DataFrame,
-    query_terms: DataFrame,
-    n_docs: int,
-    avgdl: float,
-    k: int = 10,
-    deleted=None,
-) -> DataFrame:
-    """ES prefix query, scored as a disjunction (rewrite=
-    scoring_boolean) over the matching dictionary terms."""
-    exp = expand_prefix(dictionary, query_terms)
-    return _search_expansion(
-        postings, exp, n_docs, avgdl, k, deleted=deleted
-    )
-
-
-def search_regexp(
-    postings: DataFrame,
-    dictionary: DataFrame,
-    query_terms: DataFrame,
-    n_docs: int,
-    avgdl: float,
-    k: int = 10,
-    deleted=None,
-) -> DataFrame:
-    """ES regexp query (whole-term anchored patterns), scored as a
-    disjunction over the matching dictionary terms."""
-    exp = expand_regexp(dictionary, query_terms)
-    return _search_expansion(
-        postings, exp, n_docs, avgdl, k, deleted=deleted
-    )
-
-
-def search_wildcard(
-    postings: DataFrame,
-    dictionary: DataFrame,
-    query_terms: DataFrame,
-    n_docs: int,
-    avgdl: float,
-    k: int = 10,
-    deleted=None,
-) -> DataFrame:
-    """ES wildcard query (whole-term * / ? patterns), scored as a
-    disjunction over the matching dictionary terms."""
-    exp = expand_wildcard(dictionary, query_terms)
-    return _search_expansion(
-        postings, exp, n_docs, avgdl, k, deleted=deleted
-    )
 
 
 def phrase_suggest(
@@ -439,80 +414,6 @@ def phrase_suggest(
     )
 
 
-# OSA-distance-1 "extra" predicate: the pairs Damerau admits at one
-# edit that classic Levenshtein prices at 2 — exactly the adjacent
-# transpositions. Same length, EXACTLY two mismatch positions, adjacent,
-# crosswise-equal. Pure Spark codegen (no Python, no UDF); DuckDB's
-# builtin damerau_levenshtein plays oracle.
-_TRANSPOSITION_EXPR = (
-    "(length(term) = length(qterm) AND ("
-    "  size(filter(sequence(1, length(term)),"
-    "       i -> substring(term, i, 1) != substring(qterm, i, 1))) = 2"
-    ") AND ("
-    "  try_element_at(filter(sequence(1, length(term)),"
-    "       i -> substring(term, i, 1) != substring(qterm, i, 1)), 1) + 1 ="
-    "  try_element_at(filter(sequence(1, length(term)),"
-    "       i -> substring(term, i, 1) != substring(qterm, i, 1)), 2)"
-    ") AND ("
-    "  substring(term, try_element_at(filter(sequence(1, length(term)),"
-    "       i -> substring(term, i, 1) != substring(qterm, i, 1)), 1), 2) ="
-    "  reverse(substring(qterm, try_element_at(filter(sequence(1, length(term)),"
-    "       i -> substring(term, i, 1) != substring(qterm, i, 1)), 1), 2))"
-    "))"
-)
-
-
-def expand_terms_damerau(
-    dictionary: DataFrame,
-    query_terms: DataFrame,
-    prefix_length: int = 1,
-) -> DataFrame:
-    """Fuzzy expansion with LUCENE'S ACTUAL default edit metric:
-    transpositions count as ONE edit (Damerau / OSA — Lucene
-    FuzzyQuery transpositions=true, what ES `fuzziness` really means).
-    Fixed at max_edits=1 (OSA == full Damerau-Levenshtein at distance
-    1, so DuckDB's damerau_levenshtein oracle agrees exactly; at
-    distance >= 2 the variants diverge).
-
-    OSA<=1 decomposes as: classic levenshtein <= 1, OR the
-    adjacent-transposition structure (same length, exactly two
-    mismatches, adjacent, crosswise-equal) — both pure codegen, so the
-    dictionary pass stays JVM-side like expand_terms."""
-    pfx = lambda c: F.substring(c, 1, prefix_length)  # noqa: E731
-    q = query_terms.select(
-        "query_id", F.col("term").alias("qterm"), pfx("term").alias("pfx")
-    )
-    d = dictionary.withColumn("pfx", pfx("term"))
-    return (
-        d.join(F.broadcast(q), "pfx")
-        .filter(
-            (F.levenshtein("term", "qterm") <= 1)
-            | F.expr(_TRANSPOSITION_EXPR)
-        )
-        .select("query_id", "term", "df")
-        .dropDuplicates(["query_id", "term"])
-    )
-
-
-def search_fuzzy_damerau(
-    postings: DataFrame,
-    dictionary: DataFrame,
-    query_terms: DataFrame,
-    n_docs: int,
-    avgdl: float,
-    k: int = 10,
-    prefix_length: int = 1,
-    deleted=None,
-) -> DataFrame:
-    """Fuzzy BM25 top-k under fuzziness=1 with transpositions=true
-    (the ES default) — expansion via expand_terms_damerau, scored by
-    the standard WAND kernel."""
-    exp = expand_terms_damerau(dictionary, query_terms, prefix_length)
-    return _search_expansion(
-        postings, exp, n_docs, avgdl, k, deleted=deleted
-    )
-
-
 def search_fuzzy_blended(
     docs: DataFrame,
     query_terms: DataFrame,
@@ -526,8 +427,8 @@ def search_fuzzy_blended(
     cannot out-idf the common intended term ("join", df 2000) — the
     documented reason BlendedTermQuery exists. Docs matching several
     variants still sum their contributions (boolean rewrite of the
-    blended terms). search_fuzzy keeps the per-variant-idf
-    SCORING_BOOLEAN_REWRITE alternative.
+    blended terms). wand.Snapshot.search_multiterm keeps the
+    per-variant-idf SCORING_BOOLEAN_REWRITE alternative.
 
     Exhaustive DataFrame path: ONE dictionary pass for the expansion,
     the (query, term, blended idf) dim broadcast into the tf stream,

@@ -60,7 +60,6 @@ from mario_spark import docs as docsmod
 from mario_spark.localread import open_parts, part_files
 from mario_spark.postings import build_postings, pick_range_width
 from mario_spark.query import B, K1, empty_result
-from mario_spark.session import local_frame
 from mario_spark.wand import Snapshot, TermStats, _by_query
 
 DOCS_COLS = ["doc_id", "url", "lang", "len"]
@@ -1132,10 +1131,12 @@ class Index:
         its last reader closes and ES's PIT keep_alive rests on. The
         costs: one file descriptor per part file while it is held, and
         a merged-away segment's disk space comes back only when its last
-        reader closes. The routes that run Spark still read by path, so
-        they need the files on disk: a batch over the driver limit
-        scans the postings, and a multi-term expansion the
-        dictionaries."""
+        reader closes. A multi-term pattern anchored at its start
+        reads its prefix windows from the open dictionary files too.
+        The routes that run Spark still read by path, so they need the
+        files on disk: a batch over the driver limit scans the
+        postings, and a suffix window (a leading wildcard) or an
+        unanchored expansion the dictionaries."""
         meta = _read_json(self.paths.meta) or {}
         markers = self.paths.committed_markers()
         gens = (_read_json(self.paths.deletes_marker) or {}).get(
@@ -1324,39 +1325,22 @@ class Index:
         """Multi-term queries over a persisted index: kind = 'fuzzy'
         (classic Levenshtein <= max_edits, same first prefix_length
         chars), 'prefix', 'wildcard' (whole-term * / ? patterns), or
-        'regexp' (whole-term anchored pattern).
+        'regexp' (whole-term anchored, in the syntax Java and Python
+        regex share; a pattern Python's re rejects raises ValueError).
         `queries` carries RAW query strings/patterns (not analyzed —
-        a pattern is not a term). Expansion is one pruned pass over
-        this index's dictionary; scoring is the standard WAND path.
+        a pattern is not a term). The body is Snapshot.search_multiterm
+        over a pin: a pattern anchored at its start expands against
+        prefix windows of the pinned dictionary part files, read with
+        pyarrow, so a small call runs no Spark job.
 
         Over a fields=... index pass `field`: the pattern expands
         against THAT field's vocabulary (the '<field>:' slice of the
         dictionary, prefix stripped for matching) and scoring uses the
         field's own df/n_docs/avgdl — exactly ES's fuzzy/prefix/
         wildcard on one mapped field."""
-        from mario_spark import fuzzy as fuzzymod
-
         with self._pinned() as snap:
-            pfx, n_docs, avgdl = snap.scope(field)
-            dic = snap.terms.dictionary
-            if pfx:
-                dic = dic.filter(F.col("term").startswith(pfx)).select(
-                    F.col("term")
-                    .substr(F.lit(len(pfx) + 1), F.length("term"))
-                    .alias("term"),
-                    "df",
-                )
-            qdf = local_frame(
-                self.spark, queries, "query_id long, term string"
-            )
-            exp = fuzzymod.expand(kind, dic, qdf, max_edits, prefix_length)
-            if pfx:
-                exp = exp.select(
-                    "query_id", F.concat(F.lit(pfx), "term").alias("term"),
-                    "df",
-                )
-            return fuzzymod._search_expansion(
-                snap.postings, exp, n_docs, avgdl, k, deleted=snap.deleted
+            return snap.search_multiterm(
+                queries, kind, k, max_edits, prefix_length, field=field
             )
 
     def field_stats(self) -> dict[str, dict]:

@@ -1,7 +1,8 @@
 """Driver-side reads of an index's part files with pyarrow.
 
 A search needs three small reads before it can score: the query terms'
-rows of the segment dictionaries, the tombstone generations, and (to
+rows of the segment dictionaries (for a multi-term query, the term
+ranges of its prefix windows), the tombstone generations, and (to
 open a warm session) the dictionary row count and df map. A small
 batch then scores on the driver over its term-pruned postings, a
 fourth read. Through Spark each read is a job (50-80 ms plus planning
@@ -116,6 +117,43 @@ def read_df(parts: list[pq.ParquetFile], terms: list[str]) -> dict[str, int]:
     if not keys:
         return out
     for t in _term_rows(parts, keys, ["term", "df"]):
+        for term, df in zip(t["term"].to_pylist(), t["df"].to_pylist()):
+            out[term] = out.get(term, 0) + int(df)
+    return out
+
+
+def read_range_df(
+    parts: list[pq.ParquetFile], ranges: list[tuple[str, str | None]]
+) -> dict[str, int]:
+    """{term: df} for every dictionary term in one of the half-open
+    `ranges` [lo, ub) (ub None: no upper bound), summed over the (term,
+    df) part files `parts`: the prefix windows of a multi-term
+    expansion. Only the row groups whose `term` [min, max] statistics
+    overlap a range are read (a row group without statistics is kept),
+    then filtered on the ranges."""
+    out: dict[str, int] = {}
+    if not ranges:
+        return out
+    for pf in parts:
+        ci = pf.schema_arrow.get_field_index("term")
+        rgs = []
+        for i in range(pf.metadata.num_row_groups):
+            st = pf.metadata.row_group(i).column(ci).statistics
+            if st is None or not st.has_min_max or any(
+                lo <= st.max and (ub is None or ub > st.min)
+                for lo, ub in ranges
+            ):
+                rgs.append(i)
+        if not rgs:
+            continue
+        t = pf.read_row_groups(rgs, columns=["term", "df"])
+        mask = None
+        for lo, ub in ranges:
+            m = pc.greater_equal(t["term"], lo)
+            if ub is not None:
+                m = pc.and_(m, pc.less(t["term"], ub))
+            mask = m if mask is None else pc.or_(mask, m)
+        t = t.filter(mask)
         for term, df in zip(t["term"].to_pylist(), t["df"].to_pylist()):
             out[term] = out.get(term, 0) + int(df)
     return out

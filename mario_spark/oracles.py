@@ -280,7 +280,7 @@ def multiterm_topk_sql(
     query string against the term dictionary via `match_cond` (SQL
     boolean over dfr.term and fq.qterm), dedupe per query, score the
     expansion as a disjunction with per-variant idf. Mirrors
-    fuzzy._search_expansion exactly."""
+    wand.Snapshot.search_multiterm exactly."""
     rows = [f"({qid}, '{q}')" for qid, q in qrows]
     return f"""
 WITH fq(query_id, qterm) AS (VALUES {", ".join(rows)}),

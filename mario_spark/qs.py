@@ -376,7 +376,7 @@ SELECT query_id, rank, doc_id, score FROM rk WHERE rank <= {k}
 # field-scoped clause scores against THAT field's own statistics
 # (df over the field, the field's docCount and avgFieldLength) —
 # Lucene's per-field index semantics, same stats model as
-# fields.search_field. Unmapped field prefixes keep Lucene behavior:
+# Snapshot.search(field=...). Unmapped field prefixes keep Lucene behavior:
 # the clause can never match (a must on an unmapped field empties the
 # query; a should contributes nothing) — this falls out naturally
 # because an unmapped field has no postings, no df rows, no hits.

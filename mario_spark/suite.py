@@ -91,15 +91,31 @@ _WAND_CACHE: dict = {}
 
 
 def _wand_index(spark: SparkSession, sf_dir: str):
+    """The compressed (non-positional) index as one Snapshot: persisted
+    postings and a TermStats opened over the persisted dictionary
+    (TermStats.open: held in a driver dict at the suite's vocabulary
+    sizes), so the term and multi-term entries read df, and expand
+    patterns, with no Spark job."""
     from mario_spark import docs as docsmod
     from mario_spark.postings import build_postings
+    from mario_spark.wand import (
+        DF_LRU_MAX,
+        VOCAB_CACHE_MAX,
+        Snapshot,
+        TermStats,
+    )
 
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _WAND_CACHE:
         d = _doc_table(spark, sf_dir).persist()
         st = docsmod.corpus_stats(d).collect()[0]
         post, dic, _ = build_postings(d, st["n_docs"])
-        _WAND_CACHE[key] = (post.persist(), dic.persist(), st)
+        post = post.persist()
+        terms = TermStats.open(
+            TermStats(lambda: dic), VOCAB_CACHE_MAX, DF_LRU_MAX,
+            spark.sparkContext.defaultParallelism,
+        )
+        _WAND_CACHE[key] = Snapshot(post, terms, st["n_docs"], st["avgdl"])
     return _WAND_CACHE[key]
 
 
@@ -107,11 +123,7 @@ def bm25_topk_wand(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same contract as bm25_topk, served by the production path:
     compressed postings + block-max WAND (rank-identical by design;
     the driver verifies it against the same SQL oracle)."""
-    from mario_spark.wand import search_wand
-
-    post, dic, st = _wand_index(spark, sf_dir)
-    q = query_terms_df(spark, DOCUMENTS_QUERY_SET)
-    return search_wand(post, dic, q, st["n_docs"], st["avgdl"], k=10)
+    return _wand_index(spark, sf_dir).search(DOCUMENTS_QUERY_SET, k=10)
 
 
 def bm25_topk_wand_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -119,13 +131,8 @@ def bm25_topk_wand_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     path: same query set, but docs must contain the filter term 'data'
     (unscored); dbuckets holding no 'data' posting are skipped before
     any block decode (wand._bucket_kernel)."""
-    from mario_spark.wand import search_wand
-
-    post, dic, st = _wand_index(spark, sf_dir)
-    q = query_terms_df(spark, DOCUMENTS_QUERY_SET)
-    return search_wand(
-        post, dic, q, st["n_docs"], st["avgdl"], k=10,
-        filter_terms=["data"],
+    return _wand_index(spark, sf_dir).search(
+        DOCUMENTS_QUERY_SET, k=10, filter_terms=["data"]
     )
 
 
@@ -133,12 +140,8 @@ def bm25_topk_and(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conjunctive (ES bool-must) BM25 top-10 via the production WAND
     path: a doc must contain every query term; rarest-first sorted
     intersection per bucket."""
-    from mario_spark.wand import search_wand
-
-    post, dic, st = _wand_index(spark, sf_dir)
-    q = query_terms_df(spark, DOCUMENTS_QUERY_SET)
-    return search_wand(
-        post, dic, q, st["n_docs"], st["avgdl"], k=10, conjunctive=True
+    return _wand_index(spark, sf_dir).search(
+        DOCUMENTS_QUERY_SET, k=10, conjunctive=True
     )
 
 
@@ -149,13 +152,9 @@ def bm25_topk_not(spark: SparkSession, sf_dir: str) -> DataFrame:
     masks excluded docs before taking the k-th partial, keeping
     block-max pruning sound (wand._bucket_kernel)."""
     from mario_spark.fixtures import DOCUMENTS_MUSTNOT_SET
-    from mario_spark.wand import search_wand
 
-    post, dic, st = _wand_index(spark, sf_dir)
-    q = query_terms_df(spark, DOCUMENTS_QUERY_SET)
-    nq = query_terms_df(spark, DOCUMENTS_MUSTNOT_SET)
-    return search_wand(
-        post, dic, q, st["n_docs"], st["avgdl"], k=10, must_not_terms=nq
+    return _wand_index(spark, sf_dir).search(
+        DOCUMENTS_QUERY_SET, k=10, must_not=DOCUMENTS_MUSTNOT_SET
     )
 
 
@@ -164,75 +163,62 @@ def bm25_topk_msm(spark: SparkSession, sf_dir: str) -> DataFrame:
     match >= 2 distinct query terms (single-term queries match nothing,
     as in ES). Per-doc distinct-term counts fall out of the kernel's
     bincount groupby for free."""
-    from mario_spark.wand import search_wand
-
-    post, dic, st = _wand_index(spark, sf_dir)
-    q = query_terms_df(spark, DOCUMENTS_QUERY_SET)
-    return search_wand(
-        post, dic, q, st["n_docs"], st["avgdl"], k=10, min_should_match=2
+    return _wand_index(spark, sf_dir).search(
+        DOCUMENTS_QUERY_SET, k=10, min_should_match=2
     )
 
 
 def fuzzy_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ES match + fuzziness=1, prefix_length=1: each query term expands
     to dictionary terms within one classic-Levenshtein edit sharing the
-    first character (ONE pruned dictionary pass — the Spark-first
-    analogue of Lucene's per-shard FST automaton walk), then the
+    first character (a prefix-window walk of the held vocabulary —
+    the analogue of Lucene's per-shard FST automaton walk), then the
     expansion is scored as a disjunction with per-variant idf
-    (SCORING_BOOLEAN_REWRITE)."""
-    from mario_spark.fixtures import DOCUMENTS_FUZZY_SET
-    from mario_spark.fuzzy import search_fuzzy
+    (SCORING_BOOLEAN_REWRITE; Snapshot.search_multiterm). Unlike the
+    pattern entries, each analyzed query token is one fuzzy term."""
+    from mario_spark.fixtures import DOCUMENTS_FUZZY_SET, query_term_rows
 
-    post, dic, st = _wand_index(spark, sf_dir)
-    q = query_terms_df(spark, DOCUMENTS_FUZZY_SET)
-    return search_fuzzy(
-        post, dic, q, st["n_docs"], st["avgdl"], k=10,
+    return _wand_index(spark, sf_dir).search_multiterm(
+        query_term_rows(DOCUMENTS_FUZZY_SET), "fuzzy", k=10,
         max_edits=1, prefix_length=1,
     )
 
 
 def fuzzy_damerau_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ES match + fuzziness=1 with transpositions=true — Lucene's
-    ACTUAL default edit metric (adjacent transposition = 1 edit); the
-    transposition branch is a pure-codegen structure predicate
-    (fuzzy.expand_terms_damerau), so the dictionary pass stays
-    JVM-side. Classic fuzzy would miss queries 0-1 entirely."""
-    from mario_spark.fixtures import DOCUMENTS_FUZZY_DAMERAU_SET
-    from mario_spark.fuzzy import search_fuzzy_damerau
+    ACTUAL default edit metric (adjacent transposition = 1 edit):
+    OSA distance <= 1, the structure fuzzy.is_transposition tests on
+    the held vocabulary (fuzzy.expand_terms is its Spark join).
+    Classic fuzzy would miss queries 0-1 entirely."""
+    from mario_spark.fixtures import DOCUMENTS_FUZZY_DAMERAU_SET, query_term_rows
 
-    post, dic, st = _wand_index(spark, sf_dir)
-    q = query_terms_df(spark, DOCUMENTS_FUZZY_DAMERAU_SET)
-    return search_fuzzy_damerau(
-        post, dic, q, st["n_docs"], st["avgdl"], k=10, prefix_length=1
+    return _wand_index(spark, sf_dir).search_multiterm(
+        query_term_rows(DOCUMENTS_FUZZY_DAMERAU_SET), "fuzzy", k=10,
+        prefix_length=1, transpositions=True,
     )
 
 
 def prefix_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ES prefix query (rewrite=scoring_boolean): one dictionary pass
-    finds terms starting with the prefix; the expansion is scored as a
-    disjunction with per-variant idf via the WAND kernel."""
+    """ES prefix query (rewrite=scoring_boolean): a prefix window of
+    the held vocabulary finds terms starting with the prefix; the
+    expansion is scored as a disjunction with per-variant idf via the
+    WAND kernel. Patterns are raw, not analyzed: a pattern is not a
+    term."""
     from mario_spark.fixtures import DOCUMENTS_PREFIX_SET
-    from mario_spark.fuzzy import search_prefix
 
-    post, dic, st = _wand_index(spark, sf_dir)
-    # raw, not analyzer-tokenized: a prefix/pattern is not a term
-    q = spark.createDataFrame(
-        DOCUMENTS_PREFIX_SET, "query_id long, term string"
+    return _wand_index(spark, sf_dir).search_multiterm(
+        DOCUMENTS_PREFIX_SET, "prefix", k=10
     )
-    return search_prefix(post, dic, q, st["n_docs"], st["avgdl"], k=10)
 
 
 def wildcard_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ES wildcard query (whole-term * / ? patterns, incl. a leading
     wildcard), scored like prefix_topk."""
     from mario_spark.fixtures import DOCUMENTS_WILDCARD_SET
-    from mario_spark.fuzzy import search_wildcard
 
-    post, dic, st = _wand_index(spark, sf_dir)
-    q = spark.createDataFrame(
-        DOCUMENTS_WILDCARD_SET, "query_id long, term string"
+    return _wand_index(spark, sf_dir).search_multiterm(
+        DOCUMENTS_WILDCARD_SET, "wildcard", k=10
     )
-    return search_wildcard(post, dic, q, st["n_docs"], st["avgdl"], k=10)
 
 
 def fuzzy_blended_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -483,15 +469,12 @@ def synonym_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def regexp_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ES regexp query (whole-term anchored match, Lucene RegexpQuery),
-    expanded in one dictionary pass and scored like prefix_topk."""
+    expanded over the held vocabulary and scored like prefix_topk."""
     from mario_spark.fixtures import DOCUMENTS_REGEXP_SET
-    from mario_spark.fuzzy import search_regexp
 
-    post, dic, st = _wand_index(spark, sf_dir)
-    q = spark.createDataFrame(
-        DOCUMENTS_REGEXP_SET, "query_id long, term string"
+    return _wand_index(spark, sf_dir).search_multiterm(
+        DOCUMENTS_REGEXP_SET, "regexp", k=10
     )
-    return search_regexp(post, dic, q, st["n_docs"], st["avgdl"], k=10)
 
 
 def bm25_topk_title(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -500,19 +483,11 @@ def bm25_topk_title(spark: SparkSession, sf_dir: str) -> DataFrame:
     df/n_docs/avgdl (Lucene per-field stats). documents has no separate
     title column, so title := first 64 chars of text (deterministic,
     oracle-identical); contents := full text is indexed alongside to
-    prove coexistence in one postings table."""
-    from mario_spark import fields as fieldsmod
-
-    d = _documents(spark, sf_dir).select("doc_id", "text")
-    fdocs = fieldsmod.build_field_doc_table(
-        d, {"title": F.substring("text", 1, 64), "contents": F.col("text")}
-    ).persist()
-    st = {r["field"]: r for r in fieldsmod.field_stats(fdocs).collect()}
-    total_docs = max(r["n_docs"] for r in st.values())
-    post, dic, _ = fieldsmod.build_field_postings(fdocs, total_docs)
-    q = query_terms_df(spark, DOCUMENTS_QUERY_SET)
-    return fieldsmod.search_field(
-        post, dic, q, "title", st["title"]["n_docs"], st["title"]["avgdl"], k=10
+    prove coexistence in one postings table. Served by the suite's
+    field-keyed positional Snapshot (_pos_index(fields=True)), which
+    query_string_fields_topk shares."""
+    return _pos_index(spark, sf_dir, fields=True).search(
+        DOCUMENTS_QUERY_SET, k=10, field="title"
     )
 
 

@@ -58,6 +58,7 @@ from mario_spark.localread import (
     read_df_map,
     read_doc_ids,
     read_postings,
+    read_range_df,
 )
 from mario_spark.postings import block_upper_bound
 from mario_spark.postings import idf as _idf
@@ -779,24 +780,66 @@ def _prefix_range(arr: list[str], pfx: str) -> tuple[int, int]:
     return lo, hi
 
 
-def _window_anchor(kind: str, q: str, prefix_length: int) -> bool:
-    """True when the pattern pins a non-empty literal at either end,
-    so sharded expansion can fetch a bounded dictionary window instead
-    of walking the vocabulary (Lucene's terms-index seek has the same
-    precondition; unanchored patterns scan)."""
+def _pattern(
+    kind: str, q: str, max_edits: int, prefix_length: int,
+    transpositions: bool,
+) -> tuple[str | None, str, Callable[[str], bool]]:
+    """(head, tail, match) of one multi-term pattern: the literal every
+    matching term starts with (its forward prefix window), or None and
+    the literal every matching term ends with (a suffix window), and the
+    whole-term predicate a window term must pass. A pattern whose head
+    and tail are both empty pins no literal at either end, so no bounded
+    dictionary window holds its terms (Lucene's terms-index seek has the
+    same precondition; unanchored patterns scan)."""
     import re as _re
 
+    from mario_spark import fuzzy as fuzzymod
+
     if kind == "fuzzy":
-        return bool(q[:prefix_length])
+        pfx = q[:prefix_length]
+
+        def near(t: str) -> bool:
+            # OSA <= 1 decomposes as fuzzy.expand_terms' join
+            # does: classic Levenshtein <= 1, or one adjacent swap
+            return t[:prefix_length] == pfx and (
+                fuzzymod.levenshtein_le(t, q, max_edits)
+                or (transpositions and fuzzymod.is_transposition(t, q))
+            )
+
+        return pfx, "", near
     if kind == "prefix":
-        return bool(q)
+        return q, "", lambda t: True
     if kind == "wildcard":
-        return bool(_re.match(r"[^*?]*", q).group(0)) or bool(
-            _re.search(r"[^*?]*$", q).group(0)
+        # * -> .*, ? -> . over re-escaped literals; whole-term. The
+        # LONGER of the two literal runs bounds the scan: the run before
+        # the first metachar -> forward prefix window; the run after the
+        # last metachar -> suffix window over the REVERSED terms
+        # (Lucene's reverse-field trick), so a leading wildcard *suffix
+        # is O(log V + window) too, not O(vocab). Only a both-ends-open
+        # pattern (*a*, ?a?) walks the vocab.
+        lit = _re.match(r"[^*?]*", q).group(0)
+        tail = _re.search(r"[^*?]*$", q).group(0)
+        pat = _re.compile(
+            ".*".join(
+                ".".join(_re.escape(p) for p in part.split("?"))
+                for part in q.split("*")
+            )
         )
+        if len(lit) >= len(tail):
+            return lit, "", pat.fullmatch
+        return None, tail, pat.fullmatch
     if kind == "regexp":
-        return bool(_regex_literal_prefix(q))
-    return True
+        # the walk matches with Python's re, the deferred join with
+        # Spark's Java regex: a pattern must sit in their common subset,
+        # and one Python rejects fails here on either route
+        try:
+            rx = _re.compile(q)
+        except _re.error as e:
+            raise ValueError(f"unsupported regexp {q!r}: {e}") from None
+        return _regex_literal_prefix(q), "", rx.fullmatch
+    raise ValueError(
+        f"kind must be fuzzy|prefix|wildcard|regexp, got {kind!r}"
+    )
 
 
 class TermStats:
@@ -942,104 +985,92 @@ class TermStats:
         kind: str,
         max_edits: int,
         prefix_length: int,
+        field: str = "",
+        transpositions: bool = False,
     ) -> dict[int, list[str]]:
-        """Multi-term expansion against the term dictionary. Held, this
-        is a pure in-memory vocabulary walk (exactly what an ES
-        coordinating/data node does against its in-heap terms index —
-        no cluster round-trip). In the lookup shape the same walk runs
-        against windows FETCHED from the table: a pattern anchored by a
-        literal at either end collects only its prefix (or
-        reversed-suffix) range — the driver never holds the vocabulary
-        — while the rare both-ends-open pattern (*a*, an unanchored
-        regexp) routes to the one-pass distributed expansion join."""
-        import re as _re
+        """Multi-term expansion against the term dictionary: {query_id:
+        its sorted DISTINCT expansion}, so a term that two patterns of
+        one query reach scores once. `field` is a fields=... index's
+        posting-key prefix ('<field>:'): patterns match that field's
+        slice of the vocabulary with the prefix stripped, and the
+        expansion keeps it. `transpositions` counts an adjacent swap as
+        one edit (fuzzy, max_edits=1).
 
+        Held, this is a pure in-memory vocabulary walk (exactly what an
+        ES coordinating/data node does against its in-heap terms index —
+        no cluster round-trip). In the lookup shape the same walk runs
+        against windows FETCHED from the table: every forward prefix
+        window of the call in ONE prefix_windows read (pyarrow over the
+        part files a pin holds, no job), a pattern anchored only at its
+        end its reversed-suffix range — the driver never holds the
+        vocabulary — while the rare both-ends-open pattern (*a*, an
+        unanchored regexp) routes to the one-pass distributed expansion
+        join (fuzzy.expand)."""
         from mario_spark import fuzzy as fuzzymod
 
         held = self._df_map is not None
         deferred: list[tuple[int, str]] = []
-        out: dict[int, list[str]] = {}
+        walks = []
         for qid, q in queries:
-            if not held and not _window_anchor(kind, q, prefix_length):
-                deferred.append((qid, q))
-                continue
-            if kind == "fuzzy":
-                pfx = q[:prefix_length]
-                hits = [
-                    t
-                    for t in self._prefix_window(pfx)
-                    if t[:prefix_length] == pfx
-                    and fuzzymod.levenshtein_le(t, q, max_edits)
-                ]
-            elif kind == "prefix":
-                hits = list(self._prefix_window(q))
-            elif kind == "wildcard":
-                # * -> .*, ? -> . over re-escaped literals; whole-term.
-                # The LONGER of the two literal runs bounds the scan:
-                # the run before the first metachar -> forward prefix
-                # window; the run after the last metachar -> suffix
-                # window over the REVERSED-term array (Lucene's
-                # reverse-field trick), so a leading wildcard *suffix
-                # is O(log V + window) too, not O(vocab). Only a
-                # both-ends-open pattern (*a*, ?a?) walks the vocab.
-                lit = _re.match(r"[^*?]*", q).group(0)
-                tail = _re.search(r"[^*?]*$", q).group(0)
-                pat = _re.compile(
-                    ".*".join(
-                        ".".join(_re.escape(p) for p in part.split("?"))
-                        for part in q.split("*")
-                    )
-                )
-                cands = (
-                    self._prefix_window(lit)
-                    if len(lit) >= len(tail)
-                    else self._suffix_window(tail)
-                )
-                hits = [t for t in cands if pat.fullmatch(t)]
-            elif kind == "regexp":
-                pat = _re.compile(q)
-                hits = [
-                    t
-                    for t in self._prefix_window(_regex_literal_prefix(q))
-                    if pat.fullmatch(t)
-                ]
+            head, tail, match = _pattern(
+                kind, q, max_edits, prefix_length, transpositions
+            )
+            if held or head or tail:
+                walks.append((int(qid), head, tail, match))
             else:
-                raise ValueError(
-                    f"kind must be fuzzy|prefix|wildcard|regexp, got {kind!r}"
-                )
-            if hits:
-                out.setdefault(int(qid), []).extend(hits)
+                deferred.append((int(qid), q))
+        windows = self.prefix_windows(
+            sorted({field + h for _, h, _, _ in walks if h is not None})
+        )
+        n = len(field)
+        out: dict[int, set[str]] = {}
+        for qid, head, tail, match in walks:
+            cands = (
+                windows[field + head] if head is not None
+                else [t for t in self._suffix_window(tail)
+                      if t.startswith(field)]
+            )
+            out.setdefault(qid, set()).update(
+                t for t in cands if match(t[n:])
+            )
         if deferred:
+            dic = self.dictionary
+            if field:
+                dic = dic.filter(F.col("term").startswith(field)).select(
+                    F.col("term").substr(F.lit(n + 1), F.length("term"))
+                    .alias("term"),
+                    "df",
+                )
             qdf = local_frame(
                 self.table.sparkSession, deferred, "query_id long, term string"
             )
             exp = fuzzymod.expand(
-                kind, self.dictionary, qdf, max_edits, prefix_length
+                kind, dic, qdf, max_edits, prefix_length, transpositions
             )
             for r in exp.collect():
-                out.setdefault(int(r["query_id"]), []).append(r["term"])
-        return out
+                out.setdefault(int(r["query_id"]), set()).add(
+                    field + r["term"]
+                )
+        return {qid: sorted(ts) for qid, ts in out.items() if ts}
 
     def prefix_windows(self, prefixes: list[str]) -> dict[str, list[str]]:
         """{prefix: sorted vocabulary terms starting with it} for a
         batch of prefixes. Held: bisect windows over the sorted term
         array, O(log V + window) each and no job; an empty prefix gets
-        the whole vocabulary. Lookup shape: ONE collect of the OR of
-        the prefix ranges (_window), whose dfs prime the LRU, since the
+        the whole vocabulary. Lookup shape: ONE read of the OR of the
+        prefix ranges (_window), whose dfs prime the LRU, since the
         caller scores the window terms right after. Callers pass
-        non-empty prefixes in the lookup shape (_window_anchor routes
+        non-empty prefixes in the lookup shape (_expand routes
         unanchored patterns to the distributed expansion)."""
+        if not prefixes:
+            return {}
         if self._df_map is not None:
             if self._vocab_arr is None:
                 self._vocab_arr = sorted(self._df_map)
             arr = self._vocab_arr
         else:
-            arr = self._window(self.table, "term", prefixes)
+            arr = self._window("term", prefixes)
         return {p: arr[slice(*_prefix_range(arr, p))] for p in prefixes}
-
-    def _prefix_window(self, pfx: str) -> list[str]:
-        """All vocabulary terms starting with `pfx` (prefix_windows)."""
-        return self.prefix_windows([pfx])[pfx]
 
     def _suffix_window(self, sfx: str) -> list[str]:
         """All vocabulary terms ENDING with `sfx` — Lucene's
@@ -1067,27 +1098,30 @@ class TermStats:
                 self._rtable = self._rtable.repartitionByRange(
                     self._n_shards, "rterm"
                 ).persist()
-        return self._window(self._rtable, "rterm", [sfx[::-1]])
+        return self._window("rterm", [sfx[::-1]])
 
-    def _window(
-        self, table: DataFrame, col: str, prefixes: list[str]
-    ) -> list[str]:
-        """Sorted terms of `table` whose `col` starts with one of
-        `prefixes`: ONE collect of the OR of their ranges (the range
-        bounds prune non-overlapping cached shards), df summed per term
-        (_sum_df, so the unaggregated segment dictionaries count every
-        segment); the dfs prime the LRU. No prefix, no job."""
+    def _window(self, col: str, prefixes: list[str]) -> list[str]:
+        """Sorted terms whose `col` starts with one of `prefixes`: the
+        table's `term`, or the reversed-term twin's `rterm`. Their dfs,
+        summed per term (the unaggregated segment dictionaries count
+        every segment), prime the LRU. A forward window over held part
+        files is read on the driver with pyarrow (localread.
+        read_range_df), no job; otherwise ONE collect of the OR of the
+        ranges (the range bounds prune non-overlapping cached shards,
+        _sum_df)."""
         assert all(prefixes), "a window lookup needs non-empty literals"
-        cond = None
-        for pfx in prefixes:
-            ub = _prefix_ub(pfx)
-            c = F.col(col) >= pfx
-            if ub is not None:
-                c = c & (F.col(col) < ub)
-            cond = c if cond is None else cond | c
-        if cond is None:
-            return []
-        found = _sum_df(table.filter(cond).select("term", "df").collect())
+        ranges = [(pfx, _prefix_ub(pfx)) for pfx in prefixes]
+        if col == "term" and self.files is not None:
+            found = read_range_df(self.files, ranges)
+        else:
+            cond = None
+            for lo, ub in ranges:
+                c = F.col(col) >= lo
+                if ub is not None:
+                    c = c & (F.col(col) < ub)
+                cond = c if cond is None else cond | c
+            table = self.table if col == "term" else self._rtable
+            found = _sum_df(table.filter(cond).select("term", "df").collect())
         self._lru_put(found)
         return sorted(found)
 
@@ -1488,17 +1522,35 @@ class Snapshot:
         max_edits: int = 1,
         prefix_length: int = 1,
         driver_limit: int | None = None,
+        field: str | None = None,
+        transpositions: bool = False,
     ) -> DataFrame:
         """fuzzy / prefix / wildcard / regexp: [(query_id, raw
-        pattern)] -> (query_id, rank, doc_id, score). Expansion walks
-        the TermStats vocabulary (TermStats._expand), then the expanded
-        disjunction scores like search_terms — bit-identical to the
-        cold fuzzy module."""
-        qmap = self.terms._expand(queries, kind, max_edits, prefix_length)
-        qlist = sorted((qid, sorted(ts)) for qid, ts in qmap.items())
+        pattern)] -> (query_id, rank, doc_id, score), the one multi-term
+        body (Lucene MultiTermQuery, SCORING_BOOLEAN_REWRITE). A pattern
+        is not analyzed. It expands against the TermStats vocabulary
+        (TermStats._expand): fuzzy = classic Levenshtein <= max_edits
+        sharing the first prefix_length chars (transpositions=True: ES
+        fuzzy's adjacent swap as one edit, OSA distance <= 1, which
+        needs max_edits=1); prefix; wildcard (whole-term * / ?); regexp
+        (whole-term anchored). Each query's distinct expansion then
+        scores like search_terms, each variant with its own idf. On a
+        fields=... index pass `field`: the pattern expands against that
+        field's vocabulary and scores with its df/n_docs/avgdl (ES
+        fuzzy/prefix/wildcard/regexp on one mapped field)."""
+        if transpositions and (kind != "fuzzy" or max_edits != 1):
+            raise ValueError(
+                "transpositions applies to kind='fuzzy' with max_edits=1 "
+                "(OSA distance <= 1)"
+            )
+        pfx, n_docs, avgdl = self.scope(field)
+        qmap = self.terms._expand(
+            queries, kind, max_edits, prefix_length, pfx, transpositions
+        )
+        qlist = sorted(qmap.items())
         dfm = self.terms.df(sorted({t for _, ts in qlist for t in ts}))
         return _run_kernel(
-            self, qlist, df_to_idf(dfm, self.n_docs), self.avgdl,
+            self, qlist, df_to_idf(dfm, n_docs), avgdl,
             k, False, deleted=self.deleted, dfm=dfm, limit=driver_limit,
         )
 

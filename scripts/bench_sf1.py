@@ -202,7 +202,7 @@ def main() -> None:
         suite._doc_table(spark, sf_dir).count()
         builds[sf_dir]["doc_table"] = round(time.perf_counter() - t0, 3)
         t0 = time.perf_counter()
-        suite._wand_index(spark, sf_dir)[0].count()
+        suite._wand_index(spark, sf_dir).postings.count()
         builds[sf_dir]["wand_index"] = round(time.perf_counter() - t0, 3)
         t0 = time.perf_counter()
         suite._pos_index(spark, sf_dir).postings.count()

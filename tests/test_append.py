@@ -243,9 +243,9 @@ def test_warm_session_snapshot_across_append_and_merge(spark, tmp_path):
 def test_pit_survives_a_merge_that_removes_its_segments(spark, tmp_path):
     """A PIT holds its part files open from pin time, so a tiered merge
     that rewrites four of its five segments and DELETES their files
-    leaves it readable: its term, phrase and query_string searches
-    return exactly their pre-merge rows (Lucene keeps a merged-away
-    file until its last reader closes)."""
+    leaves it readable: its term, phrase, query_string and anchored
+    multi-term searches return exactly their pre-merge rows (Lucene
+    keeps a merged-away file until its last reader closes)."""
     import os
 
     from mario_spark.merge import maybe_merge
@@ -268,6 +268,9 @@ def test_pit_survives_a_merge_that_removes_its_segments(spark, tmp_path):
         ),
         "search_query_string": lambda s: s.search_query_string(
             [(0, 'data "the web" -crawl'), (1, '+index "web search"')], k=10
+        ),
+        "search_multiterm": lambda s: s.search_multiterm(
+            [(0, "dat"), (1, "w001")], kind="prefix", k=10
         ),
     }
     with idx.open_pit() as pit:

@@ -221,15 +221,16 @@ def test_field_index_multiterm_and_delete_by_query(spark, root):
     post2, dic2, _ = fieldsmod.build_field_postings(
         surv_fd, idx.stats()["n_docs"]
     )
-    from mario_spark.fixtures import query_terms_df
+    from mario_spark.wand import Snapshot, TermStats
 
     probe = [(0, " ".join(cexp[:3]))]
-    want_q = _canon(
-        fieldsmod.search_field(
-            post2, dic2, query_terms_df(spark, probe), "contents",
-            want_fs["contents"]["n_docs"], want_fs["contents"]["avgdl"], k=10,
-        )
+    fsnap = Snapshot(
+        post2, TermStats(lambda: dic2), idx.stats()["n_docs"], 0.0,
+        field_stats={
+            f: (r["n_docs"], r["avgdl"]) for f, r in want_fs.items()
+        },
     )
+    want_q = _canon(fsnap.search(probe, k=10, field="contents"))
     got_q = _canon(idx.search_field("contents", probe, k=10))
     pd.testing.assert_frame_equal(got_q, want_q, check_exact=False, atol=1e-9)
     surv_fd.unpersist()

@@ -7,18 +7,27 @@ import pandas as pd
 
 from mario_spark import docs, query
 from mario_spark.fixtures import pages_df
-from mario_spark.fuzzy import expand_terms, search_fuzzy
+from mario_spark.fuzzy import expand, expand_terms
 from mario_spark.postings import build_postings
+from mario_spark.wand import Snapshot, TermStats
 
 
 def _canon(df):
     return df.toPandas().sort_values(["query_id", "rank"], ignore_index=True)
 
 
+def _exhaustive_over_expansion(d, dic, kind, qdf, k=10, **kw):
+    """The independent reference of a multi-term search: the exhaustive
+    BM25 scorer over the Spark expansion join's distinct
+    (query_id, term) rows."""
+    exp = expand(kind, dic, qdf, **kw).select("query_id", "term").distinct()
+    return _canon(query.search_exhaustive(d, exp, k=k))
+
+
 def test_fuzzy_expansion_and_identity(spark):
     """'w0000z' must fan out to every w0000[0-9] term present in the
-    corpus (multi-expansion), and search_fuzzy must equal the
-    exhaustive scorer run over the SAME expanded disjunction."""
+    corpus (multi-expansion), and Snapshot.search_multiterm must equal
+    the exhaustive scorer run over the SAME expanded disjunction."""
     pages = pages_df(spark, 1000, seed=7, partitions=8)
     d = docs.build_doc_table(pages).persist()
     st_ = docs.corpus_stats(d).collect()[0]
@@ -34,17 +43,15 @@ def test_fuzzy_expansion_and_identity(spark):
     assert all(t.startswith("w0000") for t in exp0)
     assert not [r for r in rows if r["query_id"] == 1]  # OOV: no expansion
 
+    snap = Snapshot(post, TermStats(lambda: dic), st_["n_docs"], st_["avgdl"])
     got = _canon(
-        search_fuzzy(
-            post, dic, q, st_["n_docs"], st_["avgdl"], k=10,
+        snap.search_multiterm(
+            [(0, "w0000z"), (1, "qqqxyz")], "fuzzy", k=10,
             max_edits=1, prefix_length=1,
         )
     )
     # ground truth: exhaustive disjunctive BM25 over the expanded terms
-    eq = spark.createDataFrame(
-        [(0, t) for t in exp0], "query_id long, term string"
-    )
-    want = _canon(query.search_exhaustive(d, eq, k=10))
+    want = _exhaustive_over_expansion(d, dic, "fuzzy", q)
     assert len(got) > 0
     pd.testing.assert_frame_equal(got, want, check_exact=False, atol=1e-9)
     d.unpersist()
@@ -87,14 +94,9 @@ def test_prefix_and_wildcard_expansion(spark):
 
 def test_query_session_multiterm_identical_to_cold(spark):
     """Warm QuerySession multi-term serving (driver-side vocabulary
-    expansion, both routing paths) must be bit-identical to the cold
-    fuzzy/prefix/wildcard functions."""
-    from mario_spark.fuzzy import (
-        levenshtein_le,
-        search_fuzzy,
-        search_prefix,
-        search_wildcard,
-    )
+    expansion, both routing paths) must equal the exhaustive scorer
+    over the Spark expansion join, for fuzzy, prefix and wildcard."""
+    from mario_spark.fuzzy import levenshtein_le
     from mario_spark.wand import QuerySession
 
     # python DP must equal classic Levenshtein (spot checks incl. a
@@ -108,24 +110,13 @@ def test_query_session_multiterm_identical_to_cold(spark):
     st_ = docs.corpus_stats(d).collect()[0]
     post, dic, _ = build_postings(d, st_["n_docs"])
     q = [(0, "w0000z"), (1, "w0001")]
-    qdf = spark.createDataFrame(q, "query_id long, term string")
-    colds = {
-        "fuzzy": search_fuzzy(post, dic, qdf, st_["n_docs"], st_["avgdl"], k=10),
-        "prefix": search_prefix(post, dic, qdf, st_["n_docs"], st_["avgdl"], k=10),
-        "wildcard": search_wildcard(
-            post, dic,
-            spark.createDataFrame(
-                [(0, "w0?00*"), (1, "w*2")], "query_id long, term string"
-            ),
-            st_["n_docs"], st_["avgdl"], k=10,
-        ),
-    }
     wq = {
         "fuzzy": q, "prefix": q, "wildcard": [(0, "w0?00*"), (1, "w*2")],
     }
     sess = QuerySession(post, dic, st_["n_docs"], st_["avgdl"])
-    for kind, cold in colds.items():
-        want = _canon(cold)
+    for kind in wq:
+        qdf = spark.createDataFrame(wq[kind], "query_id long, term string")
+        want = _exhaustive_over_expansion(d, dic, kind, qdf)
         assert len(want) > 0, kind
         for lim in (0, 10**9):
             got = _canon(
@@ -315,3 +306,90 @@ def test_warm_expansion_scans_only_prefix_window(spark, monkeypatch):
     assert wand._regex_literal_prefix("joi?nt?") == "jo"
     assert wand._regex_literal_prefix("ab|cd") == ""
     assert wand._regex_literal_prefix("w00.2") == "w00"
+
+    # a regexp outside Python's re syntax fails the same way whether it
+    # would walk a window (literal prefix) or take the deferred join
+    import pytest
+
+    for pat in (r"w\p{Alpha}+", r"\p{Alpha}+"):
+        with pytest.raises(ValueError, match="unsupported regexp"):
+            terms._expand([(6, pat)], "regexp", 1, 1)
+        with pytest.raises(ValueError, match="unsupported regexp"):
+            wand.TermStats(lambda: None)._expand([(6, pat)], "regexp", 1, 1)
+
+
+def test_multiterm_scores_each_expanded_term_once(spark, tmp_path):
+    """Two patterns of one query that expand to the same term score it
+    ONCE: the expansion is deduped per query, as the oracle's SELECT
+    DISTINCT does. "joim" and "join" both reach "join"; a cold
+    Index.search_multiterm, a session and the suite's snapshot each
+    equal the exhaustive scorer over the distinct expansion."""
+    from mario_spark import suite
+    from mario_spark.fixtures import documents_as_pages
+    from mario_spark.index import Index
+
+    sf = "/root/testdata/sf0.001"
+    q = [(0, "joim"), (0, "join"), (1, "hash"), (1, "hasj"), (2, "merge")]
+    qdf = spark.createDataFrame(q, "query_id long, term string")
+    d = suite._doc_table(spark, sf)
+    dfreq = query.doc_frequencies(query.term_frequencies(d))
+    exp0 = [
+        r["term"] for r in expand("fuzzy", dfreq, qdf).collect()
+        if r["query_id"] == 0
+    ]
+    assert exp0.count("join") == 1  # reached by both patterns, kept once
+    want = _exhaustive_over_expansion(d, dfreq, "fuzzy", qdf)
+    assert set(want["query_id"]) == {0, 1, 2}
+
+    idx = Index(spark, str(tmp_path / "idx"), "dedupe")
+    idx.ingest(documents_as_pages(spark, sf), segment_docs=256)
+    with idx.open_session() as sess:
+        for name, search in {
+            "cold": idx.search_multiterm,
+            "session": sess.search_multiterm,
+            "suite": suite._wand_index(spark, sf).search_multiterm,
+        }.items():
+            got = _canon(search(q, "fuzzy", k=10))
+            pd.testing.assert_frame_equal(
+                got, want, check_exact=False, atol=1e-9, obj=name
+            )
+
+
+def test_transpositions_agree_across_walk_and_join(spark):
+    """transpositions=True (OSA distance <= 1) reaches the adjacent
+    swaps classic fuzzy misses, and expands the same terms in the held
+    vocabulary walk (fuzzy.is_transposition) and in the deferred Spark
+    join (prefix_length=0 gives a lookup-shaped snapshot no window):
+    both equal the exhaustive scorer over the join's expansion."""
+    from mario_spark.fuzzy import is_transposition
+    from mario_spark.wand import QuerySession
+
+    assert is_transposition("tabel", "table")
+    assert not is_transposition("table", "table")
+    assert not is_transposition("abcd", "badc")  # two swaps
+
+    pages = pages_df(spark, 600, seed=11, partitions=4)
+    d = docs.build_doc_table(pages).persist()
+    st_ = docs.corpus_stats(d).collect()[0]
+    post, dic, _ = build_postings(d, st_["n_docs"])
+    q = [(0, "w00102"), (1, "w00013")]
+    qdf = spark.createDataFrame(q, "query_id long, term string")
+    swapped = expand(
+        "fuzzy", dic, qdf, prefix_length=0, transpositions=True
+    ).count()
+    assert swapped > expand("fuzzy", dic, qdf, prefix_length=0).count()
+    want = _exhaustive_over_expansion(
+        d, dic, "fuzzy", qdf, prefix_length=0, transpositions=True
+    )
+    assert len(want) > 0
+    frame = Snapshot(post, TermStats(lambda: dic), st_["n_docs"], st_["avgdl"])
+    with QuerySession(post, dic, st_["n_docs"], st_["avgdl"]) as held:
+        assert held.terms._df_map is not None
+        for name, snap in {"join": frame, "walk": held}.items():
+            got = _canon(snap.search_multiterm(
+                q, "fuzzy", k=10, prefix_length=0, transpositions=True
+            ))
+            pd.testing.assert_frame_equal(
+                got, want, check_exact=False, atol=1e-9, obj=name
+            )
+    d.unpersist()

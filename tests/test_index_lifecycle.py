@@ -55,25 +55,25 @@ def test_ingest_query_matches_exhaustive(spark, root):
 
 
 def test_multiterm_queries_over_persisted_index(spark, root):
-    """fuzzy / prefix / wildcard served from a committed index must
-    equal the same expansion run directly against its postings."""
+    """fuzzy / prefix / wildcard served from a committed index: fuzzy
+    must equal the exhaustive scorer over the Spark expansion join of
+    the index's dictionary."""
     from mario_spark import fuzzy as fuzzymod
 
     cat = Catalog(spark, root)
     pages = pages_df(spark, 600, seed=5, partitions=4)
     idx = cat.create("mt-2026-01-01t00-00-00z")
     idx.ingest(pages, segment_docs=256)
-    st = idx.stats()
     q = [(0, "w0000z"), (1, "w0001*")]
     qdf = spark.createDataFrame(q, "query_id long, term string")
 
     got = _canon(idx.search_multiterm(q, kind="fuzzy", k=10))
+    exp = fuzzymod.expand("fuzzy", idx.dictionary(), qdf)
+    d = build_doc_table(pages).persist()
     want = _canon(
-        fuzzymod.search_fuzzy(
-            idx.postings(), idx.dictionary(), qdf,
-            st["n_docs"], st["avgdl"], k=10,
-        )
+        query.search_exhaustive(d, exp.select("query_id", "term"), k=10)
     )
+    d.unpersist()
     assert len(got) > 0
     pd.testing.assert_frame_equal(got, want, check_exact=False, atol=1e-9)
 
@@ -174,6 +174,7 @@ def test_field_index_lifecycle(spark, root):
 
     from mario_spark import fields as fieldsmod
     from mario_spark.fixtures import DOCUMENTS_QUERY_SET
+    from mario_spark.wand import Snapshot, TermStats
 
     cat = Catalog(spark, root)
     pages = documents_as_pages(spark, SF_DIR).withColumn(
@@ -190,12 +191,11 @@ def test_field_index_lifecycle(spark, root):
     ).persist()
     stats = {r["field"]: r for r in fieldsmod.field_stats(fd).collect()}
     post, dic, _ = fieldsmod.build_field_postings(fd, 500)
-    want = _canon(
-        fieldsmod.search_field(
-            post, dic, query_terms_df(spark, DOCUMENTS_QUERY_SET), "title",
-            stats["title"]["n_docs"], stats["title"]["avgdl"], k=10,
-        )
+    fsnap = Snapshot(
+        post, TermStats(lambda: dic), 500, 0.0,
+        field_stats={f: (r["n_docs"], r["avgdl"]) for f, r in stats.items()},
     )
+    want = _canon(fsnap.search(DOCUMENTS_QUERY_SET, k=10, field="title"))
     got = _canon(idx.search_field("title", DOCUMENTS_QUERY_SET, k=10))
     pd.testing.assert_frame_equal(got, want, check_exact=False, atol=1e-9)
 

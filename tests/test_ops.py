@@ -720,13 +720,13 @@ def test_prefix_window_includes_max_codepoint_terms():
     s = TermStats(
         df_map={t: 1 for t in ["aa", "ab", "abc", weird, "ac", "b"]}
     )
-    got = s._prefix_window("ab")
+    got = s.prefix_windows(["ab"])["ab"]
     assert got == ["ab", "abc", weird]
     # all-U+10FFFF prefix: no finite upper bound, window runs to end
     s2 = TermStats(
         df_map={"\U0010ffff": 1, "\U0010ffff\U0010ffffx": 1, "a": 1}
     )
-    assert s2._prefix_window("\U0010ffff") == [
+    assert s2.prefix_windows(["\U0010ffff"])["\U0010ffff"] == [
         "\U0010ffff", "\U0010ffff\U0010ffffx"
     ]
 

@@ -113,7 +113,7 @@ def test_field_scoped_stats_differ_from_global(spark):
     from pyspark.sql import functions as F
 
     from mario_spark import fields as fieldsmod
-    from mario_spark.fixtures import query_terms_df
+    from mario_spark.wand import Snapshot, TermStats
 
     rows = [
         (0, "alpha beta", "alpha beta gamma delta common common common"),
@@ -126,15 +126,13 @@ def test_field_scoped_stats_differ_from_global(spark):
     ).persist()
     stats = {r["field"]: r for r in fieldsmod.field_stats(fdocs).collect()}
     post, dic, _ = fieldsmod.build_field_postings(fdocs, 3, range_width=256)
-    q = query_terms_df(spark, [(0, "alpha")])
-    title_hits = fieldsmod.search_field(
-        post, dic, q, "title",
-        stats["title"]["n_docs"], stats["title"]["avgdl"],
-    ).toPandas()
-    body_hits = fieldsmod.search_field(
-        post, dic, q, "contents",
-        stats["contents"]["n_docs"], stats["contents"]["avgdl"],
-    ).toPandas()
+    fsnap = Snapshot(
+        post, TermStats(lambda: dic), 3, 1.0,
+        field_stats={f: (r["n_docs"], r["avgdl"]) for f, r in stats.items()},
+    )
+    q = [(0, "alpha")]
+    title_hits = fsnap.search(q, field="title").toPandas()
+    body_hits = fsnap.search(q, field="contents").toPandas()
     # 'alpha' is in title of doc 0 only, but in contents of docs 0 and 1
     assert title_hits["doc_id"].tolist() == [0]
     assert set(body_hits["doc_id"]) == {0, 1}
@@ -144,7 +142,7 @@ def test_field_scoped_stats_differ_from_global(spark):
     assert dic_pdf["contents:alpha"] == 2
 
     # warm serving composes with field scoping: QuerySession(field=...)
-    # must match the cold fields.search_field path on both routes
+    # must match the cold frame Snapshot's rows on both routes
     from mario_spark.wand import QuerySession
 
     sess = QuerySession(

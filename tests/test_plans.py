@@ -673,6 +673,58 @@ def test_pinned_distributed_route_ships_no_snapshot(
                 assert sorted(got) == want, name
 
 
+def test_cold_multiterm_reads_its_pinned_dictionary(
+    spark, served, tmp_path, job_count
+):
+    """A cold Index.search_multiterm on a local index runs NO Spark job
+    for a pattern anchored at its start (prefix, fuzzy, wildcard), also
+    field-scoped on a fields=... index: its prefix windows are read
+    from the pinned dictionary part files with pyarrow, and the
+    expansion scores on the coordinator route; a pinned phrase_prefix
+    reads its window the same way. A leading wildcard's suffix window
+    still runs Spark."""
+    from mario_spark import phrase as ph
+    from mario_spark.fixtures import pages_df
+    from mario_spark.index import Index
+
+    idx = served[0]
+    fielded = Index(spark, str(tmp_path / "fielded"), "fielded")
+    fielded.ingest(
+        pages_df(spark, 300, seed=5, partitions=4).withColumn(
+            "title", F.substring("text", 1, 48)
+        ),
+        segment_docs=128, fields={"title": "title", "contents": "text"},
+    )
+    calls = {
+        "prefix": lambda: idx.search_multiterm(
+            [(0, "w001"), (1, "dat")], kind="prefix"
+        ),
+        "fuzzy": lambda: idx.search_multiterm([(0, "w0000z")], kind="fuzzy"),
+        "wildcard": lambda: idx.search_multiterm(
+            [(0, "w0?00*")], kind="wildcard"
+        ),
+        "title prefix": lambda: fielded.search_multiterm(
+            [(0, "w00")], kind="prefix", field="title"
+        ),
+        "title fuzzy": lambda: fielded.search_multiterm(
+            [(0, "w0000z")], kind="fuzzy", field="title"
+        ),
+    }
+    with idx.open_pit() as pit:
+        calls["pinned phrase_prefix"] = lambda: ph.search_phrase_prefix(
+            pit, [(0, ["the"], "da")], k=10
+        )
+        for name, call in calls.items():
+            rows = []
+            assert job_count(lambda: rows.extend(call().collect())) == 0, name
+            assert rows, name
+    rows = []
+    jobs = job_count(lambda: rows.extend(
+        idx.search_multiterm([(0, "*001")], kind="wildcard").collect()
+    ))
+    assert jobs >= 1 and rows
+
+
 def test_open_session_sums_segment_dictionaries_on_driver(
     spark, tmp_path, job_count
 ):
